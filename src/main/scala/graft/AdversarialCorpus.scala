@@ -134,11 +134,8 @@ object AdversarialCorpus {
   private def writeSingle(df: DataFrame, out: String, table: String): Unit = {
     val tmp = java.nio.file.Paths.get(out, s"_tmp_$table")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val s = java.nio.file.Files.list(tmp)
-    val part = try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-      .find(_.getFileName.toString.endsWith(".parquet"))
+    val part = Fs.parquetFiles(tmp).headOption
       .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
-    finally s.close()
     val dest = java.nio.file.Paths.get(out, s"$table.parquet")
     java.nio.file.Files.deleteIfExists(dest)
     java.nio.file.Files.move(part, dest)

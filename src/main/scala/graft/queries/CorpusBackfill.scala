@@ -105,20 +105,8 @@ object CorpusBackfill {
     val probeKeys = bandRows.filter(col("cls") === 3L)
       .select(col("doc_id"), col("band"), col("band_key"))
 
-    def filesByBucket(): Map[Long, Int] = {
-      val s = java.nio.file.Files.list(vStore)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .filter(p => java.nio.file.Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("bkt="))
-        .map { p =>
-          val c = p.getFileName.toString.stripPrefix("bkt=").toLong
-          val l = java.nio.file.Files.list(p)
-          val n = try l.filter(f => f.getFileName.toString.endsWith(".parquet")).count().toInt
-          finally l.close()
-          c -> n
-        }.toMap
-      finally s.close()
-    }
+    def filesByBucket(): Map[Long, Int] = graft.Fs.subdirs(vStore, "bkt=").map(b =>
+      b.stripPrefix("bkt=").toLong -> graft.Fs.parquetFiles(vStore.resolve(b)).size).toMap
     val out = scala.collection.mutable.ArrayBuffer.empty[
       (Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Double)]
     val candPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
@@ -195,11 +183,12 @@ object CorpusBackfill {
     landV(vRows(_ === 1L))         // SYMMETRIC storm: vector too
     serve(2)
     // repairs, each store in its own safe form
-    val gen1 = spark.read.parquet(ixStore.resolve("gen=1").toString)
-      .select(col("doc_id"), col("band"), col("band_key")).persist()
-    val ixRepairRead = gen1.count()
-    landIx(gen1.distinct(), 11, 2)
-    gen1.unpersist()
+    val ixRepairRead = graft.CacheRegistry.withCache(spark.read.parquet(ixStore.resolve("gen=1").toString)
+        .select(col("doc_id"), col("band"), col("band_key"))) { gen1 =>
+      val n = gen1.count()
+      landIx(gen1.distinct(), 11, 2)
+      n
+    }
     graft.Fs.rmTree(ixStore.resolve("gen=1"))
     val nightBuckets = vRows(_ === 1L).select(col("bkt")).distinct()
       .collect().map(_.getLong(0)).toSet

@@ -102,12 +102,6 @@ object CorpusRetention {
       (clsOf(col("doc_a")) === 3L && partnerAt(stage)(col("doc_b"))) ||
         (clsOf(col("doc_b")) === 3L && partnerAt(stage)(col("doc_a"))))
 
-    def gensOf(p: java.nio.file.Path): Seq[String] = {
-      val s = java.nio.file.Files.list(p)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .filter(java.nio.file.Files.isDirectory(_)).map(_.getFileName.toString).toSeq.sorted
-      finally s.close()
-    }
     val out = scala.collection.mutable.ArrayBuffer.empty[
       (Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Double)]
     val hitPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
@@ -156,7 +150,7 @@ object CorpusRetention {
       hitPairs(stage) = hits.select(col("doc_a"), col("doc_b")).collect()
         .map(h => (h.getLong(0), h.getLong(1))).toSet
       topk(stage) = pairs
-      ixGens(stage) = gensOf(ixStore); vecGens(stage) = gensOf(vStore)
+      ixGens(stage) = graft.Fs.subdirs(ixStore); vecGens(stage) = graft.Fs.subdirs(vStore)
     }
     serve(0)
     graft.Fs.rmTree(ixStore.resolve("gen=0")); serve(1)   // INCOHERENT

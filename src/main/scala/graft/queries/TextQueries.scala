@@ -3978,6 +3978,28 @@ object HashDedup {
       candPairs: Map[Int, Set[(Long, Long)]],
       finalGens: Seq[String])
 
+  /** One dedup-index serve's scoped frames: the band-row store read back
+    * from its files as (doc_id, band, band_key, `extra`…) and the probe
+    * join of `keys` against it ([[bandCandidates]]). Both are cached for
+    * this serve only ([[graft.CacheRegistry.withCache]]): the probe join
+    * feeds the verify, the census and the pair collects, and the read-back
+    * feeds the join and the census, so each executes once per serve. */
+  private def withIndexServe[A](spark: SparkSession, store: java.nio.file.Path, keys: DataFrame,
+                                extra: Column*)(body: (DataFrame, DataFrame) => A): A =
+    graft.CacheRegistry.withCache(spark.read.parquet(store.toString)
+        .select(Seq(col("doc_id"), col("band"), col("band_key")) ++ extra: _*)) { back =>
+      graft.CacheRegistry.withCache(bandCandidates(keys, back))(cand => body(back, cand))
+    }
+
+  /** Candidate pairs (doc_a < doc_b) of a band-key probe: `keys` rows
+    * joined to `back` rows sharing (band, band_key), self-pairs dropped. */
+  private[graft] def bandCandidates(keys: DataFrame, back: DataFrame): DataFrame =
+    keys.as("a").join(back.as("b"),
+        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
+          col("a.doc_id") =!= col("b.doc_id"))
+      .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
+        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct()
+
   /** THE PERSISTED BANDED INDEX SERVED THROUGH ITS MAINTENANCE CALENDAR —
     * №187 probes nightly batches against a STATIC index; the deployment a
     * 100 TB crawl actually runs both probes AND GROWS the index (tonight's
@@ -4058,44 +4080,21 @@ object HashDedup {
       (Long, Long, Long, Long, Long, Long)]
     val hitPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val candPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
-    def serve(stage: Int, keys: DataFrame, truthStage: DataFrame): Unit = {
-      // ONE materialization per serve (r16, guide §1.2/§6): the probe join
-      // (cand) used to execute 3-4× per stage and the τ=3/5 verify 2×
-      // (once under the census crossJoin's n_hit aggregate, once for the
-      // hitPairs collect) — persist the per-serve frames, collect hits
-      // ONCE, and read every census count off the one materialization.
-      // The store read-back stays per-serve (the drill's contract: the
-      // FILES are the store), but it feeds the census and the probe join
-      // from one cached scan. Values are unchanged — n_hit is the same
-      // count, now taken from the collected hit rows.
-      //
-      // UNPERSIST BEFORE RETURNING, not at query end: the store's files
-      // MUTATE between serves, and a live cache entry for this serve's
-      // read-back would be plan-matched by CacheManager into the NEXT
-      // serve's identical read — a stale file listing (measured at
-      // sf0.01: FILE_NOT_EXIST after a generation drop, and frozen
-      // n_rows censuses).
-      val back = spark.read.parquet(store.toString)
-        .select(col("doc_id"), col("band"), col("band_key")).persist()
-      val cand = keys.as("a").join(back.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct().persist()
-      try {
-        val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
-        val hitArr = verified.join(broadcast(truthStage), Seq("doc_a", "doc_b")).collect()
-        val r = cand.agg(count(lit(1)).as("n_candidates"))
-          .crossJoin(broadcast(back.agg(count(lit(1)).as("n_index_rows"))))
-          .crossJoin(broadcast(keys.agg(count(lit(1)).as("n_lookups"))))
-          .crossJoin(broadcast(truthStage.agg(count(lit(1)).as("n_true"))))
-          .collect()(0)
-        out += ((stage.toLong, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_lookups"),
-          r.getAs[Long]("n_candidates"), r.getAs[Long]("n_true"), hitArr.length.toLong))
-        hitPairs(stage) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
-        if (stage == 3 || stage == 4)
-          candPairs(stage) = cand.collect().map(c => (c.getLong(0), c.getLong(1))).toSet
-      } finally { cand.unpersist(); back.unpersist() }
+    def serve(stage: Int, keys: DataFrame, truthStage: DataFrame): Unit =
+        withIndexServe(spark, store, keys) { (back, cand) =>
+      // hits are collected ONCE; n_hit is counted off the collected rows
+      val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
+      val hitArr = verified.join(broadcast(truthStage), Seq("doc_a", "doc_b")).collect()
+      val r = cand.agg(count(lit(1)).as("n_candidates"))
+        .crossJoin(broadcast(back.agg(count(lit(1)).as("n_index_rows"))))
+        .crossJoin(broadcast(keys.agg(count(lit(1)).as("n_lookups"))))
+        .crossJoin(broadcast(truthStage.agg(count(lit(1)).as("n_true"))))
+        .collect()(0)
+      out += ((stage.toLong, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_lookups"),
+        r.getAs[Long]("n_candidates"), r.getAs[Long]("n_true"), hitArr.length.toLong))
+      hitPairs(stage) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
+      if (stage == 3 || stage == 4)
+        candPairs(stage) = cand.collect().map(c => (c.getLong(0), c.getLong(1))).toSet
     }
     land(ofCls(c => !c.isin(batchCls: _*)), 0, 4)
     serve(1, ofCls(_ === 1L), truthNight(1)); land(ofCls(_ === 1L), 1, 2)
@@ -4106,11 +4105,6 @@ object HashDedup {
     Seq(0, 1, 2).foreach(g => graft.Fs.rmTree(store.resolve(s"gen=$g")))
     serve(4, ofCls(_ === 3L), truthNight(3)); land(ofCls(_ === 3L), 3, 2)
     serve(5, ofCls(c => c.isin(batchCls: _*)), truthAudit)
-    val gens = java.nio.file.Files.list(store)
-    val genNames = try {
-      scala.jdk.CollectionConverters.IteratorHasAsScala(gens.iterator()).asScala
-        .filter(java.nio.file.Files.isDirectory(_)).map(_.getFileName.toString).toSeq
-    } finally gens.close()
     import spark.implicits._
     val df = out.toSeq
       .toDF("stage", "n_index_rows", "n_lookups", "n_candidates", "n_true", "n_hit")
@@ -4119,7 +4113,7 @@ object HashDedup {
         round(col("n_hit").cast("double") / greatest(col("n_candidates"), lit(1L)) + 1e-9, 6).as("prec"),
         round(col("n_hit").cast("double") / greatest(col("n_true"), lit(1L)) + 1e-9, 6).as("rec"))
       .orderBy(col("stage"))
-    (df, IndexCalendarDetail(hitPairs.toMap, candPairs.toMap, genNames.toSeq.sorted))
+    (df, IndexCalendarDetail(hitPairs.toMap, candPairs.toMap, graft.Fs.subdirs(store)))
   }
   val IncCalMod = 7
 
@@ -4189,40 +4183,22 @@ object HashDedup {
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Long)]
     val hitPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val gensAfter = scala.collection.mutable.Map.empty[Int, Seq[String]]
-    def gensOnDisk(): Seq[String] = {
-      val s = java.nio.file.Files.list(store)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .filter(java.nio.file.Files.isDirectory(_)).map(_.getFileName.toString).toSeq.sorted
-      finally s.close()
-    }
-    def serve(window: Int): Unit = {
-      // ONE materialization per serve, unpersisted before returning (r16,
-      // guide §1.2/§6) — see dedupIndexCalendar's serve for the rationale
-      // and the stale-cache hazard; values unchanged.
-      val back = spark.read.parquet(store.toString)
-        .select(col("doc_id"), col("band"), col("band_key")).persist()
-      val cand = night3Keys.as("a").join(back.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct().persist()
-      try {
-        val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
-        val tw = truthWith(windowPartners(window))
-        val hitArr = verified.join(broadcast(tw), Seq("doc_a", "doc_b"))
-          .select(col("doc_a"), col("doc_b")).collect()
-        val r = cand.agg(count(lit(1)).as("n_candidates"))
-          .crossJoin(broadcast(back.agg(count(lit(1)).as("n_index_rows"))))
-          .crossJoin(broadcast(night3Keys.agg(count(lit(1)).as("n_lookups"))))
-          .crossJoin(broadcast(tw.agg(count(lit(1)).as("n_true_window"))))
-          .crossJoin(broadcast(truthFull.agg(count(lit(1)).as("n_true_all"))))
-          .collect()(0)
-        out += ((window.toLong, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_lookups"),
-          r.getAs[Long]("n_candidates"), r.getAs[Long]("n_true_window"),
-          r.getAs[Long]("n_true_all"), hitArr.length.toLong))
-        hitPairs(window) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
-        gensAfter(window) = gensOnDisk()
-      } finally { cand.unpersist(); back.unpersist() }
+    def serve(window: Int): Unit = withIndexServe(spark, store, night3Keys) { (back, cand) =>
+      val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
+      val tw = truthWith(windowPartners(window))
+      val hitArr = verified.join(broadcast(tw), Seq("doc_a", "doc_b"))
+        .select(col("doc_a"), col("doc_b")).collect()
+      val r = cand.agg(count(lit(1)).as("n_candidates"))
+        .crossJoin(broadcast(back.agg(count(lit(1)).as("n_index_rows"))))
+        .crossJoin(broadcast(night3Keys.agg(count(lit(1)).as("n_lookups"))))
+        .crossJoin(broadcast(tw.agg(count(lit(1)).as("n_true_window"))))
+        .crossJoin(broadcast(truthFull.agg(count(lit(1)).as("n_true_all"))))
+        .collect()(0)
+      out += ((window.toLong, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_lookups"),
+        r.getAs[Long]("n_candidates"), r.getAs[Long]("n_true_window"),
+        r.getAs[Long]("n_true_all"), hitArr.length.toLong))
+      hitPairs(window) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
+      gensAfter(window) = graft.Fs.subdirs(store)
     }
     serve(3)
     graft.Fs.rmTree(store.resolve("gen=0")); serve(2)
@@ -4345,48 +4321,34 @@ object HashDedup {
         (clsOf(col("doc_b")) === 3L && clsOf(col("doc_a")) =!= 3L))
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Long)]
     val candPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
-    def serve(stage: Int): Unit = {
-      // ONE materialization per serve, unpersisted before returning (r16,
-      // guide §1.2/§6) — see dedupIndexCalendar's serve for the rationale
-      // and the stale-cache hazard; values unchanged.
-      val back = spark.read.parquet(store.toString)
-        .select(col("doc_id"), col("band"), col("band_key")).persist()
-      val cand = night3Keys.as("a").join(back.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct().persist()
-      try {
-        val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
-        val nHit = verified.join(broadcast(truth3), Seq("doc_a", "doc_b")).count()
-        val r = cand.agg(count(lit(1)).as("n_candidates"))
-          .crossJoin(broadcast(back.agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("doc_id"), col("band"), col("band_key")).as("n_distinct"))))
-          .crossJoin(broadcast(night3Keys.agg(count(lit(1)).as("n_lookups"))))
-          .crossJoin(broadcast(truth3.agg(count(lit(1)).as("n_true"))))
-          .collect()(0)
-        out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_distinct"),
-          r.getAs[Long]("n_lookups"), r.getAs[Long]("n_candidates"),
-          r.getAs[Long]("n_true"), nHit))
-        candPairs(stage) = cand.collect().map(c => (c.getLong(0), c.getLong(1))).toSet
-      } finally { cand.unpersist(); back.unpersist() }
+    def serve(stage: Int): Unit = withIndexServe(spark, store, night3Keys) { (back, cand) =>
+      val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
+      val nHit = verified.join(broadcast(truth3), Seq("doc_a", "doc_b")).count()
+      val r = cand.agg(count(lit(1)).as("n_candidates"))
+        .crossJoin(broadcast(back.agg(count(lit(1)).as("n_rows"),
+          countDistinct(col("doc_id"), col("band"), col("band_key")).as("n_distinct"))))
+        .crossJoin(broadcast(night3Keys.agg(count(lit(1)).as("n_lookups"))))
+        .crossJoin(broadcast(truth3.agg(count(lit(1)).as("n_true"))))
+        .collect()(0)
+      out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_distinct"),
+        r.getAs[Long]("n_lookups"), r.getAs[Long]("n_candidates"),
+        r.getAs[Long]("n_true"), nHit))
+      candPairs(stage) = cand.collect().map(c => (c.getLong(0), c.getLong(1))).toSet
     }
     serve(0)
     // the retry storm: night 2 lands AGAIN into the same generation
     land(ofCls(_ === 2L), 2, 2)
     serve(1)
     // bounded repair: distinct-rewrite of the affected generation only
-    val gen2 = spark.read.parquet(store.resolve("gen=2").toString)
-      .select(col("doc_id"), col("band"), col("band_key")).persist()
-    val repairRead = gen2.count()
-    land(gen2.distinct(), 12, 2)
-    gen2.unpersist()
+    val repairRead = graft.CacheRegistry.withCache(spark.read.parquet(store.resolve("gen=2").toString)
+        .select(col("doc_id"), col("band"), col("band_key"))) { gen2 =>
+      val n = gen2.count()
+      land(gen2.distinct(), 12, 2)
+      n
+    }
     graft.Fs.rmTree(store.resolve("gen=2"))
     serve(2)
-    val gensList = java.nio.file.Files.list(store)
-    val gens = try scala.jdk.CollectionConverters.IteratorHasAsScala(gensList.iterator()).asScala
-      .filter(java.nio.file.Files.isDirectory(_)).map(_.getFileName.toString).toSeq.sorted
-    finally gensList.close()
+    val gens = graft.Fs.subdirs(store)
     import spark.implicits._
     val df = out.toSeq
       .toDF("stage", "n_rows", "n_distinct", "n_lookups", "n_candidates", "n_true", "n_hit")
@@ -4529,35 +4491,23 @@ object HashDedup {
       (Long, Long, Long, Long, Long, Long, Long)]
     val hitPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val delByGen = scala.collection.mutable.Map.empty[Int, Map[Int, Long]]
-    def serve(stage: Int): Unit = {
-      // ONE materialization per serve, unpersisted before returning (r16,
-      // guide §1.2/§6) — see dedupIndexCalendar's serve for the rationale
-      // and the stale-cache hazard; values unchanged.
-      val back = spark.read.parquet(store.toString)
-        .select(col("doc_id"), col("band"), col("band_key"), col("gen").cast("int").as("gen"))
-        .persist()
-      val cand = night3Keys.as("a").join(back.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct().persist()
-      try {
-        val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
-        val ts = truthAt(stage)
-        val hitArr = verified.join(broadcast(ts), Seq("doc_a", "doc_b")).collect()
-        val r = cand.agg(count(lit(1)).as("n_candidates"))
-          .crossJoin(broadcast(back.agg(count(lit(1)).as("n_index_rows"),
-            sum(when(delOf(col("doc_id")), 1L).otherwise(0L)).as("n_del_visible"))))
-          .crossJoin(broadcast(night3Keys.agg(count(lit(1)).as("n_lookups"))))
-          .crossJoin(broadcast(ts.agg(count(lit(1)).as("n_true"))))
-          .collect()(0)
-        out += ((stage.toLong, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_del_visible"),
-          r.getAs[Long]("n_lookups"), r.getAs[Long]("n_candidates"),
-          r.getAs[Long]("n_true"), hitArr.length.toLong))
-        hitPairs(stage) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
-        delByGen(stage) = back.filter(delOf(col("doc_id"))).groupBy(col("gen")).count()
-          .collect().map(g => g.getInt(0) -> g.getLong(1)).toMap
-      } finally { cand.unpersist(); back.unpersist() }
+    def serve(stage: Int): Unit = withIndexServe(
+        spark, store, night3Keys, col("gen").cast("int").as("gen")) { (back, cand) =>
+      val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
+      val ts = truthAt(stage)
+      val hitArr = verified.join(broadcast(ts), Seq("doc_a", "doc_b")).collect()
+      val r = cand.agg(count(lit(1)).as("n_candidates"))
+        .crossJoin(broadcast(back.agg(count(lit(1)).as("n_index_rows"),
+          sum(when(delOf(col("doc_id")), 1L).otherwise(0L)).as("n_del_visible"))))
+        .crossJoin(broadcast(night3Keys.agg(count(lit(1)).as("n_lookups"))))
+        .crossJoin(broadcast(ts.agg(count(lit(1)).as("n_true"))))
+        .collect()(0)
+      out += ((stage.toLong, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_del_visible"),
+        r.getAs[Long]("n_lookups"), r.getAs[Long]("n_candidates"),
+        r.getAs[Long]("n_true"), hitArr.length.toLong))
+      hitPairs(stage) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
+      delByGen(stage) = back.filter(delOf(col("doc_id"))).groupBy(col("gen")).count()
+        .collect().map(g => g.getInt(0) -> g.getLong(1)).toMap
     }
     serve(0)
     var rewritten = 0L
@@ -4583,10 +4533,7 @@ object HashDedup {
     wave(Seq(1)); serve(2)
     land(ofCls(_ === 3L), 3, 2)
     serve(3)
-    val gensList = java.nio.file.Files.list(store)
-    val gens = try scala.jdk.CollectionConverters.IteratorHasAsScala(gensList.iterator()).asScala
-      .filter(java.nio.file.Files.isDirectory(_)).map(_.getFileName.toString).toSeq.sorted
-    finally gensList.close()
+    val gens = graft.Fs.subdirs(store)
     import spark.implicits._
     val df = out.toSeq
       .toDF("stage", "n_index_rows", "n_del_visible", "n_lookups",
@@ -4723,26 +4670,10 @@ object HashDedup {
       land(ofCls(_ === 2L).filter(expr(s"(doc_id DIV $m) % 3") === slice), 2, 2)
     }
     val night3Keys = ofCls(_ === 3L)
-    def filesByGen(): Map[String, Int] = {
-      val s = java.nio.file.Files.list(store)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .filter(p => java.nio.file.Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("gen="))
-        .map { p =>
-          val l = java.nio.file.Files.list(p)
-          val n = try l.filter(f => f.getFileName.toString.endsWith(".parquet")).count().toInt
-          finally l.close()
-          p.getFileName.toString -> n
-        }.toMap
-      finally s.close()
-    }
-    def gen0Evidence(): Set[(String, Long)] = {
-      val l = java.nio.file.Files.list(store.resolve("gen=0"))
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(l.iterator()).asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => (p.getFileName.toString, java.nio.file.Files.size(p))).toSet
-      finally l.close()
-    }
+    def filesByGen(): Map[String, Int] = graft.Fs.subdirs(store, "gen=")
+      .map(g => g -> graft.Fs.parquetFiles(store.resolve(g)).size).toMap
+    def gen0Evidence(): Set[(String, Long)] = graft.Fs.parquetFiles(store.resolve("gen=0"))
+      .map(p => (p.getFileName.toString, java.nio.file.Files.size(p))).toSet
     // truth gate: pairs with a night-3 member whose partner is visible —
     // constant through S0-S2 (compaction moves files, never visibility)
     def truthAt(stage: Int): DataFrame =
@@ -4754,33 +4685,21 @@ object HashDedup {
       (Long, Long, Long, Long, Long, Long, Long)]
     val hitPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val filesAt = scala.collection.mutable.Map.empty[Int, Map[String, Int]]
-    def serve(stage: Int): Unit = {
-      // ONE materialization per serve, unpersisted before returning (r16,
-      // guide §1.2/§6) — see dedupIndexCalendar's serve for the rationale
-      // and the stale-cache hazard; values unchanged.
-      val back = spark.read.parquet(store.toString)
-        .select(col("doc_id"), col("band"), col("band_key")).persist()
-      val cand = night3Keys.as("a").join(back.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct().persist()
-      try {
-        val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
-        val ts = truthAt(stage)
-        val hitArr = verified.join(broadcast(ts), Seq("doc_a", "doc_b")).collect()
-        val r = cand.agg(count(lit(1)).as("n_candidates"))
-          .crossJoin(broadcast(back.agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("doc_id"), col("band"), col("band_key")).as("n_distinct"))))
-          .crossJoin(broadcast(night3Keys.agg(count(lit(1)).as("n_lookups"))))
-          .crossJoin(broadcast(ts.agg(count(lit(1)).as("n_true"))))
-          .collect()(0)
-        out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_distinct"),
-          r.getAs[Long]("n_lookups"), r.getAs[Long]("n_candidates"),
-          r.getAs[Long]("n_true"), hitArr.length.toLong))
-        hitPairs(stage) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
-        filesAt(stage) = filesByGen()
-      } finally { cand.unpersist(); back.unpersist() }
+    def serve(stage: Int): Unit = withIndexServe(spark, store, night3Keys) { (back, cand) =>
+      val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
+      val ts = truthAt(stage)
+      val hitArr = verified.join(broadcast(ts), Seq("doc_a", "doc_b")).collect()
+      val r = cand.agg(count(lit(1)).as("n_candidates"))
+        .crossJoin(broadcast(back.agg(count(lit(1)).as("n_rows"),
+          countDistinct(col("doc_id"), col("band"), col("band_key")).as("n_distinct"))))
+        .crossJoin(broadcast(night3Keys.agg(count(lit(1)).as("n_lookups"))))
+        .crossJoin(broadcast(ts.agg(count(lit(1)).as("n_true"))))
+        .collect()(0)
+      out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_distinct"),
+        r.getAs[Long]("n_lookups"), r.getAs[Long]("n_candidates"),
+        r.getAs[Long]("n_true"), hitArr.length.toLong))
+      hitPairs(stage) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
+      filesAt(stage) = filesByGen()
     }
     serve(0)
     val gen0Before = gen0Evidence()

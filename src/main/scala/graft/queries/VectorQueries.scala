@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.VectorOps._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity-search + embedding-dedup operators (SURVEY §2 №25-27).
@@ -224,7 +224,7 @@ object VectorQueries {
     * the ≥16-bit scale configuration finds the IDENTICAL pair set on the
     * injected-dup corpus (perturbation is outside every bucketed dim). */
   def dedupEmbeddingWith(spark: SparkSession, dir: String, bits: Int): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
+    val v = vectorsOf(spark, dir)
     val copies = v.filter(col("vec_id") % 20 === 0)
       .select((col("vec_id") + 1000000).as("vec_id"),
         concat(slice(col("emb"), 1, 59),
@@ -278,10 +278,7 @@ object VectorQueries {
     * would shuffle and sort every scored corpus row.
     */
   def knnBrute(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir))
     val scored = corpus.join(broadcast(queries))
       .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
     topKRanked(scored, "q_id", "cos", "vec_id", K)
@@ -331,10 +328,7 @@ object VectorQueries {
     * ([[knnRecall]] measures the curve: more probed cells → more of the
     * corpus scanned → higher recall, linearly more work). */
   def knnIvfWith(spark: SparkSession, dir: String, probe: Int): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir))
     val centroids = refinedCentroids(spark, corpus)
     ivfSearch(cellsOf(corpus, centroids), centroids, queries, probe, K)
   }
@@ -350,22 +344,94 @@ object VectorQueries {
       .agg(first(col("emb")).as("emb"), // functionally dependent on vec_id
         max_by(col("c_id"), struct(col("ccos"), (-col("c_id")).as("neg"))).as("cell"))
 
-  /** Probe + search over a PRE-BUILT cell assignment ([[knnRecall]] shares
-    * one assignment across its probe widths — only this part varies). */
-  private[graft] def ivfSearch(cells: DataFrame, centroids: DataFrame, queries: DataFrame,
-                        probe: Int, k: Int): DataFrame = {
-    // probe: top-P centroids per query via the bounded-heap aggregate
-    val probes = queries.join(broadcast(centroids))
+  /** `embeddings` as (vec_id, emb). */
+  private[graft] def vectorsOf(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
+
+  /** The query/corpus split of `embeddings` (rows of [[vectorsOf]]):
+    * vec_id < [[NQueries]] are the queries, as (q_id, q_emb = `qEmb`
+    * over the row's `emb`; drifted-traffic drills pass
+    * [[rebalDriftSql]]), the rest is the corpus (vec_id, emb). */
+  private[graft] def querySplit(v: DataFrame, qEmb: Column = col("emb")): (DataFrame, DataFrame) =
+    (v.filter(col("vec_id") < NQueries).select(col("vec_id").as("q_id"), qEmb.as("q_emb")),
+      v.filter(col("vec_id") >= NQueries))
+
+  /** The probe set: each query's top-`probe` cells by query→centroid
+    * cosine, via the bounded-heap TopKByScore aggregate, as (q_id, q_emb,
+    * cell) — `probe` rows per query. Callers that need no `q_emb`
+    * project it away; the optimizer then prunes it from the aggregate. */
+  private[graft] def probeSet(queries: DataFrame, centroids: DataFrame,
+                              probe: Int = Probe): DataFrame =
+    queries.join(broadcast(centroids))
       .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
       .groupBy(col("q_id"))
       .agg(first(col("q_emb")).as("q_emb"),
         graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), probe).as("top"))
       .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
 
-    val scored = cells.join(broadcast(probes), "cell")
+  /** Every (query, vector) pair the probe set routes into a cell, scored. */
+  private def probeScored(cells: DataFrame, probes: DataFrame): DataFrame =
+    cells.join(broadcast(probes), "cell")
       .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
-    topKRanked(scored, "q_id", "cos", "vec_id", k)
+
+  /** Probe + search over a PRE-BUILT cell assignment ([[knnRecall]] shares
+    * one assignment across its probe widths — only this part varies). */
+  private[graft] def ivfSearch(cells: DataFrame, centroids: DataFrame, queries: DataFrame,
+                        probe: Int, k: Int): DataFrame =
+    topKRanked(probeScored(cells, probeSet(queries, centroids, probe)), "q_id", "cos", "vec_id", k)
       .orderBy(col("q_id"), col("rank"))
+
+  // ---------------------------------------------------------------- the IVF store's serve
+  /** A serve drill's result row: (stage, two census counts, q_id, rank,
+    * vec_id, cos). */
+  private[graft] type Served = (Long, Long, Long, Long, Long, Long, Double)
+
+  /** The cell-partitioned store read back from its files as (vec_id, emb,
+    * cell). The partition column round-trips as INT (directory-name
+    * inference) — normalized to the assignment's LONG. */
+  private[graft] def readStore(spark: SparkSession, store: String): DataFrame =
+    spark.read.parquet(store)
+      .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell"))
+
+  /** The store census most serves report: (n_rows, n_distinct vec_ids). */
+  private[graft] def storeCensus(back: DataFrame): DataFrame =
+    back.agg(count(lit(1)).as("n_rows"), countDistinct(col("vec_id")).as("n_distinct"))
+
+  /** Rank `scored` (q_id, vec_id, cos) top-[[K]] per query, cross-join
+    * the one-row `census` and collect: the serve's result and its census
+    * ride ONE job. */
+  private[graft] def rankWithCensus(scored: DataFrame, census: DataFrame): Array[Row] =
+    topKRanked(scored, "q_id", "cos", "vec_id", K).crossJoin(broadcast(census)).collect()
+
+  /** The serve step over a store read-back `back`: probe-join, score,
+    * dedup, rank, cross-join `census` and collect. The dedup on (q_id,
+    * vec_id, cos) is exact: every copy of a vector the store holds twice
+    * (a mover mid-rebalance, an at-least-once append, a compaction's
+    * overlap) carries the same embedding. */
+  private[graft] def serveRows(back: DataFrame, probes: DataFrame, census: DataFrame): Array[Row] =
+    rankWithCensus(probeScored(back, probes).distinct(), census)
+
+  /** [[serveRows]] as [[Served]] rows, for a census of two counts. */
+  private[graft] def serveStage(stage: Long, back: DataFrame, probes: DataFrame,
+                                census: DataFrame): Array[Served] = {
+    val Array(a, b) = census.columns
+    serveRows(back, probes, census).map(r => toServed(stage, r, r.getAs[Long](a), r.getAs[Long](b)))
+  }
+
+  private[graft] def toServed(stage: Long, r: Row, a: Long, b: Long): Served =
+    (stage, a, b, r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
+      r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))
+
+  /** The served (q_id, vec_id) pairs — the specs' top-k identity proofs. */
+  private[graft] def pairsOf(rows: Iterable[Served]): Set[(Long, Long)] =
+    rows.map(s => (s._4, s._6)).toSet
+
+  /** The drills' result frame over [[Served]] rows, ordered. */
+  private[graft] def servedFrame(spark: SparkSession, rows: Seq[Served],
+                                 stage: String, census2: String): DataFrame = {
+    import spark.implicits._
+    rows.toDF(stage, "n_rows", census2, "q_id", "rank", "vec_id", "cos")
+      .orderBy(col(stage), col("q_id"), col("rank"))
   }
 
   /** Neighbors per vector in the kNN graph. */
@@ -383,7 +449,7 @@ object VectorQueries {
     * Only the fixed-C centroid sample is broadcast (constant size).
     */
   def knnGraph(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
+    val v = vectorsOf(spark, dir)
     val centroids = refinedCentroids(spark, v)
 
     val cells = v.join(broadcast(centroids))
@@ -392,13 +458,7 @@ object VectorQueries {
       .agg(first(col("emb")).as("emb"),
         max_by(col("c_id"), struct(col("ccos"), (-col("c_id")).as("neg"))).as("cell"))
 
-    val probes = v.join(broadcast(centroids))
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"), col("c_id"),
-        cosine6(col("emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
+    val probes = probeSet(v.select(col("vec_id").as("q_id"), col("emb").as("q_emb")), centroids)
 
     val scored = cells.join(probes, "cell") // shuffle equi-join on cell — NO query broadcast
       .filter(col("vec_id") =!= col("q_id"))
@@ -456,10 +516,8 @@ object VectorQueries {
     // ONE centroid refinement + cell assignment shared across the probe
     // widths (only probing/search vary — the oracle shares its cells CTE
     // the same way); the search per width still runs the operator verbatim
-    val vAll = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = vAll.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = vAll.filter(col("vec_id") >= NQueries)
+    val v = vectorsOf(spark, dir)
+    val (queries, corpus) = querySplit(v)
     val centroids = refinedCentroids(spark, corpus)
     val cells = graft.CacheRegistry.track(cellsOf(corpus, centroids).persist())
     val ivfCurve = RecallProbes.map { p =>
@@ -469,9 +527,7 @@ object VectorQueries {
 
     // graph ground truth: exact top-GraphK over the FULL corpus for the
     // measured query ids (queries broadcast; corpus scanned once)
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val gq = v.filter(col("vec_id") < NQueries).select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val gBrute = v.join(broadcast(gq)).filter(col("vec_id") =!= col("q_id"))
+    val gBrute = v.join(broadcast(queries)).filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
       .groupBy(col("q_id"))
       .agg(graft.functions.TopKByScore.topK(col("cos"), col("vec_id"), GraphK).as("top"))
@@ -571,18 +627,12 @@ object VectorQueries {
   def knnCSweep(spark: SparkSession, dir: String): DataFrame = {
     val brute = graft.CacheRegistry.track(
       knnBrute(spark, dir).select(col("q_id"), col("vec_id")).persist())
-    val vAll = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = vAll.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = graft.CacheRegistry.track(vAll.filter(col("vec_id") >= NQueries).persist())
+    val (queries, corpus0) = querySplit(vectorsOf(spark, dir))
+    val corpus = graft.CacheRegistry.track(corpus0.persist())
     CSweep.map { c =>
       val cents = refinedCentroids(spark, corpus, c)
       val cells = graft.CacheRegistry.track(cellsOf(corpus, cents).persist())
-      val probes = queries.join(broadcast(cents))
-        .select(col("q_id"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-        .groupBy(col("q_id"))
-        .agg(graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-        .select(col("q_id"), explode(col("top.id")).as("cell"))
+      val probes = probeSet(queries, cents).select(col("q_id"), col("cell"))
       val sizes = cells.groupBy(col("cell")).agg(count(lit(1)).as("csz"))
       val nCand = probes.join(sizes, Seq("cell"), "left")
         .groupBy(col("q_id")).agg(sum(coalesce(col("csz"), lit(0L))).as("n_cand"))
@@ -732,7 +782,7 @@ object VectorQueries {
     * bounded-memory SHUFFLE_HASH equi-join for the 100 TB shape
     * (SemanticDedupSpec proves the modes row-identical). */
   def semanticDedupWith(spark: SparkSession, dir: String, mode: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
+    val v = vectorsOf(spark, dir)
     val copies = v.filter(col("vec_id") % 20 === 0)
       .select((col("vec_id") + 1000000).as("vec_id"),
         concat(slice(col("emb"), 1, 59),
@@ -811,6 +861,12 @@ object VectorQueries {
     * serve another SF's corpus. */
   private def dirKey(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
 
+  /** The JVM-tmpdir directory of a file-backed store drill's store, keyed
+    * by drill and input so re-runs overwrite their own store only. */
+  private def storeDir(kind: String, dir: String): String =
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      "graft_stores", s"graft_${kind}_${dirKey(dir)}").toString
+
   /** Build-if-absent PLAIN table (the constant-size model-state twin of
     * [[graft.sources.Bucketing.bucketedCached]]): the frozen centroid
     * model persists once per corpus version; reuse skips the base-sized
@@ -880,10 +936,7 @@ object VectorQueries {
     * store nightly and touching only the day's arrivals; drift is managed
     * by re-training centroids when [[knnRecall]]'s measured curve decays. */
   def knnIndexUpdate(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir))
     val base = corpus.filter(col("vec_id") % BatchMod =!= 0)
     val batch = corpus.filter(col("vec_id") % BatchMod === 0)
     // build-if-absent: base-sized work happens ONCE per corpus version.
@@ -904,10 +957,7 @@ object VectorQueries {
   /** Full-rebuild form under the same frozen centroids (spec's equality
     * counterpart, and the oracle's formulation). */
   private[queries] def knnIndexFullRebuild(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir))
     val base = corpus.filter(col("vec_id") % BatchMod =!= 0)
     val centroids = refinedCentroids(spark, base)
     ivfSearch(cellsOf(corpus, centroids), centroids, queries, Probe, K)
@@ -953,7 +1003,7 @@ object VectorQueries {
     * changes the PLAN (pinned exchange-free on the index side in
     * PlanRegressionSpec), never the answer. */
   def knnGraphIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
+    val v = vectorsOf(spark, dir)
     val centroids = refinedCentroids(spark, v)
     // BUILD (once per corpus version): assignment written bucketed on cell
     val index = graft.sources.Bucketing.writeBucketedBy(
@@ -962,13 +1012,7 @@ object VectorQueries {
     // QUERY: the workload's probes; MERGE pins the co-located join (at
     // proof scale AQE would broadcast and never exercise the layout — at
     // 100 TB the index side is never broadcastable)
-    val probes = v.join(broadcast(centroids))
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"), col("c_id"),
-        cosine6(col("emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
+    val probes = probeSet(v.select(col("vec_id").as("q_id"), col("emb").as("q_emb")), centroids)
     val scored = index.hint("MERGE").join(probes, "cell")
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
@@ -1002,7 +1046,7 @@ object VectorQueries {
     * corpus is what sits in memory/cache; this operator is the measured
     * go/no-go for that swap. */
   def embeddingQuantize(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
+    val v = vectorsOf(spark, dir)
     // barrier: scale must not be inlined into the per-element lambda
     val scaled = graft.CacheRegistry.track(v.select(col("vec_id"), col("emb"),
       greatest(expr("array_max(transform(emb, x -> abs(CAST(x AS DOUBLE))))") / 127.0, lit(1e-12)).as("scale"))
@@ -1015,11 +1059,9 @@ object VectorQueries {
         s"CAST(aggregate(zip_with($x, $y, (p, q) -> CAST(p AS BIGINT) * q), 0L, (acc, e) -> acc + e) AS DOUBLE)"
       expr(s"round(${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})) + 0.000000001, 6)")
     }
-    val queries = qv.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("qemb").as("q_qemb"))
-    val corpus = qv.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(qv.select(col("vec_id"), col("qemb").as("emb")))
     val scoredQ = corpus.join(broadcast(queries))
-      .select(col("q_id"), col("vec_id"), qcos("qemb", "q_qemb").as("qcos"))
+      .select(col("q_id"), col("vec_id"), qcos("emb", "q_emb").as("qcos"))
     val topQ = topKRanked(scoredQ, "q_id", "qcos", "vec_id", K)
       .select(col("q_id"), col("vec_id"))
     // float ground truth: the knn_brute operator verbatim
@@ -1159,10 +1201,8 @@ object VectorQueries {
     * Exactness: every cosine is the sequential-fold cos6 both engines
     * share; codeword ties break to the lowest code id. */
   def pqQuantize(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = graft.CacheRegistry.track(v.filter(col("vec_id") >= NQueries).persist())
+    val (queries, corpus0) = querySplit(vectorsOf(spark, dir))
+    val corpus = graft.CacheRegistry.track(corpus0.persist())
     val topF = graft.CacheRegistry.track(
       knnBrute(spark, dir).select(col("q_id"), col("vec_id"), col("cos")).persist())
     val perM = PqMs.map { bigM =>
@@ -1335,10 +1375,8 @@ object VectorQueries {
 
   def knnIvfPq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = graft.CacheRegistry.track(v.filter(col("vec_id") >= NQueries).persist())
+    val (queries, corpus0) = querySplit(vectorsOf(spark, dir))
+    val corpus = graft.CacheRegistry.track(corpus0.persist())
     val gold = graft.CacheRegistry.track(
       knnBrute(spark, dir).select(col("q_id"), col("vec_id")).persist())
 
@@ -1347,12 +1385,7 @@ object VectorQueries {
     val full = hashSample(corpus)
     val d = full.headOption.map(_.length).getOrElse(0)
     val centroids = lloydRefine(full, Centroids).toSeq.toDF("c_id", "c_emb")
-    val probes = queries.join(broadcast(centroids))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
+    val probes = probeSet(queries, centroids)
 
     val perM = PqMs.map { bigM =>
       val w = d / bigM
@@ -1561,10 +1594,8 @@ object VectorQueries {
     * entry and rank oracle-exact. */
   def knnIvfPqRes(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = graft.CacheRegistry.track(v.filter(col("vec_id") >= NQueries).persist())
+    val (queries, corpus0) = querySplit(vectorsOf(spark, dir))
+    val corpus = graft.CacheRegistry.track(corpus0.persist())
     val gold = graft.CacheRegistry.track(
       knnBrute(spark, dir).select(col("q_id"), col("vec_id")).persist())
 
@@ -1588,12 +1619,7 @@ object VectorQueries {
         .withColumn("remb", expr("zip_with(emb, cemb, (x, cc) -> " +
           "CAST(round(CAST(x AS DOUBLE) - CAST(cc AS DOUBLE) + 0.000000001, 6) AS FLOAT))"))
         .persist())
-    val probes = queries.join(broadcast(centroids))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
+    val probes = probeSet(queries, centroids)
     // the residual ADC's extra term: dot(q, centroid) per probed cell
     val qcs = probes
       .join(broadcast(centroids.select(col("c_id").as("cell"), col("c_emb"))), "cell")
@@ -1691,8 +1717,7 @@ object VectorQueries {
   /** Temporary №166 diagnostic: dump withCell/codes/codebooks for M=2. */
   private[graft] def debugResDump(spark: SparkSession, dir: String, out: String): Unit = {
     import spark.implicits._
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val corpus = graft.CacheRegistry.track(v.filter(col("vec_id") >= NQueries).persist())
+    val corpus = graft.CacheRegistry.track(querySplit(vectorsOf(spark, dir))._2.persist())
     val full = hashSample(corpus)
     val d = full.headOption.map(_.length).getOrElse(0)
     val cents = lloydRefine(full, Centroids)
@@ -1927,18 +1952,8 @@ object VectorQueries {
   private[graft] def ivfPqSearch(spark: SparkSession, codes: DataFrame, model: DataFrame,
                           corpus: DataFrame, queries: DataFrame, d: Int): DataFrame = {
     val centroids = model.filter(col("m") === -1).select(col("c_id"), col("c_emb"))
-    val probes = queries.join(broadcast(centroids))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-    val luts = (0 until PquM).map { m =>
-      queries.crossJoin(broadcast(model.filter(col("m") === m).select(col("c_id"), col("c_emb"))))
-        .select(col("q_id"), col("c_id").as(s"code_$m"),
-          round(graft.functions.VectorOps.dot(subCol(col("q_emb"), m, PquM, d), col("c_emb")) + lit(1e-9), 6)
-            .as(s"part_$m"))
-    }
+    val probes = probeSet(queries, centroids)
+    val luts = adcLuts(queries, model, d)
     val cand = (0 until PquM).foldLeft(
       codes.join(broadcast(probes.select(col("q_id"), col("cell"))), "cell")) { (df, m) =>
       df.join(broadcast(luts(m)), Seq("q_id", s"code_$m"))
@@ -1956,10 +1971,7 @@ object VectorQueries {
   }
 
   def knnIvfPqUpdate(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir))
     val base = corpus.filter(col("vec_id") % BatchMod =!= 0)
     val batch = corpus.filter(col("vec_id") % BatchMod === 0)
     val model = ivfPqUpdateModel(spark, dir, base)
@@ -1977,10 +1989,7 @@ object VectorQueries {
     * baseCodes, d, corpus, queries, arrivalVectors). */
   private[graft] def ivfPqIngestContext(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, Int, DataFrame, DataFrame, DataFrame) = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir))
     val base = corpus.filter(col("vec_id") % BatchMod =!= 0)
     val batch = corpus.filter(col("vec_id") % BatchMod === 0)
     val model = ivfPqUpdateModel(spark, dir, base)
@@ -1994,10 +2003,7 @@ object VectorQueries {
   /** Full-rebuild twin under the same frozen model (the spec's equality
     * counterpart and the oracle's formulation). */
   private[queries] def knnIvfPqUpdateFullRebuild(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir))
     val base = corpus.filter(col("vec_id") % BatchMod =!= 0)
     val model = ivfPqUpdateModel(spark, dir, base)
     val d = model.filter(col("m") === -1).selectExpr("size(c_emb)").head().getInt(0)
@@ -2088,10 +2094,7 @@ object VectorQueries {
     * ranks); the oracle computes the full form. Output = №162's
     * results-shaped top-[[K]] with exact cosine. Geometry M = [[PquM]]. */
   def knnIvfPqResUpdate(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir))
     val base = corpus.filter(col("vec_id") % BatchMod =!= 0)
     val batch = corpus.filter(col("vec_id") % BatchMod === 0)
     val model = ivfPqResUpdateModel(spark, dir, base)
@@ -2106,10 +2109,7 @@ object VectorQueries {
   /** Full-rebuild twin under the same frozen model (spec equality +
     * the oracle's formulation). */
   private[queries] def knnIvfPqResUpdateFullRebuild(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir))
     val base = corpus.filter(col("vec_id") % BatchMod =!= 0)
     val model = ivfPqResUpdateModel(spark, dir, base)
     val d = model.filter(col("m") === -1).selectExpr("size(c_emb)").head().getInt(0)
@@ -2178,22 +2178,12 @@ object VectorQueries {
   private def ivfPqResSearch(spark: SparkSession, codes: DataFrame, model: DataFrame,
                              corpus: DataFrame, queries: DataFrame, d: Int): DataFrame = {
     val centroids = model.filter(col("m") === -1).select(col("c_id"), col("c_emb"))
-    val probes = queries.join(broadcast(centroids))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
+    val probes = probeSet(queries, centroids)
     val qcs = probes
       .join(broadcast(centroids.select(col("c_id").as("cell"), col("c_emb"))), "cell")
       .select(col("q_id"), col("cell"),
         round(graft.functions.VectorOps.dot(col("q_emb"), col("c_emb")) + lit(1e-9), 6).as("qc"))
-    val luts = (0 until PquM).map { m =>
-      queries.crossJoin(broadcast(model.filter(col("m") === m).select(col("c_id"), col("c_emb"))))
-        .select(col("q_id"), col("c_id").as(s"code_$m"),
-          round(graft.functions.VectorOps.dot(subCol(col("q_emb"), m, PquM, d), col("c_emb")) + lit(1e-9), 6)
-            .as(s"part_$m"))
-    }
+    val luts = adcLuts(queries, model, d)
     val cand = (0 until PquM).foldLeft(
       codes.join(broadcast(probes.select(col("q_id"), col("cell"))), "cell")) { (df, m) =>
       df.join(broadcast(luts(m)), Seq("q_id", s"code_$m"))
@@ -2902,11 +2892,8 @@ object VectorQueries {
         max(col("ccos")).as("ccos"))
 
   def knnIvfRebalance(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
     // today's traffic queries FROM the drifted distribution
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), expr(rebalDriftSql("emb")).as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir), expr(rebalDriftSql("emb")))
     val base = corpus.filter(col("vec_id") % RebalArrMod =!= 0)
     val arrivals = corpus.filter(col("vec_id") % RebalArrMod === 0)
       .select(col("vec_id"), expr(rebalDriftSql("emb")).as("emb"))
@@ -2945,11 +2932,7 @@ object VectorQueries {
         .as("mean_ccos_ppm"))
       // candidate volume = the probe join's row count BEFORE ranking: the
       // per-query scan cost the occupancy skew actually charges
-      val probeCells = queries.join(broadcast(cent))
-        .select(col("q_id"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-        .groupBy(col("q_id"))
-        .agg(graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), probe).as("top"))
-        .select(col("q_id"), explode(col("top.id")).as("cell"))
+      val probeCells = probeSet(queries, cent, probe).select(col("q_id"), col("cell"))
       val cand = cells.join(broadcast(probeCells), "cell").agg(count(lit(1)).as("n_cand"))
       val hits = ivfSearch(cells.select(col("vec_id"), col("emb"), col("cell")),
           cent, queries, probe, K)
@@ -2999,8 +2982,7 @@ object VectorQueries {
     * hash, not just a spec. Oracle recomputes both refinements (warm
     * seed mirrored as the c0 CTE) and every count relationally. */
   def knnIvfRebalanceInc(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val corpus = querySplit(vectorsOf(spark, dir))._2
     val base = corpus.filter(col("vec_id") % RebalArrMod =!= 0)
     val arrivals = corpus.filter(col("vec_id") % RebalArrMod === 0)
       .select(col("vec_id"), expr(rebalDriftSql("emb")).as("emb"))
@@ -3014,8 +2996,7 @@ object VectorQueries {
       cellsOf(all, cent0).select(col("vec_id"), col("emb"), col("cell").as("cell0"))
         .join(cellsOf(all, cent1).select(col("vec_id"), col("cell").as("cell1")), "vec_id")
         .persist())
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_ivfrebinc_${dirKey(dir)}").toString
+    val store = storeDir("ivfrebinc", dir)
     val emptied = partialRewrite(store,
       j.select(col("vec_id"), col("emb"), col("cell0").as("cell")),
       j.select(col("vec_id"), col("emb"), col("cell1").as("cell")))
@@ -3080,8 +3061,81 @@ object VectorQueries {
     * problem. */
   private def byCell(a: DataFrame): DataFrame = a.repartition(col("cell"))
 
-  private[queries] def landStore(store: String, a: DataFrame): Unit =
+  private[graft] def landStore(store: String, a: DataFrame): Unit =
     byCell(a).write.partitionBy("cell").mode("overwrite").parquet(store)
+
+  /** Per-subspace ADC lookup tables of `queries` against the PQ model's
+    * codebooks: (q_id, code_m, part_m) for each m < [[PquM]]. */
+  private def adcLuts(queries: DataFrame, model: DataFrame, d: Int): Seq[DataFrame] =
+    (0 until PquM).map { m =>
+      queries.crossJoin(broadcast(model.filter(col("m") === m).select(col("c_id"), col("c_emb"))))
+        .select(col("q_id"), col("c_id").as(s"code_$m"),
+          round(graft.functions.VectorOps.dot(subCol(col("q_emb"), m, PquM, d), col("c_emb")) + lit(1e-9), 6)
+            .as(s"part_$m"))
+    }
+
+  /** Versioned centroids, the decode pairing table of a mid-repair code
+    * store (2·C rows, broadcast): (model_v, cell, c_emb). */
+  private def versionedCentroids(cent0: DataFrame, cent1: DataFrame): DataFrame =
+    cent0.select(lit(0).as("model_v"), col("c_id").as("cell"), col("c_emb"))
+      .unionByName(cent1.select(lit(1).as("model_v"), col("c_id").as("cell"), col("c_emb")))
+
+  /** Version-paired per-(q, vec) max-ADC over a code store read-back: each
+    * row decodes against its own model version's centroid; `torn = true`
+    * forces every row through the v0 decode — the stale-reader failure
+    * the specs prove diverges mid-repair. Overlap copies of one vector
+    * collapse by max adc — both decode correctly, the better
+    * approximation wins deterministically. */
+  private def pairedAdc(back: DataFrame, probes: DataFrame, luts: Seq[DataFrame],
+                        centV: DataFrame, torn: Boolean): DataFrame = {
+    val qcV = probes.join(broadcast(centV), "cell")
+      .select(col("q_id"), col("cell"), col("model_v"),
+        round(graft.functions.VectorOps.dot(col("q_emb"), col("c_emb")) + lit(1e-9), 6).as("qc"))
+    val joined = (0 until PquM).foldLeft(
+      back.join(broadcast(probes.select(col("q_id"), col("cell"))), "cell")) { (df, m) =>
+      df.join(broadcast(luts(m)), Seq("q_id", s"code_$m"))
+    }
+    val withQc =
+      if (torn) joined.drop("model_v")
+        .join(broadcast(qcV.filter(col("model_v") === 0).drop("model_v")), Seq("q_id", "cell"))
+      else joined.join(broadcast(qcV), Seq("q_id", "cell", "model_v"))
+    val adc = round(col("qc") + (0 until PquM).map(m => col(s"part_$m")).reduce(_ + _) + lit(1e-9), 6)
+    withQc.select(col("q_id"), col("vec_id"), adc.as("adc"))
+      .groupBy(col("q_id"), col("vec_id")).agg(max(col("adc")).as("adc"))
+  }
+
+  /** A PQ-code store read back from its files: (vec_id, cell, code_*,
+    * model_v), partition column normalized to LONG as in [[readStore]]. */
+  private def readCodes(spark: SparkSession, store: String, codeCols: Seq[String]): DataFrame =
+    spark.read.parquet(store).select((col("vec_id") +: col("cell").cast("long").as("cell") +:
+      codeCols.map(col) :+ col("model_v").cast("int").as("model_v")): _*)
+
+  /** Append `a`'s rows to their cells' partitions — new files only. */
+  private[graft] def appendCells(store: String, a: DataFrame): Unit =
+    byCell(a).write.partitionBy("cell").mode("append").parquet(store)
+
+  /** Rewrite ONLY the cell partitions `a` has rows for (dynamic partition
+    * overwrite). A cell `a` has no rows for keeps its files, so a cell the
+    * rewrite empties must be dropped with [[dropCells]]. */
+  private[graft] def overwriteCells(store: String, a: DataFrame): Unit =
+    byCell(a).write.partitionBy("cell").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(store)
+
+  /** Delete the partitions of `cells` (the emptied-cell ghost discipline). */
+  private[graft] def dropCells(store: String, cells: Iterable[Long]): Unit =
+    cells.foreach(c => graft.Fs.rmTree(java.nio.file.Paths.get(store, s"cell=$c")))
+
+  /** The cell ids whose `cell=` partitions are on disk. */
+  private[graft] def cellsOnDisk(store: String): Seq[Long] =
+    graft.Fs.subdirs(java.nio.file.Paths.get(store), "cell=").map(_.stripPrefix("cell=").toLong)
+
+  /** The parquet files of cell `c`'s partition (none once it is dropped). */
+  private[graft] def cellFilesOf(store: String, c: Long): Seq[java.nio.file.Path] =
+    graft.Fs.parquetFiles(java.nio.file.Paths.get(store, s"cell=$c"))
+
+  /** Parquet file count per cell partition on disk. */
+  private[graft] def cellFileCounts(store: String): Map[Long, Int] =
+    cellsOnDisk(store).map(c => c -> cellFilesOf(store, c).size).toMap
 
   private[queries] def deltaRewrite(store: String, oldA: DataFrame,
                                     newA: DataFrame): Array[Long] = {
@@ -3090,13 +3144,11 @@ object VectorQueries {
       .filter(col("cell0") =!= col("cell1"))
     val touched = moved.select(col("cell0").as("cell"))
       .unionAll(moved.select(col("cell1").as("cell"))).distinct()
-    byCell(newA.join(broadcast(touched), "cell")
+    overwriteCells(store, newA.join(broadcast(touched), "cell")
         .select(col("vec_id"), col("emb"), col("cell")))
-      .write.partitionBy("cell").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(store)
     val emptied = touched.except(newA.select(col("cell")).distinct())
       .collect().map(_.getLong(0)).sorted // ≤ C rows by construction
-    emptied.foreach(c => graft.Fs.rmTree(java.nio.file.Paths.get(store, s"cell=$c")))
+    dropCells(store, emptied)
     emptied
   }
 
@@ -3151,106 +3203,84 @@ object VectorQueries {
     * and some served result genuinely changes mid-rebalance (the
     * interleaving is not vacuous). */
   def knnServeRebalance(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
     // №172's drifted traffic: today's queries come from the new encoder
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), expr(rebalDriftSql("emb")).as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir), expr(rebalDriftSql("emb")))
     val base = corpus.filter(col("vec_id") % RebalArrMod =!= 0)
     val arrivals = corpus.filter(col("vec_id") % RebalArrMod === 0)
       .select(col("vec_id"), expr(rebalDriftSql("emb")).as("emb"))
     val all = graft.CacheRegistry.track(base.unionByName(arrivals).persist())
     val cent0 = refinedCentroids(spark, base, Centroids)
     val cent1 = refinedCentroidsWarm(spark, all, cent0)
-    val j = graft.CacheRegistry.track(
-      cellsOf(all, cent0).select(col("vec_id"), col("emb"), col("cell").as("cell0"))
-        .join(cellsOf(all, cent1).select(col("vec_id"), col("cell").as("cell1")), "vec_id")
-        .persist())
-    // ONE bounded collect feeds every schedule decision: the mover set
-    // (≤ corpus movers) plus assignment1's per-cell counts (≤ C rows) —
-    // wave membership, ceil-half splits and the emptied-cell check are
-    // all driver-side arithmetic after this
-    val moverRows = j.filter(col("cell0") =!= col("cell1"))
-      .select(col("cell0"), col("cell1")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val m1Counts: Map[Long, Long] = j.groupBy(col("cell1")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val gainCells = moverRows.map(_._2).distinct.sorted
-    val lossCells = moverRows.map(_._1).distinct.sorted
-    val (g1, g2) = gainCells.splitAt((gainCells.length + 1) / 2)
-    val (l1, l2) = lossCells.splitAt((lossCells.length + 1) / 2)
+    val rb = rebalanceOf(all, cent0, cent1)
+    val (g1, g2) = rb.gainCells.splitAt((rb.gainCells.length + 1) / 2)
+    val (l1, l2) = rb.lossCells.splitAt((rb.lossCells.length + 1) / 2)
 
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_servereb_${dirKey(dir)}").toString
-    landStore(store, j.select(col("vec_id"), col("emb"), col("cell0").as("cell")))
+    val store = storeDir("servereb", dir)
+    landStore(store, rb.j.select(col("vec_id"), col("emb"), col("cell0").as("cell")))
 
-    def gainWave(w: Array[Long]): Unit = if (w.nonEmpty) {
-      // cell c → m0(c) ∪ incomers(c): add-only, losers stay put
-      byCell(j.filter(col("cell0").isin(w.map(Long.box): _*))
-          .select(col("vec_id"), col("emb"), col("cell0").as("cell"))
-          .unionAll(j.filter(col("cell1").isin(w.map(Long.box): _*) && col("cell0") =!= col("cell1"))
-            .select(col("vec_id"), col("emb"), col("cell1").as("cell"))))
-        .write.partitionBy("cell").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(store)
-    }
-    def lossWave(w: Array[Long]): Unit = if (w.nonEmpty) {
-      byCell(j.filter(col("cell1").isin(w.map(Long.box): _*))
-          .select(col("vec_id"), col("emb"), col("cell1").as("cell")))
-        .write.partitionBy("cell").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(store)
-      // a loss cell whose members ALL left gets no data in the dynamic
-      // overwrite — delete its stale partition (№175's ghost discipline;
-      // m1Counts already knows which wave cells land empty)
-      w.filter(c => !m1Counts.contains(c)).foreach(c =>
-        graft.Fs.rmTree(java.nio.file.Paths.get(store, s"cell=$c")))
-    }
-
-    def probesOf(cent: DataFrame): DataFrame = queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-    val probes0 = graft.CacheRegistry.track(probesOf(cent0).persist())
-    val probes1 = graft.CacheRegistry.track(probesOf(cent1).persist())
+    val probes0 = graft.CacheRegistry.track(probeSet(queries, cent0).persist())
+    val probes1 = graft.CacheRegistry.track(probeSet(queries, cent1).persist())
 
     val captured = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[(Long, Long)])]
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Double)]
+    val out = scala.collection.mutable.ArrayBuffer.empty[Served]
     def serve(stage: Int, probes: DataFrame): Unit = {
       // the files ARE the snapshot: read back, search, collect EAGERLY
       // (bounded: NQueries·K rows) before the next wave mutates the store
-      // the partition column round-trips as INT (directory-name
-      // inference) — normalize to the assignment's LONG
-      val back = spark.read.parquet(store)
-        .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell"))
-      // dedup the dual copies of in-overlap movers: both carry the same
-      // embedding, so distinct (q_id, vec_id, cos) is exact. Census and
-      // search ride ONE job (the census agg crossJoins the ranked rows).
-      val scored = back.join(broadcast(probes), "cell")
-        .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
-        .distinct()
-      val census = back
-        .agg(count(lit(1)).as("n_rows"), countDistinct(col("vec_id")).as("n_vecs"))
-      topKRanked(scored, "q_id", "cos", "vec_id", K)
-        .crossJoin(broadcast(census)).collect().foreach(r =>
-          out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_vecs"),
-            r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
-            r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
+      val back = readStore(spark, store)
+      out ++= serveStage(stage, back, probes, storeCensus(back))
       if (captureStages)
         captured += ((stage, back.select(col("vec_id"), col("cell"))
           .collect().map(r => (r.getLong(0), r.getLong(1)))))
     }
 
     serve(0, probes0)
-    gainWave(g1); serve(1, probes1)
-    gainWave(g2); serve(2, probes1)
-    lossWave(l1); serve(3, probes1)
-    lossWave(l2); serve(4, probes1)
+    rb.gainWave(store, g1); serve(1, probes1)
+    rb.gainWave(store, g2); serve(2, probes1)
+    rb.lossWave(store, l1); serve(3, probes1)
+    rb.lossWave(store, l2); serve(4, probes1)
     if (captureStages) lastStageCells = captured.toSeq
+    servedFrame(spark, out.toSeq, "stage", "n_vecs")
+  }
 
-    import spark.implicits._
-    out.toSeq.toDF("stage", "n_rows", "n_vecs", "q_id", "rank", "vec_id", "cos")
-      .orderBy(col("stage"), col("q_id"), col("rank"))
+  /** A live rebalance of the cell store from assignment 0 (`cent0`) to
+    * assignment 1 (`cent1`) of `cur`: the persisted mover join `j`
+    * (vec_id, emb, cell0, cell1) and the schedule two bounded collects
+    * feed — the cells that gain movers and those that lose movers, each
+    * ascending, and assignment 1's per-cell counts (≤ C rows). Wave
+    * membership and the emptied-cell check are then driver-side
+    * arithmetic. */
+  private final case class Rebalance(j: DataFrame, gainCells: Array[Long],
+                                     lossCells: Array[Long], m1Counts: Map[Long, Long]) {
+    /** №177's GAIN wave: each cell c of `w` → m0(c) ∪ incomers(c) —
+      * add-only, leavers stay put. */
+    def gainWave(store: String, w: Array[Long]): Unit = if (w.nonEmpty)
+      overwriteCells(store, j.filter(col("cell0").isin(w.map(Long.box): _*))
+        .select(col("vec_id"), col("emb"), col("cell0").as("cell"))
+        .unionAll(j.filter(col("cell1").isin(w.map(Long.box): _*) && col("cell0") =!= col("cell1"))
+          .select(col("vec_id"), col("emb"), col("cell1").as("cell"))))
+
+    /** LOSS wave: each cell of `w` → its final m1(c). A cell whose members
+      * ALL left gets no data in the dynamic overwrite, so its partition
+      * is dropped (№175's ghost discipline; m1Counts knows which cells
+      * land empty). */
+    def lossWave(store: String, w: Array[Long]): Unit = if (w.nonEmpty) {
+      overwriteCells(store, j.filter(col("cell1").isin(w.map(Long.box): _*))
+        .select(col("vec_id"), col("emb"), col("cell1").as("cell")))
+      dropCells(store, w.filterNot(m1Counts.contains))
+    }
+  }
+
+  private def rebalanceOf(cur: DataFrame, cent0: DataFrame, cent1: DataFrame): Rebalance = {
+    val j = graft.CacheRegistry.track(
+      cellsOf(cur, cent0).select(col("vec_id"), col("emb"), col("cell").as("cell0"))
+        .join(cellsOf(cur, cent1).select(col("vec_id"), col("cell").as("cell1")), "vec_id")
+        .persist())
+    val moverRows = j.filter(col("cell0") =!= col("cell1"))
+      .select(col("cell0"), col("cell1")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val m1Counts = j.groupBy(col("cell1")).agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    Rebalance(j, moverRows.map(_._2).distinct.sorted, moverRows.map(_._1).distinct.sorted, m1Counts)
   }
 
   /** Spec hook: per-stage (vec_id, cell) store snapshots of the last
@@ -3303,15 +3333,13 @@ object VectorQueries {
   }
 
   def knnIvfCalendar(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val corpus = querySplit(vectorsOf(spark, dir))._2
     val base = corpus.filter(!(col("vec_id") % CalMod).isin(1L, 2L, 3L))
     def night(n: Int): DataFrame = corpus.filter(col("vec_id") % CalMod === n)
       .select(col("vec_id"), expr(rebalDriftSql("emb")).as("emb"))
     val a1 = night(1); val a2 = night(2); val a3 = night(3)
     val cent0 = refinedCentroids(spark, base, Centroids)
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_ivfcal_${dirKey(dir)}").toString
+    val store = storeDir("ivfcal", dir)
 
     val snaps = scala.collection.mutable.ArrayBuffer.empty[(String, Map[String, (Long, Long)])]
     def snap(ev: String): Unit = if (captureCalendar) {
@@ -3334,8 +3362,7 @@ object VectorQueries {
     snap("E0")
     // E1/E2: nightly appends — batch-sized work, new files only
     def append(batch: DataFrame, cent: DataFrame): Unit =
-      byCell(cellsOf(batch, cent).select(col("vec_id"), col("emb"), col("cell")))
-        .write.partitionBy("cell").mode("append").parquet(store)
+      appendCells(store, cellsOf(batch, cent).select(col("vec_id"), col("emb"), col("cell")))
     append(a1, cent0)
     append(a2, cent0)
     snap("E2")
@@ -3431,46 +3458,25 @@ object VectorQueries {
     * and that the mid-rebalance serve genuinely differs from both the
     * pre- and post-rebalance serves on some row (non-vacuous). */
   def knnServeCalendar(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), expr(rebalDriftSql("emb")).as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir), expr(rebalDriftSql("emb")))
     val base = corpus.filter(!(col("vec_id") % CalMod).isin(1L, 2L, 3L))
     def night(n: Int): DataFrame = corpus.filter(col("vec_id") % CalMod === n)
       .select(col("vec_id"), expr(rebalDriftSql("emb")).as("emb"))
     val a1 = night(1); val a2 = night(2); val a3 = night(3)
     val cent0 = refinedCentroids(spark, base, Centroids)
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_servecal_${dirKey(dir)}").toString
+    val store = storeDir("servecal", dir)
 
-    def probesOf(cent: DataFrame): DataFrame = queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Double)]
+    val out = scala.collection.mutable.ArrayBuffer.empty[Served]
     def serve(stage: Int, probes: DataFrame): Unit = {
-      val back = spark.read.parquet(store)
-        .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell"))
-      val scored = back.join(broadcast(probes), "cell")
-        .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
-        .distinct()
-      val census = back
-        .agg(count(lit(1)).as("n_rows"), countDistinct(col("vec_id")).as("n_vecs"))
-      topKRanked(scored, "q_id", "cos", "vec_id", K)
-        .crossJoin(broadcast(census)).collect().foreach(r =>
-          out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_vecs"),
-            r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
-            r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
+      val back = readStore(spark, store)
+      out ++= serveStage(stage, back, probes, storeCensus(back))
     }
     def append(batch: DataFrame, cent: DataFrame): Unit =
-      byCell(cellsOf(batch, cent).select(col("vec_id"), col("emb"), col("cell")))
-        .write.partitionBy("cell").mode("append").parquet(store)
+      appendCells(store, cellsOf(batch, cent).select(col("vec_id"), col("emb"), col("cell")))
 
     // E0 + S0: the base store under the live model
     landStore(store, cellsOf(base, cent0).select(col("vec_id"), col("emb"), col("cell")))
-    val probes0 = graft.CacheRegistry.track(probesOf(cent0).persist())
+    val probes0 = graft.CacheRegistry.track(probeSet(queries, cent0).persist())
     serve(0, probes0)
     // E1/E2 + S1/S2: nightly appends, served the batch they land
     append(a1, cent0); serve(1, probes0)
@@ -3479,42 +3485,15 @@ object VectorQueries {
     // first — every mover gets its new copy before any old copy drops)
     val cur = graft.CacheRegistry.track(base.unionByName(a1).unionByName(a2).persist())
     val cent1 = refinedCentroidsWarm(spark, cur, cent0)
-    val j = graft.CacheRegistry.track(
-      cellsOf(cur, cent0).select(col("vec_id"), col("emb"), col("cell").as("cell0"))
-        .join(cellsOf(cur, cent1).select(col("vec_id"), col("cell").as("cell1")), "vec_id")
-        .persist())
-    val moverRows = j.filter(col("cell0") =!= col("cell1"))
-      .select(col("cell0"), col("cell1")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val m1Counts: Map[Long, Long] = j.groupBy(col("cell1")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val gainCells = moverRows.map(_._2).distinct.sorted
-    val lossCells = moverRows.map(_._1).distinct.sorted
-    val probes1 = graft.CacheRegistry.track(probesOf(cent1).persist())
-    if (gainCells.nonEmpty) {
-      byCell(j.filter(col("cell0").isin(gainCells.map(Long.box): _*))
-          .select(col("vec_id"), col("emb"), col("cell0").as("cell"))
-          .unionAll(j.filter(col("cell1").isin(gainCells.map(Long.box): _*) && col("cell0") =!= col("cell1"))
-            .select(col("vec_id"), col("emb"), col("cell1").as("cell"))))
-        .write.partitionBy("cell").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(store)
-    }
+    val rb = rebalanceOf(cur, cent0, cent1)
+    val probes1 = graft.CacheRegistry.track(probeSet(queries, cent1).persist())
+    rb.gainWave(store, rb.gainCells)
     serve(3, probes1) // MID-REBALANCE: movers double-visible, dedup exact
-    if (lossCells.nonEmpty) {
-      byCell(j.filter(col("cell1").isin(lossCells.map(Long.box): _*))
-          .select(col("vec_id"), col("emb"), col("cell1").as("cell")))
-        .write.partitionBy("cell").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(store)
-      lossCells.filter(c => !m1Counts.contains(c)).foreach(c =>
-        graft.Fs.rmTree(java.nio.file.Paths.get(store, s"cell=$c")))
-    }
+    rb.lossWave(store, rb.lossCells)
     serve(4, probes1)
     // E4 + S5: the next night under the NEW model
     append(a3, cent1); serve(5, probes1)
-
-    import spark.implicits._
-    out.toSeq.toDF("stage", "n_rows", "n_vecs", "q_id", "rank", "vec_id", "cos")
-      .orderBy(col("stage"), col("q_id"), col("rank"))
+    servedFrame(spark, out.toSeq, "stage", "n_vecs")
   }
 
   val knnServeCalendarSql: String = {
@@ -3676,8 +3655,7 @@ object VectorQueries {
 
   private def resRepairOf(spark: SparkSession, dir: String, modelTag: String): ResRepair = {
     import spark.implicits._
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val corpus = querySplit(vectorsOf(spark, dir))._2
     val base = corpus.filter(col("vec_id") % RebalArrMod =!= 0)
     val arrivals = corpus.filter(col("vec_id") % RebalArrMod === 0)
       .select(col("vec_id"), expr(rebalDriftSql("emb")).as("emb"))
@@ -3724,17 +3702,14 @@ object VectorQueries {
   }
 
   def knnResRebalance(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
+    val (queries, _) = querySplit(vectorsOf(spark, dir))
     val st = resRepairOf(spark, dir, "graft_resreb_model")
     val cur = st.cur; val model0 = st.model0; val codes0 = st.codes0
     val hotSet = st.hotSet; val cent1df = st.cent1df; val model1 = st.model1; val d = st.d
     val codeCols = (0 until PquM).map(m => s"code_$m")
 
     // the serving store: full residual codes under the live model
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_resreb_${dirKey(dir)}").toString
+    val store = storeDir("resreb", dir)
     landStore(store, codes0)
 
     // the stale set: new cell repaired, or assignment changed
@@ -3758,12 +3733,10 @@ object VectorQueries {
     val newContent = graft.CacheRegistry.track(
       fresh.select((col("vec_id") +: col("cell") +: codeCols.map(col)): _*)
         .unionByName(keep).persist())
-    byCell(newContent).write.partitionBy("cell").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(store)
+    overwriteCells(store, newContent)
     val presentCells = newContent.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toSet
-    touchedArr.filterNot(presentCells).foreach(c =>
-      graft.Fs.rmTree(java.nio.file.Paths.get(store, s"cell=$c")))
+    dropCells(store, touchedArr.filterNot(presentCells))
 
     // the files are the proof: read back ≡ a FULL re-encode under model1
     val back = graft.CacheRegistry.track(spark.read.parquet(store)
@@ -3844,12 +3817,10 @@ object VectorQueries {
     * mixing genuinely present mid-repair, and the final store equal to
     * №179's end state. */
   def knnResServeRepair(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
     // №177's convention: the traffic that matters mid-repair is the
     // DRIFTED traffic — it routes into the arrival-hot (repaired) cells,
     // which is exactly where the torn decode can bite
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), expr(rebalDriftSql("emb")).as("q_emb"))
+    val (queries, _) = querySplit(vectorsOf(spark, dir), expr(rebalDriftSql("emb")))
     val st = resRepairOf(spark, dir, "graft_ressrv_model")
     val cur = st.cur; val model0 = st.model0; val codes0 = st.codes0
     val cent1df = st.cent1df; val d = st.d
@@ -3867,60 +3838,24 @@ object VectorQueries {
       encodeCellsRes(cur.join(j.filter(isStale).select(col("vec_id")), "vec_id"),
         st.model1, PquM, d).persist())
 
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_ressrv_${dirKey(dir)}").toString
+    val store = storeDir("ressrv", dir)
     val vcols = col("vec_id") +: col("cell") +: codeCols.map(col) :+ col("model_v")
     landStore(store, codes0.withColumn("model_v", lit(0)).select(vcols: _*))
 
-    // versioned centroids: the decode pairing table (2·C rows, broadcast)
-    val centV = graft.CacheRegistry.track(
-      cent0df.select(lit(0).as("model_v"), col("c_id").as("cell"), col("c_emb"))
-        .unionByName(cent1df.select(lit(1).as("model_v"), col("c_id").as("cell"), col("c_emb")))
-        .persist())
-    val luts = (0 until PquM).map { m =>
-      queries.crossJoin(broadcast(model0.filter(col("m") === m).select(col("c_id"), col("c_emb"))))
-        .select(col("q_id"), col("c_id").as(s"code_$m"),
-          round(graft.functions.VectorOps.dot(subCol(col("q_emb"), m, PquM, d), col("c_emb")) + lit(1e-9), 6)
-            .as(s"part_$m"))
-    }
-    def probesOf(cent: DataFrame): DataFrame = queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-    val probes0 = graft.CacheRegistry.track(probesOf(cent0df).persist())
-    val probes1 = graft.CacheRegistry.track(probesOf(cent1df).persist())
+    val centV = graft.CacheRegistry.track(versionedCentroids(cent0df, cent1df).persist())
+    val luts = adcLuts(queries, model0, d)
+    val probes0 = graft.CacheRegistry.track(probeSet(queries, cent0df).persist())
+    val probes1 = graft.CacheRegistry.track(probeSet(queries, cent1df).persist())
 
-    /** Version-paired per-(q, vec) max-ADC frame over the store's files;
-      * `torn` pairs every row with v0 instead (the stale-reader decode). */
-    def adcOf(back: DataFrame, probes: DataFrame, torn: Boolean): DataFrame = {
-      val qcV = probes.join(broadcast(centV), "cell")
-        .select(col("q_id"), col("cell"), col("model_v"),
-          round(graft.functions.VectorOps.dot(col("q_emb"), col("c_emb")) + lit(1e-9), 6).as("qc"))
-      val joined = (0 until PquM).foldLeft(
-        back.join(broadcast(probes.select(col("q_id"), col("cell"))), "cell")) { (df, m) =>
-        df.join(broadcast(luts(m)), Seq("q_id", s"code_$m"))
-      }
-      val withQc =
-        if (torn) joined.drop("model_v")
-          .join(broadcast(qcV.filter(col("model_v") === 0).drop("model_v")), Seq("q_id", "cell"))
-        else joined.join(broadcast(qcV), Seq("q_id", "cell", "model_v"))
-      val adc = round(col("qc") + (0 until PquM).map(m => col(s"part_$m")).reduce(_ + _) + lit(1e-9), 6)
-      // overlap copies of one vector collapse by max adc — both decode
-      // correctly, the better approximation wins deterministically
-      withQc.select(col("q_id"), col("vec_id"), adc.as("adc"))
-        .groupBy(col("q_id"), col("vec_id")).agg(max(col("adc")).as("adc"))
-    }
+    def adcOf(back: DataFrame, probes: DataFrame, torn: Boolean): DataFrame =
+      pairedAdc(back, probes, luts, centV, torn)
     def shortlistOf(adcFrame: DataFrame): DataFrame =
       topKRanked(adcFrame, "q_id", "adc", "vec_id", RerankR).select(col("q_id"), col("vec_id"))
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Double)]
+    val out = scala.collection.mutable.ArrayBuffer.empty[Served]
     var tornDiff = -1L
     var tornAdcDiverged = -1L
-    def serve(stage: Int, probes: DataFrame): Unit = {
-      val back = graft.CacheRegistry.track(spark.read.parquet(store)
-        .select((col("vec_id") +: col("cell").cast("long").as("cell") +:
-          codeCols.map(col) :+ col("model_v").cast("int").as("model_v")): _*).persist())
+    def serve(stage: Int, probes: DataFrame): Unit = graft.CacheRegistry.withCache(
+        readCodes(spark, store, codeCols)) { back =>
       val paired = adcOf(back, probes, torn = false)
       val shortlist = shortlistOf(paired)
       if (stage == 1) {
@@ -3935,15 +3870,11 @@ object VectorQueries {
         tornAdcDiverged = paired.join(tornAdc.withColumnRenamed("adc", "adc_t"), Seq("q_id", "vec_id"))
           .filter(col("adc") =!= col("adc_t")).count()
       }
-      val census = back.agg(count(lit(1)).as("n_rows"), countDistinct(col("vec_id")).as("n_vecs"))
       val rescored = cur.join(broadcast(shortlist), "vec_id")
         .join(broadcast(queries), "q_id")
         .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
-      topKRanked(rescored, "q_id", "cos", "vec_id", K)
-        .crossJoin(broadcast(census)).collect().foreach(r =>
-          out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_vecs"),
-            r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
-            r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
+      out ++= rankWithCensus(rescored, storeCensus(back)).map(r =>
+        toServed(stage, r, r.getAs[Long]("n_rows"), r.getAs[Long]("n_distinct")))
     }
 
     serve(0, probes0)
@@ -3957,11 +3888,9 @@ object VectorQueries {
     // finishing before the overwrite commit deletes source files —
     // fragile under task retry; knnServeCalendar set the precedent).
     val gainCells = fresh.select(col("cell")).distinct()
-    byCell(codes0.withColumn("model_v", lit(0)).select(vcols: _*)
+    overwriteCells(store, codes0.withColumn("model_v", lit(0)).select(vcols: _*)
         .join(broadcast(gainCells), "cell")
         .unionByName(fresh.withColumn("model_v", lit(1)).select(vcols: _*)))
-      .write.partitionBy("cell").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(store)
     serve(1, probes1)
     // LOSS phase: touched cells to their final content (keep rows v0 ∪
     // fresh rows v1); emptied cells' ghost partitions deleted
@@ -3973,12 +3902,10 @@ object VectorQueries {
         .select((col("vec_id") +: col("cell0").as("cell") +: codeCols.map(col) :+ lit(0).as("model_v")): _*)
         .unionByName(fresh.withColumn("model_v", lit(1)).select(vcols: _*))
         .persist())
-    byCell(finalContent).write.partitionBy("cell").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(store)
+    overwriteCells(store, finalContent)
     val presentCells = finalContent.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toSet
-    touchedArr.filterNot(presentCells).foreach(c =>
-      graft.Fs.rmTree(java.nio.file.Paths.get(store, s"cell=$c")))
+    dropCells(store, touchedArr.filterNot(presentCells))
     serve(2, probes1)
 
     import spark.implicits._
@@ -4537,10 +4464,7 @@ object VectorQueries {
   private[graft] def knnResCalendarWithCensus(
       spark: SparkSession, dir: String): (DataFrame, ResCalCensus) = {
     import spark.implicits._
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), expr(rebalDriftSql("emb")).as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir), expr(rebalDriftSql("emb")))
     val base = corpus.filter(!(col("vec_id") % CalMod).isin(1L, 2L, 3L))
     def night(n: Int): DataFrame = corpus.filter(col("vec_id") % CalMod === n)
       .select(col("vec_id"), expr(rebalDriftSql("emb")).as("emb"))
@@ -4597,62 +4521,28 @@ object VectorQueries {
       encodeCellsRes(cur.join(j.filter(isStale).select(col("vec_id")), "vec_id"),
         model1, PquM, d).persist())
 
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_rescal_${dirKey(dir)}").toString
+    val store = storeDir("rescal", dir)
     val codeCols = (0 until PquM).map(m => s"code_$m")
     val vcols = col("vec_id") +: col("cell") +: codeCols.map(col) :+ col("model_v")
     def v0rows(pred: Column): DataFrame =
       codes0.filter(pred).withColumn("model_v", lit(0)).select(vcols: _*)
 
-    val centV = graft.CacheRegistry.track(
-      cent0df.select(lit(0).as("model_v"), col("c_id").as("cell"), col("c_emb"))
-        .unionByName(cent1df.select(lit(1).as("model_v"), col("c_id").as("cell"), col("c_emb")))
-        .persist())
-    val luts = (0 until PquM).map { m =>
-      queries.crossJoin(broadcast(model0.filter(col("m") === m).select(col("c_id"), col("c_emb"))))
-        .select(col("q_id"), col("c_id").as(s"code_$m"),
-          round(graft.functions.VectorOps.dot(subCol(col("q_emb"), m, PquM, d), col("c_emb")) + lit(1e-9), 6)
-            .as(s"part_$m"))
-    }
-    def probesOf(cent: DataFrame): DataFrame = queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-    val probes0 = graft.CacheRegistry.track(probesOf(cent0df).persist())
-    val probes1 = graft.CacheRegistry.track(probesOf(cent1df).persist())
+    val centV = graft.CacheRegistry.track(versionedCentroids(cent0df, cent1df).persist())
+    val luts = adcLuts(queries, model0, d)
+    val probes0 = graft.CacheRegistry.track(probeSet(queries, cent0df).persist())
+    val probes1 = graft.CacheRegistry.track(probeSet(queries, cent1df).persist())
 
-    /** Version-paired per-(q, vec) max-ADC over the store's files;
-      * `torn = true` forces every row through the v0 decode — the
-      * stale-reader failure the spec proves diverges mid-repair. */
-    def adcOf(back: DataFrame, probes: DataFrame, torn: Boolean): DataFrame = {
-      val qcV = probes.join(broadcast(centV), "cell")
-        .select(col("q_id"), col("cell"), col("model_v"),
-          round(graft.functions.VectorOps.dot(col("q_emb"), col("c_emb")) + lit(1e-9), 6).as("qc"))
-      val joined = (0 until PquM).foldLeft(
-        back.join(broadcast(probes.select(col("q_id"), col("cell"))), "cell")) { (df, m) =>
-        df.join(broadcast(luts(m)), Seq("q_id", s"code_$m"))
-      }
-      val withQc =
-        if (torn) joined.drop("model_v")
-          .join(broadcast(qcV.filter(col("model_v") === 0).drop("model_v")), Seq("q_id", "cell"))
-        else joined.join(broadcast(qcV), Seq("q_id", "cell", "model_v"))
-      val adc = round(col("qc") + (0 until PquM).map(m => col(s"part_$m")).reduce(_ + _) + lit(1e-9), 6)
-      withQc.select(col("q_id"), col("vec_id"), adc.as("adc"))
-        .groupBy(col("q_id"), col("vec_id")).agg(max(col("adc")).as("adc"))
-    }
+    def adcOf(back: DataFrame, probes: DataFrame, torn: Boolean): DataFrame =
+      pairedAdc(back, probes, luts, centV, torn)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Long, Double)]
     /** One serve against the store files; returns the ADC shortlist it
       * served from, so S3's version-pairing proof reuses the SERVE's own
       * shortlist instead of re-running the full ADC pass a second time
       * (r14 verdict item 2 — the paired leg of midRepairShortlists was a
       * byte-identical recomputation of serve(3)'s shortlist). */
-    def serve(stage: Int, probes: DataFrame): Seq[(Long, Long)] = {
+    def serve(stage: Int, probes: DataFrame): Seq[(Long, Long)] = graft.CacheRegistry.withCache(
+        readCodes(spark, store, codeCols)) { back =>
       import spark.implicits._
-      val back = graft.CacheRegistry.track(spark.read.parquet(store)
-        .select((col("vec_id") +: col("cell").cast("long").as("cell") +:
-          codeCols.map(col) :+ col("model_v").cast("int").as("model_v")): _*).persist())
       // collect the shortlist ONCE (RerankR·NQueries rows, bounded), then
       // feed the exact rescore from the local frame — the ADC subtree
       // would otherwise execute twice (once under the rescore join, once
@@ -4666,30 +4556,26 @@ object VectorQueries {
       val rescored = allVecs.join(broadcast(shortlist), "vec_id")
         .join(broadcast(queries), "q_id")
         .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
-      topKRanked(rescored, "q_id", "cos", "vec_id", K)
-        .crossJoin(broadcast(census)).collect().foreach(r =>
-          out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_vecs"),
-            r.getAs[Long]("n_v1"), r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
-            r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
+      rankWithCensus(rescored, census).foreach(r =>
+        out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_vecs"),
+          r.getAs[Long]("n_v1"), r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
+          r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
       slRows
     }
     /** S3's version-pairing proof hook for the spec: the V0-FORCED decode
       * of the mid-repair store (the stale-reader failure). The paired
       * shortlist is serve(3)'s own return value — not recomputed. */
-    def midRepairShortlistV0(probes: DataFrame): Seq[(Long, Long)] = {
-      val back = spark.read.parquet(store)
-        .select((col("vec_id") +: col("cell").cast("long").as("cell") +:
-          codeCols.map(col) :+ col("model_v").cast("int").as("model_v")): _*)
-      topKRanked(adcOf(back, probes, torn = true), "q_id", "adc", "vec_id", RerankR)
+    def midRepairShortlistV0(probes: DataFrame): Seq[(Long, Long)] =
+      topKRanked(adcOf(readCodes(spark, store, codeCols), probes, torn = true),
+        "q_id", "adc", "vec_id", RerankR)
         .select(col("q_id"), col("vec_id")).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    }
 
     // E0+S0: base codes landed under the live model
     landStore(store, v0rows(!(col("vec_id") % CalMod).isin(1L, 2L, 3L)))
     serve(0, probes0)
     // E1/E2+S1/S2: nightly arrivals encoded under the LIVE model, v0
     def append(rows: DataFrame): Unit =
-      byCell(rows).write.partitionBy("cell").mode("append").parquet(store)
+      appendCells(store, rows)
     append(v0rows(col("vec_id") % CalMod === 1)); serve(1, probes0)
     append(v0rows(col("vec_id") % CalMod === 2)); serve(2, probes0)
     // E3+S3: GAIN phase — v1 re-encodes land NEXT TO v0 copies (incl.
@@ -4697,10 +4583,8 @@ object VectorQueries {
     // gain-cell v0 content derived from the cached codes0 frame
     val gainCells = fresh.select(col("cell")).distinct()
     val gainArr = gainCells.collect().map(_.getLong(0)).sorted
-    byCell(v0rows(lit(true)).join(broadcast(gainCells), "cell")
+    overwriteCells(store, v0rows(lit(true)).join(broadcast(gainCells), "cell")
         .unionByName(fresh.withColumn("model_v", lit(1)).select(vcols: _*)))
-      .write.partitionBy("cell").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(store)
     val slPaired = serve(3, probes1)
     val slV0 = midRepairShortlistV0(probes1)
     // E4+S4: LOSS phase — touched cells to final content, ghosts deleted
@@ -4712,12 +4596,10 @@ object VectorQueries {
         .select((col("vec_id") +: col("cell0").as("cell") +: codeCols.map(col) :+ lit(0).as("model_v")): _*)
         .unionByName(fresh.withColumn("model_v", lit(1)).select(vcols: _*))
         .persist())
-    byCell(finalContent).write.partitionBy("cell").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(store)
+    overwriteCells(store, finalContent)
     val presentCells = finalContent.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toSet
-    touchedArr.filterNot(presentCells).foreach(c =>
-      graft.Fs.rmTree(java.nio.file.Paths.get(store, s"cell=$c")))
+    dropCells(store, touchedArr.filterNot(presentCells))
     serve(4, probes1)
     // E5+S5: the next night encoded under the REPAIRED model, v1
     append(encodeCellsRes(a3, model1, PquM, d)
@@ -4959,10 +4841,7 @@ object VectorQueries {
 
   private[graft] def knnStoreDeleteDetail(
       spark: SparkSession, dir: String): (DataFrame, StoreDeleteDetail) = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir))
     val arrivals = corpus.filter(col("vec_id") % CalMod === 1L)
     val base = corpus.filter(col("vec_id") % CalMod =!= 1L)
     val cent = refinedCentroids(spark, base, Centroids)
@@ -4971,42 +4850,18 @@ object VectorQueries {
     val delPred = col("vec_id") % DelMod === DelRes && col("vec_id") % CalMod =!= 1L
     val assigned = graft.CacheRegistry.track(
       cellsOf(base, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_storedel_${dirKey(dir)}").toString
+    val store = storeDir("storedel", dir)
     landStore(store, assigned)
-    val probes = graft.CacheRegistry.track(queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-      .persist())
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Double)]
+    val probes = graft.CacheRegistry.track(probeSet(queries, cent).persist())
+    val out = scala.collection.mutable.ArrayBuffer.empty[Served]
     val delByCell = scala.collection.mutable.Map.empty[Int, Map[Long, Long]]
-    def serve(stage: Int): Unit = {
-      // ONE store scan per serve (r16, guide §6): the serve's probe join,
-      // the census aggregate and the per-cell deletion meter each
-      // re-scanned the store's partitioned small files — persist the
-      // read-back so the files are listed and read once per serve, and
-      // UNPERSIST before returning: the store mutates between serves, and
-      // a live cache entry would be plan-matched into the next serve's
-      // identical read as a stale file listing. Values unchanged.
-      val back = spark.read.parquet(store)
-        .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell")).persist()
-      try {
-        val scored = back.join(broadcast(probes), "cell")
-          .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
-          .distinct()
-        val census = back.agg(count(lit(1)).as("n_rows"),
-          sum(when(delPred, 1L).otherwise(0L)).as("n_del_visible"))
-        topKRanked(scored, "q_id", "cos", "vec_id", K)
-          .crossJoin(broadcast(census)).collect().foreach(r =>
-            out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_del_visible"),
-              r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
-              r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
-        delByCell(stage) = back.filter(delPred).groupBy(col("cell")).count()
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      } finally back.unpersist()
+    // the probe join, the census and the per-cell deletion meter share
+    // ONE scan of the store's files per serve
+    def serve(stage: Int): Unit = graft.CacheRegistry.withCache(readStore(spark, store)) { back =>
+      out ++= serveStage(stage, back, probes, back.agg(count(lit(1)).as("n_rows"),
+        sum(when(delPred, 1L).otherwise(0L)).as("n_del_visible")))
+      delByCell(stage) = back.filter(delPred).groupBy(col("cell")).count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
     serve(0)
     // the manifest's touched cells, split into the two rewrite waves
@@ -5018,28 +4873,21 @@ object VectorQueries {
       val inWave = col("cell").isin(cells.map(Long.box): _*)
       val content = assigned.filter(inWave && !delPred)
       rewritten += content.count()
-      byCell(content.select(col("vec_id"), col("emb"), col("cell")))
-        .write.partitionBy("cell").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(store)
+      overwriteCells(store, content.select(col("vec_id"), col("emb"), col("cell")))
       // fully-deleted cells write no partition under dynamic overwrite —
       // their stale directories are dropped here
       val surviving = content.select(col("cell")).distinct()
         .collect().map(_.getLong(0)).toSet
-      cells.filterNot(surviving).foreach { c =>
-        graft.Fs.rmTree(java.nio.file.Paths.get(store, s"cell=$c"))
-        emptied += c
-      }
+      val dropped = cells.filterNot(surviving)
+      dropCells(store, dropped)
+      emptied ++= dropped
     }
     wave(touched.filter(_ % 2 == 0)); serve(1)
     wave(touched.filter(_ % 2 == 1)); serve(2)
     // a later night lands under the frozen model: deletion must hold
-    byCell(cellsOf(arrivals, cent).select(col("vec_id"), col("emb"), col("cell")))
-      .write.partitionBy("cell").mode("append").parquet(store)
+    appendCells(store, cellsOf(arrivals, cent).select(col("vec_id"), col("emb"), col("cell")))
     serve(3)
-    import spark.implicits._
-    val df = out.toSeq
-      .toDF("stage", "n_rows", "n_del_visible", "q_id", "rank", "vec_id", "cos")
-      .orderBy(col("stage"), col("q_id"), col("rank"))
+    val df = servedFrame(spark, out.toSeq, "stage", "n_del_visible")
     (df, StoreDeleteDetail(delByCell.toMap, touched.toSeq, emptied.toSeq, rewritten))
   }
 
@@ -5148,10 +4996,7 @@ object VectorQueries {
 
   private[graft] def knnStoreRetentionDetail(
       spark: SparkSession, dir: String): (DataFrame, StoreRetentionDetail) = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir))
     val base = corpus.filter(!(col("vec_id") % CalMod).isin(1L, 2L))
     val cent = refinedCentroids(spark, base, Centroids)
     val genOf: Column = when(col("vec_id") % CalMod === 1L, 1)
@@ -5159,65 +5004,35 @@ object VectorQueries {
     val assigned = graft.CacheRegistry.track(
       cellsOf(corpus, cent).select(col("vec_id"), col("emb"), col("cell"))
         .withColumn("gen", genOf).persist())
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_storeret_${dirKey(dir)}")
+    val store = java.nio.file.Paths.get(storeDir("storeret", dir))
     graft.Fs.rmTree(store)
     // gen-then-cell layout: the age-out is rmTree(gen=g), nothing else
     assigned.repartition(col("gen"), col("cell"))
       .write.partitionBy("gen", "cell").mode("overwrite").parquet(store.toString)
-    val probes = graft.CacheRegistry.track(queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-      .persist())
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Double)]
+    val probes = graft.CacheRegistry.track(probeSet(queries, cent).persist())
+    val out = scala.collection.mutable.ArrayBuffer.empty[Served]
     val topk = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val gensAfter = scala.collection.mutable.Map.empty[Int, Seq[String]]
     val probeMatched = scala.collection.mutable.Map.empty[Int, Long]
     var full: Set[(Long, Long)] = Set.empty
-    def gensOnDisk(): Seq[String] = {
-      val s = java.nio.file.Files.list(store)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .filter(java.nio.file.Files.isDirectory(_)).map(_.getFileName.toString).toSeq.sorted
-      finally s.close()
-    }
-    def serve(win: Int): Unit = {
-      // ONE store scan per serve, unpersisted before returning (r16,
-      // guide §6) — see knnStoreDelete's serve for the rationale and the
-      // stale-cache hazard; values unchanged.
-      val back = spark.read.parquet(store.toString)
-        .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell")).persist()
-      try {
-        val scored = back.join(broadcast(probes), "cell")
-          .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
-          .distinct()
-        val served = topKRanked(scored, "q_id", "cos", "vec_id", K)
-          .crossJoin(broadcast(back.agg(count(lit(1)).as("n_rows")))).collect()
-        val pairs = served.map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
-        if (win == 3) full = pairs
-        val nKept = pairs.count(full.contains).toLong
-        served.foreach(r =>
-          out += ((win.toLong, r.getAs[Long]("n_rows"), nKept,
-            r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
-            r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
-        topk(win) = pairs
-        gensAfter(win) = gensOnDisk()
-        // the serve's OWN join, not the pre-serve probe frame: distinct
-        // lookup keys that found ≥1 row in this window's store — the
-        // scan-side work retention actually saves (r14 advice)
-        probeMatched(win) = back.join(broadcast(probes.select(col("q_id"), col("cell"))), "cell")
-          .select(col("q_id"), col("cell")).distinct().count()
-      } finally back.unpersist()
+    def serve(win: Int): Unit = graft.CacheRegistry.withCache(readStore(spark, store.toString)) { back =>
+      val served = serveRows(back, probes, back.agg(count(lit(1)).as("n_rows")))
+      val pairs = served.map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
+      if (win == 3) full = pairs
+      val nKept = pairs.count(full.contains).toLong
+      out ++= served.map(r => toServed(win, r, r.getAs[Long]("n_rows"), nKept))
+      topk(win) = pairs
+      gensAfter(win) = graft.Fs.subdirs(store)
+      // the serve's OWN join, not the pre-serve probe frame: distinct
+      // lookup keys that found ≥1 row in this window's store — the
+      // scan-side work retention actually saves (r14 advice)
+      probeMatched(win) = back.join(broadcast(probes.select(col("q_id"), col("cell"))), "cell")
+        .select(col("q_id"), col("cell")).distinct().count()
     }
     serve(3)
     graft.Fs.rmTree(store.resolve("gen=0")); serve(2)
     graft.Fs.rmTree(store.resolve("gen=1")); serve(1)
-    import spark.implicits._
-    val df = out.toSeq
-      .toDF("win", "n_rows", "n_kept", "q_id", "rank", "vec_id", "cos")
-      .orderBy(col("win"), col("q_id"), col("rank"))
+    val df = servedFrame(spark, out.toSeq, "win", "n_kept")
     (df, StoreRetentionDetail(topk.toMap, gensAfter.toMap,
       probes.select(col("q_id"), col("cell")).distinct().count(), probeMatched.toMap))
   }
@@ -5265,10 +5080,7 @@ object VectorQueries {
 
   private[graft] def knnStoreBackfillDetail(
       spark: SparkSession, dir: String): (DataFrame, StoreBackfillDetail) = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir))
     val arrivals = corpus.filter(col("vec_id") % CalMod === 1L)
     val base = corpus.filter(col("vec_id") % CalMod =!= 1L)
     val cent = refinedCentroids(spark, base, Centroids)
@@ -5276,77 +5088,34 @@ object VectorQueries {
       cellsOf(base, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
     val arrA = graft.CacheRegistry.track(
       cellsOf(arrivals, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_storebf_${dirKey(dir)}").toString
+    val store = storeDir("storebf", dir)
     landStore(store, baseA)
     def append(a: DataFrame): Unit =
-      byCell(a).write.partitionBy("cell").mode("append").parquet(store)
+      appendCells(store, a)
     append(arrA)
-    val probes = graft.CacheRegistry.track(queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-      .persist())
+    val probes = graft.CacheRegistry.track(probeSet(queries, cent).persist())
     val touched = arrA.select(col("cell")).distinct().collect().map(_.getLong(0)).toSet
-    def filesByCell(): Map[Long, Int] = {
-      val root = java.nio.file.Paths.get(store)
-      val s = java.nio.file.Files.list(root)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .filter(p => java.nio.file.Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("cell="))
-        .map { p =>
-          val c = p.getFileName.toString.stripPrefix("cell=").toLong
-          val l = java.nio.file.Files.list(p)
-          val n = try l.filter(f => f.getFileName.toString.endsWith(".parquet")).count().toInt
-          finally l.close()
-          c -> n
-        }.toMap
-      finally s.close()
-    }
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Double)]
+    val out = scala.collection.mutable.ArrayBuffer.empty[Served]
     val topk = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
-    def serve(stage: Int): Unit = {
-      // ONE store scan per serve, unpersisted before returning (r16,
-      // guide §6) — see knnStoreDelete's serve for the rationale and the
-      // stale-cache hazard; values unchanged.
-      val back = spark.read.parquet(store)
-        .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell")).persist()
-      try {
-        val scored = back.join(broadcast(probes), "cell")
-          .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
-          .distinct()
-        val census = back.agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("vec_id")).as("n_distinct"))
-        val served = topKRanked(scored, "q_id", "cos", "vec_id", K)
-          .crossJoin(broadcast(census)).collect()
-        served.foreach(r =>
-          out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_distinct"),
-            r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
-            r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
-        topk(stage) = served.map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
-      } finally back.unpersist()
+    def serve(stage: Int): Unit = graft.CacheRegistry.withCache(readStore(spark, store)) { back =>
+      val served = serveStage(stage, back, probes, storeCensus(back))
+      out ++= served
+      topk(stage) = pairsOf(served)
     }
     serve(0)
     // the retry storm: the night lands AGAIN into the same cell dirs
     append(arrA)
     serve(1)
-    val untouchedBefore = filesByCell().filter { case (c, _) => !touched(c) }
+    val untouchedBefore = cellFileCounts(store).filter { case (c, _) => !touched(c) }
     // bounded repair: one dynamic overwrite of ONLY the touched cells,
     // content derived from the cached frames (single copy of the night)
     val repairContent = baseA.filter(col("cell").isin(touched.toSeq.map(Long.box): _*))
       .unionAll(arrA)
     val rewritten = repairContent.count()
-    byCell(repairContent.select(col("vec_id"), col("emb"), col("cell")))
-      .write.partitionBy("cell").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(store)
+    overwriteCells(store, repairContent.select(col("vec_id"), col("emb"), col("cell")))
     serve(2)
-    val untouchedAfter = filesByCell().filter { case (c, _) => !touched(c) }
-    import spark.implicits._
-    val df = out.toSeq
-      .toDF("stage", "n_rows", "n_distinct", "q_id", "rank", "vec_id", "cos")
-      .orderBy(col("stage"), col("q_id"), col("rank"))
+    val untouchedAfter = cellFileCounts(store).filter { case (c, _) => !touched(c) }
+    val df = servedFrame(spark, out.toSeq, "stage", "n_distinct")
     (df, StoreBackfillDetail(topk.toMap, touched, rewritten, untouchedBefore, untouchedAfter))
   }
 
@@ -5445,10 +5214,7 @@ object VectorQueries {
 
   private[graft] def knnStoreCompactDetail(
       spark: SparkSession, dir: String): (DataFrame, StoreCompactDetail) = {
-    val v = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = querySplit(vectorsOf(spark, dir))
     val arrivals = corpus.filter(col("vec_id") % CalMod === 1L)
     val base = corpus.filter(col("vec_id") % CalMod =!= 1L)
     val cent = refinedCentroids(spark, base, Centroids)
@@ -5456,67 +5222,27 @@ object VectorQueries {
       cellsOf(base, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
     val arrA = graft.CacheRegistry.track(
       cellsOf(arrivals, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_storecmp_${dirKey(dir)}").toString
+    val store = storeDir("storecmp", dir)
     landStore(store, baseA)
     // the small-files storm: the night lands as 3 micro-batch-shaped
     // appends — each touched cell accumulates one file per append
     (0L to 2L).foreach { slice =>
-      byCell(arrA.filter(expr(s"(vec_id DIV $CalMod) % 3") === slice))
-        .write.partitionBy("cell").mode("append").parquet(store)
+      appendCells(store, arrA.filter(expr(s"(vec_id DIV $CalMod) % 3") === slice))
     }
-    val probes = graft.CacheRegistry.track(queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-      .persist())
+    val probes = graft.CacheRegistry.track(probeSet(queries, cent).persist())
     val touched = arrA.select(col("cell")).distinct().collect().map(_.getLong(0)).toSet
-    def cellFiles(c: Long): Seq[java.nio.file.Path] = {
-      val d = java.nio.file.Paths.get(store, s"cell=$c")
-      if (!java.nio.file.Files.isDirectory(d)) return Seq.empty
-      val l = java.nio.file.Files.list(d)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(l.iterator()).asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toVector
-      finally l.close()
-    }
-    def allCells(): Seq[Long] = {
-      val s = java.nio.file.Files.list(java.nio.file.Paths.get(store))
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .filter(p => java.nio.file.Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("cell="))
-        .map(_.getFileName.toString.stripPrefix("cell=").toLong).toVector
-      finally s.close()
-    }
-    def filesByCell(): Map[Long, Int] = allCells().map(c => c -> cellFiles(c).size).toMap
+    def cellFiles(c: Long): Seq[java.nio.file.Path] = cellFilesOf(store, c)
     def untouchedEvidence(): Set[(String, Long)] =
-      allCells().filterNot(touched).flatMap(c => cellFiles(c).map(p =>
+      cellsOnDisk(store).filterNot(touched).flatMap(c => cellFiles(c).map(p =>
         (s"cell=$c/${p.getFileName}", java.nio.file.Files.size(p)))).toSet
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Double)]
+    val out = scala.collection.mutable.ArrayBuffer.empty[Served]
     val topk = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val filesAt = scala.collection.mutable.Map.empty[Int, Map[Long, Int]]
-    def serve(stage: Int): Unit = {
-      // ONE store scan per serve, unpersisted before returning (r16,
-      // guide §6) — see knnStoreDelete's serve for the rationale and the
-      // stale-cache hazard; values unchanged.
-      val back = spark.read.parquet(store)
-        .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell")).persist()
-      try {
-        val scored = back.join(broadcast(probes), "cell")
-          .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
-          .distinct()
-        val census = back.agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("vec_id")).as("n_distinct"))
-        val served = topKRanked(scored, "q_id", "cos", "vec_id", K)
-          .crossJoin(broadcast(census)).collect()
-        served.foreach(r =>
-          out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_distinct"),
-            r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
-            r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
-        topk(stage) = served.map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
-        filesAt(stage) = filesByCell()
-      } finally back.unpersist()
+    def serve(stage: Int): Unit = graft.CacheRegistry.withCache(readStore(spark, store)) { back =>
+      val served = serveStage(stage, back, probes, storeCensus(back))
+      out ++= served
+      topk(stage) = pairsOf(served)
+      filesAt(stage) = cellFileCounts(store)
     }
     serve(0)
     val untouchedBefore = untouchedEvidence()
@@ -5527,15 +5253,12 @@ object VectorQueries {
     val consolidated = baseA.filter(col("cell").isin(touched.toSeq.map(Long.box): _*))
       .unionAll(arrA)
     val rewritten = consolidated.count()
-    byCell(consolidated).write.partitionBy("cell").mode("append").parquet(store)
+    appendCells(store, consolidated)
     serve(1)
     oldFiles.foreach(java.nio.file.Files.delete)
     serve(2)
     val untouchedAfter = untouchedEvidence()
-    import spark.implicits._
-    val df = out.toSeq
-      .toDF("stage", "n_rows", "n_distinct", "q_id", "rank", "vec_id", "cos")
-      .orderBy(col("stage"), col("q_id"), col("rank"))
+    val df = servedFrame(spark, out.toSeq, "stage", "n_distinct")
     (df, StoreCompactDetail(topk.toMap, touched, rewritten, filesAt.toMap,
       untouchedBefore, untouchedAfter))
   }

@@ -77,18 +77,9 @@ object RetentionSweep {
           .write.parquet(tmp.toString)
         graft.Fs.rmTree(bDir.toPath)
         java.nio.file.Files.createDirectories(bDir.toPath)
-        val ts = java.nio.file.Files.list(tmp)
-        try {
-          val it = ts.iterator()
-          var j = 0
-          while (it.hasNext) {
-            val p = it.next()
-            if (p.getFileName.toString.endsWith(".parquet")) {
-              java.nio.file.Files.move(p, bDir.toPath.resolve(f"part_$j%03d.parquet"))
-              j += 1
-            }
-          }
-        } finally ts.close()
+        graft.Fs.parquetFiles(tmp).zipWithIndex.foreach { case (p, j) =>
+          java.nio.file.Files.move(p, bDir.toPath.resolve(f"part_$j%03d.parquet"))
+        }
         graft.Fs.rmTree(tmp)
       }
       val untouchedIntact = listing(dateDirs().filter(f => dateOf(f) > BoundaryDate)) == keptBefore

@@ -187,13 +187,7 @@ object SpeculationDrill {
       check(back == expectedLines.sorted,
         "readBack diverged from the deterministic expected lines")
       val shardDir = java.nio.file.Paths.get(root, "shards")
-      val listing = java.nio.file.Files.list(shardDir)
-      val names = try {
-        val b = Vector.newBuilder[String]
-        val it = listing.iterator()
-        while (it.hasNext) b += it.next().getFileName.toString
-        b.result()
-      } finally listing.close()
+      val names = graft.Fs.list(shardDir).map(_.getFileName.toString)
       check(names.count(_.endsWith(".gz")) == nShards,
         s"visible shard files ${names.count(_.endsWith(".gz"))}, want $nShards")
       // the killed loser may leave a dot-temp ON DISK; it must be invisible

@@ -33,17 +33,8 @@ private[streaming] object ReplayHarness {
     bands.zipWithIndex.foreach { case (df, i) =>
       val bandDir = scratch.resolve(s"band$i")
       df.write.parquet(bandDir.toString)
-      val listing = java.nio.file.Files.list(bandDir)
-      val parts = try {
-        val b = Vector.newBuilder[java.nio.file.Path]
-        val it = listing.iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          if (n.startsWith("part-") && n.endsWith(".parquet")) b += p
-        }
-        b.result().sortBy(_.getFileName.toString) // within-band order deterministic too
-      } finally listing.close()
+      val parts = graft.Fs.parquetFiles(bandDir).filter(_.getFileName.toString.startsWith("part-"))
+        .sortBy(_.getFileName.toString) // within-band order deterministic too
       parts.zipWithIndex.foreach { case (p, j) =>
         val dst = inDir.resolve(f"band${i}_$j%03d.parquet")
         java.nio.file.Files.move(p, dst)

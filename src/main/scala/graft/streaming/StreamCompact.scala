@@ -53,32 +53,19 @@ object StreamCompact {
   private[graft] def streamCompactWithCensus(
       spark: SparkSession, dir: String): (DataFrame, CompactStreamCensus) = {
     import graft.queries.VectorQueries
-    import VectorQueries.{K, NQueries, Probe}
-    val v = graft.Tables(spark, dir).embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    val (queries, corpus) = VectorQueries.querySplit(VectorQueries.vectorsOf(spark, dir))
     val base = corpus.filter(col("vec_id") % 20 =!= 0) // №176's split
     val arrivals = corpus.filter(col("vec_id") % 20 === 0)
     val a1Of: Column = expr("vec_id % 20 = 0 AND (vec_id DIV 20) % 2 = 0")
     val cent = VectorQueries.refinedCentroids(spark, base, VectorQueries.Centroids)
     val baseA = graft.CacheRegistry.track(
       VectorQueries.cellsOf(base, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
-    val probes = graft.CacheRegistry.track(queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"),
-        graft.functions.VectorOps.cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-      .persist())
+    val probes = graft.CacheRegistry.track(VectorQueries.probeSet(queries, cent).persist())
 
     val scratch = java.nio.file.Files.createTempDirectory("graft_stream_compact_")
     val inDir = scratch.resolve("in"); java.nio.file.Files.createDirectories(inDir)
     val store = scratch.resolve("store").toString
-    baseA.repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(store)
+    VectorQueries.landStore(store, baseA)
     val name = s"stream_compact_${System.nanoTime()}"
     val nullEmb = lit(null).cast("array<float>")
     // A1 / C1 / A2 / C2 — the compaction's two halves interleaved with data
@@ -88,16 +75,8 @@ object StreamCompact {
       arrivals.filter(!a1Of).select(col("vec_id"), lit(0L).as("kind"), col("emb")),
       spark.range(1).select(lit(-2L).as("vec_id"), lit(2L).as("kind"), nullEmb.as("emb")))
 
-    def cellFiles(c: Long): Seq[java.nio.file.Path] = {
-      val d = java.nio.file.Paths.get(store, s"cell=$c")
-      if (!java.nio.file.Files.isDirectory(d)) return Seq.empty
-      val l = java.nio.file.Files.list(d)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(l.iterator()).asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toVector
-      finally l.close()
-    }
-    val results = scala.collection.mutable.ArrayBuffer.empty[
-      (Long, Long, Long, Long, Long, Long, Double)]
+    def cellFiles(c: Long): Seq[java.nio.file.Path] = VectorQueries.cellFilesOf(store, c)
+    val results = scala.collection.mutable.ArrayBuffer.empty[VectorQueries.Served]
     val topk = scala.collection.mutable.Map.empty[Long, Set[(Long, Long)]]
     val filesAt = scala.collection.mutable.Map.empty[Long, Map[Long, Int]]
     val landed = scala.collection.mutable.ArrayBuffer[DataFrame](baseA)
@@ -106,7 +85,11 @@ object StreamCompact {
     var a2Files: Set[String] = Set.empty
     var rewrittenRows = 0L
     var batches = -1
-    ReplayHarness.replay(spark, 8, name, andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    // the arrival frames are cached in the stream's cloned session (C1
+    // consolidates from them), so the replay releases them when it ends
+    ReplayHarness.replay(spark, 8, name, andThen = () => {
+      graft.CacheRegistry.release(landed.drop(1)); graft.Fs.rmTree(scratch)
+    }) { register =>
       ReplayHarness.landBands(scratch, inDir, bands.map(_.coalesce(1)))
       val stream = spark.readStream
         .schema("vec_id LONG, kind LONG, emb ARRAY<FLOAT>")
@@ -124,13 +107,11 @@ object StreamCompact {
                 if (doomed.nonEmpty && a2Files.isEmpty)
                   touched.flatMap(c => cellFiles(c).map(_.toString))
                 else Set.empty
-              val a = graft.CacheRegistry.track(
-                VectorQueries.cellsOf(bdf.select(col("vec_id"), col("emb")), cent)
-                  .select(col("vec_id"), col("emb"), col("cell")).persist())
-              a.count()
-              a.repartition(col("cell"))
-                .write.partitionBy("cell").mode("append").parquet(store)
+              val a = VectorQueries.cellsOf(bdf.select(col("vec_id"), col("emb")), cent)
+                .select(col("vec_id"), col("emb"), col("cell")).persist()
               landed += a
+              a.count()
+              VectorQueries.appendCells(store, a)
               if (doomed.nonEmpty && a2Files.isEmpty)
                 a2Files = touched.flatMap(c => cellFiles(c).map(_.toString)) -- preFiles
             case 1L =>
@@ -144,41 +125,20 @@ object StreamCompact {
               val consolidated = landed.toSeq.reduce(_ unionAll _)
                 .filter(col("cell").isin(touched.toSeq.map(Long.box): _*))
               rewrittenRows = consolidated.count()
-              consolidated.repartition(col("cell"))
-                .write.partitionBy("cell").mode("append").parquet(store)
+              VectorQueries.appendCells(store, consolidated)
             case 2L =>
               // C2: delete EXACTLY the C1 snapshot — never a re-listing,
               // which would eat the files A2 landed in between
               doomed.foreach(java.nio.file.Files.delete)
           }
           // SERVE: the files are the store; candidates dedup before
-          // ranking, so the compaction overlap is invisible to the top-k.
-          // ONE store scan per serve (r16, guide §6): the probe join and
-          // the census aggregate shared no materialization, so every
-          // micro-batch read the partitioned small files twice — persist
-          // the read-back, and UNPERSIST before the batch returns (the
-          // store mutates between batches; a live cache entry would be
-          // plan-matched into the next batch's identical read as a stale
-          // file listing — measured at sf0.01 as a frozen n_rows census).
-          val back = spark.read.parquet(store)
-            .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell")).persist()
-          try {
-            val scored = back.join(broadcast(probes), "cell")
-              .select(col("q_id"), col("vec_id"),
-                graft.functions.VectorOps.cosine6(col("emb"), col("q_emb")).as("cos"))
-              .distinct()
-            val census = back.agg(count(lit(1)).as("n_rows"),
-              countDistinct(col("vec_id")).as("n_distinct"))
-            val served = graft.plans.GroupedTopK.rankedTopK(scored, "q_id", "cos", "vec_id", K)
-              .crossJoin(broadcast(census)).collect()
-            served.foreach(r =>
-              results += ((id, r.getAs[Long]("n_rows"), r.getAs[Long]("n_distinct"),
-                r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
-                r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
-            topk(id) = served.map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
+          // ranking, so the compaction overlap is invisible to the top-k
+          graft.CacheRegistry.withCache(VectorQueries.readStore(spark, store)) { back =>
+            val served = VectorQueries.serveStage(id, back, probes, VectorQueries.storeCensus(back))
+            results ++= served
+            topk(id) = VectorQueries.pairsOf(served)
             filesAt(id) = touched.map(c => c -> cellFiles(c).size).toMap
-          } finally back.unpersist()
-          ()
+          }
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", scratch.resolve("ckpt").toString)
@@ -187,10 +147,7 @@ object StreamCompact {
       q.awaitTermination()
       batches = q.recentProgress.count(_.numInputRows > 0)
     }
-    import spark.implicits._
-    val df = results.toSeq
-      .toDF("after_batch", "n_rows", "n_distinct", "q_id", "rank", "vec_id", "cos")
-      .orderBy(col("after_batch"), col("q_id"), col("rank"))
+    val df = VectorQueries.servedFrame(spark, results.toSeq, "after_batch", "n_distinct")
     (df, CompactStreamCensus(batches, touched, rewrittenRows, filesAt.toMap,
       doomed.map(_.toString).toSet, a2Files, topk.toMap))
   }

@@ -90,32 +90,26 @@ object StreamDedupIndex {
       val q = stream.writeStream
         .foreachBatch { (bdf: DataFrame, id: Long) =>
           val night = id + 1
-          val keys = HashDedup.mpBaseRows(HashDedup.mpSigFrom(bdf))
-            .select(col("doc_id"), col("band"), col("band_key"))
-            .persist()
-          keys.count() // materialize before the store is touched
-          val back = spark.read.parquet(store.toString)
-          val cand = keys.as("a").join(back.as("b"),
-              col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-                col("a.doc_id") =!= col("b.doc_id"))
-            .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-              greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct()
-          val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
-          val tn = truthNight(night.toInt)
-          val r = cand.agg(count(lit(1)).as("n_candidates"))
-            .crossJoin(broadcast(back.agg(count(lit(1)).as("n_index_rows"))))
-            .crossJoin(broadcast(keys.agg(count(lit(1)).as("n_lookups"))))
-            .crossJoin(broadcast(tn.agg(count(lit(1)).as("n_true"))))
-            .crossJoin(broadcast(verified.join(broadcast(tn), Seq("doc_a", "doc_b"))
-              .agg(count(lit(1)).as("n_hit"))))
-            .collect()(0)
-          servedFiles += ((night, storeFiles()))
-          out += ((night, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_lookups"),
-            r.getAs[Long]("n_candidates"), r.getAs[Long]("n_true"), r.getAs[Long]("n_hit")))
-          // probe BEFORE append: the night never sees itself
-          keys.coalesce(1).write.mode("append").parquet(store.toString)
-          keys.unpersist()
-          ()
+          graft.CacheRegistry.withCache(HashDedup.mpBaseRows(HashDedup.mpSigFrom(bdf))
+              .select(col("doc_id"), col("band"), col("band_key"))) { keys =>
+            keys.count() // materialize before the store is touched
+            val back = spark.read.parquet(store.toString)
+            val cand = HashDedup.bandCandidates(keys, back)
+            val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
+            val tn = truthNight(night.toInt)
+            val r = cand.agg(count(lit(1)).as("n_candidates"))
+              .crossJoin(broadcast(back.agg(count(lit(1)).as("n_index_rows"))))
+              .crossJoin(broadcast(keys.agg(count(lit(1)).as("n_lookups"))))
+              .crossJoin(broadcast(tn.agg(count(lit(1)).as("n_true"))))
+              .crossJoin(broadcast(verified.join(broadcast(tn), Seq("doc_a", "doc_b"))
+                .agg(count(lit(1)).as("n_hit"))))
+              .collect()(0)
+            servedFiles += ((night, storeFiles()))
+            out += ((night, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_lookups"),
+              r.getAs[Long]("n_candidates"), r.getAs[Long]("n_true"), r.getAs[Long]("n_hit")))
+            // probe BEFORE append: the night never sees itself
+            keys.coalesce(1).write.mode("append").parquet(store.toString)
+          }
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", scratch.resolve("ckpt").toString)

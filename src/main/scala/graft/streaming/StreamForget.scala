@@ -59,12 +59,8 @@ object StreamForget {
   private[graft] def streamForgetWithCensus(
       spark: SparkSession, dir: String): (DataFrame, ForgetCensus) = {
     import graft.queries.VectorQueries
-    import VectorQueries.{K, NQueries, Probe}
-    val v = graft.Tables(spark, dir).embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    import VectorQueries.{K, Probe}
+    val (queries, corpus) = VectorQueries.querySplit(VectorQueries.vectorsOf(spark, dir))
     val base = corpus.filter(col("vec_id") % 20 =!= 0) // №176's split
     val arrivals = corpus.filter(col("vec_id") % 20 === 0)
     val a1Of: Column = expr("vec_id % 20 = 0 AND (vec_id DIV 20) % 2 = 0")
@@ -79,8 +75,7 @@ object StreamForget {
     val scratch = java.nio.file.Files.createTempDirectory("graft_stream_forget_")
     val inDir = scratch.resolve("in"); java.nio.file.Files.createDirectories(inDir)
     val store = scratch.resolve("store").toString
-    baseA.repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(store)
+    VectorQueries.landStore(store, baseA)
     val name = s"stream_forget_${System.nanoTime()}"
     val nullEmb = lit(null).cast("array<float>")
     val bands = Seq(
@@ -93,8 +88,7 @@ object StreamForget {
       arrivals.filter(a1Of && col("vec_id") % 9 === 4)
         .select(col("vec_id"), lit(1L).as("kind"), nullEmb.as("emb")))
 
-    val results = scala.collection.mutable.ArrayBuffer.empty[
-      (Long, Long, Long, Long, Long, Long, Double)]
+    val results = scala.collection.mutable.ArrayBuffer.empty[VectorQueries.Served]
     val topk = scala.collection.mutable.Map.empty[Long, Set[(Long, Long)]]
     val appliedVisible = scala.collection.mutable.Map.empty[Long, Long]
     val delBaseVisible = scala.collection.mutable.Map.empty[Long, Long]
@@ -105,7 +99,12 @@ object StreamForget {
     val landed = scala.collection.mutable.ArrayBuffer[DataFrame](baseA)
     val forgotten = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var batches = -1
-    ReplayHarness.replay(spark, 8, name, andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    // the arrival and manifest frames are cached in the stream's cloned
+    // session (later batches rewrite from them), so the replay releases
+    // them when it ends
+    ReplayHarness.replay(spark, 8, name, andThen = () => {
+      graft.CacheRegistry.release(landed.drop(1) ++ forgotten); graft.Fs.rmTree(scratch)
+    }) { register =>
       ReplayHarness.landBands(scratch, inDir, bands.map(_.coalesce(1)))
       val stream = spark.readStream
         .schema("vec_id LONG, kind LONG, emb ARRAY<FLOAT>")
@@ -116,20 +115,17 @@ object StreamForget {
           val isManifest = bdf.agg(max(col("kind"))).collect()(0).getLong(0) == 1L
           if (!isManifest) {
             // ARRIVAL batch: assign under the frozen model, append files
-            val a = graft.CacheRegistry.track(
-              VectorQueries.cellsOf(bdf.select(col("vec_id"), col("emb")), cent)
-                .select(col("vec_id"), col("emb"), col("cell")).persist())
-            a.count()
-            a.repartition(col("cell"))
-              .write.partitionBy("cell").mode("append").parquet(store)
+            val a = VectorQueries.cellsOf(bdf.select(col("vec_id"), col("emb")), cent)
+              .select(col("vec_id"), col("emb"), col("cell")).persist()
             landed += a
+            a.count()
+            VectorQueries.appendCells(store, a)
           } else {
             // FORGET manifest: №192's wave on the touched cells, content
             // from the cached frames minus every manifest so far
-            val ids = graft.CacheRegistry.track(
-              bdf.select(col("vec_id")).persist())
-            val n = ids.count() // materialize once; reuse for the census
+            val ids = bdf.select(col("vec_id")).persist()
             forgotten += ids
+            val n = ids.count() // materialize once; reuse for the census
             manifestSizes(id) = n
             val all = landed.reduce(_ unionAll _)
             val touched = all.join(ids, Seq("vec_id"), "left_semi")
@@ -138,60 +134,46 @@ object StreamForget {
             val content = all
               .filter(col("cell").isin(touched.toSeq.map(Long.box): _*))
               .join(manifest, Seq("vec_id"), "left_anti")
-            content.repartition(col("cell"))
-              .write.partitionBy("cell").mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic").parquet(store)
+            VectorQueries.overwriteCells(store, content)
             val surviving = content.select(col("cell")).distinct()
               .collect().map(_.getLong(0)).toSet
-            touched.filterNot(surviving).foreach(c =>
-              graft.Fs.rmTree(java.nio.file.Paths.get(store, s"cell=$c")))
+            VectorQueries.dropCells(store, touched.filterNot(surviving))
           }
-          // SERVE: the files are the store — №184's discipline.
-          // ONE store scan per serve (r16, guide §6): the fused census
-          // below and the serve's probe join still each scanned the
-          // store's partitioned files — persist the read-back so both
-          // ride one scan, and UNPERSIST before the batch returns (the
-          // store mutates between batches; a live cache entry would be
-          // plan-matched into the next batch's identical read as a stale
-          // file listing).
-          val back = spark.read.parquet(store)
-            .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell")).persist()
-          // Census in ONE store scan (r15 verdict item 7 — stream_night's
-          // 58cb504 single-scan serve pattern, guide §6 "do fewer passes"):
-          // the serve's n_rows/n_del_visible aggregate, the per-leg
-          // del-visibility split, and the applied-manifest resurrection
-          // check previously each re-scanned the store files (three
-          // aggregation passes per micro-batch on top of the serve's probe
-          // join). The applied-manifest set is batch-bounded, so it rides
-          // the census aggregation as a broadcast left join — sum(ap) over
-          // the same pass that counts n_rows equals the former left-semi
-          // count (ids are distinct, each store row matches ≤1). All five
-          // census numbers are DISTRIBUTIVE (r14 verdict 1) and splice
-          // into the result rows driver-side — the returned frame's values
-          // are unchanged.
-          val applied = forgotten.toSeq.reduceOption(_ unionAll _)
-            .map(_.select(col("vec_id")).distinct().withColumn("ap", lit(1L)))
-          val backC = applied.map(m => back.join(broadcast(m), Seq("vec_id"), "left"))
-            .getOrElse(back.withColumn("ap", lit(0L)))
-          val census = backC.agg(
-            count(lit(1)).as("n_rows"),
-            sum(when(delFull, 1L).otherwise(0L)).as("n_del_visible"),
-            sum(when(delFull && col("vec_id") % 20 =!= 0, 1L).otherwise(0L)).as("del_base"),
-            sum(when(delFull && col("vec_id") % 20 === 0, 1L).otherwise(0L)).as("del_a1"),
-            sum(coalesce(col("ap"), lit(0L))).as("applied_vis")).collect()(0)
-          val nRows = census.getAs[Long]("n_rows")
-          val nDelVis = census.getAs[Long]("n_del_visible")
-          val served = VectorQueries.ivfSearch(back, cent, queries, Probe, K).collect()
-          results ++= served.map(r =>
-            (id, nRows, nDelVis,
-              r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
-              r.getAs[Long]("vec_id"), r.getAs[Double]("cos")))
-          topk(id) = served.map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
-          appliedVisible(id) = census.getAs[Long]("applied_vis")
-          delBaseVisible(id) = census.getAs[Long]("del_base")
-          delA1Visible(id) = census.getAs[Long]("del_a1")
-          back.unpersist()
-          ()
+          // SERVE: the files are the store — №184's discipline
+          graft.CacheRegistry.withCache(VectorQueries.readStore(spark, store)) { back =>
+            // Census in ONE store scan (r15 verdict item 7 — stream_night's
+            // 58cb504 single-scan serve pattern, guide §6 "do fewer passes"):
+            // the serve's n_rows/n_del_visible aggregate, the per-leg
+            // del-visibility split, and the applied-manifest resurrection
+            // check previously each re-scanned the store files (three
+            // aggregation passes per micro-batch on top of the serve's probe
+            // join). The applied-manifest set is batch-bounded, so it rides
+            // the census aggregation as a broadcast left join — sum(ap) over
+            // the same pass that counts n_rows equals the former left-semi
+            // count (ids are distinct, each store row matches ≤1). All five
+            // census numbers are DISTRIBUTIVE (r14 verdict 1) and splice
+            // into the result rows driver-side — the returned frame's values
+            // are unchanged.
+            val applied = forgotten.toSeq.reduceOption(_ unionAll _)
+              .map(_.select(col("vec_id")).distinct().withColumn("ap", lit(1L)))
+            val backC = applied.map(m => back.join(broadcast(m), Seq("vec_id"), "left"))
+              .getOrElse(back.withColumn("ap", lit(0L)))
+            val census = backC.agg(
+              count(lit(1)).as("n_rows"),
+              sum(when(delFull, 1L).otherwise(0L)).as("n_del_visible"),
+              sum(when(delFull && col("vec_id") % 20 =!= 0, 1L).otherwise(0L)).as("del_base"),
+              sum(when(delFull && col("vec_id") % 20 === 0, 1L).otherwise(0L)).as("del_a1"),
+              sum(coalesce(col("ap"), lit(0L))).as("applied_vis")).collect()(0)
+            val nRows = census.getAs[Long]("n_rows")
+            val nDelVis = census.getAs[Long]("n_del_visible")
+            val served = VectorQueries.ivfSearch(back, cent, queries, Probe, K).collect()
+            val rows = served.map(r => VectorQueries.toServed(id, r, nRows, nDelVis))
+            results ++= rows
+            topk(id) = VectorQueries.pairsOf(rows)
+            appliedVisible(id) = census.getAs[Long]("applied_vis")
+            delBaseVisible(id) = census.getAs[Long]("del_base")
+            delA1Visible(id) = census.getAs[Long]("del_a1")
+          }
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", scratch.resolve("ckpt").toString)
@@ -200,10 +182,7 @@ object StreamForget {
       q.awaitTermination()
       batches = q.recentProgress.count(_.numInputRows > 0)
     }
-    import spark.implicits._
-    val df = results.toSeq
-      .toDF("after_batch", "n_rows", "n_del_visible", "q_id", "rank", "vec_id", "cos")
-      .orderBy(col("after_batch"), col("q_id"), col("rank"))
+    val df = VectorQueries.servedFrame(spark, results.toSeq, "after_batch", "n_del_visible")
     (df, ForgetCensus(batches, topk.toMap, appliedVisible.toMap,
       delBaseVisible.toMap, delA1Visible.toMap, manifestSizes.toMap))
   }

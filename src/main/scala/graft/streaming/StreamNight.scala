@@ -141,81 +141,73 @@ object StreamNight {
       val q = stream.writeStream
         .foreachBatch { (bdf: DataFrame, id: Long) =>
           // sign IN-BATCH (№191), probe the FILES, decide, land the decision
-          val keys = HashDedup.mpBaseRows(HashDedup.mpSigFrom(bdf))
-            .select(col("doc_id"), col("band"), col("band_key")).persist()
-          keys.count()
-          val batchIds = bdf.select(col("doc_id")).persist(); batchIds.count()
-          val back = spark.read.parquet(ixStore.toString)
-            .select(col("doc_id"), col("band"), col("band_key"))
-          val cand = keys.as("a").join(back.as("b"),
-              col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-                col("a.doc_id") =!= col("b.doc_id"))
-            .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-              greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct()
-          val dupStore = scratch.resolve(s"dups_$id")
-          TextQueries.verifyPairsOf(sh5, cand)
-            .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-            .join(batchIds, Seq("doc_id"), "left_semi")
-            .distinct().coalesce(1).write.parquet(dupStore.toString)
-          val dupFiles = spark.read.parquet(dupStore.toString)
-          dropped += dupFiles.count()
-          // BOTH appends consume the landed decision
-          keys.join(dupFiles, Seq("doc_id"), "left_anti")
-            .withColumn("gen", lit(1)).coalesce(1)
-            .write.partitionBy("gen").mode("append").parquet(ixStore.toString)
-          ve.select(col("doc_id"), col("emb_arr"), col("norm_sq"))
-            .join(batchIds, Seq("doc_id"), "left_semi")
-            .join(dupFiles, Seq("doc_id"), "left_anti")
-            .coalesce(1).write.mode("append").parquet(vStore.toString)
-          // SERVE both stores from the files.
-          // ONE vector-store scan per serve (r16, guide §6): the scored
-          // probe pass and the census-with-dup-flag pass below each
-          // re-scanned vStore's accumulated files — persist the read-back
-          // so both ride one scan, and UNPERSIST before the batch returns
-          // (the store grows between batches; a live cache entry would be
-          // plan-matched into the next batch's identical read as a stale
-          // file listing).
-          val ixBack2 = spark.read.parquet(ixStore.toString)
-          val vBack = spark.read.parquet(vStore.toString)
-            .select(col("doc_id"), col("emb_arr"), col("norm_sq")).persist()
-          val scored = vBack.join(broadcast(queries))
-            .select(col("q_id"), col("doc_id"),
-              round(
-                aggregate(zip_with(col("emb_arr"), col("q_emb"), (x, y) => x * y), lit(0L), (acc, p) => acc + p)
-                  .cast("double") /
-                  (sqrt(col("norm_sq").cast("double")) * sqrt(col("q_norm").cast("double"))), 6).as("cos"))
-          // Census DISTRIBUTIVELY (r14 verdict 1), and in ONE store scan
-          // (r15 frontier 3): the cumulative dup-manifest set is
-          // batch-bounded, so it rides the census aggregation as a
-          // broadcast left join — sum(dup flag) over the same vBack pass
-          // that counts n_vecs replaces the former separate left-semi
-          // pass over the store. The other invariant stays at metadata
-          // price: no file from the previous serve's snapshot left the
-          // store (path containment — the store is append-only and
-          // parquet files immutable, so file containment IS doc
-          // containment, at directory-listing price).
-          dupFrames += dupFiles
-          val dupAll = dupFrames.reduce(_ unionAll _)
-            .select(col("doc_id")).distinct().withColumn("is_dup", lit(1L))
-          val census = ixBack2.agg(count(lit(1)).as("n_index_rows"))
-            .crossJoin(broadcast(
-              vBack.join(broadcast(dupAll), Seq("doc_id"), "left")
-                .agg(count(lit(1)).as("n_vecs"),
-                  sum(coalesce(col("is_dup"), lit(0L))).as("n_dup_visible"))))
-          val servedRows = graft.plans.GroupedTopK.rankedTopK(scored, "q_id", "cos", "doc_id", K)
-            .crossJoin(broadcast(census)).collect()
-          servedRows.foreach(r =>
-            results += ((id, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_vecs"),
-              dropped, r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
-              r.getAs[Long]("doc_id"), r.getAs[Double]("cos"))))
-          dups(id) = dupFiles.collect().map(_.getLong(0)).toSet // batch-bounded
-          dupsVisible(id) = servedRows.headOption
-            .map(_.getAs[Long]("n_dup_visible")).getOrElse(0L)
-          val curFiles = vecFiles().toSet
-          unlanded(id) = prevVecFiles.count(!curFiles.contains(_)).toLong
-          prevVecFiles = curFiles.toVector
-          keys.unpersist(); batchIds.unpersist(); vBack.unpersist()
-          ()
+          graft.CacheRegistry.withCache(HashDedup.mpBaseRows(HashDedup.mpSigFrom(bdf))
+              .select(col("doc_id"), col("band"), col("band_key"))) { keys =>
+            keys.count()
+            graft.CacheRegistry.withCache(bdf.select(col("doc_id"))) { batchIds =>
+              batchIds.count()
+              val back = spark.read.parquet(ixStore.toString)
+                .select(col("doc_id"), col("band"), col("band_key"))
+              val cand = HashDedup.bandCandidates(keys, back)
+              val dupStore = scratch.resolve(s"dups_$id")
+              TextQueries.verifyPairsOf(sh5, cand)
+                .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+                .join(batchIds, Seq("doc_id"), "left_semi")
+                .distinct().coalesce(1).write.parquet(dupStore.toString)
+              val dupFiles = spark.read.parquet(dupStore.toString)
+              dropped += dupFiles.count()
+              // BOTH appends consume the landed decision
+              keys.join(dupFiles, Seq("doc_id"), "left_anti")
+                .withColumn("gen", lit(1)).coalesce(1)
+                .write.partitionBy("gen").mode("append").parquet(ixStore.toString)
+              ve.select(col("doc_id"), col("emb_arr"), col("norm_sq"))
+                .join(batchIds, Seq("doc_id"), "left_semi")
+                .join(dupFiles, Seq("doc_id"), "left_anti")
+                .coalesce(1).write.mode("append").parquet(vStore.toString)
+              // SERVE both stores from the files; the scored probe pass and
+              // the census-with-dup-flag pass share ONE vector-store scan
+              val ixBack2 = spark.read.parquet(ixStore.toString)
+              graft.CacheRegistry.withCache(spark.read.parquet(vStore.toString)
+                  .select(col("doc_id"), col("emb_arr"), col("norm_sq"))) { vBack =>
+                val scored = vBack.join(broadcast(queries))
+                  .select(col("q_id"), col("doc_id"),
+                    round(
+                      aggregate(zip_with(col("emb_arr"), col("q_emb"), (x, y) => x * y), lit(0L), (acc, p) => acc + p)
+                        .cast("double") /
+                        (sqrt(col("norm_sq").cast("double")) * sqrt(col("q_norm").cast("double"))), 6).as("cos"))
+                // Census DISTRIBUTIVELY (r14 verdict 1), and in ONE store scan
+                // (r15 frontier 3): the cumulative dup-manifest set is
+                // batch-bounded, so it rides the census aggregation as a
+                // broadcast left join — sum(dup flag) over the same vBack pass
+                // that counts n_vecs replaces the former separate left-semi
+                // pass over the store. The other invariant stays at metadata
+                // price: no file from the previous serve's snapshot left the
+                // store (path containment — the store is append-only and
+                // parquet files immutable, so file containment IS doc
+                // containment, at directory-listing price).
+                dupFrames += dupFiles
+                val dupAll = dupFrames.reduce(_ unionAll _)
+                  .select(col("doc_id")).distinct().withColumn("is_dup", lit(1L))
+                val census = ixBack2.agg(count(lit(1)).as("n_index_rows"))
+                  .crossJoin(broadcast(
+                    vBack.join(broadcast(dupAll), Seq("doc_id"), "left")
+                      .agg(count(lit(1)).as("n_vecs"),
+                        sum(coalesce(col("is_dup"), lit(0L))).as("n_dup_visible"))))
+                val servedRows = graft.plans.GroupedTopK.rankedTopK(scored, "q_id", "cos", "doc_id", K)
+                  .crossJoin(broadcast(census)).collect()
+                servedRows.foreach(r =>
+                  results += ((id, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_vecs"),
+                    dropped, r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
+                    r.getAs[Long]("doc_id"), r.getAs[Double]("cos"))))
+                dups(id) = dupFiles.collect().map(_.getLong(0)).toSet // batch-bounded
+                dupsVisible(id) = servedRows.headOption
+                  .map(_.getAs[Long]("n_dup_visible")).getOrElse(0L)
+                val curFiles = vecFiles().toSet
+                unlanded(id) = prevVecFiles.count(!curFiles.contains(_)).toLong
+                prevVecFiles = curFiles.toVector
+              }
+            }
+          }
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", scratch.resolve("ckpt").toString)

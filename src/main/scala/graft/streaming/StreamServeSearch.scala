@@ -47,12 +47,8 @@ object StreamServeSearch {
   private[graft] def streamServeSearchWithCensus(
       spark: SparkSession, dir: String): (DataFrame, ServeCensus) = {
     import graft.queries.VectorQueries
-    import VectorQueries.{K, NQueries, Probe}
-    val v = graft.Tables(spark, dir).embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    import VectorQueries.{K, Probe}
+    val (queries, corpus) = VectorQueries.querySplit(VectorQueries.vectorsOf(spark, dir))
     val base = corpus.filter(col("vec_id") % 20 =!= 0)   // №119's split
     val arrivals = corpus.filter(col("vec_id") % 20 === 0)
     val cent = refreeze(spark, base)
@@ -133,12 +129,8 @@ object StreamServeSearch {
   private[graft] def streamServeSearchFilesWithCensus(
       spark: SparkSession, dir: String): (DataFrame, ServeCensus) = {
     import graft.queries.VectorQueries
-    import VectorQueries.{K, NQueries, Probe}
-    val v = graft.Tables(spark, dir).embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-    val queries = v.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val corpus = v.filter(col("vec_id") >= NQueries)
+    import VectorQueries.{K, Probe}
+    val (queries, corpus) = VectorQueries.querySplit(VectorQueries.vectorsOf(spark, dir))
     val base = corpus.filter(col("vec_id") % 20 =!= 0)
     val arrivals = corpus.filter(col("vec_id") % 20 === 0)
     val cent = refreeze(spark, base)

@@ -114,8 +114,11 @@ object StreamShard {
     // the key registry: every key's (shard, pos, first gen) so far —
     // grown per batch from the batch's own new keys
     var keysSoFar: DataFrame = graft.CacheRegistry.track(l0.persist())
+    // the batches' grown registries, released when the replay ends
+    val grown = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var batches = -1
     ReplayHarness.replay(spark, 8, name, andThen = () => {
+      graft.CacheRegistry.release(grown)
       graft.Fs.rmTree(scratch); graft.Fs.rmTree(java.nio.file.Paths.get(root))
     }) { register =>
       ReplayHarness.landBands(scratch, inDir, Seq(
@@ -152,8 +155,9 @@ object StreamShard {
               .unionAll(fresh.select($"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs"))
             ShardIncrement.writeGen1(lineOf(both), root, SH,
               (s: Int, of: Int) => f"shard-$s%04d-of-$of%04d.g$gen.txt.gz")
-            keysSoFar = graft.CacheRegistry.track(keysSoFar.unionAll(
-              fresh.select($"shard", $"pos", $"bin", $"seq_id")).persist())
+            keysSoFar = keysSoFar.unionAll(
+              fresh.select($"shard", $"pos", $"bin", $"seq_id")).persist()
+            grown += keysSoFar
             keysSoFar.count()
           } else {
             // FORGET: tombstones supersede every span-contaminated

@@ -4,7 +4,6 @@ package graft
   * BroadcastNestedLoopJoin is allowed only where a broadcast cross join is
   * the intended shape (brute-force kNN scans, the sink's 1-row summary).
   */
-@graft.tags.Slow
 class PlanLintSpec extends SparkSpec {
 
   // knn_* / semantic_dedup: the constant-size centroid/query broadcast

@@ -18,6 +18,17 @@ class StreamCompactSpec extends SparkSpec {
   private def cellOf(path: String): Long =
     "cell=(\\d+)".r.findFirstMatchIn(path).get.group(1).toLong
 
+  // first in the suite: it snapshots the persistent RDDs before `run`
+  // is forced. Micro-batch frames belong to the stream's cloned session,
+  // which releaseAll(spark) never reaches — the replay must free them.
+  test("the replay leaves no cached frame once the query's caches are released") {
+    graft.CacheRegistry.releaseAll(spark)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    run
+    graft.CacheRegistry.releaseAll(spark)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
   test("four batches; the overlap bills n_rows exactly and the top-k never") {
     assert(detail.batches === 4)
     assert(detail.touched.nonEmpty && detail.rewrittenRows > 0)

@@ -18,6 +18,17 @@ class StreamForgetSpec extends SparkSpec {
   private def isA2(id: Long) = id % 20 == 0 && (id / 20) % 2 == 1
   private def del(id: Long) = id % 9 == 4 && !isA2(id)
 
+  // first in the suite: it snapshots the persistent RDDs before `run`
+  // is forced. Micro-batch frames belong to the stream's cloned session,
+  // which releaseAll(spark) never reaches — the replay must free them.
+  test("the replay leaves no cached frame once the query's caches are released") {
+    graft.CacheRegistry.releaseAll(spark)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    run
+    graft.CacheRegistry.releaseAll(spark)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
   test("four data micro-batches; manifests non-empty") {
     assert(detail.batches === 4)
     assert(detail.manifestSizes.keySet === Set(1L, 3L))
