@@ -18,10 +18,24 @@ import scala.collection.mutable
   * them own the wall.
   */
 object JobProf {
+  /** Run `body` with the Spark job description set to `label`, so every
+    * job it submits (AQE's stage jobs included: they inherit the thread's
+    * local properties) is named after the drill phase in this profile's
+    * table. The previous description — a streaming micro-batch's, say —
+    * is restored in `finally`. */
+  def phase[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(Description)
+    sc.setJobDescription(label)
+    try body finally sc.setLocalProperty(Description, prev)
+  }
+
+  private val Description = "spark.job.description"
+
   private case class JobStat(jobId: Int, var name: String = "", var t0: Long = 0L,
       var wallMs: Long = 0L, var taskMs: Long = 0L, var inBytes: Long = 0L,
       var inRecords: Long = 0L, var shRead: Long = 0L, var shWrite: Long = 0L,
-      var spill: Long = 0L, var tasks: Int = 0)
+      var spill: Long = 0L, var tasks: Int = 0, var phase: String = "")
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.JobProf <query> [sfDir] [reps]")
@@ -41,8 +55,9 @@ object JobProf {
       override def onJobStart(js: SparkListenerJobStart): Unit = if (collecting) {
         val st = JobStat(js.jobId)
         st.t0 = js.time
-        st.name = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
+        st.phase = Option(js.properties).flatMap(p => Option(p.getProperty(Description)))
+          .getOrElse("")
+        st.name = Option(st.phase).filter(_.nonEmpty)
           .orElse(Option(js.properties).flatMap(p => Option(p.getProperty("callSite.short"))))
           .getOrElse("")
           .replace('\n', ' ')
@@ -98,7 +113,14 @@ object JobProf {
     println(f"%nTOTAL wall_ms=${all.map(_.wallMs).sum} task_ms=${all.map(_.taskMs).sum} " +
       f"in=${all.map(_.inBytes).sum / 1048576.0}%.1fMB shR=${all.map(_.shRead).sum / 1048576.0}%.1fMB " +
       f"shW=${all.map(_.shWrite).sum / 1048576.0}%.1fMB jobs=${all.size}")
-    val gap = lastWall - all.map(_.wallMs).sum
+    val jobWall = all.map(_.wallMs).sum
+    println(f"%n${"jobs"}%5s ${"wall_ms"}%8s ${"share"}%6s  phase (job description)")
+    all.groupBy(_.phase).toSeq.sortBy(-_._2.map(_.wallMs).sum).foreach { case (p, js) =>
+      val w = js.map(_.wallMs).sum
+      println(f"${js.size}%5d $w%8d ${100.0 * w / math.max(jobWall, 1)}%5.1f%%  " +
+        (if (p.isEmpty) "(none)" else p.replace('\n', ' ').take(100)))
+    }
+    val gap = lastWall - jobWall
     println(f"driver/planning gap (wall - sum job wall): ${gap}ms")
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Scale-adaptive fan-out for compute-heavy derived frames (optimization
   * guide §2.5 "input skew: one huge unsplittable file — repartition
@@ -42,4 +42,15 @@ object Spread {
     val estSplits = (bytes + maxSplit - 1) / maxSplit
     if (estSplits < target) df.repartition(target) else df
   }
+
+  /** Cluster `df` by `keys` at the cluster's default parallelism, for a
+    * `partitionBy(keys)` write. Clustering gives each key's rows to one
+    * task, so a write leaves one file per partition directory instead of
+    * one per input task (the small-files problem). The explicit width is
+    * load-bearing: a bare `repartition(keys)` of a small frame is a
+    * byte-small shuffle that AQE coalesces to ONE partition, and one task
+    * then writes every directory in series. A shuffle with an explicit
+    * partition count is never coalesced. */
+  def clustered(df: DataFrame, keys: Column*): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
 }

@@ -97,7 +97,7 @@ object CorpusBackfill {
         .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
         .withColumn("bkt", pmod(col("doc_id"), lit(FgtBuckets)))
     def landV(r: DataFrame): Unit =
-      r.repartition(col("bkt")).write.partitionBy("bkt").mode("append").parquet(vStore.toString)
+      graft.Spread.clustered(r, col("bkt")).write.partitionBy("bkt").mode("append").parquet(vStore.toString)
     landIx(bandRows.filter(col("cls") =!= 1L && col("cls") =!= 3L)
       .select(col("doc_id"), col("band"), col("band_key")), 0, 4)
     landIx(ixNight, 1, 2)
@@ -196,7 +196,7 @@ object CorpusBackfill {
     val repairContent = vRows(c => c =!= 1L && c =!= 3L)
       .filter(col("bkt").isin(nightBuckets.toSeq.map(Long.box): _*))
       .unionAll(vRows(_ === 1L))
-    repairContent.repartition(col("bkt"))
+    graft.Spread.clustered(repairContent, col("bkt"))
       .write.partitionBy("bkt").mode("overwrite")
       .option("partitionOverwriteMode", "dynamic").parquet(vStore.toString)
     val after = filesByBucket().filter { case (b, _) => !nightBuckets(b) }

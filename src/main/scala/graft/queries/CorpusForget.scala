@@ -107,7 +107,7 @@ object CorpusForget {
       .withColumn("bkt", pmod(col("doc_id"), lit(FgtBuckets)))
     landIx(bandRows.filter(col("cls") =!= 1L)
       .select(col("doc_id"), col("band"), col("band_key")), 0, 4)
-    vStored.repartition(col("bkt"))
+    graft.Spread.clustered(vStored, col("bkt"))
       .write.partitionBy("bkt").mode("overwrite").parquet(vStore.toString)
 
     val out = scala.collection.mutable.ArrayBuffer.empty[
@@ -153,7 +153,7 @@ object CorpusForget {
     // W2 — VECTOR: even-then-odd bucket waves from the cached frame
     def wave(parity: Long): Unit = {
       val content = vStored.filter(col("bkt") % 2 === parity && !delOf(col("doc_id")))
-      content.repartition(col("bkt"))
+      graft.Spread.clustered(content, col("bkt"))
         .write.partitionBy("bkt").mode("overwrite")
         .option("partitionOverwriteMode", "dynamic").parquet(vStore.toString)
       val surviving = content.select(col("bkt")).distinct()
@@ -190,10 +190,10 @@ object CorpusForget {
     val dups = spark.read.parquet(dupStore.toString)
     val nDropped = dups.count()
     landIx(batchKeys.join(dups, Seq("doc_id"), "left_anti"), 1, 2)
-    ve.filter(col("cls") === 1L).select(col("doc_id"), col("emb_arr"), col("norm_sq"))
+    val fresh = ve.filter(col("cls") === 1L).select(col("doc_id"), col("emb_arr"), col("norm_sq"))
       .join(dups, Seq("doc_id"), "left_anti")
       .withColumn("bkt", pmod(col("doc_id"), lit(FgtBuckets)))
-      .repartition(col("bkt"))
+    graft.Spread.clustered(fresh, col("bkt"))
       .write.partitionBy("bkt").mode("append").parquet(vStore.toString)
     serve(3, nDropped)
 

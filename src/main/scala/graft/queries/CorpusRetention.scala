@@ -80,13 +80,13 @@ object CorpusRetention {
       "graft_stores", s"graft_corpret_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
     graft.Fs.rmTree(root)
     val ixStore = root.resolve("index"); val vStore = root.resolve("vectors")
-    bandRows.filter(col("cls") =!= 3L)
+    val ixRows = bandRows.filter(col("cls") =!= 3L)
       .select(col("doc_id"), col("band"), col("band_key")).withColumn("gen", genOf)
-      .repartition(col("gen"))
+    graft.Spread.clustered(ixRows, col("gen"))
       .write.partitionBy("gen").mode("overwrite").parquet(ixStore.toString)
-    ve.filter(col("cls") =!= 3L && !(col("doc_id") % EmbedQEvery === 0))
+    val vRows = ve.filter(col("cls") =!= 3L && !(col("doc_id") % EmbedQEvery === 0))
       .select(col("doc_id"), col("emb_arr"), col("norm_sq")).withColumn("gen", genOf)
-      .repartition(col("gen"))
+    graft.Spread.clustered(vRows, col("gen"))
       .write.partitionBy("gen").mode("overwrite").parquet(vStore.toString)
 
     val night3Keys = bandRows.filter(col("cls") === 3L)

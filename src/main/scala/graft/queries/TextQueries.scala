@@ -3986,10 +3986,17 @@ object HashDedup {
     * feeds the join and the census, so each executes once per serve. */
   private def withIndexServe[A](spark: SparkSession, store: java.nio.file.Path, keys: DataFrame,
                                 extra: Column*)(body: (DataFrame, DataFrame) => A): A =
-    graft.CacheRegistry.withCache(spark.read.parquet(store.toString)
+    graft.CacheRegistry.withCache(readIndex(spark, store)
         .select(Seq(col("doc_id"), col("band"), col("band_key")) ++ extra: _*)) { back =>
       graft.CacheRegistry.withCache(bandCandidates(keys, back))(cand => body(back, cand))
     }
+
+  /** A band-row store (or one generation of it) read back from its files
+    * with the rows' known schema: an inferred one costs a footer-reading
+    * job per read. Partition columns (`gen=`) are still discovered from
+    * the directory names. */
+  private[graft] def readIndex(spark: SparkSession, store: java.nio.file.Path): DataFrame =
+    spark.read.schema("doc_id LONG, band INT, band_key STRING").parquet(store.toString)
 
   /** Candidate pairs (doc_a < doc_b) of a band-key probe: `keys` rows
     * joined to `back` rows sharing (band, band_key), self-pairs dropped. */
@@ -4340,7 +4347,7 @@ object HashDedup {
     land(ofCls(_ === 2L), 2, 2)
     serve(1)
     // bounded repair: distinct-rewrite of the affected generation only
-    val repairRead = graft.CacheRegistry.withCache(spark.read.parquet(store.resolve("gen=2").toString)
+    val repairRead = graft.CacheRegistry.withCache(readIndex(spark, store.resolve("gen=2"))
         .select(col("doc_id"), col("band"), col("band_key"))) { gen2 =>
       val n = gen2.count()
       land(gen2.distinct(), 12, 2)

@@ -386,22 +386,41 @@ object VectorQueries {
     * vec_id, cos). */
   private[graft] type Served = (Long, Long, Long, Long, Long, Long, Double)
 
+  /** The schema of a cell store's rows. Every store read-back passes it:
+    * an inferred schema costs a footer-reading job per read, and the
+    * `cell` directory names would infer as INT, not the assignment's
+    * LONG. */
+  private val StoreSchema = "vec_id LONG, emb ARRAY<FLOAT>, cell LONG"
+
   /** The cell-partitioned store read back from its files as (vec_id, emb,
-    * cell). The partition column round-trips as INT (directory-name
-    * inference) — normalized to the assignment's LONG. */
+    * cell). */
   private[graft] def readStore(spark: SparkSession, store: String): DataFrame =
-    spark.read.parquet(store)
-      .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell"))
+    spark.read.schema(StoreSchema).parquet(store).select(col("vec_id"), col("emb"), col("cell"))
 
   /** The store census most serves report: (n_rows, n_distinct vec_ids). */
   private[graft] def storeCensus(back: DataFrame): DataFrame =
     back.agg(count(lit(1)).as("n_rows"), countDistinct(col("vec_id")).as("n_distinct"))
 
-  /** Rank `scored` (q_id, vec_id, cos) top-[[K]] per query, cross-join
-    * the one-row `census` and collect: the serve's result and its census
-    * ride ONE job. */
-  private[graft] def rankWithCensus(scored: DataFrame, census: DataFrame): Array[Row] =
-    topKRanked(scored, "q_id", "cos", "vec_id", K).crossJoin(broadcast(census)).collect()
+  /** Rank `scored` (q_id, vec_id, cos) top-[[K]] per query and collect
+    * it with the one-row `census`: each ranked row followed by the census
+    * columns, the rows a cross join would give. The census rides the
+    * serve's collect as a second union branch (`_census` marks its row,
+    * the other branch's columns are nulls) and is joined on the driver; a
+    * broadcast cross join cost it a collect job of its own per serve. */
+  private[graft] def rankWithCensus(scored: DataFrame, census: DataFrame): Array[Row] = {
+    val ranked = topKRanked(scored, "q_id", "cos", "vec_id", K)
+    val fields = ranked.schema.fields ++ census.schema.fields
+    def branch(df: DataFrame, isCensus: Boolean): DataFrame = df.select(fields.map(f =>
+      if (df.columns.contains(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)) :+
+      lit(isCensus).as("_census"): _*)
+    val (censusRows, rankedRows) = branch(ranked, isCensus = false)
+      .union(branch(census, isCensus = true)).collect().partition(_.getBoolean(fields.length))
+    val nRanked = ranked.columns.length
+    val censusVals = censusRows.head.toSeq.slice(nRanked, fields.length)
+    val schema = org.apache.spark.sql.types.StructType(fields)
+    rankedRows.map(r => new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+      (r.toSeq.take(nRanked) ++ censusVals).toArray, schema): Row)
+  }
 
   /** The serve step over a store read-back `back`: probe-join, score,
     * dedup, rank, cross-join `census` and collect. The dedup on (q_id,
@@ -3002,7 +3021,7 @@ object VectorQueries {
       j.select(col("vec_id"), col("emb"), col("cell1").as("cell")))
     // the files ARE the proof: read the store back and diff against the
     // target assignment — the oracle predicts zero
-    val back = spark.read.parquet(store).select(col("vec_id"), col("cell"))
+    val back = readStore(spark, store).select(col("vec_id"), col("cell"))
     val want = j.select(col("vec_id"), col("cell1").as("cell"))
     val diff = storeMultisetDiff(back, want)
     val chg = j.filter(col("cell0") =!= col("cell1"))
@@ -3058,8 +3077,13 @@ object VectorQueries {
     * happens to hold (tasks × cells tiny files and as many commits);
     * clustered, each cell's data is one task's contiguous write — the
     * same discipline a 100 TB store needs to avoid the small-files
-    * problem. */
-  private def byCell(a: DataFrame): DataFrame = a.repartition(col("cell"))
+    * problem. The width is explicit, `defaultParallelism`
+    * ([[graft.Spread.clustered]]): a bare `repartition(col("cell"))` is
+    * a byte-small shuffle that AQE coalesces to one partition, so one
+    * task wrote all 64 cell files (1.3 s of `stream_compact`'s landing at
+    * local[4]). Each cell still comes from one task: one file per cell
+    * per write. */
+  private def byCell(a: DataFrame): DataFrame = graft.Spread.clustered(a, col("cell"))
 
   private[graft] def landStore(store: String, a: DataFrame): Unit =
     byCell(a).write.partitionBy("cell").mode("overwrite").parquet(store)
@@ -3104,11 +3128,16 @@ object VectorQueries {
       .groupBy(col("q_id"), col("vec_id")).agg(max(col("adc")).as("adc"))
   }
 
+  /** The schema of a PQ-code store's rows, (vec_id, code_*…, cell), for
+    * a read-back with a known schema as in [[readStore]]. */
+  private def codeSchema(codeCols: Seq[String]): String =
+    ("vec_id LONG" +: codeCols.map(c => s"$c LONG") :+ "cell LONG").mkString(", ")
+
   /** A PQ-code store read back from its files: (vec_id, cell, code_*,
-    * model_v), partition column normalized to LONG as in [[readStore]]. */
+    * model_v). */
   private def readCodes(spark: SparkSession, store: String, codeCols: Seq[String]): DataFrame =
-    spark.read.parquet(store).select((col("vec_id") +: col("cell").cast("long").as("cell") +:
-      codeCols.map(col) :+ col("model_v").cast("int").as("model_v")): _*)
+    spark.read.schema(codeSchema(codeCols) + ", model_v INT").parquet(store)
+      .select((col("vec_id") +: col("cell") +: codeCols.map(col) :+ col("model_v")): _*)
 
   /** Append `a`'s rows to their cells' partitions — new files only. */
   private[graft] def appendCells(store: String, a: DataFrame): Unit =
@@ -3389,8 +3418,7 @@ object VectorQueries {
     }
 
     // the files are the proof: final store ≡ closed-form final state
-    val back = spark.read.parquet(store)
-      .select(col("vec_id"), col("cell").cast("long").as("cell"))
+    val back = readStore(spark, store).select(col("vec_id"), col("cell"))
     val want = j.select(col("vec_id"), col("cell1").as("cell"))
       .unionByName(cellsOf(a3, cent1).select(col("vec_id"), col("cell")))
     val diff = storeMultisetDiff(back, want)
@@ -3739,8 +3767,8 @@ object VectorQueries {
     dropCells(store, touchedArr.filterNot(presentCells))
 
     // the files are the proof: read back ≡ a FULL re-encode under model1
-    val back = graft.CacheRegistry.track(spark.read.parquet(store)
-      .select((col("vec_id") +: col("cell").cast("long").as("cell") +: codeCols.map(col)): _*)
+    val back = graft.CacheRegistry.track(spark.read.schema(codeSchema(codeCols)).parquet(store)
+      .select((col("vec_id") +: col("cell") +: codeCols.map(col)): _*)
       .persist())
     val full = encodeCellsRes(cur, model1, PquM, d)
     val diff = multisetDiff(back,
@@ -5007,7 +5035,7 @@ object VectorQueries {
     val store = java.nio.file.Paths.get(storeDir("storeret", dir))
     graft.Fs.rmTree(store)
     // gen-then-cell layout: the age-out is rmTree(gen=g), nothing else
-    assigned.repartition(col("gen"), col("cell"))
+    graft.Spread.clustered(assigned, col("gen"), col("cell"))
       .write.partitionBy("gen", "cell").mode("overwrite").parquet(store.toString)
     val probes = graft.CacheRegistry.track(probeSet(queries, cent).persist())
     val out = scala.collection.mutable.ArrayBuffer.empty[Served]

@@ -49,16 +49,16 @@ object CompactExec {
       val docs = Tables(spark, dir).documents
         .select(col("doc_id"), col("source"), col("n_chars"))
       // 1. the small-files landing layout: one file per source
-      docs.repartition(col("source"))
+      graft.Spread.clustered(docs, col("source"))
         .write.partitionBy("source").parquet(small.toString)
       val filesBefore = countDataFiles(small)
       // 2. the shared plan fragment (source -> bin)
       val plan = graft.queries.Analytics.compactPlan(spark, dir)
         .select(col("source"), col("bin"))
       // 3. execute: read the small layout, attach bins, one file per bin
-      spark.read.parquet(small.toString)
+      val binned = spark.read.parquet(small.toString)
         .join(plan, "source") // metadata-sized plan side — AQE broadcasts
-        .repartition(col("bin"))
+      graft.Spread.clustered(binned, col("bin"))
         .write.partitionBy("bin").parquet(compacted.toString)
       val filesAfter = countDataFiles(compacted)
       // 4. verify FROM the compacted layout

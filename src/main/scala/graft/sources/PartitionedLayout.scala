@@ -56,7 +56,7 @@ object PartitionedLayout {
           // layout-blind like every other consumer
           .select(col("event_id"), col("ts").as("ts_ns"), col("user_id"),
             col("event_type"), col("value"), col("date"))
-        ev.repartition(col("date"))
+        graft.Spread.clustered(ev, col("date"))
           .write.mode("overwrite").partitionBy("date").parquet(path.toString)
       }
     }

@@ -42,10 +42,10 @@ object RetentionSweep {
     try {
       // materialize the №115 layout shape: one dir per day, one file per
       // day, normalized contract columns (layout-blind ts_ms)
-      Tables(spark, dir).events
+      val days = Tables(spark, dir).events
         .withColumn("date", to_date(col("ts_utc")))
         .select(col("event_id"), col("ts_ms"), col("user_id"), col("event_type"), col("date"))
-        .repartition(col("date"))
+      graft.Spread.clustered(days, col("date"))
         .write.mode("overwrite").partitionBy("date").parquet(root.toString)
 
       def dateDirs(): Seq[java.io.File] = {

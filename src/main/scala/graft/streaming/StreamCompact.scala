@@ -53,11 +53,13 @@ object StreamCompact {
   private[graft] def streamCompactWithCensus(
       spark: SparkSession, dir: String): (DataFrame, CompactStreamCensus) = {
     import graft.queries.VectorQueries
-    val (queries, corpus) = VectorQueries.querySplit(VectorQueries.vectorsOf(spark, dir))
+    // every job carries its phase's name (JobProf's per-phase table)
+    def phase[T](label: String)(body: => T): T = graft.JobProf.phase(spark, s"stream_compact: $label")(body)
+    val (queries, corpus) = phase("build")(VectorQueries.querySplit(VectorQueries.vectorsOf(spark, dir)))
     val base = corpus.filter(col("vec_id") % 20 =!= 0) // №176's split
     val arrivals = corpus.filter(col("vec_id") % 20 === 0)
     val a1Of: Column = expr("vec_id % 20 = 0 AND (vec_id DIV 20) % 2 = 0")
-    val cent = VectorQueries.refinedCentroids(spark, base, VectorQueries.Centroids)
+    val cent = phase("build")(VectorQueries.refinedCentroids(spark, base, VectorQueries.Centroids))
     val baseA = graft.CacheRegistry.track(
       VectorQueries.cellsOf(base, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
     val probes = graft.CacheRegistry.track(VectorQueries.probeSet(queries, cent).persist())
@@ -65,7 +67,7 @@ object StreamCompact {
     val scratch = java.nio.file.Files.createTempDirectory("graft_stream_compact_")
     val inDir = scratch.resolve("in"); java.nio.file.Files.createDirectories(inDir)
     val store = scratch.resolve("store").toString
-    VectorQueries.landStore(store, baseA)
+    phase("land")(VectorQueries.landStore(store, baseA))
     val name = s"stream_compact_${System.nanoTime()}"
     val nullEmb = lit(null).cast("array<float>")
     // A1 / C1 / A2 / C2 — the compaction's two halves interleaved with data
@@ -90,16 +92,18 @@ object StreamCompact {
     ReplayHarness.replay(spark, 8, name, andThen = () => {
       graft.CacheRegistry.release(landed.drop(1)); graft.Fs.rmTree(scratch)
     }) { register =>
-      ReplayHarness.landBands(scratch, inDir, bands.map(_.coalesce(1)))
+      phase("replay input")(ReplayHarness.landBands(scratch, inDir, bands.map(_.coalesce(1))))
       val stream = spark.readStream
         .schema("vec_id LONG, kind LONG, emb ARRAY<FLOAT>")
         .option("maxFilesPerTrigger", "1")
         .parquet(inDir.toString)
       val q = stream.writeStream
         .foreachBatch { (bdf: DataFrame, id: Long) =>
-          val kind = bdf.agg(max(col("kind"))).collect()(0).getLong(0)
+          // the batch's command: one job, no exchange
+          val kind = phase("kind")(bdf.select(col("kind")).as(org.apache.spark.sql.Encoders.scalaLong)
+            .reduce((a: Long, b: Long) => math.max(a, b)))
           kind match {
-            case 0L =>
+            case 0L => phase("arrival") {
               // ARRIVAL: assign under the frozen model, append files.
               // After C1 the appended files share directories with the
               // doomed ones — the survival corner under test.
@@ -107,14 +111,15 @@ object StreamCompact {
                 if (doomed.nonEmpty && a2Files.isEmpty)
                   touched.flatMap(c => cellFiles(c).map(_.toString))
                 else Set.empty
+              // appendCells' write fills the cache C1 consolidates from
               val a = VectorQueries.cellsOf(bdf.select(col("vec_id"), col("emb")), cent)
                 .select(col("vec_id"), col("emb"), col("cell")).persist()
               landed += a
-              a.count()
               VectorQueries.appendCells(store, a)
               if (doomed.nonEmpty && a2Files.isEmpty)
                 a2Files = touched.flatMap(c => cellFiles(c).map(_.toString)) -- preFiles
-            case 1L =>
+            }
+            case 1L => phase("consolidate") {
               // C1: snapshot the touched cells' files, THEN land the
               // consolidated copy next to them (content from the cached
               // frames — never read-then-overwrite of the live path)
@@ -126,19 +131,21 @@ object StreamCompact {
                 .filter(col("cell").isin(touched.toSeq.map(Long.box): _*))
               rewrittenRows = consolidated.count()
               VectorQueries.appendCells(store, consolidated)
-            case 2L =>
+            }
+            case 2L => phase("delete") {
               // C2: delete EXACTLY the C1 snapshot — never a re-listing,
               // which would eat the files A2 landed in between
               doomed.foreach(java.nio.file.Files.delete)
+            }
           }
           // SERVE: the files are the store; candidates dedup before
           // ranking, so the compaction overlap is invisible to the top-k
-          graft.CacheRegistry.withCache(VectorQueries.readStore(spark, store)) { back =>
+          phase("serve")(graft.CacheRegistry.withCache(VectorQueries.readStore(spark, store)) { back =>
             val served = VectorQueries.serveStage(id, back, probes, VectorQueries.storeCensus(back))
             results ++= served
             topk(id) = VectorQueries.pairsOf(served)
             filesAt(id) = touched.map(c => c -> cellFiles(c).size).toMap
-          }
+          })
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", scratch.resolve("ckpt").toString)

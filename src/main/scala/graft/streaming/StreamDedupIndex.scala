@@ -93,7 +93,7 @@ object StreamDedupIndex {
           graft.CacheRegistry.withCache(HashDedup.mpBaseRows(HashDedup.mpSigFrom(bdf))
               .select(col("doc_id"), col("band"), col("band_key"))) { keys =>
             keys.count() // materialize before the store is touched
-            val back = spark.read.parquet(store.toString)
+            val back = HashDedup.readIndex(spark, store)
             val cand = HashDedup.bandCandidates(keys, back)
             val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
             val tn = truthNight(night.toInt)

@@ -34,6 +34,9 @@ object TestSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // graft's store read-back path: driver-side partition listing
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        GraftSession.PartitionDiscoveryThreshold.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s.sparkContext.addSparkListener(new SparkListener {
