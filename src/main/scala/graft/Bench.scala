@@ -216,19 +216,19 @@ object Bench {
     // iterations stay published in `iters`.
     val MEDIAN_GUARD = 2.0
     val MEDIAN_GUARD_ABS_S = 0.5
-    def trimmedOf(runs: Vector[(Double, Double)]): Vector[Double] =
-      if (runs.isEmpty) Vector.empty
-      else { val floor = runs.map(_._2).min; runs.map(_._2).filter(_ <= floor * OUTLIER_X) }
-    def medOf(xs: Seq[Double]): Double =
+    def median(xs: Seq[Double]): Double =
       if (xs.isEmpty) -1.0
       else if (xs.size % 2 == 1) xs.sorted.apply(xs.size / 2)
       else { val s = xs.sorted; (s(xs.size / 2 - 1) + s(xs.size / 2)) / 2 }
+    def split(runs: Vector[(Double, Double)]): (Vector[(Double, Double)], Vector[(Double, Double)]) =
+      if (runs.isEmpty) (runs, runs)
+      else { val floor = runs.map(_._2).min; runs.partition(_._2 <= floor * OUTLIER_X) }
     for ((name, fn) <- order) {
       var runs = acc(name)
       var attempts = runs.size
       while (runs.nonEmpty && attempts < bandMaxIters && rerunBudget > 0 && {
         val floor = runs.map(_._2).min
-        val m = medOf(trimmedOf(runs))
+        val m = median(split(runs)._1.map(_._2))
         m > floor * MEDIAN_GUARD && m - floor > MEDIAN_GUARD_ABS_S
       }) { runs ++= budgetedRun(fn, name); attempts += 1 }
       acc(name) = runs
@@ -251,19 +251,12 @@ object Bench {
       }
     }
     val stats = acc
-    def median(xs: Seq[Double]): Double =
-      if (xs.isEmpty) -1.0
-      else if (xs.size % 2 == 1) xs.sorted.apply(xs.size / 2)
-      else { val s = xs.sorted; (s(xs.size / 2 - 1) + s(xs.size / 2)) / 2 }
     def f(d: Double): String = BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
     val failed = stats.filter(_._2.isEmpty).keys.toSeq.sorted
     // headline per-query number = TRIMMED median (contended iterations —
     // duration > OUTLIER_X × the query's min — excluded); total = sum of
     // trimmed medians over the queries that SUCCEEDED (a -1 sentinel must
     // never deflate the total).
-    def split(runs: Vector[(Double, Double)]): (Vector[(Double, Double)], Vector[(Double, Double)]) =
-      if (runs.isEmpty) (runs, runs)
-      else { val floor = runs.map(_._2).min; runs.partition(_._2 <= floor * OUTLIER_X) }
     val trimmedMed = stats.map { case (k, runs) => k -> median(split(runs)._1.map(_._2)) }
     val qs = trimmedMed.map { case (k, m) => s"\"" + k + "\":" + (if (m < 0) "-1.0" else f(m)) }
       .mkString("{", ",", "}")

@@ -38,6 +38,17 @@ object Fs {
     list(dir).filter(java.nio.file.Files.isDirectory(_))
       .map(_.getFileName.toString).filter(_.startsWith(prefix)).sorted
 
+  /** The JVM-tmpdir directory of a file-backed store drill's store, keyed
+    * by drill `kind` and input `dir` so re-runs overwrite their own store
+    * only. */
+  def storeDir(kind: String, dir: String): java.nio.file.Path =
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      "graft_stores", s"graft_${kind}_${dirKey(dir)}")
+
+  /** An input directory as a file-name-safe key, so a persisted model,
+    * index or store can never serve another SF's corpus. */
+  def dirKey(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
+
   /** The parquet files directly under `dir` (none if `dir` is absent). */
   def parquetFiles(dir: java.nio.file.Path): Vector[java.nio.file.Path] =
     if (!java.nio.file.Files.isDirectory(dir)) Vector.empty

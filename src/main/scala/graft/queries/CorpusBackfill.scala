@@ -66,31 +66,16 @@ object CorpusBackfill {
       spark: SparkSession, dir: String): (DataFrame, BackfillDetail) = {
     import VectorQueries.{EmbedQEvery, K}
     import CorpusForget.FgtBuckets
-    val m = HashDedup.IncCalMod.toLong
-    def clsOf(c: Column): Column = pmod(c, lit(m))
-    val docs = TextQueries.dupCorpus(spark, dir)
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val bandRows = graft.CacheRegistry.track(
-      HashDedup.mpBaseRows(HashDedup.mpSigFrom(tok))
-        .withColumn("cls", clsOf(col("doc_id"))).persist())
-    val ve = graft.CacheRegistry.track(
-      PipelineQueries.docEmbedVectorsFrom(docs)
-        .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
-        .withColumn("cls", clsOf(col("doc_id"))).persist())
-    val queries = graft.CacheRegistry.track(
-      ve.filter(col("doc_id") % EmbedQEvery === 0 && col("cls") =!= 3L)
-        .select(col("doc_id").as("q_id"), col("emb_arr").as("q_emb"), col("norm_sq").as("q_norm"))
-        .persist())
+    import HashDedup.{clsOf, landGen, readIndex}
+    val corpus = new HashDedup.IndexCorpus(spark, dir)
+    import corpus.ofCls
+    val ve = PipelineQueries.corpusVectors(spark, dir)
+    val queries = PipelineQueries.corpusQueries(ve, 3L)
 
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_corpbf_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
+    val root = graft.Fs.storeDir("corpbf", dir)
     graft.Fs.rmTree(root)
     val ixStore = root.resolve("index"); val vStore = root.resolve("vectors")
-    def landIx(r: DataFrame, gen: Int, nFiles: Int): Unit =
-      r.withColumn("gen", lit(gen)).repartition(nFiles)
-        .write.partitionBy("gen").mode("append").parquet(ixStore.toString)
-    val ixNight = bandRows.filter(col("cls") === 1L)
-      .select(col("doc_id"), col("band"), col("band_key"))
+    val ixNight = ofCls(_ === 1L)
     // vector store: bucket-partitioned (the №198 layout); night = cls 1
     def vRows(p: Column => Column): DataFrame =
       ve.filter(p(col("cls")) && !(col("doc_id") % EmbedQEvery === 0) && col("cls") =!= 3L)
@@ -98,12 +83,10 @@ object CorpusBackfill {
         .withColumn("bkt", pmod(col("doc_id"), lit(FgtBuckets)))
     def landV(r: DataFrame): Unit =
       graft.Spread.clustered(r, col("bkt")).write.partitionBy("bkt").mode("append").parquet(vStore.toString)
-    landIx(bandRows.filter(col("cls") =!= 1L && col("cls") =!= 3L)
-      .select(col("doc_id"), col("band"), col("band_key")), 0, 4)
-    landIx(ixNight, 1, 2)
+    landGen(ixStore, ofCls(c => c =!= 1L && c =!= 3L), 0, 4)
+    landGen(ixStore, ixNight, 1, 2)
     landV(vRows(_ =!= 1L)); landV(vRows(_ === 1L))
-    val probeKeys = bandRows.filter(col("cls") === 3L)
-      .select(col("doc_id"), col("band"), col("band_key"))
+    val probeKeys = ofCls(_ === 3L)
 
     def filesByBucket(): Map[Long, Int] = graft.Fs.subdirs(vStore, "bkt=").map(b =>
       b.stripPrefix("bkt=").toLong -> graft.Fs.parquetFiles(vStore.resolve(b)).size).toMap
@@ -122,15 +105,9 @@ object CorpusBackfill {
     // serve wall the r14 bench billed was proof work done four times.
     var scoredCache: Option[(DataFrame, Array[(Long, Long, Long, Double)])] = None
     def serve(stage: Int): Unit = {
-      val ixBack = spark.read.parquet(ixStore.toString)
-        .select(col("doc_id"), col("band"), col("band_key"))
-      val cand = probeKeys.as("a").join(ixBack.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct()
-      val vBack = spark.read.parquet(vStore.toString)
-        .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
+      val ixBack = readIndex(spark, ixStore).select(col("doc_id"), col("band"), col("band_key"))
+      val cand = HashDedup.bandCandidates(probeKeys, ixBack)
+      val vBack = PipelineQueries.readVectors(spark, vStore)
       // candidate pairs: ONE execution per stage (guide §1.2 "don't
       // compute things twice") — the census's n_cand previously re-ran
       // the whole probe join under a count aggregate while candPairs
@@ -154,12 +131,7 @@ object CorpusBackfill {
           // membership dedup BEFORE the query join — the idempotence
           // hinge: storm copies are full-row duplicates, so the distinct
           // collapses them and the cos never sees multiplicity
-          val scored = vBack.distinct().join(broadcast(queries))
-            .select(col("q_id"), col("doc_id"),
-              round(
-                aggregate(zip_with(col("emb_arr"), col("q_emb"), (x, y) => x * y), lit(0L), (acc, p) => acc + p)
-                  .cast("double") /
-                  (sqrt(col("norm_sq").cast("double")) * sqrt(col("q_norm").cast("double"))), 6).as("cos"))
+          val scored = PipelineQueries.exactCos(vBack.distinct(), queries)
           val rows = VectorQueries.topKRanked(scored, "q_id", "cos", "doc_id", K)
             .collect().map(r => (r.getAs[Long]("q_id"),
               r.getAs[Number]("rank").longValue, r.getAs[Long]("doc_id"),
@@ -178,15 +150,15 @@ object CorpusBackfill {
       topk(stage) = served.map(t => (t._1, t._3)).toSet
     }
     serve(0)
-    landIx(ixNight, 1, 2)          // PARTIAL storm: text only
+    landGen(ixStore, ixNight, 1, 2) // PARTIAL storm: text only
     serve(1)
-    landV(vRows(_ === 1L))         // SYMMETRIC storm: vector too
+    landV(vRows(_ === 1L)) // SYMMETRIC storm: vector too
     serve(2)
     // repairs, each store in its own safe form
-    val ixRepairRead = graft.CacheRegistry.withCache(spark.read.parquet(ixStore.resolve("gen=1").toString)
+    val ixRepairRead = graft.CacheRegistry.withCache(readIndex(spark, ixStore.resolve("gen=1"))
         .select(col("doc_id"), col("band"), col("band_key"))) { gen1 =>
       val n = gen1.count()
-      landIx(gen1.distinct(), 11, 2)
+      landGen(ixStore, gen1.distinct(), 11, 2)
       n
     }
     graft.Fs.rmTree(ixStore.resolve("gen=1"))

@@ -73,40 +73,25 @@ object CorpusForget {
   private[graft] def corpusForgetDetail(
       spark: SparkSession, dir: String): (DataFrame, ForgetDetail) = {
     import VectorQueries.{EmbedQEvery, K}
+    import HashDedup.{clsOf, landGen, readIndex}
     val m = HashDedup.IncCalMod.toLong
-    def clsOf(c: Column): Column = pmod(c, lit(m))
     // the manifest: stored docs only — batch (cls=1) and held-out query
     // docs share the residue but are probe/query keys, not store rows
     def delOf(c: Column): Column =
       c % HashDedup.TxtDelMod === HashDedup.TxtDelRes &&
         clsOf(c) =!= 1L && c % EmbedQEvery =!= 0
-    val docs = TextQueries.dupCorpus(spark, dir)
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val bandRows = graft.CacheRegistry.track(
-      HashDedup.mpBaseRows(HashDedup.mpSigFrom(tok))
-        .withColumn("cls", clsOf(col("doc_id"))).persist())
-    val ve = graft.CacheRegistry.track(
-      PipelineQueries.docEmbedVectorsFrom(docs)
-        .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
-        .withColumn("cls", clsOf(col("doc_id"))).persist())
-    val queries = graft.CacheRegistry.track(
-      ve.filter(col("doc_id") % EmbedQEvery === 0 && col("cls") =!= 1L)
-        .select(col("doc_id").as("q_id"), col("emb_arr").as("q_emb"), col("norm_sq").as("q_norm"))
-        .persist())
+    val corpus = new HashDedup.IndexCorpus(spark, dir)
+    import corpus.ofCls
+    val ve = PipelineQueries.corpusVectors(spark, dir)
+    val queries = PipelineQueries.corpusQueries(ve, 1L)
 
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_forget_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
+    val root = graft.Fs.storeDir("forget", dir)
     graft.Fs.rmTree(root)
     val ixStore = root.resolve("index"); val vStore = root.resolve("vectors")
-    def landIx(r: DataFrame, gen: Int, nFiles: Int): Unit =
-      r.withColumn("gen", lit(gen)).repartition(nFiles)
-        .write.partitionBy("gen").mode("append").parquet(ixStore.toString)
     val vStored = ve.filter(col("cls") =!= 1L && !(col("doc_id") % EmbedQEvery === 0))
       .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
       .withColumn("bkt", pmod(col("doc_id"), lit(FgtBuckets)))
-    landIx(bandRows.filter(col("cls") =!= 1L)
-      .select(col("doc_id"), col("band"), col("band_key")), 0, 4)
+    landGen(ixStore, ofCls(_ =!= 1L), 0, 4)
     graft.Spread.clustered(vStored, col("bkt"))
       .write.partitionBy("bkt").mode("overwrite").parquet(vStore.toString)
 
@@ -115,15 +100,9 @@ object CorpusForget {
     val ixDocs = scala.collection.mutable.Map.empty[Int, Set[Long]]
     val vecDocs = scala.collection.mutable.Map.empty[Int, Set[Long]]
     def serve(stage: Int, nDropped: Long): Unit = {
-      val ixBack = spark.read.parquet(ixStore.toString)
-      val vBack = spark.read.parquet(vStore.toString)
-        .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
-      val scored = vBack.join(broadcast(queries))
-        .select(col("q_id"), col("doc_id"),
-          round(
-            aggregate(zip_with(col("emb_arr"), col("q_emb"), (x, y) => x * y), lit(0L), (acc, p) => acc + p)
-              .cast("double") /
-              (sqrt(col("norm_sq").cast("double")) * sqrt(col("q_norm").cast("double"))), 6).as("cos"))
+      val ixBack = readIndex(spark, ixStore)
+      val vBack = PipelineQueries.readVectors(spark, vStore)
+      val scored = PipelineQueries.exactCos(vBack, queries)
       val census = ixBack.agg(count(lit(1)).as("n_index_rows"),
           sum(when(delOf(col("doc_id")), 1L).otherwise(0L)).as("n_del_ix"))
         .crossJoin(broadcast(vBack.agg(count(lit(1)).as("n_vecs"),
@@ -145,8 +124,7 @@ object CorpusForget {
     serve(0, 0L)
 
     // W1 — TEXT: surviving band rows land as gen=10, gen=0 drops
-    landIx(bandRows.filter(col("cls") =!= 1L && !delOf(col("doc_id")))
-      .select(col("doc_id"), col("band"), col("band_key")), 10, 4)
+    landGen(ixStore, ofCls(_ =!= 1L).filter(!delOf(col("doc_id"))), 10, 4)
     graft.Fs.rmTree(ixStore.resolve("gen=0"))
     serve(1, 0L)
 
@@ -164,32 +142,16 @@ object CorpusForget {
     wave(0L); wave(1L)
     serve(2, 0L)
 
-    // THE NIGHT against the post-forget stores (№195's shape; the dup
-    // manifest lands as files because the index append invalidates the
-    // decision's path-dependent lineage)
-    val batchKeys = bandRows.filter(col("cls") === 1L)
-      .select(col("doc_id"), col("band"), col("band_key"))
-    def dupIdsAgainst(ix: DataFrame): DataFrame = {
-      val cand = batchKeys.as("a").join(ix.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct()
-      TextQueries.verifyPairsOf(sh5, cand)
-        .select(when(clsOf(col("doc_a")) === 1L, col("doc_a")).otherwise(col("doc_b")).as("doc_id"))
-        .distinct()
-    }
+    // THE NIGHT against the post-forget stores (№195's shape; the
+    // decision lands as a manifest, [[HashDedup.landDecision]])
+    val batchKeys = ofCls(_ === 1L)
+    def dupIdsAgainst(ix: DataFrame): DataFrame = HashDedup.batchDups(
+      corpus.sh5, HashDedup.bandCandidates(batchKeys, ix), clsOf(_) === 1L)
     // the pre-forget CONTROL decision, from the cached rows (never files)
-    val preDups = dupIdsAgainst(bandRows.filter(col("cls") =!= 1L)
-      .select(col("doc_id"), col("band"), col("band_key")))
-      .collect().map(_.getLong(0)).toSet
-    val dupStore = root.resolve("dups")
-    dupIdsAgainst(spark.read.parquet(ixStore.toString)
-      .select(col("doc_id"), col("band"), col("band_key")))
-      .coalesce(1).write.parquet(dupStore.toString)
-    val dups = spark.read.parquet(dupStore.toString)
+    val preDups = dupIdsAgainst(ofCls(_ =!= 1L)).collect().map(_.getLong(0)).toSet
+    val dups = HashDedup.landDecision(root.resolve("dups"), dupIdsAgainst(readIndex(spark, ixStore)))
     val nDropped = dups.count()
-    landIx(batchKeys.join(dups, Seq("doc_id"), "left_anti"), 1, 2)
+    landGen(ixStore, batchKeys.join(dups, Seq("doc_id"), "left_anti"), 1, 2)
     val fresh = ve.filter(col("cls") === 1L).select(col("doc_id"), col("emb_arr"), col("norm_sq"))
       .join(dups, Seq("doc_id"), "left_anti")
       .withColumn("bkt", pmod(col("doc_id"), lit(FgtBuckets)))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** THE CROSS-FAMILY NIGHT (SURVEY §2 №195) — the capstone composition the
@@ -55,47 +55,28 @@ object CorpusNight {
   private[graft] def corpusNightDetail(
       spark: SparkSession, dir: String): (DataFrame, NightDetail) = {
     import VectorQueries.{EmbedQEvery, K}
+    import HashDedup.{clsOf, landGen, readIndex}
     val m = HashDedup.IncCalMod.toLong
-    def clsOf(c: Column): Column = pmod(c, lit(m))
-    val docs = TextQueries.dupCorpus(spark, dir)
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val bandRows = graft.CacheRegistry.track(HashDedup.mpBaseRows(HashDedup.mpSigFrom(tok))
-      .withColumn("cls", clsOf(col("doc_id"))).persist())
-    val ve = graft.CacheRegistry.track(
-      PipelineQueries.docEmbedVectorsFrom(docs)
-        .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
-        .withColumn("cls", clsOf(col("doc_id"))).persist())
-    val queries = graft.CacheRegistry.track(
-      ve.filter(col("doc_id") % EmbedQEvery === 0 && col("cls") =!= 1L)
-        .select(col("doc_id").as("q_id"), col("emb_arr").as("q_emb"), col("norm_sq").as("q_norm"))
-        .persist())
+    val corpus = new HashDedup.IndexCorpus(spark, dir)
+    import corpus.ofCls
+    val ve = PipelineQueries.corpusVectors(spark, dir)
+    val queries = PipelineQueries.corpusQueries(ve, 1L)
 
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_night_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
+    val root = graft.Fs.storeDir("night", dir)
     graft.Fs.rmTree(root)
     val ixStore = root.resolve("index"); val vStore = root.resolve("vectors")
-    def landIx(r: DataFrame, gen: Int, nFiles: Int): Unit =
-      r.withColumn("gen", lit(gen)).repartition(nFiles)
-        .write.partitionBy("gen").mode("append").parquet(ixStore.toString)
     def landV(r: DataFrame, nFiles: Int): Unit =
       r.repartition(nFiles).write.mode("append").parquet(vStore.toString)
-    landIx(bandRows.filter(col("cls") =!= 1L).select(col("doc_id"), col("band"), col("band_key")), 0, 4)
+    landGen(ixStore, ofCls(_ =!= 1L), 0, 4)
     landV(ve.filter(col("cls") =!= 1L && !(col("doc_id") % EmbedQEvery === 0))
       .select(col("doc_id"), col("emb_arr"), col("norm_sq")), 4)
 
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Long, Double)]
     val storeDocs = scala.collection.mutable.Map.empty[Int, Set[Long]]
     def serve(stage: Int, nDropped: Long): Unit = {
-      val ixBack = spark.read.parquet(ixStore.toString)
-      val vBack = spark.read.parquet(vStore.toString)
-        .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
-      val scored = vBack.join(broadcast(queries))
-        .select(col("q_id"), col("doc_id"),
-          round(
-            aggregate(zip_with(col("emb_arr"), col("q_emb"), (x, y) => x * y), lit(0L), (acc, p) => acc + p)
-              .cast("double") /
-              (sqrt(col("norm_sq").cast("double")) * sqrt(col("q_norm").cast("double"))), 6).as("cos"))
+      val ixBack = readIndex(spark, ixStore)
+      val vBack = PipelineQueries.readVectors(spark, vStore)
+      val scored = PipelineQueries.exactCos(vBack, queries)
       val census = ixBack.agg(count(lit(1)).as("n_index_rows"))
         .crossJoin(broadcast(vBack.agg(count(lit(1)).as("n_vecs"))))
       VectorQueries.topKRanked(scored, "q_id", "cos", "doc_id", K)
@@ -107,33 +88,16 @@ object CorpusNight {
     }
     serve(0, 0L)
 
-    // THE NIGHT: probe the index FILES, verify exactly, split the batch
-    val batchKeys = bandRows.filter(col("cls") === 1L)
-      .select(col("doc_id"), col("band"), col("band_key"))
-    val ixBack = spark.read.parquet(ixStore.toString)
-      .select(col("doc_id"), col("band"), col("band_key"))
-    val cand = batchKeys.as("a").join(ixBack.as("b"),
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct()
-    // the dedup DECISION is a landed artifact, not a transient frame: the
-    // index append below writes to the path the decision's lineage READS,
-    // and Spark invalidates path-dependent caches on write — a cached
-    // dupFrame would silently recompute against the already-appended
-    // index (every survivor then band-matches itself and the vector
-    // append empties; caught live at sf0.001). Both appends and the spec
-    // consume the manifest FILES — №175's discipline applied to the
-    // decision itself.
-    val dupStore = root.resolve("dups")
-    TextQueries.verifyPairsOf(sh5, cand)
-      .select(when(clsOf(col("doc_a")) === 1L, col("doc_a")).otherwise(col("doc_b")).as("doc_id"))
-      .distinct().coalesce(1).write.parquet(dupStore.toString)
-    val dups = spark.read.parquet(dupStore.toString)
+    // THE NIGHT: probe the index FILES, verify exactly, split the batch;
+    // the decision lands as a manifest ([[HashDedup.landDecision]])
+    val batchKeys = ofCls(_ === 1L)
+    val cand = HashDedup.bandCandidates(batchKeys, readIndex(spark, ixStore))
+    val dups = HashDedup.landDecision(root.resolve("dups"),
+      HashDedup.batchDups(corpus.sh5, cand, clsOf(_) === 1L))
     val nDropped = dups.count()
     // survivors: distributed anti-join — the dup set is batch-bounded but
     // never becomes a driver-side literal list in the plan
-    landIx(batchKeys.join(dups, Seq("doc_id"), "left_anti"), 1, 2)
+    landGen(ixStore, batchKeys.join(dups, Seq("doc_id"), "left_anti"), 1, 2)
     landV(ve.filter(col("cls") === 1L).select(col("doc_id"), col("emb_arr"), col("norm_sq"))
       .join(dups, Seq("doc_id"), "left_anti"), 2)
     serve(1, nDropped)

@@ -54,34 +54,20 @@ object CorpusRetention {
   private[graft] def corpusRetentionDetail(
       spark: SparkSession, dir: String): (DataFrame, RetentionDetail) = {
     import VectorQueries.{EmbedQEvery, K}
+    import HashDedup.clsOf
     val m = HashDedup.IncCalMod.toLong
-    def clsOf(c: Column): Column = pmod(c, lit(m))
-    val docs = TextQueries.dupCorpus(spark, dir)
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val truthAll = graft.CacheRegistry.track(
-      TextQueries.dedupNgramJaccardFrom(tok).select(col("doc_a"), col("doc_b")).persist())
-    val bandRows = graft.CacheRegistry.track(
-      HashDedup.mpBaseRows(HashDedup.mpSigFrom(tok))
-        .withColumn("cls", clsOf(col("doc_id"))).persist())
-    val ve = graft.CacheRegistry.track(
-      PipelineQueries.docEmbedVectorsFrom(docs)
-        .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
-        .withColumn("cls", clsOf(col("doc_id"))).persist())
+    val corpus = new HashDedup.IndexCorpus(spark, dir)
+    import corpus.{ofCls, truthAll}
+    val ve = PipelineQueries.corpusVectors(spark, dir)
     // night-3 probes the index; queries are held-out non-batch docs
-    val queries = graft.CacheRegistry.track(
-      ve.filter(col("doc_id") % EmbedQEvery === 0 && col("cls") =!= 3L)
-        .select(col("doc_id").as("q_id"), col("emb_arr").as("q_emb"), col("norm_sq").as("q_norm"))
-        .persist())
+    val queries = PipelineQueries.corpusQueries(ve, 3L)
     val genOf: Column = when(clsOf(col("doc_id")) === 1L, 1)
       .when(clsOf(col("doc_id")) === 2L, 2).otherwise(0)
 
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_corpret_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
+    val root = graft.Fs.storeDir("corpret", dir)
     graft.Fs.rmTree(root)
     val ixStore = root.resolve("index"); val vStore = root.resolve("vectors")
-    val ixRows = bandRows.filter(col("cls") =!= 3L)
-      .select(col("doc_id"), col("band"), col("band_key")).withColumn("gen", genOf)
+    val ixRows = ofCls(_ =!= 3L).withColumn("gen", genOf)
     graft.Spread.clustered(ixRows, col("gen"))
       .write.partitionBy("gen").mode("overwrite").parquet(ixStore.toString)
     val vRows = ve.filter(col("cls") =!= 3L && !(col("doc_id") % EmbedQEvery === 0))
@@ -89,8 +75,7 @@ object CorpusRetention {
     graft.Spread.clustered(vRows, col("gen"))
       .write.partitionBy("gen").mode("overwrite").parquet(vStore.toString)
 
-    val night3Keys = bandRows.filter(col("cls") === 3L)
-      .select(col("doc_id"), col("band"), col("band_key"))
+    val night3Keys = ofCls(_ === 3L)
     // text truth per stage: night-3 pairs whose partner is in the stage's
     // TEXT window (stage 1 shares stage 2's text window — that is the point)
     def partnerAt(stage: Int)(c: Column): Column = stage match {
@@ -111,25 +96,14 @@ object CorpusRetention {
     var full: Set[(Long, Long)] = Set.empty
     def serve(stage: Int): Unit = {
       // TEXT leg: probe the index files, verify, hit vs the window truth
-      val ixBack = spark.read.parquet(ixStore.toString)
-        .select(col("doc_id"), col("band"), col("band_key"))
-      val cand = night3Keys.as("a").join(ixBack.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct()
+      val ixBack = HashDedup.readIndex(spark, ixStore).select(col("doc_id"), col("band"), col("band_key"))
+      val cand = HashDedup.bandCandidates(night3Keys, ixBack)
       val ts = truthAt(stage)
-      val hits = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
+      val hits = TextQueries.verifyPairsOf(corpus.sh5, cand).select(col("doc_a"), col("doc_b"))
         .join(broadcast(ts), Seq("doc_a", "doc_b"))
       // VECTOR leg: serve the files
-      val vBack = spark.read.parquet(vStore.toString)
-        .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
-      val scored = vBack.join(broadcast(queries))
-        .select(col("q_id"), col("doc_id"),
-          round(
-            aggregate(zip_with(col("emb_arr"), col("q_emb"), (x, y) => x * y), lit(0L), (acc, p) => acc + p)
-              .cast("double") /
-              (sqrt(col("norm_sq").cast("double")) * sqrt(col("q_norm").cast("double"))), 6).as("cos"))
+      val vBack = PipelineQueries.readVectors(spark, vStore)
+      val scored = PipelineQueries.exactCos(vBack, queries)
       val census = ixBack.agg(count(lit(1)).as("n_index_rows"))
         .crossJoin(broadcast(vBack.agg(count(lit(1)).as("n_vecs"))))
         .crossJoin(broadcast(hits.agg(count(lit(1)).as("n_hit"))))

@@ -968,28 +968,33 @@ object MultimodalQueries {
     }
   }
 
-  def multimodalPhash(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val groups = graft.CacheRegistry.track(phashFingerprints(spark, dir)
-      .groupBy($"hi", $"lo")
-      .agg(min($"doc_id").as("rep"), count(lit(1)).as("n"))
+  def multimodalPhash(spark: SparkSession, dir: String): DataFrame =
+    fingerprintNearDups(phashFingerprints(spark, dir).toDF(), PHashHammingMax)
+
+  /** The near-dup pairs of a 64-bit fingerprint frame (doc_id, hi, lo),
+    * shared by №77 and №130: identical fingerprints collapse first to
+    * their smallest doc_id (`rep`, with group size `n`), then 4×16-bit
+    * band keys over the distinct fingerprints feed the band self-join
+    * ([[HashDedup.bandSelfPairs]]), and candidates within `hammingMax`
+    * bits are kept. */
+  private def fingerprintNearDups(fps: DataFrame, hammingMax: Int): DataFrame = {
+    val groups = graft.CacheRegistry.track(fps
+      .groupBy(col("hi"), col("lo"))
+      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n"))
       .persist())
     val bands = (0 until 4).map { i =>
       val key = if (i < 2) expr(s"(lo >> ${16 * i}) & 65535")
                 else expr(s"(hi >> ${16 * (i - 2)}) & 65535")
-      groups.select($"rep", lit(i).as("band"), key.as("band_key"))
+      groups.select(col("rep").as("doc_id"), lit(i).as("band"), key.as("band_key"))
     }.reduce(_ unionAll _)
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-          col("a.rep") < col("b.rep"))
-      .select(col("a.rep").as("doc_a"), col("b.rep").as("doc_b")).distinct()
-    cand
-      .join(groups.select($"rep".as("doc_a"), $"hi".as("hi_a"), $"lo".as("lo_a"), $"n".as("n_a")), "doc_a")
-      .join(groups.select($"rep".as("doc_b"), $"hi".as("hi_b"), $"lo".as("lo_b"), $"n".as("n_b")), "doc_b")
+    val cand = HashDedup.bandSelfPairs(bands).select(col("doc_a"), col("doc_b")).distinct()
+    def side(s: String): DataFrame = groups.select(col("rep").as(s"doc_$s"),
+      col("hi").as(s"hi_$s"), col("lo").as(s"lo_$s"), col("n").as(s"n_$s"))
+    cand.join(side("a"), "doc_a").join(side("b"), "doc_b")
       .withColumn("hamming", expr("bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b)"))
-      .filter($"hamming" <= PHashHammingMax)
-      .select($"doc_a", $"doc_b", $"hamming", $"n_a", $"n_b")
-      .orderBy($"doc_a", $"doc_b")
+      .filter(col("hamming") <= hammingMax)
+      .select(col("doc_a"), col("doc_b"), col("hamming"), col("n_a"), col("n_b"))
+      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** Closed-form mirror (PNG is lossless, aHash is integer): samples are
@@ -1125,29 +1130,8 @@ object MultimodalQueries {
     }.toDF()
   }
 
-  def multimodalAudioFp(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val groups = graft.CacheRegistry.track(afpFingerprints(spark, dir)
-      .groupBy($"hi", $"lo")
-      .agg(min($"doc_id").as("rep"), count(lit(1)).as("n"))
-      .persist())
-    val bands = (0 until 4).map { i =>
-      val key = if (i < 2) expr(s"(lo >> ${16 * i}) & 65535")
-                else expr(s"(hi >> ${16 * (i - 2)}) & 65535")
-      groups.select($"rep", lit(i).as("band"), key.as("band_key"))
-    }.reduce(_ unionAll _)
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-          col("a.rep") < col("b.rep"))
-      .select(col("a.rep").as("doc_a"), col("b.rep").as("doc_b")).distinct()
-    cand
-      .join(groups.select($"rep".as("doc_a"), $"hi".as("hi_a"), $"lo".as("lo_a"), $"n".as("n_a")), "doc_a")
-      .join(groups.select($"rep".as("doc_b"), $"hi".as("hi_b"), $"lo".as("lo_b"), $"n".as("n_b")), "doc_b")
-      .withColumn("hamming", expr("bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b)"))
-      .filter($"hamming" <= AfpHammingMax)
-      .select($"doc_a", $"doc_b", $"hamming", $"n_a", $"n_b")
-      .orderBy($"doc_a", $"doc_b")
-  }
+  def multimodalAudioFp(spark: SparkSession, dir: String): DataFrame =
+    fingerprintNearDups(afpFingerprints(spark, dir), AfpHammingMax)
 
   /** Closed-form |sample| mirror + exhaustive distinct-group join (valid
     * because 4 bands at Hamming ≤ 3 is pigeonhole-lossless). */

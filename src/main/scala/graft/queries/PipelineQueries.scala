@@ -1229,6 +1229,42 @@ object PipelineQueries {
         sum($"e" * $"e").as("norm_sq"))
   }
 
+  /** The dup corpus's hashed embeddings (doc_id, emb_arr, norm_sq), tagged
+    * with their doc class `cls` ([[HashDedup.clsOf]]) and tracked for the
+    * query: the vector leg of the corpus drills. */
+  private[graft] def corpusVectors(spark: SparkSession, dir: String): DataFrame =
+    graft.CacheRegistry.track(docEmbedVectorsFrom(TextQueries.dupCorpus(spark, dir))
+      .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
+      .withColumn("cls", HashDedup.clsOf(col("doc_id"))).persist())
+
+  /** The held-out query vectors (q_id, q_emb, q_norm) of [[corpusVectors]]
+    * `ve`: every [[VectorQueries.EmbedQEvery]]-th doc outside the batch
+    * classes, tracked for the query. */
+  private[graft] def corpusQueries(ve: DataFrame, batchCls: Long*): DataFrame =
+    graft.CacheRegistry.track(ve
+      .filter(col("doc_id") % VectorQueries.EmbedQEvery === 0 && !col("cls").isin(batchCls.map(Long.box): _*))
+      .select(col("doc_id").as("q_id"), col("emb_arr").as("q_emb"), col("norm_sq").as("q_norm"))
+      .persist())
+
+  /** A corpus drill's vector store (doc_id, emb_arr, norm_sq) read back
+    * from its files with the rows' known schema, as
+    * [[HashDedup.readIndex]] reads the band index: an inferred schema
+    * costs a footer-reading job per read. */
+  private[graft] def readVectors(spark: SparkSession, store: java.nio.file.Path): DataFrame =
+    spark.read.schema("doc_id LONG, emb_arr ARRAY<BIGINT>, norm_sq BIGINT").parquet(store.toString)
+      .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
+
+  /** Exact-integer cosine, rounded to 6 dp, of every stored vector
+    * (doc_id, emb_arr, norm_sq) against every query (q_id, q_emb, q_norm;
+    * broadcast): the corpus drills' serve scoring. */
+  private[graft] def exactCos(store: DataFrame, queries: DataFrame): DataFrame =
+    store.join(broadcast(queries))
+      .select(col("q_id"), col("doc_id"),
+        round(
+          aggregate(zip_with(col("emb_arr"), col("q_emb"), (x, y) => x * y), lit(0L), (acc, p) => acc + p)
+            .cast("double") /
+            (sqrt(col("norm_sq").cast("double")) * sqrt(col("q_norm").cast("double"))), 6).as("cos"))
+
   def docEmbed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables(spark, dir).documents.select($"doc_id")

@@ -2422,14 +2422,39 @@ object HashDedup {
       .filter(col("bucket_n") <= cap).drop("bucket_n")
   }
 
-  private[queries] def bandPairsOf(bands: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val eligible = cappedBandRows(bands)
-    eligible.as("a").join(eligible.as("b"),
+  private[queries] def bandPairsOf(bands: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    bandSelfPairs(cappedBandRows(bands))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("n_bands"))
+
+  /** The band-key SELF-JOIN, one of the banded index's two joins: a
+    * (band, doc_a, doc_b) row, doc_a < doc_b, for every band on which two
+    * rows of `rows` (doc_id, band, band_key) share a key. Callers add
+    * their own distinct, groupBy or cap. */
+  private[graft] def bandSelfPairs(rows: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    rows.as("a").join(rows.as("b"),
         col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
           col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_bands"))
-  }
+      .select(col("a.band").as("band"), col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+
+  /** The band-key PROBE JOIN, the banded index's other join: `keys` rows
+    * matched on (band, `keyCol`) against `back`'s (band, band_key),
+    * self-pairs dropped, each pair as (doc_a = least, doc_b = greatest)
+    * plus the key side's `carry` columns. One row per matching band;
+    * callers add their own distinct, groupBy or cap. */
+  private[graft] def bandProbePairs(keys: org.apache.spark.sql.DataFrame,
+                                    back: org.apache.spark.sql.DataFrame,
+                                    keyCol: String = "band_key",
+                                    carry: Seq[String] = Nil): org.apache.spark.sql.DataFrame =
+    keys.as("a").join(back.as("b"),
+        col("a.band") === col("b.band") && col(s"a.$keyCol") === col("b.band_key") &&
+          col("a.doc_id") =!= col("b.doc_id"))
+      .select(Seq(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
+        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")) ++ carry.map(c => col(s"a.$c")): _*)
+
+  /** Distinct candidate pairs of a band-key probe ([[bandProbePairs]]). */
+  private[graft] def bandCandidates(keys: DataFrame, back: DataFrame): DataFrame =
+    bandProbePairs(keys, back).distinct()
 
   /** The cap's accounting (drop is NEVER silent): per band, how many
     * buckets/rows/would-be candidate pairs the active cap excluded. */
@@ -2492,10 +2517,7 @@ object HashDedup {
       bands.groupBy(col("band"), col("band_key")).agg(count(lit(1)).as("bucket_n")).persist())
     val eligible = bands.join(sizes, Seq("band", "band_key"))
       .filter(col("bucket_n") <= CappedProofCap)
-    val found = eligible.as("a").join(eligible.as("b"),
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.band").as("band")).agg(count(lit(1)).as("pairs_found"))
+    val found = bandSelfPairs(eligible).groupBy(col("band")).agg(count(lit(1)).as("pairs_found"))
     sizes.groupBy(col("band")).agg(
         count(lit(1)).as("buckets_total"),
         sum(when(col("bucket_n") > CappedProofCap, 1L).otherwise(0L)).as("buckets_dropped"),
@@ -2577,17 +2599,8 @@ object HashDedup {
     // same hot-bucket exposure as the minhash band join (a boilerplate
     // cluster's identical fingerprints share every band key) — honor the
     // same conf'd cap (default off; every oracle runs uncapped)
-    val cap = bucketCapOf(tok.sparkSession)
-    val eligible =
-      if (cap <= 0) bands
-      else bands.withColumn("bucket_n",
-          count(lit(1)).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("band"), col("band_key"))))
-        .filter(col("bucket_n") <= cap).drop("bucket_n")
-    val cand = eligible.as("a").join(eligible.as("b"),
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")).distinct()
+    val cand = bandSelfPairs(cappedBandRows(bands))
+      .select(col("doc_a"), col("doc_b")).distinct()
     cand.join(fp.select(col("doc_id").as("doc_a"), col("hi").as("hi_a"), col("lo").as("lo_a")), "doc_a")
       .join(fp.select(col("doc_id").as("doc_b"), col("hi").as("hi_b"), col("lo").as("lo_b")), "doc_b")
       .withColumn("hamming", expr("bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b)"))
@@ -2679,12 +2692,8 @@ object HashDedup {
       fp.select(col("doc_id"), lit(0).as("band"), col("lo").as("band_key"))
         .unionAll(fp.select(col("doc_id"), lit(1).as("band"), col("hi").as("band_key")))
         .persist())
-    val eligible = cappedBandRows(baseRows)
     val baseCand = graft.CacheRegistry.track(
-      eligible.as("a").join(eligible.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")).distinct()
+      bandSelfPairs(cappedBandRows(baseRows)).select(col("doc_a"), col("doc_b")).distinct()
         .persist())
     // radius-1 probe keys ranked by vote margin within (doc, band); both
     // directions numbered once, rows kept if EITHER ranking can spend them
@@ -2702,12 +2711,7 @@ object HashDedup {
       .persist())
     // ONE capped probe join; each found pair carries its per-ranking tier
     val probeTier = graft.CacheRegistry.track(
-      ranked.as("a").join(cappedBandRows(baseRows).as("b"),
-          col("a.band") === col("b.band") && col("a.probe_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"),
-          col("a.rn_asc"), col("a.rn_desc"))
+      bandProbePairs(ranked, cappedBandRows(baseRows), "probe_key", Seq("rn_asc", "rn_desc"))
         .groupBy(col("doc_a"), col("doc_b"))
         .agg(min(col("rn_asc")).as("t_asc"), min(col("rn_desc")).as("t_desc"))
         .persist())
@@ -2762,11 +2766,7 @@ object HashDedup {
       fp.select(col("doc_id"), lit(0).as("band"), col("lo").as("band_key"))
         .unionAll(fp.select(col("doc_id"), lit(1).as("band"), col("hi").as("band_key")))
         .persist())
-    val eligible = cappedBandRows(baseRows)
-    val baseCand = eligible.as("a").join(eligible.as("b"),
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    val baseCand = bandSelfPairs(cappedBandRows(baseRows)).select(col("doc_a"), col("doc_b"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"), col("band"))
     val probes = fp
       .select(col("doc_id"), col("hi"), col("lo"), posexplode(col("sums")).as(Seq("gb", "s")))
@@ -2777,11 +2777,7 @@ object HashDedup {
           s"^ (CAST(1 AS BIGINT) << (gb % $SimHash96Half))").as("probe_key"))
       .withColumn("rn", row_number().over(w.orderBy(col("margin"), col("gb"))))
       .filter(col("rn") <= PipelineSimMpQ)
-    val probeCand = probes.as("a").join(cappedBandRows(baseRows).as("b"),
-        col("a.band") === col("b.band") && col("a.probe_key") === col("b.band_key") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
+    val probeCand = bandProbePairs(probes, cappedBandRows(baseRows), "probe_key")
     baseCand.unionAll(probeCand).distinct()
   }
 
@@ -3115,12 +3111,9 @@ object HashDedup {
     * without it a boilerplate bucket probed by its whole template
     * cluster re-grows the quadratic term the cap exists to kill. */
   private def mpProbeCand(probeRows: org.apache.spark.sql.DataFrame,
-                          baseRows: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    probeRows.as("a").join(cappedBandRows(baseRows).as("b"),
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
+                          baseRows: org.apache.spark.sql.DataFrame,
+                          carry: Seq[String] = Nil): org.apache.spark.sql.DataFrame =
+    bandProbePairs(probeRows, cappedBandRows(baseRows), carry = carry)
 
   /** №173's candidate GENERATION as a pair-finding mode for
     * [[CurationQueries.dedupPipeline]]: base band pairs ∪ multiprobe
@@ -3236,11 +3229,7 @@ object HashDedup {
     // TIER (the smallest budget that reaches it — min matching pr);
     // budget T's candidate set is then a filter, not a re-join
     val probeTier = graft.CacheRegistry.track(
-      ranked.as("a").join(cappedBandRows(baseRows).as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"), col("a.pr"))
+      mpProbeCand(ranked, baseRows, Seq("pr"))
         .groupBy(col("doc_a"), col("doc_b")).agg(min(col("pr")).as("tier"))
         .persist())
     def grade(t: Int, pairs: DataFrame, bill: Column): DataFrame =
@@ -3377,12 +3366,7 @@ object HashDedup {
     // carries its per-ranking TIER; a (ranking, T) candidate set is then
     // a filter over this frame (№174's tier discipline, widened)
     val probeTier = graft.CacheRegistry.track(
-      ranked.as("a").join(cappedBandRows(baseRows).as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"),
-          col("a.pr_gap"), col("a.pr_rare"), col("a.pr_common"))
+      mpProbeCand(ranked, baseRows, Seq("pr_gap", "pr_rare", "pr_common"))
         .groupBy(col("doc_a"), col("doc_b"))
         .agg(min(col("pr_gap")).as("t_gap"), min(col("pr_rare")).as("t_rare"),
           min(col("pr_common")).as("t_common"))
@@ -3966,6 +3950,139 @@ object HashDedup {
        |  round(CAST(n_hit AS DOUBLE)/n_true + 0.000000001, 6) AS rec
        |FROM g ORDER BY method""".stripMargin
 
+  // ---------------------------------------------------------------- the banded index
+  /** THE BANDED INDEX'S ONE PATH. A store of band rows (doc_id, band,
+    * band_key) partitioned by generation (`gen=`), kept by the
+    * dedup-index drills (№190/№193/№194/№196/№215), the text legs of the
+    * corpus drills (CorpusNight, CorpusForget, CorpusBackfill,
+    * CorpusRetention) and the streaming nights (StreamNight,
+    * StreamDedupIndex). Each step has one definition:
+    *  - the corpus: [[IndexCorpus]];
+    *  - the store directory: [[graft.Fs.storeDir]];
+    *  - a generation's landing: [[landGen]];
+    *  - the read-back: [[readIndex]], always with the rows' schema;
+    *  - the band-key joins: [[bandSelfPairs]] and [[bandProbePairs]]
+    *    ([[bandCandidates]] = distinct probe pairs);
+    *  - one serve, its census and its verified hits: [[serveIndex]];
+    *  - a landed dup decision: [[landDecision]];
+    *  - the result rows: [[ServeLog]]. */
+  private[graft] def clsOf(c: Column): Column = pmod(c, lit(IncCalMod.toLong))
+
+  /** The corpus an index drill starts from, each frame tracked for the
+    * query: tokens, 5-gram shingles, the τ=3/5 truth pairs and the band
+    * rows tagged with their doc class `cls` ([[clsOf]]). One signature
+    * pass over the whole corpus; stage membership is a filter on the
+    * class (signatures are per-doc — no cross-doc state). */
+  private[graft] final class IndexCorpus(spark: SparkSession, dir: String) {
+    val tok: DataFrame = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
+    val sh5: DataFrame = TextQueries.shingleFrameOf(tok)
+    val truthAll: DataFrame = graft.CacheRegistry.track(
+      TextQueries.dedupNgramJaccardFrom(tok).select(col("doc_a"), col("doc_b")).persist())
+    val rows: DataFrame = graft.CacheRegistry.track(mpBaseRows(mpSigFrom(tok))
+      .withColumn("cls", clsOf(col("doc_id"))).persist())
+    /** The band rows of the classes `p` accepts, without the class. */
+    def ofCls(p: Column => Column): DataFrame =
+      rows.filter(p(col("cls"))).select(col("doc_id"), col("band"), col("band_key"))
+  }
+
+  /** Append `r`'s band rows to `store` as generation `gen`, in `nFiles`
+    * files. */
+  private[graft] def landGen(store: java.nio.file.Path, r: DataFrame, gen: Int, nFiles: Int): Unit =
+    r.withColumn("gen", lit(gen)).repartition(nFiles)
+      .write.partitionBy("gen").mode("append").parquet(store.toString)
+
+  /** A band-row store (or one generation of it) read back from its files
+    * with the rows' known schema: an inferred one costs a footer-reading
+    * job per read. Partition columns (`gen=`) are still discovered from
+    * the directory names. */
+  private[graft] def readIndex(spark: SparkSession, store: java.nio.file.Path): DataFrame =
+    spark.read.schema("doc_id LONG, band INT, band_key STRING").parquet(store.toString)
+
+  /** One serve of `keys` against the store's files. The read-back
+    * (doc_id, band, band_key, `extra`…) and the probe join of `keys`
+    * against it ([[bandCandidates]]) are cached for this serve only
+    * ([[graft.CacheRegistry.withCache]]): the probe join feeds the verify,
+    * the census and the pair collects, and the read-back feeds the join
+    * and the census, so each executes once per serve. `body` gets the
+    * census row, in one collect — `n_candidates`, the read-back's
+    * `backAggs`, `n_lookups`, `n_true` (the rows of `truth`) and a row
+    * count per named frame in `counted` — and the verified candidate
+    * pairs found in `truth`, collected once. */
+  private[graft] def serveIndex[A](c: IndexCorpus, store: java.nio.file.Path, keys: DataFrame,
+                                   truth: DataFrame, backAggs: Seq[Column],
+                                   counted: Seq[(String, DataFrame)] = Nil, extra: Seq[Column] = Nil)(
+      body: IndexServe => A): A = {
+    val spark = keys.sparkSession
+    graft.CacheRegistry.withCache(readIndex(spark, store)
+        .select(Seq(col("doc_id"), col("band"), col("band_key")) ++ extra: _*)) { back =>
+      graft.CacheRegistry.withCache(bandCandidates(keys, back)) { cand =>
+        val hits = TextQueries.verifyPairsOf(c.sh5, cand).select(col("doc_a"), col("doc_b"))
+          .join(broadcast(truth), Seq("doc_a", "doc_b")).collect()
+          .map(h => (h.getLong(0), h.getLong(1))).toSet
+        val counts = (("n_lookups" -> keys) +: ("n_true" -> truth) +: counted).map {
+          case (n, f) => broadcast(f.agg(count(lit(1)).as(n)))
+        }
+        val census = (broadcast(back.agg(backAggs.head, backAggs.tail: _*)) +: counts)
+          .foldLeft(cand.agg(count(lit(1)).as("n_candidates")))(_ crossJoin _)
+          .collect()(0)
+        body(IndexServe(census, hits, back, cand))
+      }
+    }
+  }
+
+  /** The read-back census of a store whose generations may repeat rows:
+    * all rows and the distinct ones. */
+  private[graft] val DistinctCensus: Seq[Column] = Seq(count(lit(1)).as("n_rows"),
+    countDistinct(col("doc_id"), col("band"), col("band_key")).as("n_distinct"))
+
+  /** What [[serveIndex]] hands its body: the census row, the verified
+    * hit pairs, and the serve's cached read-back and candidates. */
+  private[graft] final case class IndexServe(census: org.apache.spark.sql.Row,
+                                             hits: Set[(Long, Long)], back: DataFrame, cand: DataFrame) {
+    def apply(name: String): Long = census.getAs[Long](name)
+  }
+
+  /** The batch docs of verified candidate pairs: for each pair, its end
+    * in the batch (`inBatch`), once. */
+  private[graft] def batchDups(sh5: DataFrame, cand: DataFrame, inBatch: Column => Column): DataFrame =
+    TextQueries.verifyPairsOf(sh5, cand)
+      .select(when(inBatch(col("doc_a")), col("doc_a")).otherwise(col("doc_b")).as("doc_id"))
+      .distinct()
+
+  /** Land a batch's dup decision (doc_id) as a manifest file and read it
+    * back. The decision must be a landed artifact, not a transient frame:
+    * the index append that follows writes to the path the decision's
+    * lineage READS, and Spark invalidates path-dependent caches on write —
+    * a cached decision would silently recompute against the
+    * already-appended index (every survivor then band-matches itself and
+    * the vector append empties; caught live at sf0.001). The appends and
+    * the specs consume the manifest FILES — №175's discipline applied to
+    * the decision itself. */
+  private[graft] def landDecision(manifest: java.nio.file.Path, dups: DataFrame): DataFrame = {
+    dups.coalesce(1).write.parquet(manifest.toString)
+    dups.sparkSession.read.schema("doc_id LONG").parquet(manifest.toString)
+  }
+
+  /** A drill's result rows, one per serve, as Long columns `cols`;
+    * [[frame]] adds each (name, numerator, denominator) ratio column and
+    * orders by the first column. */
+  private[graft] final class ServeLog(cols: String*) {
+    private val rows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+    def +=(vals: Long*): Unit = {
+      require(vals.size == cols.size, s"${vals.size} values for ${cols.size} columns")
+      rows += org.apache.spark.sql.Row.fromSeq(vals)
+    }
+    def frame(spark: SparkSession, ratios: (String, String, String)*): DataFrame = {
+      import org.apache.spark.sql.types.{LongType, StructField, StructType}
+      spark.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*),
+          StructType(cols.map(StructField(_, LongType, nullable = false))))
+        .select(cols.map(col) ++ ratios.map { case (n, num, den) =>
+          round(col(num).cast("double") / greatest(col(den), lit(1L)) + 1e-9, 6).as(n)
+        }: _*)
+        .orderBy(col(cols.head))
+    }
+  }
+
   // ---------------------------------------------------------------- №190 dedup_index_calendar
   /** Per-stage diagnostics behind [[dedupIndexCalendar]], returned to the
     * spec instead of stashed in object vars (the r13 StreamServeSearch
@@ -3977,35 +4094,6 @@ object HashDedup {
       hitPairs: Map[Int, Set[(Long, Long)]],
       candPairs: Map[Int, Set[(Long, Long)]],
       finalGens: Seq[String])
-
-  /** One dedup-index serve's scoped frames: the band-row store read back
-    * from its files as (doc_id, band, band_key, `extra`…) and the probe
-    * join of `keys` against it ([[bandCandidates]]). Both are cached for
-    * this serve only ([[graft.CacheRegistry.withCache]]): the probe join
-    * feeds the verify, the census and the pair collects, and the read-back
-    * feeds the join and the census, so each executes once per serve. */
-  private def withIndexServe[A](spark: SparkSession, store: java.nio.file.Path, keys: DataFrame,
-                                extra: Column*)(body: (DataFrame, DataFrame) => A): A =
-    graft.CacheRegistry.withCache(readIndex(spark, store)
-        .select(Seq(col("doc_id"), col("band"), col("band_key")) ++ extra: _*)) { back =>
-      graft.CacheRegistry.withCache(bandCandidates(keys, back))(cand => body(back, cand))
-    }
-
-  /** A band-row store (or one generation of it) read back from its files
-    * with the rows' known schema: an inferred one costs a footer-reading
-    * job per read. Partition columns (`gen=`) are still discovered from
-    * the directory names. */
-  private[graft] def readIndex(spark: SparkSession, store: java.nio.file.Path): DataFrame =
-    spark.read.schema("doc_id LONG, band INT, band_key STRING").parquet(store.toString)
-
-  /** Candidate pairs (doc_a < doc_b) of a band-key probe: `keys` rows
-    * joined to `back` rows sharing (band, band_key), self-pairs dropped. */
-  private[graft] def bandCandidates(keys: DataFrame, back: DataFrame): DataFrame =
-    keys.as("a").join(back.as("b"),
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct()
 
   /** THE PERSISTED BANDED INDEX SERVED THROUGH ITS MAINTENANCE CALENDAR —
     * №187 probes nightly batches against a STATIC index; the deployment a
@@ -4057,23 +4145,11 @@ object HashDedup {
 
   private[graft] def dedupIndexCalendarDetail(
       spark: SparkSession, dir: String): (DataFrame, IndexCalendarDetail) = {
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val truthAll = graft.CacheRegistry.track(
-      TextQueries.dedupNgramJaccardFrom(tok).select(col("doc_a"), col("doc_b")).persist())
-    // one signature pass over the WHOLE corpus; stage membership is a
-    // filter on doc class (signatures are per-doc — no cross-doc state)
-    val rows = graft.CacheRegistry.track(mpBaseRows(mpSigFrom(tok))
-      .withColumn("cls", pmod(col("doc_id"), lit(IncCalMod.toLong))).persist())
-    def ofCls(p: Column => Column): DataFrame =
-      rows.filter(p(col("cls"))).select(col("doc_id"), col("band"), col("band_key"))
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_dedupcal_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
+    val corpus = new IndexCorpus(spark, dir)
+    import corpus.{ofCls, truthAll}
+    val store = graft.Fs.storeDir("dedupcal", dir)
     graft.Fs.rmTree(store) // idempotent re-runs: appends must not double
-    def land(r: DataFrame, gen: Int, nFiles: Int): Unit =
-      r.withColumn("gen", lit(gen)).repartition(nFiles)
-        .write.partitionBy("gen").mode("append").parquet(store.toString)
-    def clsOf(c: Column): Column = pmod(c, lit(IncCalMod.toLong))
+    def land(r: DataFrame, gen: Int, nFiles: Int): Unit = landGen(store, r, gen, nFiles)
     // classes indexed when night n probes: everything landed before n
     def indexedAt(n: Int)(c: Column): Column =
       !clsOf(c).isin((n to 3).map(i => Long.box(i.toLong)): _*)
@@ -4083,25 +4159,15 @@ object HashDedup {
     val batchCls = Seq(1L, 2L, 3L).map(Long.box)
     val truthAudit = truthAll.filter(
       clsOf(col("doc_a")).isin(batchCls: _*) || clsOf(col("doc_b")).isin(batchCls: _*))
-    val out = scala.collection.mutable.ArrayBuffer.empty[
-      (Long, Long, Long, Long, Long, Long)]
+    val out = new ServeLog("stage", "n_index_rows", "n_lookups", "n_candidates", "n_true", "n_hit")
     val hitPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val candPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     def serve(stage: Int, keys: DataFrame, truthStage: DataFrame): Unit =
-        withIndexServe(spark, store, keys) { (back, cand) =>
-      // hits are collected ONCE; n_hit is counted off the collected rows
-      val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
-      val hitArr = verified.join(broadcast(truthStage), Seq("doc_a", "doc_b")).collect()
-      val r = cand.agg(count(lit(1)).as("n_candidates"))
-        .crossJoin(broadcast(back.agg(count(lit(1)).as("n_index_rows"))))
-        .crossJoin(broadcast(keys.agg(count(lit(1)).as("n_lookups"))))
-        .crossJoin(broadcast(truthStage.agg(count(lit(1)).as("n_true"))))
-        .collect()(0)
-      out += ((stage.toLong, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_lookups"),
-        r.getAs[Long]("n_candidates"), r.getAs[Long]("n_true"), hitArr.length.toLong))
-      hitPairs(stage) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
+        serveIndex(corpus, store, keys, truthStage, Seq(count(lit(1)).as("n_index_rows"))) { r =>
+      out += (stage, r("n_index_rows"), r("n_lookups"), r("n_candidates"), r("n_true"), r.hits.size)
+      hitPairs(stage) = r.hits
       if (stage == 3 || stage == 4)
-        candPairs(stage) = cand.collect().map(c => (c.getLong(0), c.getLong(1))).toSet
+        candPairs(stage) = r.cand.collect().map(p => (p.getLong(0), p.getLong(1))).toSet
     }
     land(ofCls(c => !c.isin(batchCls: _*)), 0, 4)
     serve(1, ofCls(_ === 1L), truthNight(1)); land(ofCls(_ === 1L), 1, 2)
@@ -4112,14 +4178,7 @@ object HashDedup {
     Seq(0, 1, 2).foreach(g => graft.Fs.rmTree(store.resolve(s"gen=$g")))
     serve(4, ofCls(_ === 3L), truthNight(3)); land(ofCls(_ === 3L), 3, 2)
     serve(5, ofCls(c => c.isin(batchCls: _*)), truthAudit)
-    import spark.implicits._
-    val df = out.toSeq
-      .toDF("stage", "n_index_rows", "n_lookups", "n_candidates", "n_true", "n_hit")
-      .select(col("stage"), col("n_index_rows"), col("n_lookups"),
-        col("n_candidates"), col("n_true"), col("n_hit"),
-        round(col("n_hit").cast("double") / greatest(col("n_candidates"), lit(1L)) + 1e-9, 6).as("prec"),
-        round(col("n_hit").cast("double") / greatest(col("n_true"), lit(1L)) + 1e-9, 6).as("rec"))
-      .orderBy(col("stage"))
+    val df = out.frame(spark, ("prec", "n_hit", "n_candidates"), ("rec", "n_hit", "n_true"))
     (df, IndexCalendarDetail(hitPairs.toMap, candPairs.toMap, graft.Fs.subdirs(store)))
   }
   val IncCalMod = 7
@@ -4158,24 +4217,13 @@ object HashDedup {
 
   private[graft] def dedupIndexRetentionDetail(
       spark: SparkSession, dir: String): (DataFrame, IndexRetentionDetail) = {
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val truthAll = graft.CacheRegistry.track(
-      TextQueries.dedupNgramJaccardFrom(tok).select(col("doc_a"), col("doc_b")).persist())
-    val rows = graft.CacheRegistry.track(mpBaseRows(mpSigFrom(tok))
-      .withColumn("cls", pmod(col("doc_id"), lit(IncCalMod.toLong))).persist())
-    def ofCls(p: Column => Column): DataFrame =
-      rows.filter(p(col("cls"))).select(col("doc_id"), col("band"), col("band_key"))
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_dedupret_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
+    val corpus = new IndexCorpus(spark, dir)
+    import corpus.{ofCls, truthAll}
+    val store = graft.Fs.storeDir("dedupret", dir)
     graft.Fs.rmTree(store)
-    def land(r: DataFrame, gen: Int, nFiles: Int): Unit =
-      r.withColumn("gen", lit(gen)).repartition(nFiles)
-        .write.partitionBy("gen").mode("append").parquet(store.toString)
-    land(ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
-    land(ofCls(_ === 1L), 1, 2)
-    land(ofCls(_ === 2L), 2, 2)
-    def clsOf(c: Column): Column = pmod(c, lit(IncCalMod.toLong))
+    landGen(store, ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
+    landGen(store, ofCls(_ === 1L), 1, 2)
+    landGen(store, ofCls(_ === 2L), 2, 2)
     val night3Keys = ofCls(_ === 3L)
     // night-3 pairs with the partner anywhere older — what a full index
     // could find; per-window truth restricts the partner to the window
@@ -4187,38 +4235,22 @@ object HashDedup {
       3 -> (c => clsOf(c) =!= 3L),
       2 -> (c => clsOf(c).isin(1L, 2L)),
       1 -> (c => clsOf(c) === 2L))
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Long)]
+    val out = new ServeLog("win", "n_index_rows", "n_lookups", "n_candidates",
+      "n_true_window", "n_true_all", "n_hit")
     val hitPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val gensAfter = scala.collection.mutable.Map.empty[Int, Seq[String]]
-    def serve(window: Int): Unit = withIndexServe(spark, store, night3Keys) { (back, cand) =>
-      val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
-      val tw = truthWith(windowPartners(window))
-      val hitArr = verified.join(broadcast(tw), Seq("doc_a", "doc_b"))
-        .select(col("doc_a"), col("doc_b")).collect()
-      val r = cand.agg(count(lit(1)).as("n_candidates"))
-        .crossJoin(broadcast(back.agg(count(lit(1)).as("n_index_rows"))))
-        .crossJoin(broadcast(night3Keys.agg(count(lit(1)).as("n_lookups"))))
-        .crossJoin(broadcast(tw.agg(count(lit(1)).as("n_true_window"))))
-        .crossJoin(broadcast(truthFull.agg(count(lit(1)).as("n_true_all"))))
-        .collect()(0)
-      out += ((window.toLong, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_lookups"),
-        r.getAs[Long]("n_candidates"), r.getAs[Long]("n_true_window"),
-        r.getAs[Long]("n_true_all"), hitArr.length.toLong))
-      hitPairs(window) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
+    def serve(window: Int): Unit = serveIndex(corpus, store, night3Keys,
+        truthWith(windowPartners(window)), Seq(count(lit(1)).as("n_index_rows")),
+        Seq("n_true_all" -> truthFull)) { r =>
+      out += (window, r("n_index_rows"), r("n_lookups"), r("n_candidates"), r("n_true"),
+        r("n_true_all"), r.hits.size)
+      hitPairs(window) = r.hits
       gensAfter(window) = graft.Fs.subdirs(store)
     }
     serve(3)
     graft.Fs.rmTree(store.resolve("gen=0")); serve(2)
     graft.Fs.rmTree(store.resolve("gen=1")); serve(1)
-    import spark.implicits._
-    val df = out.toSeq
-      .toDF("win", "n_index_rows", "n_lookups", "n_candidates",
-        "n_true_window", "n_true_all", "n_hit")
-      .select(col("win"), col("n_index_rows"), col("n_lookups"),
-        col("n_candidates"), col("n_true_window"), col("n_true_all"), col("n_hit"),
-        round(col("n_hit").cast("double") / greatest(col("n_true_window"), lit(1L)) + 1e-9, 6).as("rec"),
-        round(col("n_hit").cast("double") / greatest(col("n_true_all"), lit(1L)) + 1e-9, 6).as("coverage"))
-      .orderBy(col("win"))
+    val df = out.frame(spark, ("rec", "n_hit", "n_true_window"), ("coverage", "n_hit", "n_true_all"))
     (df, IndexRetentionDetail(hitPairs.toMap, gensAfter.toMap))
   }
 
@@ -4304,66 +4336,39 @@ object HashDedup {
 
   private[graft] def dedupIndexBackfillDetail(
       spark: SparkSession, dir: String): (DataFrame, IndexBackfillDetail) = {
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val truthAll = graft.CacheRegistry.track(
-      TextQueries.dedupNgramJaccardFrom(tok).select(col("doc_a"), col("doc_b")).persist())
-    val rows = graft.CacheRegistry.track(mpBaseRows(mpSigFrom(tok))
-      .withColumn("cls", pmod(col("doc_id"), lit(IncCalMod.toLong))).persist())
-    def ofCls(p: Column => Column): DataFrame =
-      rows.filter(p(col("cls"))).select(col("doc_id"), col("band"), col("band_key"))
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_dedupbf_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
+    val corpus = new IndexCorpus(spark, dir)
+    import corpus.{ofCls, truthAll}
+    val store = graft.Fs.storeDir("dedupbf", dir)
     graft.Fs.rmTree(store)
-    def land(r: DataFrame, gen: Int, nFiles: Int): Unit =
-      r.withColumn("gen", lit(gen)).repartition(nFiles)
-        .write.partitionBy("gen").mode("append").parquet(store.toString)
-    land(ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
-    land(ofCls(_ === 1L), 1, 2)
-    land(ofCls(_ === 2L), 2, 2)
-    def clsOf(c: Column): Column = pmod(c, lit(IncCalMod.toLong))
+    landGen(store, ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
+    landGen(store, ofCls(_ === 1L), 1, 2)
+    landGen(store, ofCls(_ === 2L), 2, 2)
     val night3Keys = ofCls(_ === 3L)
     val truth3 = truthAll.filter(
       (clsOf(col("doc_a")) === 3L && clsOf(col("doc_b")) =!= 3L) ||
         (clsOf(col("doc_b")) === 3L && clsOf(col("doc_a")) =!= 3L))
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Long)]
+    val out = new ServeLog("stage", "n_rows", "n_distinct", "n_lookups", "n_candidates", "n_true", "n_hit")
     val candPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
-    def serve(stage: Int): Unit = withIndexServe(spark, store, night3Keys) { (back, cand) =>
-      val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
-      val nHit = verified.join(broadcast(truth3), Seq("doc_a", "doc_b")).count()
-      val r = cand.agg(count(lit(1)).as("n_candidates"))
-        .crossJoin(broadcast(back.agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("doc_id"), col("band"), col("band_key")).as("n_distinct"))))
-        .crossJoin(broadcast(night3Keys.agg(count(lit(1)).as("n_lookups"))))
-        .crossJoin(broadcast(truth3.agg(count(lit(1)).as("n_true"))))
-        .collect()(0)
-      out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_distinct"),
-        r.getAs[Long]("n_lookups"), r.getAs[Long]("n_candidates"),
-        r.getAs[Long]("n_true"), nHit))
-      candPairs(stage) = cand.collect().map(c => (c.getLong(0), c.getLong(1))).toSet
+    def serve(stage: Int): Unit = serveIndex(corpus, store, night3Keys, truth3, DistinctCensus) { r =>
+      out += (stage, r("n_rows"), r("n_distinct"), r("n_lookups"), r("n_candidates"),
+        r("n_true"), r.hits.size)
+      candPairs(stage) = r.cand.collect().map(p => (p.getLong(0), p.getLong(1))).toSet
     }
     serve(0)
     // the retry storm: night 2 lands AGAIN into the same generation
-    land(ofCls(_ === 2L), 2, 2)
+    landGen(store, ofCls(_ === 2L), 2, 2)
     serve(1)
     // bounded repair: distinct-rewrite of the affected generation only
     val repairRead = graft.CacheRegistry.withCache(readIndex(spark, store.resolve("gen=2"))
         .select(col("doc_id"), col("band"), col("band_key"))) { gen2 =>
       val n = gen2.count()
-      land(gen2.distinct(), 12, 2)
+      landGen(store, gen2.distinct(), 12, 2)
       n
     }
     graft.Fs.rmTree(store.resolve("gen=2"))
     serve(2)
     val gens = graft.Fs.subdirs(store)
-    import spark.implicits._
-    val df = out.toSeq
-      .toDF("stage", "n_rows", "n_distinct", "n_lookups", "n_candidates", "n_true", "n_hit")
-      .select(col("stage"), col("n_rows"), col("n_distinct"), col("n_lookups"),
-        col("n_candidates"), col("n_true"), col("n_hit"),
-        round(col("n_hit").cast("double") / greatest(col("n_candidates"), lit(1L)) + 1e-9, 6).as("prec"),
-        round(col("n_hit").cast("double") / greatest(col("n_true"), lit(1L)) + 1e-9, 6).as("rec"))
-      .orderBy(col("stage"))
+    val df = out.frame(spark, ("prec", "n_hit", "n_candidates"), ("rec", "n_hit", "n_true"))
     (df, IndexBackfillDetail(candPairs.toMap, gens, repairRead))
   }
 
@@ -4459,29 +4464,18 @@ object HashDedup {
 
   private[graft] def dedupIndexDeleteDetail(
       spark: SparkSession, dir: String): (DataFrame, IndexDeleteDetail) = {
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val truthAll = graft.CacheRegistry.track(
-      TextQueries.dedupNgramJaccardFrom(tok).select(col("doc_a"), col("doc_b")).persist())
-    val rows = graft.CacheRegistry.track(mpBaseRows(mpSigFrom(tok))
-      .withColumn("cls", pmod(col("doc_id"), lit(IncCalMod.toLong))).persist())
-    def clsOf(c: Column): Column = pmod(c, lit(IncCalMod.toLong))
+    val corpus = new IndexCorpus(spark, dir)
+    import corpus.{ofCls, rows, truthAll}
     // the manifest covers INDEXED docs only — a night-3 doc sharing the
     // residue is a probe key, not a deleted row
     def delOf(c: Column): Column =
       c % TxtDelMod === TxtDelRes && clsOf(c) =!= 3L
     val genOf: Column = when(col("cls") === 1L, 1).when(col("cls") === 2L, 2).otherwise(0)
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_dedupdel_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
+    val store = graft.Fs.storeDir("dedupdel", dir)
     graft.Fs.rmTree(store)
-    def land(r: DataFrame, gen: Int, nFiles: Int): Unit =
-      r.withColumn("gen", lit(gen)).repartition(nFiles)
-        .write.partitionBy("gen").mode("append").parquet(store.toString)
-    def ofCls(p: Column => Column): DataFrame =
-      rows.filter(p(col("cls"))).select(col("doc_id"), col("band"), col("band_key"))
-    land(ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
-    land(ofCls(_ === 1L), 1, 2)
-    land(ofCls(_ === 2L), 2, 2)
+    landGen(store, ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
+    landGen(store, ofCls(_ === 1L), 1, 2)
+    landGen(store, ofCls(_ === 2L), 2, 2)
     val night3Keys = ofCls(_ === 3L)
     // partner-visibility per stage, a pure function of doc_id — the same
     // predicate gates the truth frame here and the index states in the oracle
@@ -4494,26 +4488,18 @@ object HashDedup {
     def truthAt(stage: Int): DataFrame = truthAll.filter(
       (clsOf(col("doc_a")) === 3L && visAt(stage)(col("doc_b"))) ||
         (clsOf(col("doc_b")) === 3L && visAt(stage)(col("doc_a"))))
-    val out = scala.collection.mutable.ArrayBuffer.empty[
-      (Long, Long, Long, Long, Long, Long, Long)]
+    val out = new ServeLog("stage", "n_index_rows", "n_del_visible", "n_lookups",
+      "n_candidates", "n_true", "n_hit")
     val hitPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val delByGen = scala.collection.mutable.Map.empty[Int, Map[Int, Long]]
-    def serve(stage: Int): Unit = withIndexServe(
-        spark, store, night3Keys, col("gen").cast("int").as("gen")) { (back, cand) =>
-      val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
-      val ts = truthAt(stage)
-      val hitArr = verified.join(broadcast(ts), Seq("doc_a", "doc_b")).collect()
-      val r = cand.agg(count(lit(1)).as("n_candidates"))
-        .crossJoin(broadcast(back.agg(count(lit(1)).as("n_index_rows"),
-          sum(when(delOf(col("doc_id")), 1L).otherwise(0L)).as("n_del_visible"))))
-        .crossJoin(broadcast(night3Keys.agg(count(lit(1)).as("n_lookups"))))
-        .crossJoin(broadcast(ts.agg(count(lit(1)).as("n_true"))))
-        .collect()(0)
-      out += ((stage.toLong, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_del_visible"),
-        r.getAs[Long]("n_lookups"), r.getAs[Long]("n_candidates"),
-        r.getAs[Long]("n_true"), hitArr.length.toLong))
-      hitPairs(stage) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
-      delByGen(stage) = back.filter(delOf(col("doc_id"))).groupBy(col("gen")).count()
+    def serve(stage: Int): Unit = serveIndex(corpus, store, night3Keys, truthAt(stage),
+        Seq(count(lit(1)).as("n_index_rows"),
+          sum(when(delOf(col("doc_id")), 1L).otherwise(0L)).as("n_del_visible")),
+        extra = Seq(col("gen").cast("int").as("gen"))) { r =>
+      out += (stage, r("n_index_rows"), r("n_del_visible"), r("n_lookups"), r("n_candidates"),
+        r("n_true"), r.hits.size)
+      hitPairs(stage) = r.hits
+      delByGen(stage) = r.back.filter(delOf(col("doc_id"))).groupBy(col("gen")).count()
         .collect().map(g => g.getInt(0) -> g.getLong(1)).toMap
     }
     serve(0)
@@ -4538,18 +4524,10 @@ object HashDedup {
     }
     wave(Seq(0, 2)); serve(1)
     wave(Seq(1)); serve(2)
-    land(ofCls(_ === 3L), 3, 2)
+    landGen(store, ofCls(_ === 3L), 3, 2)
     serve(3)
     val gens = graft.Fs.subdirs(store)
-    import spark.implicits._
-    val df = out.toSeq
-      .toDF("stage", "n_index_rows", "n_del_visible", "n_lookups",
-        "n_candidates", "n_true", "n_hit")
-      .select(col("stage"), col("n_index_rows"), col("n_del_visible"), col("n_lookups"),
-        col("n_candidates"), col("n_true"), col("n_hit"),
-        round(col("n_hit").cast("double") / greatest(col("n_candidates"), lit(1L)) + 1e-9, 6).as("prec"),
-        round(col("n_hit").cast("double") / greatest(col("n_true"), lit(1L)) + 1e-9, 6).as("rec"))
-      .orderBy(col("stage"))
+    val df = out.frame(spark, ("prec", "n_hit", "n_candidates"), ("rec", "n_hit", "n_true"))
     (df, IndexDeleteDetail(hitPairs.toMap, delByGen.toMap, gens, rewritten))
   }
 
@@ -4654,21 +4632,11 @@ object HashDedup {
   private[graft] def dedupIndexCompactDetail(
       spark: SparkSession, dir: String): (DataFrame, IndexCompactDetail) = {
     val m = IncCalMod.toLong
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val truthAll = graft.CacheRegistry.track(
-      TextQueries.dedupNgramJaccardFrom(tok).select(col("doc_a"), col("doc_b")).persist())
-    val rows = graft.CacheRegistry.track(mpBaseRows(mpSigFrom(tok))
-      .withColumn("cls", pmod(col("doc_id"), lit(m))).persist())
-    def clsOf(c: Column): Column = pmod(c, lit(m))
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_idxcmp_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
+    val corpus = new IndexCorpus(spark, dir)
+    import corpus.{ofCls, truthAll}
+    val store = graft.Fs.storeDir("idxcmp", dir)
     graft.Fs.rmTree(store)
-    def land(r: DataFrame, gen: Int, nFiles: Int): Unit =
-      r.withColumn("gen", lit(gen)).repartition(nFiles)
-        .write.partitionBy("gen").mode("append").parquet(store.toString)
-    def ofCls(p: Column => Column): DataFrame =
-      rows.filter(p(col("cls"))).select(col("doc_id"), col("band"), col("band_key"))
+    def land(r: DataFrame, gen: Int, nFiles: Int): Unit = landGen(store, r, gen, nFiles)
     land(ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
     // the small-files storm: each night landed as 3 separate appends
     // (micro-batch-shaped), 2 files each → 6 footers per generation
@@ -4688,24 +4656,13 @@ object HashDedup {
         (clsOf(col("doc_a")) === 3L && clsOf(col("doc_b")) =!= 3L) ||
           (clsOf(col("doc_b")) === 3L && clsOf(col("doc_a")) =!= 3L))
       else truthAll.filter(clsOf(col("doc_a")) === 3L || clsOf(col("doc_b")) === 3L)
-    val out = scala.collection.mutable.ArrayBuffer.empty[
-      (Long, Long, Long, Long, Long, Long, Long)]
+    val out = new ServeLog("stage", "n_rows", "n_distinct", "n_lookups", "n_candidates", "n_true", "n_hit")
     val hitPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val filesAt = scala.collection.mutable.Map.empty[Int, Map[String, Int]]
-    def serve(stage: Int): Unit = withIndexServe(spark, store, night3Keys) { (back, cand) =>
-      val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
-      val ts = truthAt(stage)
-      val hitArr = verified.join(broadcast(ts), Seq("doc_a", "doc_b")).collect()
-      val r = cand.agg(count(lit(1)).as("n_candidates"))
-        .crossJoin(broadcast(back.agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("doc_id"), col("band"), col("band_key")).as("n_distinct"))))
-        .crossJoin(broadcast(night3Keys.agg(count(lit(1)).as("n_lookups"))))
-        .crossJoin(broadcast(ts.agg(count(lit(1)).as("n_true"))))
-        .collect()(0)
-      out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_distinct"),
-        r.getAs[Long]("n_lookups"), r.getAs[Long]("n_candidates"),
-        r.getAs[Long]("n_true"), hitArr.length.toLong))
-      hitPairs(stage) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
+    def serve(stage: Int): Unit = serveIndex(corpus, store, night3Keys, truthAt(stage), DistinctCensus) { r =>
+      out += (stage, r("n_rows"), r("n_distinct"), r("n_lookups"), r("n_candidates"),
+        r("n_true"), r.hits.size)
+      hitPairs(stage) = r.hits
       filesAt(stage) = filesByGen()
     }
     serve(0)
@@ -4722,15 +4679,7 @@ object HashDedup {
     val gen0After = gen0Evidence()
     land(ofCls(_ === 3L), 3, 2)
     serve(3)
-    import spark.implicits._
-    val df = out.toSeq
-      .toDF("stage", "n_rows", "n_distinct", "n_lookups",
-        "n_candidates", "n_true", "n_hit")
-      .select(col("stage"), col("n_rows"), col("n_distinct"), col("n_lookups"),
-        col("n_candidates"), col("n_true"), col("n_hit"),
-        round(col("n_hit").cast("double") / greatest(col("n_candidates"), lit(1L)) + 1e-9, 6).as("prec"),
-        round(col("n_hit").cast("double") / greatest(col("n_true"), lit(1L)) + 1e-9, 6).as("rec"))
-      .orderBy(col("stage"))
+    val df = out.frame(spark, ("prec", "n_hit", "n_candidates"), ("rec", "n_hit", "n_true"))
     (df, IndexCompactDetail(hitPairs.toMap, filesAt.toMap, gen0Before, gen0After, rewritten))
   }
 

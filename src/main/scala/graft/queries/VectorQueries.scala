@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.Fs.dirKey
 import graft.functions.VectorOps._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -875,16 +876,6 @@ object VectorQueries {
   /** Batch id predicate for the incremental-index split: every 20th
     * corpus vector is "today's arrivals". */
   private val BatchMod = 20
-
-  /** Dir-keyed table-name suffix so a persisted model/index can never
-    * serve another SF's corpus. */
-  private def dirKey(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
-
-  /** The JVM-tmpdir directory of a file-backed store drill's store, keyed
-    * by drill and input so re-runs overwrite their own store only. */
-  private def storeDir(kind: String, dir: String): String =
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_${kind}_${dirKey(dir)}").toString
 
   /** Build-if-absent PLAIN table (the constant-size model-state twin of
     * [[graft.sources.Bucketing.bucketedCached]]): the frozen centroid
@@ -3015,7 +3006,7 @@ object VectorQueries {
       cellsOf(all, cent0).select(col("vec_id"), col("emb"), col("cell").as("cell0"))
         .join(cellsOf(all, cent1).select(col("vec_id"), col("cell").as("cell1")), "vec_id")
         .persist())
-    val store = storeDir("ivfrebinc", dir)
+    val store = graft.Fs.storeDir("ivfrebinc", dir).toString
     val emptied = partialRewrite(store,
       j.select(col("vec_id"), col("emb"), col("cell0").as("cell")),
       j.select(col("vec_id"), col("emb"), col("cell1").as("cell")))
@@ -3244,7 +3235,7 @@ object VectorQueries {
     val (g1, g2) = rb.gainCells.splitAt((rb.gainCells.length + 1) / 2)
     val (l1, l2) = rb.lossCells.splitAt((rb.lossCells.length + 1) / 2)
 
-    val store = storeDir("servereb", dir)
+    val store = graft.Fs.storeDir("servereb", dir).toString
     landStore(store, rb.j.select(col("vec_id"), col("emb"), col("cell0").as("cell")))
 
     val probes0 = graft.CacheRegistry.track(probeSet(queries, cent0).persist())
@@ -3368,7 +3359,7 @@ object VectorQueries {
       .select(col("vec_id"), expr(rebalDriftSql("emb")).as("emb"))
     val a1 = night(1); val a2 = night(2); val a3 = night(3)
     val cent0 = refinedCentroids(spark, base, Centroids)
-    val store = storeDir("ivfcal", dir)
+    val store = graft.Fs.storeDir("ivfcal", dir).toString
 
     val snaps = scala.collection.mutable.ArrayBuffer.empty[(String, Map[String, (Long, Long)])]
     def snap(ev: String): Unit = if (captureCalendar) {
@@ -3492,7 +3483,7 @@ object VectorQueries {
       .select(col("vec_id"), expr(rebalDriftSql("emb")).as("emb"))
     val a1 = night(1); val a2 = night(2); val a3 = night(3)
     val cent0 = refinedCentroids(spark, base, Centroids)
-    val store = storeDir("servecal", dir)
+    val store = graft.Fs.storeDir("servecal", dir).toString
 
     val out = scala.collection.mutable.ArrayBuffer.empty[Served]
     def serve(stage: Int, probes: DataFrame): Unit = {
@@ -3737,7 +3728,7 @@ object VectorQueries {
     val codeCols = (0 until PquM).map(m => s"code_$m")
 
     // the serving store: full residual codes under the live model
-    val store = storeDir("resreb", dir)
+    val store = graft.Fs.storeDir("resreb", dir).toString
     landStore(store, codes0)
 
     // the stale set: new cell repaired, or assignment changed
@@ -3866,7 +3857,7 @@ object VectorQueries {
       encodeCellsRes(cur.join(j.filter(isStale).select(col("vec_id")), "vec_id"),
         st.model1, PquM, d).persist())
 
-    val store = storeDir("ressrv", dir)
+    val store = graft.Fs.storeDir("ressrv", dir).toString
     val vcols = col("vec_id") +: col("cell") +: codeCols.map(col) :+ col("model_v")
     landStore(store, codes0.withColumn("model_v", lit(0)).select(vcols: _*))
 
@@ -4549,7 +4540,7 @@ object VectorQueries {
       encodeCellsRes(cur.join(j.filter(isStale).select(col("vec_id")), "vec_id"),
         model1, PquM, d).persist())
 
-    val store = storeDir("rescal", dir)
+    val store = graft.Fs.storeDir("rescal", dir).toString
     val codeCols = (0 until PquM).map(m => s"code_$m")
     val vcols = col("vec_id") +: col("cell") +: codeCols.map(col) :+ col("model_v")
     def v0rows(pred: Column): DataFrame =
@@ -4878,7 +4869,7 @@ object VectorQueries {
     val delPred = col("vec_id") % DelMod === DelRes && col("vec_id") % CalMod =!= 1L
     val assigned = graft.CacheRegistry.track(
       cellsOf(base, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
-    val store = storeDir("storedel", dir)
+    val store = graft.Fs.storeDir("storedel", dir).toString
     landStore(store, assigned)
     val probes = graft.CacheRegistry.track(probeSet(queries, cent).persist())
     val out = scala.collection.mutable.ArrayBuffer.empty[Served]
@@ -5032,7 +5023,7 @@ object VectorQueries {
     val assigned = graft.CacheRegistry.track(
       cellsOf(corpus, cent).select(col("vec_id"), col("emb"), col("cell"))
         .withColumn("gen", genOf).persist())
-    val store = java.nio.file.Paths.get(storeDir("storeret", dir))
+    val store = graft.Fs.storeDir("storeret", dir)
     graft.Fs.rmTree(store)
     // gen-then-cell layout: the age-out is rmTree(gen=g), nothing else
     graft.Spread.clustered(assigned, col("gen"), col("cell"))
@@ -5116,7 +5107,7 @@ object VectorQueries {
       cellsOf(base, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
     val arrA = graft.CacheRegistry.track(
       cellsOf(arrivals, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
-    val store = storeDir("storebf", dir)
+    val store = graft.Fs.storeDir("storebf", dir).toString
     landStore(store, baseA)
     def append(a: DataFrame): Unit =
       appendCells(store, a)
@@ -5250,7 +5241,7 @@ object VectorQueries {
       cellsOf(base, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
     val arrA = graft.CacheRegistry.track(
       cellsOf(arrivals, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
-    val store = storeDir("storecmp", dir)
+    val store = graft.Fs.storeDir("storecmp", dir).toString
     landStore(store, baseA)
     // the small-files storm: the night lands as 3 micro-batch-shaped
     // appends — each touched cell accumulates one file per append

@@ -40,17 +40,9 @@ object StreamDedupIndex {
   private[graft] def streamDedupIndexWithCensus(
       spark: SparkSession, dir: String): (DataFrame, IndexCensus) = {
     import graft.queries.{HashDedup, TextQueries}
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val truthAll = graft.CacheRegistry.track(
-      TextQueries.dedupNgramJaccardFrom(tok).select(col("doc_a"), col("doc_b")).persist())
-    val m = HashDedup.IncCalMod.toLong
-    def clsOf(c: org.apache.spark.sql.Column) = pmod(c, lit(m))
-    val rows = graft.CacheRegistry.track(
-      HashDedup.mpBaseRows(HashDedup.mpSigFrom(tok))
-        .withColumn("cls", clsOf(col("doc_id"))).persist())
-    def ofCls(p: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame =
-      rows.filter(p(col("cls"))).select(col("doc_id"), col("band"), col("band_key"))
+    import HashDedup.clsOf
+    val corpus = new HashDedup.IndexCorpus(spark, dir)
+    import corpus.{ofCls, sh5, tok, truthAll}
     def truthNight(n: Int): DataFrame = {
       def indexed(c: org.apache.spark.sql.Column) =
         !clsOf(c).isin((n to 3).map(i => Long.box(i.toLong)): _*)
@@ -63,18 +55,9 @@ object StreamDedupIndex {
     val inDir = scratch.resolve("in"); java.nio.file.Files.createDirectories(inDir)
     val store = scratch.resolve("store")
     val name = s"stream_dedupix_${System.nanoTime()}"
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long)]
+    val out = new HashDedup.ServeLog("night", "n_index_rows", "n_lookups", "n_candidates", "n_true", "n_hit")
     val servedFiles = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
     var batches = -1
-    def storeFiles(): Int = {
-      val s = java.nio.file.Files.walk(store)
-      try {
-        var n = 0
-        val it = s.iterator()
-        while (it.hasNext) { if (it.next().getFileName.toString.endsWith(".parquet")) n += 1 }
-        n
-      } finally s.close()
-    }
     ReplayHarness.replay(spark, 8, name, andThen = () => graft.Fs.rmTree(scratch)) { register =>
       // E0: the base index lands before the stream opens
       ofCls(c => !c.isin(1L, 2L, 3L)).repartition(4)
@@ -104,9 +87,9 @@ object StreamDedupIndex {
               .crossJoin(broadcast(verified.join(broadcast(tn), Seq("doc_a", "doc_b"))
                 .agg(count(lit(1)).as("n_hit"))))
               .collect()(0)
-            servedFiles += ((night, storeFiles()))
-            out += ((night, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_lookups"),
-              r.getAs[Long]("n_candidates"), r.getAs[Long]("n_true"), r.getAs[Long]("n_hit")))
+            servedFiles += ((night, graft.Fs.parquetFiles(store).size))
+            out += (night, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_lookups"),
+              r.getAs[Long]("n_candidates"), r.getAs[Long]("n_true"), r.getAs[Long]("n_hit"))
             // probe BEFORE append: the night never sees itself
             keys.coalesce(1).write.mode("append").parquet(store.toString)
           }
@@ -118,14 +101,7 @@ object StreamDedupIndex {
       q.awaitTermination()
       batches = q.recentProgress.count(_.numInputRows > 0)
     }
-    import spark.implicits._
-    val df = out.toSeq
-      .toDF("night", "n_index_rows", "n_lookups", "n_candidates", "n_true", "n_hit")
-      .select(col("night"), col("n_index_rows"), col("n_lookups"),
-        col("n_candidates"), col("n_true"), col("n_hit"),
-        round(col("n_hit").cast("double") / greatest(col("n_candidates"), lit(1L)) + 1e-9, 6).as("prec"),
-        round(col("n_hit").cast("double") / greatest(col("n_true"), lit(1L)) + 1e-9, 6).as("rec"))
-      .orderBy(col("night"))
+    val df = out.frame(spark, ("prec", "n_hit", "n_candidates"), ("rec", "n_hit", "n_true"))
     (df, IndexCensus(batches, servedFiles.toSeq))
   }
 

@@ -70,25 +70,12 @@ object StreamNight {
   private[graft] def streamNightWithCensus(
       spark: SparkSession, dir: String): (DataFrame, NightStreamCensus) = {
     import graft.queries.{HashDedup, PipelineQueries, TextQueries, VectorQueries}
+    import HashDedup.{clsOf, readIndex}
     import VectorQueries.{EmbedQEvery, K}
-    val m = HashDedup.IncCalMod.toLong
-    def clsOf(c: org.apache.spark.sql.Column) = pmod(c, lit(m))
-    val docs = TextQueries.dupCorpus(spark, dir)
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val truthAll = graft.CacheRegistry.track(
-      TextQueries.dedupNgramJaccardFrom(tok).select(col("doc_a"), col("doc_b")).persist())
-    val bandRows = graft.CacheRegistry.track(
-      HashDedup.mpBaseRows(HashDedup.mpSigFrom(tok))
-        .withColumn("cls", clsOf(col("doc_id"))).persist())
-    val ve = graft.CacheRegistry.track(
-      PipelineQueries.docEmbedVectorsFrom(docs)
-        .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
-        .withColumn("cls", clsOf(col("doc_id"))).persist())
-    val queries = graft.CacheRegistry.track(
-      ve.filter(col("doc_id") % EmbedQEvery === 0 && !col("cls").isin(1L, 2L))
-        .select(col("doc_id").as("q_id"), col("emb_arr").as("q_emb"), col("norm_sq").as("q_norm"))
-        .persist())
+    val corpus = new HashDedup.IndexCorpus(spark, dir)
+    import corpus.{ofCls, sh5, tok, truthAll}
+    val ve = PipelineQueries.corpusVectors(spark, dir)
+    val queries = PipelineQueries.corpusQueries(ve, 1L, 2L)
     // night docs with a τ-partner in BASE — everything else a later batch
     // drops is dropped BECAUSE of a mid-stream survivor append
     def isNight(c: org.apache.spark.sql.Column) = clsOf(c).isin(1L, 2L)
@@ -103,10 +90,7 @@ object StreamNight {
     val ixStore = scratch.resolve("index"); val vStore = scratch.resolve("vectors")
     val name = s"stream_night_${System.nanoTime()}"
     // E0: both stores land before the stream opens
-    bandRows.filter(!col("cls").isin(1L, 2L))
-      .select(col("doc_id"), col("band"), col("band_key"))
-      .withColumn("gen", lit(0)).repartition(4)
-      .write.partitionBy("gen").mode("overwrite").parquet(ixStore.toString)
+    HashDedup.landGen(ixStore, ofCls(c => !c.isin(1L, 2L)), 0, 4)
     ve.filter(!col("cls").isin(1L, 2L) && !(col("doc_id") % EmbedQEvery === 0))
       .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
       .repartition(4).write.mode("overwrite").parquet(vStore.toString)
@@ -146,15 +130,11 @@ object StreamNight {
             keys.count()
             graft.CacheRegistry.withCache(bdf.select(col("doc_id"))) { batchIds =>
               batchIds.count()
-              val back = spark.read.parquet(ixStore.toString)
-                .select(col("doc_id"), col("band"), col("band_key"))
-              val cand = HashDedup.bandCandidates(keys, back)
-              val dupStore = scratch.resolve(s"dups_$id")
-              TextQueries.verifyPairsOf(sh5, cand)
-                .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-                .join(batchIds, Seq("doc_id"), "left_semi")
-                .distinct().coalesce(1).write.parquet(dupStore.toString)
-              val dupFiles = spark.read.parquet(dupStore.toString)
+              val cand = HashDedup.bandCandidates(keys, readIndex(spark, ixStore))
+              val dupFiles = HashDedup.landDecision(scratch.resolve(s"dups_$id"),
+                TextQueries.verifyPairsOf(sh5, cand)
+                  .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+                  .join(batchIds, Seq("doc_id"), "left_semi").distinct())
               dropped += dupFiles.count()
               // BOTH appends consume the landed decision
               keys.join(dupFiles, Seq("doc_id"), "left_anti")
@@ -166,15 +146,9 @@ object StreamNight {
                 .coalesce(1).write.mode("append").parquet(vStore.toString)
               // SERVE both stores from the files; the scored probe pass and
               // the census-with-dup-flag pass share ONE vector-store scan
-              val ixBack2 = spark.read.parquet(ixStore.toString)
-              graft.CacheRegistry.withCache(spark.read.parquet(vStore.toString)
-                  .select(col("doc_id"), col("emb_arr"), col("norm_sq"))) { vBack =>
-                val scored = vBack.join(broadcast(queries))
-                  .select(col("q_id"), col("doc_id"),
-                    round(
-                      aggregate(zip_with(col("emb_arr"), col("q_emb"), (x, y) => x * y), lit(0L), (acc, p) => acc + p)
-                        .cast("double") /
-                        (sqrt(col("norm_sq").cast("double")) * sqrt(col("q_norm").cast("double"))), 6).as("cos"))
+              val ixBack2 = readIndex(spark, ixStore)
+              graft.CacheRegistry.withCache(PipelineQueries.readVectors(spark, vStore)) { vBack =>
+                val scored = PipelineQueries.exactCos(vBack, queries)
                 // Census DISTRIBUTIVELY (r14 verdict 1), and in ONE store scan
                 // (r15 frontier 3): the cumulative dup-manifest set is
                 // batch-bounded, so it rides the census aggregation as a

@@ -4,10 +4,11 @@ import graft.{Fs, SparkSpec}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-/** The IVF store's fixed cost per write and per read-back: a landing of a
-  * 64-cell assignment writes at cluster width and still leaves one file
-  * per cell, and a read-back of that store lists its cells on the driver
-  * and infers no schema — no Spark job before the read's own. */
+/** The file stores' fixed cost per write and per read-back: a landing of
+  * a 64-cell IVF assignment writes at cluster width and still leaves one
+  * file per cell, and a read-back of that store — or of a `gen=`-partitioned
+  * band index ([[HashDedup.readIndex]]) — lists its partitions on the
+  * driver and infers no schema: no Spark job before the read's own. */
 class StoreLayoutSpec extends SparkSpec {
 
   private val Cells = 64
@@ -52,18 +53,33 @@ class StoreLayoutSpec extends SparkSpec {
     } finally Fs.rmTree(store)
   }
 
+  /** Build `read`'s frame, then count it: building submits no job, the
+    * count lists no partition with a job, and the frame has `schema`. */
+  private def assertJoblessRead(read: => org.apache.spark.sql.DataFrame, rows: Long,
+                                schema: Seq[(String, String)]): Unit = {
+    val (back, atRead) = jobsOf(read)
+    assert(atRead.isEmpty,
+      s"building the read-back submitted jobs: ${atRead.map(j => (j.jobId, description(j)))}")
+    val (n, atCount) = jobsOf(back.count())
+    assert(n === rows)
+    assert(!atCount.exists(description(_).startsWith("Listing leaf files")),
+      s"the read-back listed its partitions with a job: ${atCount.map(description)}")
+    assert(back.schema.map(f => f.name -> f.dataType.simpleString) === schema)
+  }
+
   test("a store read-back lists its cells on the driver and infers no schema") {
     val (store, _) = landed()
+    try assertJoblessRead(VectorQueries.readStore(spark, store.toString), Cells * 10L,
+      Seq("vec_id" -> "bigint", "emb" -> "array<float>", "cell" -> "bigint"))
+    finally Fs.rmTree(store)
+    // the band index: generations landed as the index drills land them
+    val index = java.nio.file.Files.createTempDirectory("graft_index_layout_")
     try {
-      val (back, atRead) = jobsOf(VectorQueries.readStore(spark, store.toString))
-      assert(atRead.isEmpty,
-        s"building the read-back submitted jobs: ${atRead.map(j => (j.jobId, description(j)))}")
-      val (n, atCount) = jobsOf(back.count())
-      assert(n === Cells * 10L)
-      assert(!atCount.exists(description(_).startsWith("Listing leaf files")),
-        s"the read-back listed its cells with a job: ${atCount.map(description)}")
-      assert(back.schema.map(f => f.name -> f.dataType.simpleString) ===
-        Seq("vec_id" -> "bigint", "emb" -> "array<float>", "cell" -> "bigint"))
-    } finally Fs.rmTree(store)
+      val rows = spark.range(0, 400L).select(col("id").as("doc_id"),
+        (col("id") % 4).cast("int").as("band"), md5(col("id").cast("string")).as("band_key"))
+      (0 until Cells).foreach(g => HashDedup.landGen(index, rows.filter(col("doc_id") % Cells === g), g, 1))
+      assertJoblessRead(HashDedup.readIndex(spark, index), 400L,
+        Seq("doc_id" -> "bigint", "band" -> "int", "band_key" -> "string", "gen" -> "int"))
+    } finally Fs.rmTree(index)
   }
 }
