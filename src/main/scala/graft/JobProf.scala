@@ -91,7 +91,9 @@ object JobProf {
       CacheRegistry.releaseAll(spark)
       if (rep == reps) { jobs.clear(); stageToJob.clear(); collecting = true }
       val t0 = System.nanoTime()
-      fn(spark, sfDir).queryExecution.toRdd.count()
+      // the query's own action is named after it; phases the query runs
+      // eagerly while building (a sink's write, say) keep their own names
+      phase(spark, qname)(fn(spark, sfDir).queryExecution.toRdd.count())
       lastWall = (System.nanoTime() - t0) / 1000000L
       // drain the async listener bus BEFORE dropping the collecting flag:
       // onJobEnd/onStageCompleted events for the final jobs may still be

@@ -15,10 +15,13 @@ final case class Tables(spark: SparkSession, dir: String) {
     * point is that every graft operator is source-format agnostic (the
     * returned frame is identical, so the whole pipeline + oracles carry
     * over; ORC keeps predicate pushdown + column pruning like parquet).
+    * Parquet reads take their schema from [[Tables.parquetSchema]], so a
+    * table read submits no schema-inference job.
     */
   private def t(name: String): DataFrame = {
     val base = s"$dir/$name"
-    if (new java.io.File(s"$base.parquet").exists) spark.read.parquet(s"$base.parquet")
+    if (new java.io.File(s"$base.parquet").exists)
+      spark.read.schema(Tables.parquetSchema(spark, s"$base.parquet")).parquet(s"$base.parquet")
     else if (new java.io.File(s"$base.orc").exists) spark.read.orc(s"$base.orc")
     else if (new java.io.File(s"$base.json").exists)
       spark.read.schema(Tables.knownSchema(name).orNull).json(s"$base.json")
@@ -57,6 +60,35 @@ final case class Tables(spark: SparkSession, dir: String) {
 
 object Tables {
   import org.apache.spark.sql.types._
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver:
+    * inference reads one footer in a one-task Spark job per read, this
+    * reads the same footer inline and converts it with Spark's own
+    * conversion under the session conf (`nanosAsLong`,
+    * `inferTimestampNTZ`, binary-as-string, …). Not memoized: the file
+    * may be rewritten between reads. `path` is a file or a directory of
+    * part files; for a directory the first data file (by name) stands
+    * for all, as inference without `mergeSchema` takes one. */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val st = fs.getFileStatus(p)
+    val file =
+      if (!st.isDirectory) st
+      else fs.listStatus(p)
+        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+        .minByOption(_.getPath.getName)
+        .getOrElse(throw new java.io.FileNotFoundException(s"no parquet data file under $path"))
+    val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 
   /** Normalizes either physical `ts` layout to the logical contract:
     *   - `ts`     LONG epoch-nanos (the arithmetic column — every
@@ -123,7 +155,7 @@ object Tables {
   def streamEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = parquetSchema(spark, s"$dir/events.parquet")
     normalizeTs(spark.readStream.schema(schema).parquet(s"$dir/events.parq*"))
   }
 

@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   * end-to-end on both engines. All derivations use only cross-engine-stable
   * primitives: md5, base64, integer arithmetic, millisecond formatting.
   *
-  * Scale: everything here is a narrow per-row projection over the scan — no
-  * shuffle. The AES-CTR encryption (envelope construction) runs inside
-  * whole-stage codegen via [[AesCtrCrypt]].
+  * Scale: everything here is a narrow per-row projection over the scan; the
+  * one shuffle is [[withEnvelope]]'s spread, keyed for the consumer. The
+  * AES-CTR encryption (envelope construction) runs inside whole-stage
+  * codegen via [[AesCtrCrypt]].
   */
 object KvModel {
 
@@ -60,13 +61,6 @@ object KvModel {
   /** Base KV frame: one row per event with all envelope ingredients.
     * Column derivations must stay in lockstep with [[KvSql.kvCte]].
     */
-  /** The local corpus is one parquet row group → one scan split, which would
-    * serialize the CPU-heavy crypto/JSON pipeline onto a single core. Spread
-    * only when the scan is narrower than the session parallelism — on a
-    * production multi-split table this is a no-op (no extra shuffle).
-    */
-  private def spread(df: DataFrame): DataFrame = graft.Spread.spread(df)
-
   def kv(spark: SparkSession, dir: String): DataFrame =
     kvFromEvents(Tables(spark, dir).events)
 
@@ -148,12 +142,20 @@ object KvModel {
     * app/batch/HBaseResultProcessor.kt:22-76). Invalid rows get a blank
     * encryptedEncryptionKey so mandatory-field validation has something to
     * reject.
+    *
+    * `spread` is the export pipeline's ONE exchange between the scan and the
+    * per-row work, keyed for the pipeline's consumer: a range on `eid` for
+    * rows ordered by `eid` (the final sort is then local), the chunk
+    * window's hash for the sink and chunk rows (the window reuses it), and
+    * round-robin for aggregating consumers (see [[graft.Spread]]). It sits
+    * here, not in kv(): only the crypto/JSON-heavy envelope pipeline needs
+    * it, plain KV scans keep their narrow no-shuffle plans, and below the
+    * envelope build it moves the narrow kv row, not the ciphertext. The
+    * default round-robin is a no-op on a streaming frame.
     */
-  def withEnvelope(kvDf: DataFrame): DataFrame = {
+  def withEnvelope(kvDf: DataFrame,
+                   spread: DataFrame => DataFrame = graft.Spread.spread): DataFrame = {
     val eid = col("eid")
-    // spread() here, not in kv(): only the crypto/JSON-heavy envelope
-    // pipeline needs the parallelism normalization; plain KV scans keep
-    // their narrow no-shuffle plans.
     val df = spread(kvDf)
       .withColumn("dkey", unhex(md5(concat(lit("dk|"), s(eid)))))
       .withColumn("ivb", unhex(md5(concat(lit("iv|"), s(eid)))))

@@ -171,6 +171,12 @@ object ExportOps {
                    compressionExt: String = "gz"): Column =
     format_string(s"$prefix/%s-%03d-%03d-%06d.txt.$compressionExt.enc", topic, pstart, pstop, batch + lit(1))
 
+  /** The hash [[withChunkIds]]'s window clusters on, as a spread
+    * ([[graft.kv.KvModel.withEnvelope]]): placed below the per-row
+    * pipeline, it is the window's exchange, so the window adds none. */
+  def chunkSpread(df: DataFrame): DataFrame =
+    graft.Spread.clustered(df, partitionLabel(col("key_byte")), col("topic"))
+
   /** Byte-bounded chunk/batch assignment — THE single definition shared by
     * the chunk_batch / snapshot_name queries and the snapshot sink. Batch
     * ids number per (keyspace partition, topic): a cumulative-byte window

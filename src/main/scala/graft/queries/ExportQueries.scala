@@ -34,18 +34,26 @@ object ExportQueries {
     * placement-pinned (deterministic=false), so Catalyst cannot push a
     * later filter through them — a subset query without this decrypts the
     * whole corpus to emit 20%. At 100 TB this is the difference between
-    * scanning a topic and decrypting the table. */
-  private def parsed(spark: SparkSession, dir: String,
-                     kvPred: Column = lit(true)): DataFrame = {
-    val base = KvSource.envelopes(spark, dir, kvPred)
+    * scanning a topic and decrypting the table. `spread` is the exchange
+    * below the per-row work, keyed for the consumer: [[eidSpread]] for rows
+    * sorted by `eid`, [[ExportOps.chunkSpread]] for chunked rows,
+    * round-robin for aggregates ([[KvSource.envelopes]]). */
+  private def parsed(spark: SparkSession, dir: String, kvPred: Column = lit(true),
+                     spread: DataFrame => DataFrame = graft.Spread.spread): DataFrame = {
+    val base = KvSource.envelopes(spark, dir, kvPred, spread)
     extractEnvelope(base, col("envelope"), col("topic"))
   }
 
   /** Pipeline through decrypt + validate + sanitise + wrap → final records.
-    * Same `kvPred` contract as [[parsed]]. */
-  private def records(spark: SparkSession, dir: String,
-                      kvPred: Column = lit(true)): DataFrame =
-    recordsFromKv(KvSource.envelopes(spark, dir, kvPred))
+    * Same `kvPred` and `spread` contract as [[parsed]]. */
+  private def records(spark: SparkSession, dir: String, kvPred: Column = lit(true),
+                      spread: DataFrame => DataFrame = graft.Spread.spread): DataFrame =
+    recordsFromKv(KvSource.envelopes(spark, dir, kvPred, spread))
+
+  /** The spread for rows the query orders by `eid`: a range exchange on
+    * `eid` below the pipeline, so the final `orderBy(eid)` sorts locally
+    * and its range sample never evaluates the decrypt. */
+  def eidSpread(df: DataFrame): DataFrame = graft.Spread.ordered(df, col("eid"))
 
   /** The full record pipeline over ANY envelope-bearing kv frame — batch or
     * streaming (all stages are per-row projections; see
@@ -154,7 +162,7 @@ object ExportQueries {
 
   // -------------------------------------------------------------- №5 envelope_extract
   def envelopeExtract(spark: SparkSession, dir: String): DataFrame =
-    parsed(spark, dir)
+    parsed(spark, dir, spread = eidSpread)
       .filter(mandatoryOk)
       .select(col("eid"), col("x_outer").as("outer_type"), col("x_inner").as("inner_type"),
         col("r_db"), col("r_coll"), col("x_lm").as("lm"), col("x_kek").as("kek"),
@@ -213,7 +221,7 @@ object ExportQueries {
 
   // -------------------------------------------------------------- №9 aes_roundtrip
   def aesRoundtrip(spark: SparkSession, dir: String): DataFrame =
-    parsed(spark, dir)
+    parsed(spark, dir, spread = eidSpread)
       .filter(mandatoryOk)
       .withColumn("payload_dec", decrypted)
       .select(col("eid"), md5(col("payload_dec")).as("payload_md5"),
@@ -227,7 +235,7 @@ object ExportQueries {
 
   // -------------------------------------------------------------- №10 business_audit
   def businessAudit(spark: SparkSession, dir: String): DataFrame =
-    parsed(spark, dir, col("etype") === "error") // kv-level topic pre-filter
+    parsed(spark, dir, col("etype") === "error", eidSpread) // kv-level topic pre-filter
       .filter(mandatoryOk && isBusinessAudit)
       .withColumn("payload_dec", decrypted)
       .select(col("eid"), auditPromote(col("payload_dec"), col("x_lm")).as("audit_json"))
@@ -242,7 +250,7 @@ object ExportQueries {
 
   // -------------------------------------------------------------- №11 id_normalize
   def idNormalize(spark: SparkSession, dir: String): DataFrame =
-    records(spark, dir)
+    records(spark, dir, spread = eidSpread)
       .select(col("eid"), col("v.manifest_id").as("manifest_id"), col("v.original_id").as("original_id"))
       .orderBy(col("eid"))
 
@@ -253,7 +261,7 @@ object ExportQueries {
 
   // -------------------------------------------------------------- №12 date_wrap
   def dateWrap(spark: SparkSession, dir: String): DataFrame =
-    records(spark, dir, col("etype").isin("click", "view"))
+    records(spark, dir, col("etype").isin("click", "view"), eidSpread)
       .select(col("eid"), col("v.record").as("record"))
       .orderBy(col("eid"))
 
@@ -264,7 +272,7 @@ object ExportQueries {
 
   // -------------------------------------------------------------- №13 sanitise
   def sanitiseQ(spark: SparkSession, dir: String): DataFrame =
-    records(spark, dir, col("etype") === "purchase")
+    records(spark, dir, col("etype") === "purchase", eidSpread)
       .select(col("eid"), col("record"))
       .orderBy(col("eid"))
 
@@ -275,7 +283,7 @@ object ExportQueries {
 
   // -------------------------------------------------------------- №14 equality_wrap
   def equalityWrapQ(spark: SparkSession, dir: String): DataFrame =
-    records(spark, dir, col("etype") === "signup")
+    records(spark, dir, col("etype") === "signup", eidSpread)
       .select(col("eid"), col("record"))
       .orderBy(col("eid"))
 
@@ -286,7 +294,7 @@ object ExportQueries {
 
   // -------------------------------------------------------------- №15 manifest_gen
   def manifestGen(spark: SparkSession, dir: String): DataFrame =
-    records(spark, dir)
+    records(spark, dir, spread = eidSpread)
       .select(col("eid"), col("manifest_line"))
       .orderBy(col("eid"))
 
@@ -303,7 +311,7 @@ object ExportQueries {
     * Chunk id = floor(exclusive-prefix-bytes / max).
     */
   def chunkBatch(spark: SparkSession, dir: String): DataFrame =
-    ExportOps.withChunkIds(records(spark, dir))
+    ExportOps.withChunkIds(records(spark, dir, spread = chunkSpread))
       .groupBy(col("plabel"), col("topic"), col("batch"))
       .agg(count(lit(1)).as("n_records"), sum(col("bytes")).as("batch_bytes"))
       .orderBy(col("plabel"), col("topic"), col("batch"))
@@ -325,7 +333,7 @@ object ExportQueries {
 
   // -------------------------------------------------------------- №17 snapshot_name
   def snapshotNameQ(spark: SparkSession, dir: String): DataFrame =
-    ExportOps.withChunkIds(records(spark, dir))
+    ExportOps.withChunkIds(records(spark, dir, spread = chunkSpread))
       .groupBy(col("topic"), col("pstart"), col("pstop"), col("batch"))
       .agg(count(lit(1)).as("n_records"))
       .withColumn("object_key", snapshotName("exports", col("topic"), col("pstart"), col("pstop"), col("batch")))
@@ -424,7 +432,7 @@ object ExportQueries {
     val successSet = SuccessStatuses
     import spark.implicits._
     val chunks = ExportOps.withChunkIds(
-        records(spark, dir, !col("topic").isin(KvModel.BlockedTopics: _*)))
+        records(spark, dir, !col("topic").isin(KvModel.BlockedTopics: _*), chunkSpread))
       .withColumn("object_key",
         snapshotName("exports", col("topic"), col("pstart"), col("pstop"), col("batch")))
       .groupBy(col("topic"))
@@ -566,7 +574,7 @@ object ExportQueries {
     val nullL = lit(null).cast("bigint")
     val groupId = regexp_replace(col("topic"), "\\.", "_")
     val fileMsgs = ExportOps.withChunkIds(
-        records(spark, dir, !col("topic").isin(KvModel.BlockedTopics: _*)))
+        records(spark, dir, !col("topic").isin(KvModel.BlockedTopics: _*), chunkSpread))
       .withColumn("object_key",
         snapshotName("exports", col("topic"), col("pstart"), col("pstop"), col("batch")))
       .select(col("topic"), col("object_key")).distinct()
@@ -696,7 +704,7 @@ object ExportQueries {
   def productStatus(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val chunks = ExportOps.withChunkIds(
-        records(spark, dir, !col("topic").isin(KvModel.BlockedTopics: _*)))
+        records(spark, dir, !col("topic").isin(KvModel.BlockedTopics: _*), chunkSpread))
       .withColumn("object_key",
         snapshotName("exports", col("topic"), col("pstart"), col("pstop"), col("batch")))
       .groupBy(col("topic"))
@@ -842,7 +850,7 @@ object ExportQueries {
     ("htme_dks_new_key_failures", lit(0L), "0"))
 
   def metricsPush(spark: SparkSession, dir: String): DataFrame = {
-    val rec = records(spark, dir, !col("topic").isin(KvModel.BlockedTopics: _*))
+    val rec = records(spark, dir, !col("topic").isin(KvModel.BlockedTopics: _*), chunkSpread)
       .withColumn("split", ExportOps.partitionLabel(col("key_byte")))
       .groupBy(col("topic"), col("split"))
       .agg(count(lit(1)).as("n_records"), sum(length(col("record")) + 1).as("n_bytes"))
@@ -955,11 +963,11 @@ object ExportQueries {
     * consumes (the snapshot sink needs key_byte/key_hash for chunk
     * assignment alongside record + manifest_line). */
   def pipelineRecords(spark: SparkSession, dir: String): DataFrame =
-    records(spark, dir)
+    records(spark, dir, spread = chunkSpread)
 
   /** Flagship: the whole export pipeline end-to-end (records + manifest). */
   def exportRecords(spark: SparkSession, dir: String): DataFrame =
-    records(spark, dir)
+    records(spark, dir, spread = eidSpread)
       .select(col("eid"), col("topic"), col("record"), col("manifest_line"))
       .orderBy(col("eid"))
 
@@ -969,8 +977,9 @@ object ExportQueries {
     * semantics) + the full record pipeline. Shape at scale: the ts
     * predicate pushes into the parquet scan; latest-cell is ONE max_by
     * hash-aggregation (map-side partial, no window/sort); everything after
-    * is the per-row projection pipeline — so an incremental export reads
-    * only the time slice and shuffles once on the row key. */
+    * is the per-row projection pipeline, spread by a range on `eid` below
+    * it — so an incremental export reads only the time slice, shuffles
+    * once on the row key and once on `eid`, and its final sort is local. */
   def incrementalExport(spark: SparkSession, dir: String): DataFrame = {
     val kv0 = KvSource.kv(spark, dir)
     val kv = kv0.filter(tsNsRange(kv0, T1, T2))
@@ -979,7 +988,7 @@ object ExportQueries {
       .groupBy(col("uid"))
       .agg(max_by(struct(cols.map(col): _*), struct(col("ms"), col("eid"))).as("r"))
       .select(col("r.*"))
-    recordsFromKv(KvModel.withEnvelope(latest))
+    recordsFromKv(KvModel.withEnvelope(latest, eidSpread))
       .select(col("eid"), col("topic"), col("record"), col("manifest_line"))
       .orderBy(col("eid"))
   }

@@ -24,9 +24,15 @@ import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
   *
   * Spark-first shape: chunk ids come from the SAME window cumsum as the
   * verified `chunk_batch` operator ([[ExportOps.withChunkIds]] — one
-  * definition for query and sink); the write itself is one
-  * `repartition(object_key) → sortWithinPartitions → mapPartitions` pass —
-  * each task streams its chunk groups through cipher+gzip without
+  * definition for query and sink), and the writer is a `mapPartitions`
+  * pass straight over the window's output. The window clusters rows on
+  * (keyspace partition, topic) and sorts them by (partition, topic,
+  * key_hash, eid) within each task, so every object's rows arrive
+  * contiguous and in the reference's order: no shuffle or sort of its
+  * own. Records spread by [[ExportOps.chunkSpread]] (as
+  * `ExportQueries.pipelineRecords` is) bring that clustering from below
+  * the per-row pipeline, at cluster width, and the window adds no
+  * exchange. Each task streams its objects through cipher+gzip without
   * buffering an object in memory, and emits per-object stats as the
   * summary frame. IO goes through the Hadoop FileSystem API, so the same
   * code writes file://, hdfs:// or s3a:// at cluster scale.
@@ -101,7 +107,9 @@ object JsonlSnapshotSink {
   /** Write chunked, encrypted snapshot objects + per-chunk manifests.
     *
     * @param records pipeline output with (topic, record, manifest_line,
-    *                key_byte, key_hash, eid) — ExportQueries.pipelineRecords
+    *                key_byte, key_hash, eid) — ExportQueries.pipelineRecords;
+    *                spread by [[ExportOps.chunkSpread]] so the writer runs
+    *                at cluster width
     * @return per-object summary (object_key, n_records, jsonl_bytes)
     */
   def write(records: DataFrame, root: String, prefix: String = Prefix,
@@ -126,18 +134,9 @@ object JsonlSnapshotSink {
       buf.toArray
     }
 
-    val chunked = chunkedFrame(records, prefix, maxBytes, codec)
-
-    // One shuffle on the object key (high-cardinality, even); groups are
-    // contiguous after the within-partition sort, so the writer is a
-    // single streaming pass per task with at most one open object.
-    // EXPLICIT partition count: a bare repartition(col) lets AQE coalesce
-    // the (byte-small) shuffle to one partition — serializing thousands of
-    // object writes onto a single task. File-create latency, not shuffle
-    // bytes, bounds this stage, so pin writer parallelism to the cluster.
-    chunked
-      .repartition(spark.sparkContext.defaultParallelism, col("object_key"))
-      .sortWithinPartitions(col("object_key"), col("key_hash"), col("eid"))
+    // The chunk window's output order is the writer's: one streaming pass
+    // per task with at most one open object (see the object scaladoc).
+    chunkedFrame(records, prefix, maxBytes, codec)
       .select(col("object_key"), col("record"), col("manifest_line"))
       .as[(String, String, String)]
       .mapPartitions(rows => writePartitionBody(rows, root, codec, keys, confEntries))
@@ -163,8 +162,10 @@ object JsonlSnapshotSink {
       .select(col("object_key"), col("key_hash"), col("eid"), col("record"), col("manifest_line"))
 
   /** The per-task writer body: one streaming pass over (object_key,
-    * record, manifest_line) rows sorted by object key, dot-temp +
-    * atomic-rename commit per object. Extracted (private[graft]) so
+    * record, manifest_line) rows with each object's rows contiguous,
+    * dot-temp + atomic-rename commit per object. A key that comes back
+    * after its object closed fails the task: reopening it would replace
+    * the committed object with its tail. Extracted (private[graft]) so
     * SinkSpeculationSpec can drive TWO LIVE attempt contexts through it
     * concurrently against one root — the `spark.speculation` duplicate-
     * attempt race SinkRetrySpec's kill-then-retry cannot reach. */
@@ -251,6 +252,7 @@ object JsonlSnapshotSink {
               }
             }
           val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+          val closed = scala.collection.mutable.HashSet.empty[String]
 
           var curKey: String = null
           var gz: java.io.OutputStream = null
@@ -268,6 +270,8 @@ object JsonlSnapshotSink {
           }
 
           def openObject(key: String): Unit = {
+            if (!closed.add(key))
+              throw new IllegalStateException(s"object $key's rows are not contiguous")
             val (dk, iv) = keys.keyMaterial(key)
             val cipher = cipherTL.get()
             cipher.init(Cipher.ENCRYPT_MODE, new SecretKeySpec(dk, "AES"), new IvParameterSpec(iv))
@@ -316,27 +320,30 @@ object JsonlSnapshotSink {
 
   /** Decrypt + decompress every data object back to (object_key, record)
     * rows — the round-trip proof the driver's oracle checks. Distributed:
-    * binaryFile source (one whole object per row), per-row decrypt. */
+    * binaryFile source (one whole object per row), the object key derived
+    * from the path as a column, a range exchange on it, then one decrypt
+    * per object in a generator. The exchange sits BELOW the decrypt, so
+    * its sample job reads the ciphertext only, and a consumer ordering by
+    * (object_key, …) sorts locally. Each object's records keep their file
+    * order. */
   def readBack(spark: SparkSession, root: String,
                codec: SnapshotCodec = GzipSnapshotCodec,
                keys: SnapshotKeyProvider = StubDerivedKeyProvider): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
+    val records = udf { (key: String, bytes: Array[Byte]) =>
+      val (dk, iv) = keys.keyMaterial(key)
+      val plain = AesCtrCrypt.crypt(bytes, dk, iv)
+      val text = new String(codec.decompress(new ByteArrayInputStream(plain)).readAllBytes(), "UTF-8")
+      text.split("\n", -1).toSeq.filter(_.nonEmpty)
+    }
+    val objects = spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
       .option("pathGlobFilter", "*.enc")
       .load(s"$root/data")
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        // lastIndexOf: the ROOT may itself contain "/data/"; object keys
-        // (prefix/<topic>-...) never do
-        val key = path.substring(path.lastIndexOf("/data/") + "/data/".length)
-        val (dk, iv) = keys.keyMaterial(key)
-        val plain = AesCtrCrypt.crypt(bytes, dk, iv)
-        val text = new String(codec.decompress(new ByteArrayInputStream(plain)).readAllBytes(), "UTF-8")
-        text.split("\n", -1).iterator.filter(_.nonEmpty).map(r => (key, r))
-      }
-      .toDF("object_key", "record")
+      // greedy: the ROOT may itself contain "/data/"; object keys
+      // (prefix/<topic>-...) never do
+      .select(regexp_extract(col("path"), "^.*/data/(.*)$", 1).as("object_key"), col("content"))
+    graft.Spread.ordered(objects, col("object_key"))
+      .select(col("object_key"), explode(records(col("object_key"), col("content"))).as("record"))
   }
 
   /** Verify-runnable form (№18 `jsonl_snapshot`): write the sf's export to
@@ -347,7 +354,8 @@ object JsonlSnapshotSink {
     val records = graft.queries.ExportQueries.pipelineRecords(spark, dir)
     val root = s"${System.getProperty("java.io.tmpdir")}/graft_snapshot_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
     registerScratchRoot(spark, root)
-    write(records, root) // eager — the objects exist when this returns
+    // eager — the objects exist when this returns
+    graft.JobProf.phase(spark, "jsonl_snapshot: write")(write(records, root))
     readBack(spark, root).orderBy(col("object_key"), col("record"))
   }
 

@@ -38,15 +38,27 @@ trait KvSource {
   def envelopes(spark: SparkSession, dir: String): DataFrame
 
   /** [[envelopes]] restricted by a pre-envelope predicate over the
-    * contract's cheap columns (topic / ts_ns / key_byte). The DEFAULT is a
-    * post-hoc DataFrame filter — whether that reaches the store depends
-    * entirely on the connector's Catalyst pushdown, and a source that
-    * COMPUTES its envelope column defeats it. A real connector should
-    * override this and translate the predicate into its scan (the
-    * reference's Scan.setTimeRange / setStartRow), which is the only way
-    * a 100 TB table is range-read rather than fully scanned. */
-  def envelopes(spark: SparkSession, dir: String, kvPred: Column): DataFrame =
-    envelopes(spark, dir).filter(kvPred)
+    * contract's cheap columns (topic / ts_ns / key_byte), then spread.
+    *
+    * The predicate: the DEFAULT is a post-hoc DataFrame filter — whether
+    * that reaches the store depends entirely on the connector's Catalyst
+    * pushdown, and a source that COMPUTES its envelope column defeats it.
+    * A real connector should override this and translate the predicate
+    * into its scan (the reference's Scan.setTimeRange / setStartRow),
+    * which is the only way a 100 TB table is range-read rather than fully
+    * scanned.
+    *
+    * The spread: the exchange the export pipeline's consumer needs
+    * ([[graft.kv.KvModel.withEnvelope]] documents the keys). It is the
+    * pipeline's only exchange below its per-row work (extract, decrypt,
+    * validate, sanitise), so that work runs once per row: the consumer's
+    * sort or chunk window reuses it. By DEFAULT a connector's stored
+    * envelopes go through it right after the scan, which moves the stored
+    * cell bytes once; the synthetic source places it below its envelope
+    * construction. */
+  def envelopes(spark: SparkSession, dir: String, kvPred: Column,
+                spread: DataFrame => DataFrame = graft.Spread.spread): DataFrame =
+    spread(envelopes(spark, dir).filter(kvPred))
 }
 
 /** Default source: the deterministic parquet-backed KV view. `envelopes`
@@ -59,9 +71,13 @@ final class SyntheticKvSource extends KvSource {
     graft.kv.KvModel.withEnvelope(graft.kv.KvModel.kv(spark, dir))
   /** Predicate BEFORE the envelope construction: the filter lands on the
     * raw parquet columns (plan-pinned pushdown — PlanRegressionSpec), the
-    * synthetic stand-in for a connector translating it into its scan. */
-  override def envelopes(spark: SparkSession, dir: String, kvPred: Column): DataFrame =
-    graft.kv.KvModel.withEnvelope(kv(spark, dir).filter(kvPred))
+    * synthetic stand-in for a connector translating it into its scan. The
+    * spread lands between the filtered scan and the envelope build, so
+    * the exchange (and a range exchange's sample job) reads the kv row,
+    * never the ciphertext. */
+  override def envelopes(spark: SparkSession, dir: String, kvPred: Column,
+                         spread: DataFrame => DataFrame): DataFrame =
+    graft.kv.KvModel.withEnvelope(kv(spark, dir).filter(kvPred), spread)
 }
 
 object KvSource {
@@ -92,8 +108,9 @@ object KvSource {
   def kv(spark: SparkSession, dir: String): DataFrame = resolve(spark).kv(spark, dir)
   def envelopes(spark: SparkSession, dir: String): DataFrame = resolve(spark).envelopes(spark, dir)
 
-  /** [[KvSource.envelopes(spark,dir,kvPred)]] on the configured source —
-    * see the trait method for the pushdown contract. */
-  def envelopes(spark: SparkSession, dir: String, kvPred: Column): DataFrame =
-    resolve(spark).envelopes(spark, dir, kvPred)
+  /** The filtered, spread [[KvSource.envelopes]] of the configured source
+    * — see the trait method for the pushdown and spread contract. */
+  def envelopes(spark: SparkSession, dir: String, kvPred: Column,
+                spread: DataFrame => DataFrame = graft.Spread.spread): DataFrame =
+    resolve(spark).envelopes(spark, dir, kvPred, spread)
 }

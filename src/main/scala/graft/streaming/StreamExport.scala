@@ -63,7 +63,9 @@ object StreamExport {
     val written = new java.util.concurrent.atomic.AtomicLong(0)
     val q = kv.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        val records = graft.queries.ExportQueries.recordsFromKv(batch)
+        // the chunk window's hash below the per-row pipeline, as in the
+        // batch sink (the spread is a no-op on the streaming frame above)
+        val records = graft.queries.ExportQueries.recordsFromKv(ExportOps.chunkSpread(batch))
         // summary is per-object (object_key, n_records, jsonl_bytes)
         val summary = graft.sources.JsonlSnapshotSink.write(records, s"$root/epoch=$epochId")
         // coalesce: sum over an EMPTY summary (all-invalid micro-batch) is

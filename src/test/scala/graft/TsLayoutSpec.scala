@@ -55,6 +55,28 @@ class TsLayoutSpec extends SparkSpec {
     }
   }
 
+  test("table reads take the inferred schema from the footer, with no schema job") {
+    for (dir <- Seq(sf, legacyDir)) {
+      val path = s"$dir/events.parquet"
+      Tables(spark, dir).events // sets the session conf the events read needs
+      assert(Tables.parquetSchema(spark, path) == spark.read.parquet(path).schema, dir)
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.add(e.stageInfos.map(_.name).mkString(";"))
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        val df = Tables(spark, dir).events
+        org.apache.spark.graftbridge.ListenerBridge.flush(spark.sparkContext)
+        assert(jobs.isEmpty, s"building $dir's events submitted jobs: $jobs")
+        assert(df.count() > 0)
+        org.apache.spark.graftbridge.ListenerBridge.flush(spark.sparkContext)
+        assert(!jobs.toArray.exists(_.toString.contains("Tables.scala")), s"schema job: $jobs")
+      } finally spark.sparkContext.removeSparkListener(l)
+    }
+  }
+
   test("the time-range predicate pushes into the scan in BOTH layouts") {
     for (dir <- Seq(sf, legacyDir)) {
       val plan = ExportQueries.timeRangeScan(spark, dir)

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** The 100 TB shape: inputs arrive as multi-file partitioned directories,
   * not single files. Rewrites events as an 8-file directory and proves
   * (a) the pipeline reads directories transparently, (b) results are
-  * IDENTICAL to the single-file run, and (c) the local-parallelism
-  * `spread()` shuffle self-disables (scan splits >= parallelism → no
-  * extra Exchange beyond the one-per-shuffle the plan needs anyway).
+  * IDENTICAL to the single-file run, and (c) the pipeline's keyed spread
+  * (a range on `eid`) is the only exchange: the final sort reuses it
+  * rather than adding its own.
   */
 class MultiSplitSpec extends SparkSpec {
 
@@ -22,8 +22,13 @@ class MultiSplitSpec extends SparkSpec {
 
     val single = ExportQueries.exportRecords(spark, sf)
       .select("eid", "record", "manifest_line").collect().map(_.toSeq).toSet
-    val multi = ExportQueries.exportRecords(spark, tmp)
-      .select("eid", "record", "manifest_line").collect().map(_.toSeq).toSet
+    val multiDf = ExportQueries.exportRecords(spark, tmp)
+    val multi = multiDf.select("eid", "record", "manifest_line").collect().map(_.toSeq).toSet
     assert(multi == single)
+    // the keyed spread IS the final sort's exchange: one exchange in all
+    val shuffles = ExportQueriesPlanHelper.exec(multiDf).collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+    assert(shuffles.size == 1, s"${shuffles.size} exchanges:\n${multiDf.queryExecution.executedPlan}")
   }
 }

@@ -2,7 +2,8 @@ package graft.queries
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 
 /** Plan-shape regressions: the optimizations in SURVEY §3a, asserted so a
@@ -41,6 +42,34 @@ class PlanRegressionSpec extends SparkSpec {
     assert(countOccurrences(plan, "aes_ctr(") <= 5,
       s"aes_ctr count regressed:\n$plan")
     assert(countOccurrences(plan, "validate_record(") == 1)
+    // every exchange sits BELOW the per-row pipeline: no exchange's subtree
+    // parses, decrypts or validates, so neither a range partitioner's
+    // sample job nor a shuffle map stage runs that work a second time, and
+    // the final orderBy(eid) plans no exchange of its own
+    for ((name, q) <- Seq(
+        "export_records" -> ExportQueries.exportRecords(spark, sf),
+        "incremental_export" -> ExportQueries.incrementalExport(spark, sf),
+        "envelope_extract" -> ExportQueries.envelopeExtract(spark, sf))) {
+      val shuffles = ExportQueriesPlanHelper.exec(q).collect { case e: ShuffleExchangeExec => e }
+      assert(shuffles.nonEmpty, s"$name: no spread")
+      for (e <- shuffles; needle <- Seq("envelope_extract(", "validate_record(", "aes_ctr(unbase64(")) {
+        val below = e.child.collect { case n => n.expressions.map(_.toString) }.flatten
+        assert(!below.exists(_.contains(needle)),
+          s"$name: $needle below ${e.outputPartitioning}:\n${q.queryExecution.executedPlan}")
+      }
+      assert(!shuffles.exists(e => e.shuffleOrigin == ENSURE_REQUIREMENTS &&
+          e.outputPartitioning.isInstanceOf[RangePartitioning]),
+        s"$name: the final sort plans its own exchange:\n${q.queryExecution.executedPlan}")
+    }
+  }
+
+  test("jsonl sink: the chunk window reuses the pipeline's one exchange, below the decrypt") {
+    val chunked = graft.sources.JsonlSnapshotSink.chunkedFrame(
+      ExportQueries.pipelineRecords(spark, sf), graft.sources.JsonlSnapshotSink.Prefix,
+      graft.kv.KvModel.ChunkMaxBytes, graft.sources.GzipSnapshotCodec)
+    val shuffles = ExportQueriesPlanHelper.exec(chunked).collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1, s"sink input plans ${shuffles.size} exchanges:\n${chunked.queryExecution.executedPlan}")
+    assert(!shuffles.head.child.toString.contains("envelope_extract("), "exchange above the pipeline")
   }
 
   test("grouped_topk plans the custom two-phase operator, not an aggregate chain") {

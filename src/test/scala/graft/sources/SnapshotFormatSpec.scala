@@ -146,6 +146,47 @@ class SnapshotFormatSpec extends SparkSpec {
     assert(fs.isInstanceOf[MockRemoteFs], s"unexpected fs ${fs.getClass}")
   }
 
+  test("each object holds its chunk's records in (key_hash, eid) order, in file order") {
+    // the oracle compares sorted rows, so it cannot see the order INSIDE
+    // an object: decrypt every object file directly, in file order, and
+    // compare with the chunk frame's rows for that key
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val records = graft.queries.ExportQueries.pipelineRecords(spark, sf)
+    val r = s"${System.getProperty("java.io.tmpdir")}/graft_snapshot_order"
+    JsonlSnapshotSink.write(records, r)
+    val expected = JsonlSnapshotSink
+      .chunkedFrame(records, JsonlSnapshotSink.Prefix, KvModel.ChunkMaxBytes, GzipSnapshotCodec)
+      .select("object_key", "key_hash", "eid", "record").as[(String, String, Long, String)]
+      .collect().groupBy(_._1)
+      .map { case (k, rows) => k -> rows.sortBy(x => (x._2, x._3)).map(_._4).toSeq }
+    val data = java.nio.file.Paths.get(r, "data")
+    val actual = java.nio.file.Files.walk(data).iterator().asScala
+      .filter(p => p.getFileName.toString.endsWith(".enc") && !p.getFileName.toString.startsWith("."))
+      .map { p =>
+        val key = data.relativize(p).toString
+        val (dk, iv) = JsonlSnapshotSink.StubDerivedKeyProvider.keyMaterial(key)
+        val plain = graft.functions.AesCtrCrypt.crypt(java.nio.file.Files.readAllBytes(p), dk, iv)
+        val text = new String(GzipSnapshotCodec.decompress(
+          new java.io.ByteArrayInputStream(plain)).readAllBytes(), "UTF-8")
+        key -> text.split("\n").toSeq.filter(_.nonEmpty)
+      }.toMap
+    assert(actual.keySet == expected.keySet)
+    expected.foreach { case (k, recs) => assert(actual(k) == recs, s"$k: records out of order") }
+  }
+
+  test("read-back decrypts below no exchange; its ordered consumer sorts locally") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+    val q = JsonlSnapshotSink.readBack(spark, root)
+      .orderBy(org.apache.spark.sql.functions.col("object_key"), org.apache.spark.sql.functions.col("record"))
+    val shuffles = graft.queries.ExportQueriesPlanHelper.exec(q).collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1 && shuffles.head.outputPartitioning.isInstanceOf[RangePartitioning] &&
+      shuffles.head.shuffleOrigin != ENSURE_REQUIREMENTS,
+      s"read-back plans other exchanges:\n${q.queryExecution.executedPlan}")
+    assert(!shuffles.head.child.toString.contains("UDF"), "decrypt below the exchange")
+  }
+
   test("every data object has a manifest object alongside") {
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val dataKeys = JsonlSnapshotSink.readBack(spark, root)
