@@ -1,9 +1,11 @@
 package graft.kv
 
 import graft.Tables
-import graft.functions.AesCtrCrypt
+import graft.functions.{AesCtrCrypt, IsoMillis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Base64
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The versioned-KV view that stands in for the reference's HBase table
   * (SURVEY §3): `(rowkey = 4-byte-hash + id-json, version_ts, envelope)`.
@@ -48,13 +50,20 @@ object KvModel {
   val AD: Long = -259200000L  // _archivedDateTime
   val RD: Long = -345600000L  // _removedDateTime
 
-  def fmtP(ms: Column): Column = date_format(timestamp_millis(ms), "yyyy-MM-dd'T'HH:mm:ss.SSS'+0000'")
-  def fmtZ(ms: Column): Column = date_format(timestamp_millis(ms), "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
+  /** Epoch ms → `yyyy-MM-ddTHH:mm:ss.SSS+0000` / `…Z`, UTC: the native
+    * [[graft.functions.IsoMillis]], byte-identical to
+    * `date_format(timestamp_millis(ms), "yyyy-MM-dd'T'HH:mm:ss.SSS'+0000'")`
+    * in graft's UTC session, by arithmetic instead of a formatter call. */
+  def fmtP(ms: Column): Column = IsoMillis.isoMillis(ms, "+0000")
+  def fmtZ(ms: Column): Column = IsoMillis.isoMillis(ms, "Z")
 
-  /** Spark's base64() MIME-chunks beyond 76 chars (CRLF every 76) depending
-    * on spark.sql.legacy.chunkBase64String — strip line breaks so the value
-    * is safe to embed in JSON regardless of session conf. */
-  def b64(c: Column): Column = regexp_replace(base64(c), "[\\r\\n]", "")
+  /** Unchunked base64: Spark's `base64()` MIME-chunks beyond 76 chars (CRLF
+    * every 76) when spark.sql.chunkBase64String.enabled is set, so the
+    * expression is built with `chunkBase64 = false` — the same bytes
+    * whatever the session conf, safe to embed in JSON, with no line-break
+    * strip after it. */
+  def b64(c: Column): Column =
+    ColumnBridge.toCol(Base64(ColumnBridge.toExpr(c), chunkBase64 = false))
 
   private def s(c: Column): Column = c.cast("string")
 

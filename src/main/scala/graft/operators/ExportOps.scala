@@ -85,20 +85,17 @@ object ExportOps {
     ValidateRecord.validateRecord(payload, rowKeyId)
 
   /** Sanitisation (reference: app/batch/SanitisationProcessor.kt:16-47):
-    * collection-specific `\r`/`\n` escape removal, then the global renames.
-    * Chained codegen'd regexp/replace — order matters and matches the
-    * reference exactly.
+    * collection-specific `\r`/`\n` escape removal, then the global renames,
+    * in the reference's order — one native byte-scan expression
+    * ([[graft.functions.Sanitise]]: the five `regexp_replace` passes it
+    * replaced, with their semantics, as byte scans in one row call).
     */
   def sanitise(record: Column, db: Column, coll: Column): Column = {
     val collectionSpecific =
       (db === "penalties-and-deductions" && coll === "sanction") ||
         (db === "core" && coll === "healthAndDisabilityDeclaration") ||
         (db === "accepted-data" && coll === "healthAndDisabilityCircumstances")
-    val step0 = when(collectionSpecific, regexp_replace(record, """(?<!\\)\\[r|n]""", "")).otherwise(record)
-    val step1 = regexp_replace(step0, """\$""", "d_")
-    val step2 = regexp_replace(step1, """\\u0000""", "")
-    val step3 = regexp_replace(step2, "_archivedDateTime", "_removedDateTime")
-    regexp_replace(step3, "_archived", "_removed")
+    graft.functions.Sanitise.sanitise(record, collectionSpecific)
   }
 
   /** Equality-topic wrap (reference: app/batch/TransformationProcessor.kt:21-40):

@@ -82,16 +82,25 @@ object MultimodalQueries {
     * checksum in closed form. */
   private def pixel(d: Long, x: Int, y: Int): Int = ((13 * d + 31 * x + 17 * y) % 256).toInt
 
+  /** The encode → decode chains' one exchange: a range on `doc_id` below
+    * the encoder, so the range partitioner's sample job reads the documents
+    * scan, not the codec chain. The chains map each row 1:1 and keep its
+    * `doc_id`, so their output is still range-partitioned by it and the
+    * presentation order needs only a local sort (`sortWithinPartitions`);
+    * an `orderBy` on the re-encoded column would plan a second range
+    * exchange above the chain and sample it again. */
+  private def byDocRange(docs: DataFrame): DataFrame = graft.Spread.ordered(docs, col("doc_id"))
+
   /** Synthetic REAL media: each doc renders a width×height grayscale
     * image and encodes it through the JDK's actual PNG codec
     * (`javax.imageio.ImageIO`) inside a mapPartitions encoder stage —
     * the binary column carries genuine PNG bytes, not a byte-stub. */
   private def pngFrame(spark: SparkSession, dir: String) = {
     import spark.implicits._
-    Tables(spark, dir).documents.select(
+    byDocRange(Tables(spark, dir).documents.select(
       col("doc_id"),
       (lit(8) + col("doc_id") % 32).cast("int").as("width"),
-      (lit(8) + col("doc_id") % 24).cast("int").as("height"))
+      (lit(8) + col("doc_id") % 24).cast("int").as("height")))
       .as[(Long, Int, Int)]
       .mapPartitions { rows =>
         // per-partition ENCODER lifecycle: one ImageWriter for the whole
@@ -168,7 +177,7 @@ object MultimodalQueries {
         }
         PngDecoded(r.doc_id, iw, ih, ow, oh, sum)
       }
-    }.toDF().orderBy(col("doc_id"))
+    }.toDF().sortWithinPartitions(col("doc_id")) // range-partitioned by byDocRange
   }
 
   /** Closed-form mirror of the decoded-resized checksum: the grayscale
@@ -640,18 +649,29 @@ object MultimodalQueries {
 
   private val WavRate = 8000f
 
+  /** The installed audio file writers or readers, in AudioSystem's
+    * order, loaded once per partition: `AudioSystem.write` and
+    * `getAudioInputStream` reload every provider under a JVM-wide lock on
+    * each call, which serializes concurrent tasks. The WAV encode and
+    * decode pick from this list by AudioSystem's own rule. */
+  private def audioProviders[T](cls: Class[T]): Seq[T] = {
+    import scala.jdk.CollectionConverters._
+    java.util.ServiceLoader.load(cls).asScala.toSeq
+  }
+
   /** Synthetic REAL audio: deterministic PCM rendered through the JDK's
     * actual WAV codec (`javax.sound.sampled.AudioSystem`) in a
     * mapPartitions encoder stage — genuine RIFF/WAVE bytes in the binary
     * column. */
   private def wavFrame(spark: SparkSession, dir: String) = {
     import spark.implicits._
-    Tables(spark, dir).documents.select(
+    byDocRange(Tables(spark, dir).documents.select(
       col("doc_id"),
-      (lit(64) + col("doc_id") % 128).cast("int").as("n_samples"))
+      (lit(64) + col("doc_id") % 128).cast("int").as("n_samples")))
       .as[(Long, Int)]
       .mapPartitions { rows =>
         val fmt = new javax.sound.sampled.AudioFormat(WavRate, 16, 1, true, false) // 16-bit mono LE
+        val writers = audioProviders(classOf[javax.sound.sampled.spi.AudioFileWriter])
         rows.map { case (d, n) =>
           val pcm = new Array[Byte](n * 2)
           var i = 0
@@ -664,7 +684,8 @@ object MultimodalQueries {
           val ais = new javax.sound.sampled.AudioInputStream(
             new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
           val bos = new java.io.ByteArrayOutputStream()
-          javax.sound.sampled.AudioSystem.write(ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
+          val wave = javax.sound.sampled.AudioFileFormat.Type.WAVE
+          writers.find(_.isFileTypeSupported(wave, ais)).get.write(ais, wave, bos)
           WavRow(d, n, bos.toByteArray)
         }
       }
@@ -680,9 +701,23 @@ object MultimodalQueries {
     import spark.implicits._
     wavFrame(spark, dir).mapPartitions { rows =>
       // per-partition decoder lifecycle
+      val readers = audioProviders(classOf[javax.sound.sampled.spi.AudioFileReader])
+      // AudioSystem.getAudioInputStream's rule: the first reader that
+      // accepts the bytes (a refusing reader resets the stream). Every row
+      // is a WAV container, so the reader that took the previous row is
+      // tried first: the ones ahead of it (the MIDI reader reloads its own
+      // providers under the same lock) refuse WAV bytes anyway.
+      var last: javax.sound.sampled.spi.AudioFileReader = null
       rows.map { r =>
-        val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(r.wav))
+        val in = new java.io.ByteArrayInputStream(r.wav)
+        def open(rd: javax.sound.sampled.spi.AudioFileReader) =
+          try Option(rd.getAudioInputStream(in))
+          catch { case _: javax.sound.sampled.UnsupportedAudioFileException => None }
+        val ais = Option(last).flatMap(open).getOrElse {
+          val (rd, a) = readers.iterator.flatMap(rd => open(rd).map(rd -> _)).next()
+          last = rd
+          a
+        }
         val fmt = ais.getFormat
         val pcm = ais.readAllBytes()
         val n = pcm.length / 2
@@ -698,7 +733,7 @@ object MultimodalQueries {
         }
         WavDecoded(r.doc_id, n, fmt.getSampleRate.toInt, sumAll, sumStrided)
       }
-    }.toDF().orderBy(col("doc_id"))
+    }.toDF().sortWithinPartitions(col("doc_id")) // range-partitioned by byDocRange
   }
 
   /** Closed-form mirror: sample(i) = ((7·doc_id + 13·i) mod 65536) −

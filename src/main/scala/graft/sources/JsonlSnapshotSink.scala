@@ -125,14 +125,7 @@ object JsonlSnapshotSink {
     val fs0 = rootPath.getFileSystem(hc)
     if (fs0.exists(rootPath)) fs0.delete(rootPath, true)
 
-    // executors rebuild a Configuration from the driver's entries (the
-    // public-API equivalent of broadcasting SerializableConfiguration)
-    val confEntries: Array[(String, String)] = {
-      val it = hc.iterator()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) { val e = it.next(); buf += (e.getKey -> e.getValue) }
-      buf.toArray
-    }
+    val confEntries = confEntriesOf(spark)
 
     // The chunk window's output order is the writer's: one streaming pass
     // per task with at most one open object (see the object scaladoc).
@@ -146,6 +139,34 @@ object JsonlSnapshotSink {
       // (not per record): bounded driver-side even at scale (raise
       // maxBytes with the data; 10⁶ objects ≈ tens of MB).
       .toSeq.toDF("object_key", "n_records", "jsonl_bytes")
+  }
+
+  /** The driver's Hadoop configuration as entries, for executors to
+    * rebuild with [[confFrom]] (the public-API equivalent of broadcasting
+    * SerializableConfiguration). */
+  private def confEntriesOf(spark: SparkSession): Array[(String, String)] = {
+    val it = spark.sparkContext.hadoopConfiguration.iterator()
+    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    while (it.hasNext) { val e = it.next(); buf += (e.getKey -> e.getValue) }
+    buf.toArray
+  }
+
+  private def confFrom(entries: Array[(String, String)]): org.apache.hadoop.conf.Configuration = {
+    val conf = new org.apache.hadoop.conf.Configuration(false)
+    entries.foreach { case (k, v) => conf.set(k, v) }
+    conf
+  }
+
+  /** An object's bytes, read on an executor through the Hadoop API. The
+    * configuration is rebuilt once per deserialized instance, i.e. once
+    * per task. */
+  private final class ObjectReader(entries: Array[(String, String)]) extends Serializable {
+    @transient private lazy val conf = confFrom(entries)
+    def bytes(path: String): Array[Byte] = {
+      val p = new Path(path)
+      val in = p.getFileSystem(conf).open(p)
+      try in.readAllBytes() finally in.close()
+    }
   }
 
   /** Chunk assignment + object naming for `records` — the exact frame the
@@ -190,8 +211,7 @@ object JsonlSnapshotSink {
           var fsRef: org.apache.hadoop.fs.FileSystem = null
           def fs = {
             if (fsRef == null) {
-              val conf = new org.apache.hadoop.conf.Configuration(false)
-              confEntries.foreach { case (k, v) => conf.set(k, v) }
+              val conf = confFrom(confEntries)
               // PRIVATE instance: FileSystem.CACHE is keyed by (scheme,
               // authority, ugi) — mutating checksum flags on the shared
               // cached instance would disable checksums for every other
@@ -320,18 +340,20 @@ object JsonlSnapshotSink {
 
   /** Decrypt + decompress every data object back to (object_key, record)
     * rows — the round-trip proof the driver's oracle checks. Distributed:
-    * binaryFile source (one whole object per row), the object key derived
-    * from the path as a column, a range exchange on it, then one decrypt
-    * per object in a generator. The exchange sits BELOW the decrypt, so
-    * its sample job reads the ciphertext only, and a consumer ordering by
-    * (object_key, …) sorts locally. Each object's records keep their file
-    * order. */
+    * a binaryFile listing of the objects (path only: the scan reads no
+    * object content), the object key derived from the path as a column, a
+    * range exchange on it, then one read + decrypt per object in a
+    * generator. The exchange's sample job therefore scans file statuses,
+    * not bytes, so each object is read once, after the exchange; a
+    * consumer ordering by (object_key, …) sorts locally. Each object's
+    * records keep their file order. */
   def readBack(spark: SparkSession, root: String,
                codec: SnapshotCodec = GzipSnapshotCodec,
                keys: SnapshotKeyProvider = StubDerivedKeyProvider): DataFrame = {
-    val records = udf { (key: String, bytes: Array[Byte]) =>
+    val reader = new ObjectReader(confEntriesOf(spark))
+    val records = udf { (key: String, path: String) =>
       val (dk, iv) = keys.keyMaterial(key)
-      val plain = AesCtrCrypt.crypt(bytes, dk, iv)
+      val plain = AesCtrCrypt.crypt(reader.bytes(path), dk, iv)
       val text = new String(codec.decompress(new ByteArrayInputStream(plain)).readAllBytes(), "UTF-8")
       text.split("\n", -1).toSeq.filter(_.nonEmpty)
     }
@@ -341,9 +363,9 @@ object JsonlSnapshotSink {
       .load(s"$root/data")
       // greedy: the ROOT may itself contain "/data/"; object keys
       // (prefix/<topic>-...) never do
-      .select(regexp_extract(col("path"), "^.*/data/(.*)$", 1).as("object_key"), col("content"))
+      .select(regexp_extract(col("path"), "^.*/data/(.*)$", 1).as("object_key"), col("path"))
     graft.Spread.ordered(objects, col("object_key"))
-      .select(col("object_key"), explode(records(col("object_key"), col("content"))).as("record"))
+      .select(col("object_key"), explode(records(col("object_key"), col("path"))).as("record"))
   }
 
   /** Verify-runnable form (№18 `jsonl_snapshot`): write the sf's export to

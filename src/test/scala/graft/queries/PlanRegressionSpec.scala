@@ -80,9 +80,31 @@ class PlanRegressionSpec extends SparkSpec {
     assert(!plan.contains("o_orderdate"), s"scan not pruned to 3 cols:\n$plan")
   }
 
+  test("export stages stay under HotSpot's 8000-byte method JIT limit") {
+    // a generated method past HotSpot's HugeMethodLimit (8000 bytecode
+    // bytes) is never JIT-compiled and runs interpreted: the export's heavy
+    // stage slows ~1.7x when its per-row pipeline crosses it
+    import graft.sources.{GzipSnapshotCodec, JsonlSnapshotSink}
+    val frames = Seq(
+      "exportRecords" -> ExportQueries.exportRecords(spark, sf),
+      "incrementalExport" -> ExportQueries.incrementalExport(spark, sf),
+      "snapshot writer" -> JsonlSnapshotSink.chunkedFrame(ExportQueries.pipelineRecords(spark, sf),
+        JsonlSnapshotSink.Prefix, graft.kv.KvModel.ChunkMaxBytes, GzipSnapshotCodec))
+    frames.foreach { case (name, df) =>
+      df.queryExecution.toRdd.count() // AQE: the final plan holds the codegen stages
+      val stages = org.apache.spark.sql.execution.debug.codegenStringSeq(df.queryExecution.executedPlan)
+      assert(stages.nonEmpty, s"$name: no whole-stage codegen subtree")
+      stages.foreach { case (subtree, _, stats) =>
+        assert(stats.maxMethodCodeSize > 0 && stats.maxMethodCodeSize < 8000,
+          s"$name: a generated method of ${stats.maxMethodCodeSize} bytes in\n$subtree")
+      }
+    }
+  }
+
   test("multimodal codec paths are scan-bound: no data shuffle before the presentation sort") {
     // the encode→decode mapPartitions chains must stay narrow; the ONLY
-    // exchange allowed is the final orderBy's range partitioning
+    // exchange allowed is the range spread on doc_id below the chain (its
+    // sample reads the documents scan; the presentation sort is local)
     for (q <- Seq(MultimodalQueries.multimodalDecode(spark, sf),
                   MultimodalQueries.multimodalAudio(spark, sf))) {
       val shuffles = ExportQueriesPlanHelper.exec(q).collect {

@@ -185,6 +185,10 @@ class SnapshotFormatSpec extends SparkSpec {
       shuffles.head.shuffleOrigin != ENSURE_REQUIREMENTS,
       s"read-back plans other exchanges:\n${q.queryExecution.executedPlan}")
     assert(!shuffles.head.child.toString.contains("UDF"), "decrypt below the exchange")
+    // the range sample scans file statuses: no object content below the exchange
+    val scans = shuffles.head.child.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    assert(scans.size == 1 && scans.head.requiredSchema.fieldNames.toSeq == Seq("path"),
+      s"read-back scan reads more than paths: ${scans.map(_.requiredSchema)}")
   }
 
   test("every data object has a manifest object alongside") {
