@@ -581,21 +581,93 @@ object PipelineQueries {
   /** The packed-sequence accounting frame (bin, seq_id, n_docs, n_tokens,
     * n_spanning) — shared by [[sequencePack]] and [[sequenceShuffle]] so
     * the shuffled training order can never disagree with the packing. */
-  private[queries] def packedSeqs(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val w = Window.partitionBy($"bin")
-      .orderBy(md5($"doc_id".cast("string")), $"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+  private[queries] def packedSeqs(spark: SparkSession, dir: String): DataFrame =
+    seqAccounting(packOffsets(docTokens(spark, dir)))
+
+  // ---------------------------------------------------------------- the packed-shard store
+  /** THE PACKED-SHARD STORE'S ONE PATH. №55's packing, №67's shard deal
+    * and №68's shard files form one store, and each of its steps has one
+    * definition that every packing row (sequence_pack, pretrain_pipeline,
+    * sequence_manifest, tokenize_pack, sequence_shuffle, pack_increment,
+    * epoch_resume) and shard drill (train_shard_sink, shard_increment,
+    * shard_forget, shard_compact, stream_shard, the speculation drill)
+    * calls:
+    *  - offsets: [[packOffsets]], the per-bin window ordered by
+    *    ([batch,] md5(doc_id), doc_id); [[incBatch]] is the two-phase
+    *    corpus's batch;
+    *  - sequences: [[seqAccounting]] (n_docs, n_tokens, n_spanning) and
+    *    [[seqContent]] (n_tokens, the ordered `docs` list);
+    *  - shard key and position: [[shardKeyed]] (hk, shard) and
+    *    [[shardPos]];
+    *  - the files: [[graft.sources.TrainShardSink]]'s `lineOf` (the line
+    *    format), `writeLines` (the writer), `readBack` (lines with the
+    *    generation their file name carries), `resolve` (last writer wins,
+    *    optional tombstone drop), `spanKeys` (the span-covering forget
+    *    keys) and `fileCensus`;
+    *  - the oracle's shard hash: [[hex8]].
+    * Each drill's store root is `graft.Fs.storeDir(kind, dir)`. This
+    * definition is the corpus side: per-doc token counts (doc_id, n_tok). */
+  private[graft] def docTokens(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir).documents
-      .select($"doc_id", pmod($"doc_id", lit(PackBins)).as("bin"),
-        size(words($"text")).cast("long").as("n_tok"))
-      .withColumn("start_off", sum($"n_tok").over(w) - $"n_tok")
+      .select(col("doc_id"), size(words(col("text"))).cast("long").as("n_tok"))
+
+  /** Per-bin packing offsets: `docs` (doc_id, n_tok[, batch], …) gains
+    * bin, start_off and seq_id from ONE window per bin ordered by
+    * ([batch,] md5(doc_id), doc_id). With a batch column each batch
+    * tail-appends to its bin: a later batch's offsets continue from the
+    * bin's total over the earlier ones. */
+  private[graft] def packOffsets(docs: DataFrame): DataFrame = {
+    val order = (if (docs.columns.contains("batch")) Seq(col("batch")) else Nil) ++
+      Seq(md5(col("doc_id").cast("string")), col("doc_id"))
+    val w = Window.partitionBy(col("bin")).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    docs.withColumn("bin", pmod(col("doc_id"), lit(PackBins)))
+      .withColumn("start_off", sum(col("n_tok")).over(w) - col("n_tok"))
       .withColumn("seq_id", expr(s"start_off DIV $SeqLen"))
-      .withColumn("spans", expr(s"start_off DIV $SeqLen <> (start_off + n_tok - 1) DIV $SeqLen"))
-      .groupBy($"bin", $"seq_id")
-      .agg(count(lit(1)).as("n_docs"), sum($"n_tok").as("n_tokens"),
-        sum(when($"spans", 1L).otherwise(0L)).as("n_spanning"))
   }
+
+  /** Per-sequence accounting of packed offsets: docs starting in the
+    * sequence, their token mass and how many span into the next one;
+    * `extra` aggregates ride the same group-by. */
+  private[graft] def seqAccounting(off: DataFrame, extra: Column*): DataFrame =
+    off.groupBy(col("bin"), col("seq_id")).agg(count(lit(1)).as("n_docs"),
+      Seq(sum(col("n_tok")).as("n_tokens"),
+        sum(when(expr(s"start_off DIV $SeqLen <> (start_off + n_tok - 1) DIV $SeqLen"), 1L)
+          .otherwise(0L)).as("n_spanning")) ++ extra: _*)
+
+  /** The doc ids starting in a sequence, comma-joined in concatenation
+    * (start_off) order — the manifest's and the shard line's `docs`. */
+  private[graft] def docsList: Column = concat_ws(",",
+    transform(array_sort(collect_list(struct(col("start_off"), col("doc_id")))),
+      s => s.getField("doc_id").cast("string"))).as("docs")
+
+  /** Per-sequence content of packed offsets: token mass and [[docsList]];
+    * `extra` aggregates ride the same group-by. */
+  private[graft] def seqContent(off: DataFrame, extra: Column*): DataFrame =
+    off.groupBy(col("bin"), col("seq_id"))
+      .agg(sum(col("n_tok")).as("n_tokens"), docsList +: extra: _*)
+
+  /** №67's shard key: hk = md5("bin:seq_id" + salt), dealt to one of
+    * `nShards` shards by its first 8 hex digits. */
+  private[graft] def shardKeyed(seqs: DataFrame, nShards: Int, salt: String = ""): DataFrame = {
+    val key = Seq(col("bin").cast("string"), lit(":"), col("seq_id").cast("string")) ++
+      (if (salt.isEmpty) Nil else Seq(lit(salt)))
+    seqs.withColumn("hk", md5(concat(key: _*)))
+      .withColumn("shard",
+        pmod(conv(substring(col("hk"), 1, 8), 16, 10).cast("long"), lit(nShards)).cast("int"))
+  }
+
+  /** A keyed sequence's position in its shard (from 1): ordered by
+    * `first`, then (hk, bin, seq_id). */
+  private[graft] def shardPos(first: Column*): Column =
+    row_number().over(Window.partitionBy(col("shard"))
+      .orderBy(first ++ Seq(col("hk"), col("bin"), col("seq_id")): _*)).cast("long")
+
+  /** DuckDB's form of the shard hash's first 8 hex digits of `hk` as a
+    * BIGINT, parsed with the same per-nibble shift trick the simhash
+    * oracle uses. */
+  private[graft] val hex8: String = "CAST(list_sum(list_transform(range(1, 9), i -> " +
+    "CAST(strpos('0123456789abcdef', substr(hk, CAST(i AS INT), 1)) - 1 AS BIGINT) << (4 * (8 - CAST(i AS INT))))) AS BIGINT)"
 
   // ---------------------------------------------------------------- №67 sequence_shuffle
   /** Data-parallel shards for the shuffled training order. */
@@ -615,11 +687,8 @@ object PipelineQueries {
     * constant (cluster data-parallelism), so per-shard windows scale. */
   def sequenceShuffle(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    packedSeqs(spark, dir)
-      .withColumn("hk", md5(concat($"bin".cast("string"), lit(":"), $"seq_id".cast("string"))))
-      .withColumn("shard", pmod(conv(substring($"hk", 1, 8), 16, 10).cast("long"), lit(NShards)).cast("int"))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy($"shard").orderBy($"hk", $"bin", $"seq_id")).cast("long"))
+    shardKeyed(packedSeqs(spark, dir), NShards)
+      .withColumn("pos", shardPos())
       .select($"shard", $"pos", $"bin", $"seq_id", $"n_tokens")
       .orderBy($"shard", $"pos")
   }
@@ -628,9 +697,7 @@ object PipelineQueries {
     * rows a lossless shard write + read-back must reproduce — packing
     * CTEs + the manifest's ordered doc list + the shuffle's shard hash,
     * all reconstructed relationally. */
-  val trainShardSinkSql: String = {
-    val hex8 = "CAST(list_sum(list_transform(range(1, 9), i -> " +
-      "CAST(strpos('0123456789abcdef', substr(hk, CAST(i AS INT), 1)) - 1 AS BIGINT) << (4 * (8 - CAST(i AS INT))))) AS BIGINT)"
+  val trainShardSinkSql: String =
     s"""WITH d AS (
        |  SELECT doc_id, doc_id % $PackBins AS bin,
        |    CAST(len(${wordsSql("text")}) AS BIGINT) AS n_tok
@@ -653,13 +720,9 @@ object PipelineQueries {
        |  CAST(row_number() OVER (PARTITION BY $hex8 % $NShards ORDER BY hk, bin, seq_id) AS BIGINT) AS pos,
        |  bin, seq_id, n_tokens, docs
        |FROM h ORDER BY shard, pos""".stripMargin
-  }
 
-  /** Shares the packing CTEs verbatim; the 8-hex-digit shard hash is
-    * parsed with the same per-nibble shift trick the simhash oracle uses. */
-  val sequenceShuffleSql: String = {
-    val hex8 = "CAST(list_sum(list_transform(range(1, 9), i -> " +
-      "CAST(strpos('0123456789abcdef', substr(hk, CAST(i AS INT), 1)) - 1 AS BIGINT) << (4 * (8 - CAST(i AS INT))))) AS BIGINT)"
+  /** The packing CTEs and the [[hex8]] shard hash. */
+  val sequenceShuffleSql: String =
     s"""WITH d AS (
        |  SELECT doc_id, doc_id % $PackBins AS bin,
        |    CAST(len(${wordsSql("text")}) AS BIGINT) AS n_tok
@@ -680,7 +743,6 @@ object PipelineQueries {
        |  CAST(row_number() OVER (PARTITION BY $hex8 % $NShards ORDER BY hk, bin, seq_id) AS BIGINT) AS pos,
        |  bin, seq_id, n_tokens
        |FROM h ORDER BY shard, pos""".stripMargin
-  }
 
   // ---------------------------------------------------------------- №58 pretrain_pipeline
   /** The pretraining data pipeline composed END-TO-END — the LLM-side
@@ -689,8 +751,8 @@ object PipelineQueries {
     * clusters → keep canonical members, exactly `dedup_pipeline`'s stage)
     * → model-based quality filter (the SHARED [[logitOf]] boundary — the
     * pipeline can never disagree with the standalone `quality_classifier`)
-    * → GPT-style sequence packing of the survivors (the SHARED packing
-    * arithmetic of [[sequencePack]]). Output: per-(bin, sequence)
+    * → GPT-style sequence packing of the survivors ([[packOffsets]] and
+    * [[seqAccounting]], as in [[sequencePack]]). Output: per-(bin, sequence)
     * accounting of the final training batches.
     *
     * Scale shape is the sum of its parts, each already plan-pinned:
@@ -714,19 +776,8 @@ object PipelineQueries {
     val survivors = scored
       .withColumn("logit", logitOf(fStop, fUniq, fPunct, fLen))
       .filter($"logit" >= 0.0)
-      .select($"doc_id", pmod($"doc_id", lit(PackBins)).as("bin"),
-        $"n_tok".cast("long").as("n_tok"))
-    val w = Window.partitionBy($"bin")
-      .orderBy(md5($"doc_id".cast("string")), $"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    survivors
-      .withColumn("start_off", sum($"n_tok").over(w) - $"n_tok")
-      .withColumn("seq_id", expr(s"start_off DIV $SeqLen"))
-      .withColumn("spans", expr(s"start_off DIV $SeqLen <> (start_off + n_tok - 1) DIV $SeqLen"))
-      .groupBy($"bin", $"seq_id")
-      .agg(count(lit(1)).as("n_docs"), sum($"n_tok").as("n_tokens"),
-        sum(when($"spans", 1L).otherwise(0L)).as("n_spanning"))
-      .orderBy($"bin", $"seq_id")
+      .select($"doc_id", $"n_tok".cast("long").as("n_tok"))
+    seqAccounting(packOffsets(survivors)).orderBy($"bin", $"seq_id")
   }
 
   val pretrainPipelineSql: String = {
@@ -758,26 +809,15 @@ object PipelineQueries {
   // ---------------------------------------------------------------- №63 sequence_manifest
   /** The packing MANIFEST — what a training loader actually consumes: per
     * (bin, sequence), the ordered list of documents that START in that
-    * sequence (consumption order = concatenation order). Shares
-    * [[sequencePack]]'s arithmetic verbatim (same window, same integer
-    * offsets), so the manifest can never disagree with the accounting;
-    * the ordered string_agg / sorted-struct-transform pair is the same
+    * sequence (consumption order = concatenation order). Its offsets are
+    * [[packOffsets]], as [[sequencePack]]'s are, so the manifest can
+    * never disagree with the accounting; the ordered string_agg / sorted-struct-transform pair is the same
     * cross-engine trick line_dedup's reassembly uses. */
   def sequenceManifest(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val w = Window.partitionBy($"bin")
-      .orderBy(md5($"doc_id".cast("string")), $"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables(spark, dir).documents
-      .select($"doc_id", pmod($"doc_id", lit(PackBins)).as("bin"),
-        size(words($"text")).cast("long").as("n_tok"))
-      .withColumn("start_off", sum($"n_tok").over(w) - $"n_tok")
-      .withColumn("seq_id", expr(s"start_off DIV $SeqLen"))
+    packOffsets(docTokens(spark, dir))
       .groupBy($"bin", $"seq_id")
-      .agg(count(lit(1)).as("n_docs"),
-        concat_ws(",",
-          transform(array_sort(collect_list(struct($"start_off", $"doc_id"))),
-            s => s.getField("doc_id").cast("string"))).as("docs"))
+      .agg(count(lit(1)).as("n_docs"), docsList)
       .orderBy($"bin", $"seq_id")
   }
 
@@ -818,7 +858,7 @@ object PipelineQueries {
     * №108's zero-shuffle encode projection → №55 sequence packing on the
     * REAL subword counts — i.e. what the training loader actually packs
     * by, not whitespace proxies. One composed pipeline sharing the exact
-    * fragments of its parts (bpeDocCounts, the packedSeqs window shape),
+    * fragments of its parts (bpeDocCounts, [[packOffsets]]),
     * so the composition can never drift from the standalone operators.
     *
     * Scale shape: the merge model is literal-sized; encode is a pure
@@ -828,18 +868,8 @@ object PipelineQueries {
     * doc_id agg (encode), bin repartition (pack). */
   def tokenizePack(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val w = Window.partitionBy($"bin")
-      .orderBy(md5($"doc_id".cast("string")), $"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    TextQueries.bpeDocCounts(spark, dir)
-      .select($"doc_id", pmod($"doc_id", lit(PackBins)).as("bin"),
-        $"bpe_tokens".as("n_tok"))
-      .withColumn("start_off", sum($"n_tok").over(w) - $"n_tok")
-      .withColumn("seq_id", expr(s"start_off DIV $SeqLen"))
-      .withColumn("spans", expr(s"start_off DIV $SeqLen <> (start_off + n_tok - 1) DIV $SeqLen"))
-      .groupBy($"bin", $"seq_id")
-      .agg(count(lit(1)).as("n_docs"), sum($"n_tok").as("n_tokens"),
-        sum(when($"spans", 1L).otherwise(0L)).as("n_spanning"))
+    seqAccounting(packOffsets(TextQueries.bpeDocCounts(spark, dir)
+      .select($"doc_id", $"bpe_tokens".as("n_tok"))))
       .orderBy($"bin", $"seq_id")
   }
 
@@ -1413,6 +1443,11 @@ object PipelineQueries {
   val IncArrMod = 5L
   val IncArrRes = 2L
 
+  /** A doc's batch in the two-phase corpus: 1 for the arrival residue, 0
+    * for the base. */
+  private[graft] def incBatch: Column =
+    (pmod(col("doc_id"), lit(IncArrMod)) === IncArrRes).cast("int")
+
   /** INCREMENTAL SEQUENCE PACKING (№219) — the packing-side increment the
     * batch pack (№55) stops short of: when an arrival batch lands, a full
     * repack re-orders the union by md5(doc_id) and RE-CUTS nearly every
@@ -1437,10 +1472,9 @@ object PipelineQueries {
     * the same dial, reversible by a scheduled full repack (№117's
     * compaction slot).
     *
-    * Scale shape: base offsets = №55's per-bin windows over the base;
-    * arrival offsets = the same window over the batch plus a
-    * bins-sized (broadcast) base-total join; one union, one (bin, seq)
-    * hash agg; the repack dial is a second №55 pass + a key-wise
+    * Scale shape: [[packOffsets]]' one per-bin window ordered by (batch,
+    * hash) gives the base offsets and the arrivals' tail-append offsets
+    * at once, then one (bin, seq) hash agg; the repack dial is a second №55 pass + a key-wise
     * full-outer compare — no global sort anywhere.
     *
     * Output: per-sequence accounting (bin, seq_id, n_docs, n_tokens,
@@ -1448,32 +1482,9 @@ object PipelineQueries {
     * (n_immobile, n_extended, n_new, n_repack_moved) on every row. */
   def packIncrement(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val w = Window.partitionBy($"bin")
-      .orderBy(md5($"doc_id".cast("string")), $"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val d = graft.CacheRegistry.track(Tables(spark, dir).documents
-      .select($"doc_id", pmod($"doc_id", lit(PackBins)).as("bin"),
-        size(words($"text")).cast("long").as("n_tok"),
-        (pmod($"doc_id", lit(IncArrMod)) === IncArrRes).as("arr"))
-      .persist())
-    val baseOff = d.filter(!$"arr")
-      .withColumn("start_off", sum($"n_tok").over(w) - $"n_tok")
-      .select($"bin", $"n_tok", $"arr", $"start_off")
-    // bins-sized totals — a bin with no base docs still packs its arrivals
-    val binTot = d.filter(!$"arr").groupBy($"bin")
-      .agg(sum($"n_tok").as("base_tot"))
-    val arrOff = d.filter($"arr")
-      .withColumn("boff", sum($"n_tok").over(w) - $"n_tok")
-      .join(broadcast(binTot), Seq("bin"), "left")
-      .select($"bin", $"n_tok", $"arr",
-        (coalesce($"base_tot", lit(0L)) + $"boff").as("start_off"))
-    val inc = graft.CacheRegistry.track(baseOff.unionAll(arrOff)
-      .withColumn("seq_id", expr(s"start_off DIV $SeqLen"))
-      .withColumn("spans", expr(s"start_off DIV $SeqLen <> (start_off + n_tok - 1) DIV $SeqLen"))
-      .groupBy($"bin", $"seq_id")
-      .agg(count(lit(1)).as("n_docs"), sum($"n_tok").as("n_tokens"),
-        sum(when($"spans", 1L).otherwise(0L)).as("n_spanning"),
-        min($"arr").as("all_arr"), max($"arr").as("any_arr"))
+    val inc = graft.CacheRegistry.track(
+      seqAccounting(packOffsets(docTokens(spark, dir).withColumn("batch", incBatch)),
+        (min($"batch") === 1).as("all_arr"), (max($"batch") === 1).as("any_arr"))
       .withColumn("phase", when($"all_arr", "new")
         .when($"any_arr", "extended").otherwise("immobile"))
       .select($"bin", $"seq_id", $"n_docs", $"n_tokens", $"n_spanning", $"phase")
@@ -1572,23 +1583,11 @@ object PipelineQueries {
   def epochResume(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val SH = ResumeShards
-    val w = Window.partitionBy($"bin")
-      .orderBy(md5($"doc_id".cast("string")), $"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val seqs = graft.CacheRegistry.track(Tables(spark, dir).documents
-      .select($"doc_id", pmod($"doc_id", lit(PackBins)).as("bin"),
-        size(words($"text")).cast("long").as("n_tok"))
-      .withColumn("start_off", sum($"n_tok").over(w) - $"n_tok")
-      .withColumn("seq_id", expr(s"start_off DIV $SeqLen"))
+    val seqs = graft.CacheRegistry.track(packOffsets(docTokens(spark, dir))
       .groupBy($"bin", $"seq_id").agg(sum($"n_tok").as("n_tokens"))
       .persist())
-    def dealt(epochSuffix: String): DataFrame = seqs
-      .withColumn("hk", md5(concat($"bin".cast("string"), lit(":"),
-        $"seq_id".cast("string"), lit(epochSuffix))))
-      .withColumn("shard",
-        pmod(conv(substring($"hk", 1, 8), 16, 10).cast("long"), lit(SH)).cast("int"))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy($"shard").orderBy($"hk", $"bin", $"seq_id")).cast("long"))
+    def dealt(epochSuffix: String): DataFrame = shardKeyed(seqs, SH, epochSuffix)
+      .withColumn("pos", shardPos())
       .select($"shard", $"pos", $"bin", $"seq_id", $"n_tokens")
     val l0 = graft.CacheRegistry.track(dealt("").persist())
     val l1 = dealt(":e1")
@@ -1616,8 +1615,6 @@ object PipelineQueries {
 
   val epochResumeSql: String = {
     val SH = ResumeShards
-    val hex8 = "CAST(list_sum(list_transform(range(1, 9), i -> " +
-      "CAST(strpos('0123456789abcdef', substr(hk, CAST(i AS INT), 1)) - 1 AS BIGINT) << (4 * (8 - CAST(i AS INT))))) AS BIGINT)"
     s"""WITH d AS (
        |  SELECT doc_id, doc_id % $PackBins AS bin,
        |    CAST(len(${wordsSql("text")}) AS BIGINT) AS n_tok

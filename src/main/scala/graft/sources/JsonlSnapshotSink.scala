@@ -144,14 +144,14 @@ object JsonlSnapshotSink {
   /** The driver's Hadoop configuration as entries, for executors to
     * rebuild with [[confFrom]] (the public-API equivalent of broadcasting
     * SerializableConfiguration). */
-  private def confEntriesOf(spark: SparkSession): Array[(String, String)] = {
+  private[sources] def confEntriesOf(spark: SparkSession): Array[(String, String)] = {
     val it = spark.sparkContext.hadoopConfiguration.iterator()
     val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     while (it.hasNext) { val e = it.next(); buf += (e.getKey -> e.getValue) }
     buf.toArray
   }
 
-  private def confFrom(entries: Array[(String, String)]): org.apache.hadoop.conf.Configuration = {
+  private[sources] def confFrom(entries: Array[(String, String)]): org.apache.hadoop.conf.Configuration = {
     val conf = new org.apache.hadoop.conf.Configuration(false)
     entries.foreach { case (k, v) => conf.set(k, v) }
     conf

@@ -1,9 +1,9 @@
 package graft.sources
 
 import graft.queries.{PipelineQueries, TextQueries}
+import graft.queries.PipelineQueries.{hex8, packOffsets, seqContent, shardKeyed, shardPos}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** COMPACT THE SHARD GENERATIONS (№222 `shard_compact`) — the №215/№216
@@ -54,61 +54,30 @@ object ShardCompact {
   private[graft] def shardCompactWithDetail(
       spark: SparkSession, dir: String): (DataFrame, CompactShardDetail) = {
     import spark.implicits._
-    val L = PipelineQueries.SeqLen
-    val w = Window.partitionBy($"bin")
-      .orderBy($"batch", md5($"doc_id".cast("string")), $"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // №220's two-phase corpus: base (batch 0) + one arrival batch (1)
-    val off = graft.CacheRegistry.track(graft.Tables(spark, dir).documents
-      .select($"doc_id", pmod($"doc_id", lit(PipelineQueries.PackBins)).as("bin"),
-        size(TextQueries.words($"text")).cast("long").as("n_tok"))
-      .withColumn("batch",
-        when(pmod($"doc_id", lit(PipelineQueries.IncArrMod)) === PipelineQueries.IncArrRes, 1)
-          .otherwise(0))
-      .withColumn("start_off", sum($"n_tok").over(w) - $"n_tok")
-      .withColumn("seq_id", expr(s"start_off DIV $L"))
-      .persist())
-    def contentUpTo(b: Int): DataFrame = off.filter($"batch" <= b)
-      .groupBy($"bin", $"seq_id")
-      .agg(sum($"n_tok").as("n_tokens"),
-        concat_ws(",",
-          transform(array_sort(collect_list(struct($"start_off", $"doc_id"))),
-            s => s.getField("doc_id").cast("string"))).as("docs"))
-    def hashed(f: DataFrame): DataFrame = f
-      .withColumn("hk", md5(concat($"bin".cast("string"), lit(":"), $"seq_id".cast("string"))))
-      .withColumn("shard",
-        pmod(conv(substring($"hk", 1, 8), 16, 10).cast("long"), lit(Shards)).cast("int"))
+    val off = graft.CacheRegistry.track(packOffsets(PipelineQueries.docTokens(spark, dir)
+      .withColumn("batch", PipelineQueries.incBatch)).persist())
+    def contentUpTo(b: Int): DataFrame = seqContent(off.filter($"batch" <= b))
     // every key's (shard, pos): №221's one (first_gen, hash) window
-    val keys = graft.CacheRegistry.track(hashed(
-        off.groupBy($"bin", $"seq_id").agg(min($"batch").as("first_gen")))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy($"shard").orderBy($"first_gen", $"hk", $"bin", $"seq_id")).cast("long"))
+    val keys = graft.CacheRegistry.track(shardKeyed(
+        off.groupBy($"bin", $"seq_id").agg(min($"batch").as("first_gen")), Shards)
+      .withColumn("pos", shardPos($"first_gen"))
       .select($"shard", $"pos", $"bin", $"seq_id", $"first_gen")
       .persist())
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_shardcpt_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    graft.Fs.rmTree(java.nio.file.Paths.get(root))
-    def lineOf(f: DataFrame): DataFrame = f.select($"shard", $"pos",
-      concat_ws("|", $"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs").as("line"))
-    def nameG(g: Int) = (s: Int, of: Int) => f"shard-$s%04d-of-$of%04d.g$g.txt.gz"
+    val root = rootOf(dir)
+    def lineOf(f: DataFrame): DataFrame = TrainShardSink.lineOf(
+      f.join(keys.select($"shard", $"pos", $"bin", $"seq_id"), Seq("bin", "seq_id")))
+    def writeGen(g: Int, f: DataFrame): Unit =
+      TrainShardSink.writeLines(lineOf(f), root, Shards, TrainShardSink.genFile(g))
     // gen 0 + gen 1 (№220), gen 2 tombstones (№218's manifest)
-    TrainShardSink.write(lineOf(contentUpTo(0)
-      .join(keys.select($"shard", $"pos", $"bin", $"seq_id"), Seq("bin", "seq_id"))), root, Shards)
-    val touched1 = off.filter($"batch" === 1).select($"bin", $"seq_id").distinct()
-    ShardIncrement.writeGen1(lineOf(contentUpTo(1)
-      .join(touched1, Seq("bin", "seq_id"), "left_semi")
-      .join(keys.select($"shard", $"pos", $"bin", $"seq_id"), Seq("bin", "seq_id"))), root, Shards)
-    val doomed = graft.CacheRegistry.track(off
-      .filter(pmod($"doc_id", lit(ShardForget.ForgetMod)) === ShardForget.ForgetRes)
-      .select($"bin", explode(sequence(
-        expr(s"start_off DIV $L"),
-        expr(s"(start_off + n_tok - 1) DIV $L"))).as("seq_id"))
-      .distinct()
+    TrainShardSink.write(lineOf(contentUpTo(0)), root, Shards)
+    writeGen(1, contentUpTo(1).join(
+      off.filter($"batch" === 1).select($"bin", $"seq_id").distinct(), Seq("bin", "seq_id"), "left_semi"))
+    val manifest = off.filter(pmod($"doc_id", lit(ShardForget.ForgetMod)) === ShardForget.ForgetRes)
+    val doomed = graft.CacheRegistry.track(TrainShardSink.spanKeys(manifest)
       .join(keys.select($"bin", $"seq_id"), Seq("bin", "seq_id"), "left_semi")
       .persist())
-    ShardIncrement.writeGen1(lineOf(doomed
-      .join(keys.select($"shard", $"pos", $"bin", $"seq_id"), Seq("bin", "seq_id"))
-      .select($"shard", $"pos", $"bin", $"seq_id", lit(0L).as("n_tokens"), lit("").as("docs"))),
-      root, Shards, nameG(2))
+    writeGen(2, doomed.select($"bin", $"seq_id", lit(0L).as("n_tokens"), lit("").as("docs")))
 
     // the resolved loader view — stage-invariant by construction; the
     // drill proves the FILES agree at every stage
@@ -127,13 +96,12 @@ object ShardCompact {
     // the manifest's doc-id set rides the serve as a literal array flag —
     // manifest-bounded (it IS the forget request's size)
     val manifestArr = {
-      val ids = off.filter(pmod($"doc_id", lit(ShardForget.ForgetMod)) === ShardForget.ForgetRes)
-        .select($"doc_id".cast("string")).distinct().collect().map(_.getString(0))
+      val ids = manifest.select($"doc_id".cast("string")).distinct().collect().map(_.getString(0))
       array(ids.map(lit(_)).toIndexedSeq: _*)
     }
     val nRes = resolved.count()
     def serve(stage: Int): Unit = {
-      val back = graft.streaming.StreamShard.readBackGenN(spark, root)
+      val back = TrainShardSink.readBack(spark, root)
       // a raw line physically carries a forgotten doc iff the doc id is
       // in its docs list — billed on the same scan as the raw census
       val billRow = back.agg(count(lit(1)).as("n_raw_lines"),
@@ -142,7 +110,7 @@ object ShardCompact {
         .collect()(0)
       val nRaw = billRow.getAs[Long]("n_raw_lines")
       val nForgot = billRow.getAs[Long]("n_forgot_raw")
-      files(stage) = fileCensus(spark, root)
+      files(stage) = TrainShardSink.fileCensus(spark, root)
       forgotRaw(stage) = nForgot
       stageBills += ((stage.toLong, nRaw, files(stage).size.toLong, nRaw - nRes, nForgot))
     }
@@ -150,8 +118,9 @@ object ShardCompact {
     serve(0)
     // C-WRITE: snapshot the old files, land one consolidated gen-3 file
     // per shard from the CACHED resolved frame
-    val oldFiles = fileCensus(spark, root).keySet
-    ShardIncrement.writeGen1(lineOf(resolved), root, Shards, nameG(3))
+    val oldFiles = TrainShardSink.fileCensus(spark, root).keySet
+    TrainShardSink.writeLines(TrainShardSink.lineOf(resolved), root, Shards,
+      TrainShardSink.genFile(3))
     // S1: the overlap — the in-flight state a lock-free reader sees
     serve(1)
     // C-DELETE: exactly the snapshot
@@ -163,7 +132,7 @@ object ShardCompact {
     val bills = stageBills.toSeq
       .toDF("stage", "n_raw_lines", "n_files", "n_dead_lines", "n_forgot_raw")
     val finalView = graft.CacheRegistry.track(
-      graft.streaming.StreamShard.readBackGenN(spark, root)
+      TrainShardSink.readBack(spark, root)
         .select($"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs").persist())
     finalView.count() // materialize before the scratch root is removed
     val df = finalView.crossJoin(broadcast(bills))
@@ -174,14 +143,8 @@ object ShardCompact {
     (df, CompactShardDetail(files.toMap, forgotRaw.toMap))
   }
 
-  private def fileCensus(spark: SparkSession, root: String): Map[String, (Long, Long)] = {
-    val p = new Path(s"$root/shards")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Map.empty
-    else fs.listStatus(p).filter(_.isFile)
-      .filterNot(_.getPath.getName.startsWith("."))
-      .map(s => s.getPath.getName -> (s.getLen, s.getModificationTime)).toMap
-  }
+  /** The drill's store root for input `dir`. */
+  private[graft] def rootOf(dir: String): String = graft.Fs.storeDir("shardcpt", dir).toString
 
   /** Closed-form twin: №221's offsets/keys/doomed CTEs at the two-batch
     * corpus, one resolved view crossed with the three stage bills. */
@@ -191,8 +154,6 @@ object ShardCompact {
     val SH = Shards
     val fm = ShardForget.ForgetMod
     val fr = ShardForget.ForgetRes
-    val hex8 = "CAST(list_sum(list_transform(range(1, 9), i -> " +
-      "CAST(strpos('0123456789abcdef', substr(hk, CAST(i AS INT), 1)) - 1 AS BIGINT) << (4 * (8 - CAST(i AS INT))))) AS BIGINT)"
     // raw lines: g0 keys + batch-1 touched keys + tombstones (+ resolved at
     // s1; only resolved at s2); forgotten raw lines: g0/g1 lines of doomed
     // keys whose docs list carries a manifest doc

@@ -1,9 +1,9 @@
 package graft.sources
 
 import graft.queries.{PipelineQueries, TextQueries}
+import graft.queries.PipelineQueries.{hex8, packOffsets, seqContent, shardKeyed, shardPos}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** FORGET APPLIED TO PACKED TRAINING SHARDS (№218 `shard_forget`) — the
@@ -76,69 +76,36 @@ object ShardForget {
   private[graft] def shardForgetWithDetail(
       spark: SparkSession, dir: String): (DataFrame, ForgetShardDetail) = {
     import spark.implicits._
-    val L = PipelineQueries.SeqLen
-    // №55's packing offsets verbatim — the forget must see the exact cut
-    val w = Window.partitionBy($"bin")
-      .orderBy(md5($"doc_id".cast("string")), $"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val off = graft.CacheRegistry.track(graft.Tables(spark, dir).documents
-      .select($"doc_id", pmod($"doc_id", lit(PipelineQueries.PackBins)).as("bin"),
-        size(TextQueries.words($"text")).cast("long").as("n_tok"))
-      .withColumn("start_off", sum($"n_tok").over(w) - $"n_tok")
-      .persist())
-    val seqs = off
-      .withColumn("seq_id", expr(s"start_off DIV $L"))
-      .groupBy($"bin", $"seq_id")
-      .agg(sum($"n_tok").as("n_tokens"),
-        concat_ws(",",
-          transform(array_sort(collect_list(struct($"start_off", $"doc_id"))),
-            s => s.getField("doc_id").cast("string"))).as("docs"))
-    // №67's shard hash at this drill's shard count
-    val lines = graft.CacheRegistry.track(seqs
-      .withColumn("hk", md5(concat($"bin".cast("string"), lit(":"), $"seq_id".cast("string"))))
-      .withColumn("shard",
-        pmod(conv(substring($"hk", 1, 8), 16, 10).cast("long"), lit(Shards)).cast("int"))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy($"shard").orderBy($"hk", $"bin", $"seq_id")).cast("long"))
+    val off = graft.CacheRegistry.track(packOffsets(PipelineQueries.docTokens(spark, dir)).persist())
+    val lines = graft.CacheRegistry.track(shardKeyed(seqContent(off), Shards)
+      .withColumn("pos", shardPos())
       .select($"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs")
       .persist())
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_shardfgt_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+    val root = graft.Fs.storeDir("shardfgt", dir).toString
     JsonlSnapshotSink.registerScratchRoot(spark, root)
-    TrainShardSink.write(lines.select($"shard", $"pos",
-      concat_ws("|", $"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs").as("line")),
-      root, Shards)
-    val before = fileCensus(spark, root)
-    // span-covering contamination: every sequence any manifest-doc token
-    // lands in, not just where the doc starts
-    val doomed = graft.CacheRegistry.track(off
-      .filter(pmod($"doc_id", lit(ForgetMod)) === ForgetRes)
-      .select($"bin", explode(sequence(
-        expr(s"start_off DIV $L"),
-        expr(s"(start_off + n_tok - 1) DIV $L"))).as("seq_id"))
-      .distinct().persist())
+    TrainShardSink.write(TrainShardSink.lineOf(lines), root, Shards)
+    val before = TrainShardSink.fileCensus(spark, root)
+    val manifest = off.filter(pmod($"doc_id", lit(ForgetMod)) === ForgetRes)
+    val doomed = graft.CacheRegistry.track(TrainShardSink.spanKeys(manifest).persist())
     val doomedLines = lines.join(doomed, Seq("bin", "seq_id"), "left_semi")
     // bounded: ≤ Shards values
     val touched = doomedLines.select($"shard").distinct()
       .collect().map(_.getInt(0)).toSet
     rewriteTouched(
-      lines.join(doomed, Seq("bin", "seq_id"), "left_anti")
-        .filter($"shard".isin(touched.toSeq.map(Int.box): _*))
-        .select($"shard", $"pos",
-          concat_ws("|", $"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs").as("line")),
+      TrainShardSink.lineOf(lines.join(doomed, Seq("bin", "seq_id"), "left_anti")
+        .filter($"shard".isin(touched.toSeq.map(Int.box): _*))),
       root, touched)
-    val after = fileCensus(spark, root)
+    val after = TrainShardSink.fileCensus(spark, root)
     // the bill, distributively: dropped mass from the doomed lines,
     // manifest mass from the offsets — collateral is their difference
     val summary = doomedLines
       .agg(count(lit(1)).as("n_seqs_dropped"),
         coalesce(sum($"n_tokens"), lit(0L)).as("n_tokens_dropped"))
-      .crossJoin(broadcast(
-        off.filter(pmod($"doc_id", lit(ForgetMod)) === ForgetRes)
-          .agg(coalesce(sum($"n_tok"), lit(0L)).as("fgt_tok"))))
+      .crossJoin(broadcast(manifest.agg(coalesce(sum($"n_tok"), lit(0L)).as("fgt_tok"))))
       .select(lit(touched.size.toLong).as("n_files_rewritten"),
         $"n_seqs_dropped", $"n_tokens_dropped",
         ($"n_tokens_dropped" - $"fgt_tok").as("n_collateral_tokens"))
-    val back = TrainShardSink.readBack(spark, root)
+    val back = TrainShardSink.readBack(spark, root).drop("gen")
       .crossJoin(broadcast(summary))
       .orderBy($"shard", $"pos")
     val detail = ForgetShardDetail(before, after, touched,
@@ -147,46 +114,20 @@ object ShardForget {
   }
 
   /** Rewrite exactly the `touched` shard files with `lines`
-    * (shard, pos, line): drop the old finals, then run №68's streaming
-    * task body (tmp + rename commit). A touched shard with no surviving
-    * lines gets no replacement — its file stays dropped. */
+    * (shard, pos, line): drop the old finals, then write through
+    * [[TrainShardSink.writeLines]] (tmp + rename commit). A touched shard
+    * with no surviving lines gets no replacement — its file stays
+    * dropped. */
   private[graft] def rewriteTouched(
       lines: DataFrame, root: String, touched: Set[Int],
       nShards: Int = Shards): Unit = {
     if (touched.isEmpty) return
-    val spark = lines.sparkSession
-    import spark.implicits._
-    val hc = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(root).getFileSystem(hc)
+    val fs = new Path(root).getFileSystem(lines.sparkSession.sparkContext.hadoopConfiguration)
     touched.foreach { s =>
       fs.delete(new Path(s"$root/shards/${TrainShardSink.shardFile(s, nShards)}"), false)
     }
-    val confEntries: Array[(String, String)] = {
-      val it = hc.iterator()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) { val e = it.next(); buf += (e.getKey -> e.getValue) }
-      buf.toArray
-    }
-    lines
-      .repartition(math.min(touched.size, spark.sparkContext.defaultParallelism), col("shard"))
-      .sortWithinPartitions(col("shard"), col("pos"))
-      .select(col("shard"), col("line"))
-      .as[(Int, String)]
-      .mapPartitions(rows =>
-        TrainShardSink.writePartitionBody(rows, root, nShards, GzipSnapshotCodec, confEntries))
-      .collect() // eager: the side-effecting rewrite must run exactly once
+    TrainShardSink.writeLines(lines, root, nShards, maxTasks = touched.size)
     ()
-  }
-
-  /** Metadata census of the shard files: name → (size, mtime). One
-    * directory listing — no file reads. */
-  private def fileCensus(spark: SparkSession, root: String): Map[String, (Long, Long)] = {
-    val p = new Path(s"$root/shards")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Map.empty
-    else fs.listStatus(p).filter(_.isFile)
-      .filterNot(_.getPath.getName.startsWith("."))
-      .map(s => s.getPath.getName -> (s.getLen, s.getModificationTime)).toMap
   }
 
   /** The DuckDB twin: №68's packing + shard-hash CTEs at this drill's
@@ -195,8 +136,6 @@ object ShardForget {
   val shardForgetSql: String = {
     val L = PipelineQueries.SeqLen
     val bins = PipelineQueries.PackBins
-    val hex8 = "CAST(list_sum(list_transform(range(1, 9), i -> " +
-      "CAST(strpos('0123456789abcdef', substr(hk, CAST(i AS INT), 1)) - 1 AS BIGINT) << (4 * (8 - CAST(i AS INT))))) AS BIGINT)"
     s"""WITH d AS (
        |  SELECT doc_id, doc_id % $bins AS bin,
        |    CAST(len(${TextQueries.wordsSql("text")}) AS BIGINT) AS n_tok

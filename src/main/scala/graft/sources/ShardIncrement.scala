@@ -1,9 +1,8 @@
 package graft.sources
 
 import graft.queries.{PipelineQueries, TextQueries}
-import org.apache.hadoop.fs.Path
+import graft.queries.PipelineQueries.{hex8, packOffsets, seqContent, shardKeyed, shardPos}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** SHARD INCREMENT, APPEND-ONLY (№220 `shard_increment`) — №219's
@@ -49,9 +48,6 @@ object ShardIncrement {
 
   val Shards = 16
 
-  def gen1File(shard: Int, of: Int): String =
-    f"shard-$shard%04d-of-$of%04d.g1.txt.gz"
-
   /** Spec diagnostics: gen-0 metadata census before/after the gen-1
     * write (one listing each), and the raw (unresolved) line count. */
   private[graft] final case class IncrementDetail(
@@ -65,73 +61,42 @@ object ShardIncrement {
   private[graft] def shardIncrementWithDetail(
       spark: SparkSession, dir: String): (DataFrame, IncrementDetail) = {
     import spark.implicits._
-    val L = PipelineQueries.SeqLen
-    val w = Window.partitionBy($"bin")
-      .orderBy(md5($"doc_id".cast("string")), $"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val d = graft.CacheRegistry.track(graft.Tables(spark, dir).documents
-      .select($"doc_id", pmod($"doc_id", lit(PipelineQueries.PackBins)).as("bin"),
-        size(TextQueries.words($"text")).cast("long").as("n_tok"),
-        (pmod($"doc_id", lit(PipelineQueries.IncArrMod)) === PipelineQueries.IncArrRes).as("arr"))
-      .persist())
-    val baseOff = d.filter(!$"arr")
-      .withColumn("start_off", sum($"n_tok").over(w) - $"n_tok")
-    def seqsOf(off: DataFrame): DataFrame = off
-      .withColumn("seq_id", expr(s"start_off DIV $L"))
-      .groupBy($"bin", $"seq_id")
-      .agg(sum($"n_tok").as("n_tokens"),
-        concat_ws(",",
-          transform(array_sort(collect_list(struct($"start_off", $"doc_id"))),
-            s => s.getField("doc_id").cast("string"))).as("docs"),
-        min($"arr").as("all_arr"), max($"arr").as("any_arr"))
-    def hashed(s: DataFrame): DataFrame = s
-      .withColumn("hk", md5(concat($"bin".cast("string"), lit(":"), $"seq_id".cast("string"))))
-      .withColumn("shard",
-        pmod(conv(substring($"hk", 1, 8), 16, 10).cast("long"), lit(Shards)).cast("int"))
+    // base (batch 0) + the arrival batch (1): one window gives the base
+    // offsets and №219's tail-append offsets at once
+    val off = graft.CacheRegistry.track(packOffsets(PipelineQueries.docTokens(spark, dir)
+      .withColumn("batch", PipelineQueries.incBatch)).persist())
     // gen 0: the base pack, №68's write
-    val l0 = graft.CacheRegistry.track(hashed(seqsOf(baseOff))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy($"shard").orderBy($"hk", $"bin", $"seq_id")).cast("long"))
+    val l0 = graft.CacheRegistry.track(shardKeyed(seqContent(off.filter($"batch" === 0)), Shards)
+      .withColumn("pos", shardPos())
       .select($"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs")
       .persist())
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_shardinc_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+    val root = graft.Fs.storeDir("shardinc", dir).toString
     JsonlSnapshotSink.registerScratchRoot(spark, root)
-    def lineOf(f: DataFrame): DataFrame = f.select($"shard", $"pos",
-      concat_ws("|", $"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs").as("line"))
-    TrainShardSink.write(lineOf(l0), root, Shards)
-    val g0Before = fileCensus(spark, root, gen1 = false)
-    // the arrival batch under №219's tail-append (offsets continue from
-    // each bin's base total — a bins-sized broadcast)
-    val binTot = d.filter(!$"arr").groupBy($"bin").agg(sum($"n_tok").as("base_tot"))
-    val arrOff = d.filter($"arr")
-      .withColumn("boff", sum($"n_tok").over(w) - $"n_tok")
-      .join(broadcast(binTot), Seq("bin"), "left")
-      .withColumn("start_off", coalesce($"base_tot", lit(0L)) + $"boff")
-      .select($"doc_id", $"bin", $"n_tok", $"arr", $"start_off")
+    TrainShardSink.write(TrainShardSink.lineOf(l0), root, Shards)
+    def g0Census() = TrainShardSink.fileCensus(spark, root)
+      .filter { case (name, _) => TrainShardSink.genOf(name) == 0 }
+    val g0Before = g0Census()
     val inc = graft.CacheRegistry.track(
-      seqsOf(baseOff.select($"doc_id", $"bin", $"n_tok", $"arr", $"start_off")
-        .unionAll(arrOff)).persist())
+      seqContent(off, (min($"batch") === 1).as("all_arr"), (max($"batch") === 1).as("any_arr"))
+        .persist())
     // gen-1 lines: extended sequences supersede AT THEIR ORIGINAL
     // (shard, pos); new sequences take positions past the shard's gen-0 max
     val ext = inc.filter(!$"all_arr" && $"any_arr")
       .join(l0.select($"shard", $"pos", $"bin", $"seq_id"), Seq("bin", "seq_id"))
       .select($"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs")
     val g0max = l0.groupBy($"shard").agg(max($"pos").as("mx")) // ≤ Shards rows
-    val lnew = hashed(inc.filter($"all_arr"))
+    val lnew = shardKeyed(inc.filter($"all_arr"), Shards)
       .join(broadcast(g0max), Seq("shard"), "left")
-      .withColumn("pos", (coalesce($"mx", lit(0L)) + row_number().over(
-        Window.partitionBy($"shard").orderBy($"hk", $"bin", $"seq_id"))).cast("long"))
+      .withColumn("pos", coalesce($"mx", lit(0L)) + shardPos())
       .select($"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs")
     val l1 = graft.CacheRegistry.track(ext.unionAll(lnew).persist())
-    writeGen1(lineOf(l1), root)
-    val g0After = fileCensus(spark, root, gen1 = false)
+    // new names, so the commit is a plain first-writer rename
+    TrainShardSink.writeLines(TrainShardSink.lineOf(l1), root, Shards, TrainShardSink.genFile(1))
+    val g0After = g0Census()
     // the loader view: last writer wins per (bin, seq_id)
-    val back = graft.CacheRegistry.track(readBackGen(spark, root).persist())
+    val back = graft.CacheRegistry.track(TrainShardSink.readBack(spark, root).persist())
     val rawLines = back.count()
-    val resolved = back
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"bin", $"seq_id").orderBy($"gen".desc)))
-      .filter($"rn" === 1).drop("rn")
+    val resolved = TrainShardSink.resolve(back)
     // bill distributively: superseding lines are the l1 keys present in l0
     val billF = l1.join(l0.select($"bin", $"seq_id"), Seq("bin", "seq_id"), "left_semi")
       .agg(count(lit(1)).as("n_superseded"))
@@ -143,77 +108,11 @@ object ShardIncrement {
     (out, IncrementDetail(g0Before, g0After, rawLines))
   }
 
-  /** Write the gen-1 files (one per shard present in `lines`) with №68's
-    * streaming tmp+rename task body — finals are NEW names, so the commit
-    * is a plain first-writer rename. */
-  private[graft] def writeGen1(lines: DataFrame, root: String,
-                               nShards: Int = Shards,
-                               nameOf: (Int, Int) => String = gen1File): Unit = {
-    val spark = lines.sparkSession
-    import spark.implicits._
-    val hc = spark.sparkContext.hadoopConfiguration
-    val confEntries: Array[(String, String)] = {
-      val it = hc.iterator()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) { val e = it.next(); buf += (e.getKey -> e.getValue) }
-      buf.toArray
-    }
-    lines
-      .repartition(math.min(nShards, spark.sparkContext.defaultParallelism), col("shard"))
-      .sortWithinPartitions(col("shard"), col("pos"))
-      .select(col("shard"), col("line"))
-      .as[(Int, String)]
-      .mapPartitions(rows => TrainShardSink.writePartitionBody(
-        rows, root, nShards, GzipSnapshotCodec, confEntries, nameOf))
-      .collect() // eager: the side-effecting write must run exactly once
-    ()
-  }
-
-  /** №68's read-back plus the generation parsed from the FILE NAME — the
-    * loader's raw view before resolution. */
-  private[graft] def readBackGen(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.gz")
-      .load(s"$root/shards")
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val gen = if (path.endsWith(".g1.txt.gz")) 1 else 0
-        val text = new String(GzipSnapshotCodec.decompress(
-          new java.io.ByteArrayInputStream(bytes)).readAllBytes(), "UTF-8")
-        text.split("\n", -1).iterator.filter(_.nonEmpty).map(l => (gen, l))
-      }
-      .select(col("_1").as("gen"), split(col("_2"), "\\|").as("f"))
-      .select(
-        element_at(col("f"), 1).cast("int").as("shard"),
-        element_at(col("f"), 2).cast("long").as("pos"),
-        element_at(col("f"), 3).cast("long").as("bin"),
-        element_at(col("f"), 4).cast("long").as("seq_id"),
-        element_at(col("f"), 5).cast("long").as("n_tokens"),
-        element_at(col("f"), 6).as("docs"),
-        col("gen"))
-  }
-
-  /** Metadata census of gen-0 (or gen-1) files: name → (size, mtime). */
-  private def fileCensus(spark: SparkSession, root: String,
-                         gen1: Boolean): Map[String, (Long, Long)] = {
-    val p = new Path(s"$root/shards")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Map.empty
-    else fs.listStatus(p).filter(_.isFile)
-      .filterNot(_.getPath.getName.startsWith("."))
-      .filter(_.getPath.getName.endsWith(".g1.txt.gz") == gen1)
-      .map(s => s.getPath.getName -> (s.getLen, s.getModificationTime)).toMap
-  }
-
   /** The DuckDB twin: both generations and the last-writer-wins
     * resolution, closed-form. */
   val shardIncrementSql: String = {
     val L = PipelineQueries.SeqLen
     val bins = PipelineQueries.PackBins
-    val hex8 = "CAST(list_sum(list_transform(range(1, 9), i -> " +
-      "CAST(strpos('0123456789abcdef', substr(hk, CAST(i AS INT), 1)) - 1 AS BIGINT) << (4 * (8 - CAST(i AS INT))))) AS BIGINT)"
     s"""WITH d AS (
        |  SELECT doc_id, doc_id % $bins AS bin,
        |    CAST(len(${TextQueries.wordsSql("text")}) AS BIGINT) AS n_tok,

@@ -105,12 +105,7 @@ object SpeculationDrill {
     def check(cond: Boolean, what: String): Unit =
       if (!cond) { ok = false; System.err.println(s"DRILL FAIL: $what") }
     try {
-      val confEntries: Array[(String, String)] = {
-        val it = spark.sparkContext.hadoopConfiguration.iterator()
-        val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        while (it.hasNext) { val e = it.next(); buf += (e.getKey -> e.getValue) }
-        buf.toArray
-      }
+      val confEntries = JsonlSnapshotSink.confEntriesOf(spark)
       val nShards = NShards; val linesPer = LinesPerShard
       val slow = SlowShard; val sleepMs = SlowSleepMsPerLine
       // one partition per shard; the real sink task body does the commit
@@ -193,8 +188,7 @@ object SpeculationDrill {
       // the killed loser may leave a dot-temp ON DISK; it must be invisible
       // to readers (dot-prefix is hidden from Spark/Hadoop listings)
       val tmpOnDisk = names.count(_.endsWith(".tmp"))
-      val visibleThroughGlob = spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tmp").load(s"$root/shards").count()
+      val visibleThroughGlob = TrainShardSink.shardFiles(spark, root, "*.tmp").count()
       check(visibleThroughGlob == 0, s"$visibleThroughGlob temps visible through a reader glob")
 
       println(s"""{"speculative":$specA,"killed":$killedA,""" +

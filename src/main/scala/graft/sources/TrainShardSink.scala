@@ -3,6 +3,7 @@ package graft.sources
 import graft.queries.PipelineQueries
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Training-shard sink (№68) — the LLM side's physical output, the
@@ -22,6 +23,14 @@ import org.apache.spark.sql.functions._
   * count is the cluster's data-parallelism — a constant — so
   * file-create overhead is nil and per-file windows scale.
   *
+  * This object holds the file half of the packed-shard store's one path
+  * (see [[PipelineQueries.packedSeqs]]'s section): the line format
+  * ([[lineOf]]), the writer ([[writeLines]]), the read-back with
+  * generations ([[readBack]]), the last-writer-wins [[resolve]], the
+  * span-covering forget keys ([[spanKeys]]) and the [[fileCensus]]. A
+  * generation g ≥ 1 is a new file per shard named by [[genFile]]; files
+  * are never appended to.
+  *
   * The round trip is oracle-verified: [[readBack]] decompresses and
   * re-parses every line, and the driver's DuckDB oracle reconstructs the
   * identical rows relationally (packing CTEs + shuffle hash + manifest
@@ -30,39 +39,65 @@ object TrainShardSink {
 
   def shardFile(shard: Int, of: Int): String = f"shard-$shard%04d-of-$of%04d.txt.gz"
 
+  /** Generation `g`'s file name for a shard: [[shardFile]] with `.gN.`. */
+  private[graft] def genFile(g: Int)(shard: Int, of: Int): String =
+    f"shard-$shard%04d-of-$of%04d.g$g.txt.gz"
+
+  private val GenName = java.util.regex.Pattern.compile("\\.g(\\d+)\\.txt\\.gz$")
+
+  /** The generation a shard file's name or path carries: N for a `.gN.`
+    * name, 0 for a plain [[shardFile]] name. */
+  private[graft] def genOf(name: String): Int = {
+    val m = GenName.matcher(name)
+    if (m.find()) m.group(1).toInt else 0
+  }
+
   /** Test-only fault point (see [[JsonlSnapshotSink.faultInjector]]):
-    * (shard, lines in current shard, shards committed so far by this
-    * task). */
-  @volatile private[graft] var faultInjector: (Int, Long, Int) => Unit = (_, _, _) => ()
+    * (file name, lines in the current file, files committed so far by
+    * this task). */
+  @volatile private[graft] var faultInjector: (String, Long, Int) => Unit = (_, _, _) => ()
+
+  /** №68's line, keyed for the writer: (shard, pos, line) from a frame of
+    * (shard, pos, bin, seq_id, n_tokens, docs). */
+  private[graft] def lineOf(f: DataFrame): DataFrame = f.select(col("shard"), col("pos"),
+    concat_ws("|", col("shard"), col("pos"), col("bin"), col("seq_id"),
+      col("n_tokens"), col("docs")).as("line"))
 
   /** Write `lines` (shard, pos, line) as one gzip file per shard under
-    * `root/shards/`; returns the per-file summary (shard_file, n_seqs,
-    * txt_bytes). Eager — the files exist when this returns. */
+    * `root/shards/`, replacing whatever `root` held; returns the per-file
+    * summary (shard_file, n_seqs, txt_bytes). Eager — the files exist
+    * when this returns. */
   def write(lines: DataFrame, root: String,
             nShards: Int = PipelineQueries.NShards,
             codec: SnapshotCodec = GzipSnapshotCodec): DataFrame = {
     val spark = lines.sparkSession
     import spark.implicits._
-
-    val hc = spark.sparkContext.hadoopConfiguration
     val rootPath = new Path(root)
-    val fs0 = rootPath.getFileSystem(hc)
+    val fs0 = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs0.exists(rootPath)) fs0.delete(rootPath, true)
-    val confEntries: Array[(String, String)] = {
-      val it = hc.iterator()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) { val e = it.next(); buf += (e.getKey -> e.getValue) }
-      buf.toArray
-    }
+    writeLines(lines, root, nShards, codec = codec)
+      .toSeq.toDF("shard_file", "n_seqs", "txt_bytes")
+  }
 
+  /** The one shard writer: one file per shard present in `lines`
+    * (shard, pos, line), named by `nameOf`, next to whatever `root/shards/`
+    * already holds. ONE shuffle on shard over at most `maxTasks` tasks
+    * (and at most the shard count and the cluster's parallelism), a
+    * within-partition (shard, pos) sort, then [[writePartitionBody]].
+    * Eager; returns (file name, lines, txt_bytes) per file. */
+  private[graft] def writeLines(lines: DataFrame, root: String, nShards: Int,
+      nameOf: (Int, Int) => String = shardFile, maxTasks: Int = Int.MaxValue,
+      codec: SnapshotCodec = GzipSnapshotCodec): Array[(String, Long, Long)] = {
+    val spark = lines.sparkSession
+    import spark.implicits._
+    val confEntries = JsonlSnapshotSink.confEntriesOf(spark)
     lines
-      .repartition(math.min(nShards, spark.sparkContext.defaultParallelism), col("shard"))
+      .repartition(Seq(maxTasks, nShards, spark.sparkContext.defaultParallelism).min, col("shard"))
       .sortWithinPartitions(col("shard"), col("pos"))
       .select(col("shard"), col("line"))
       .as[(Int, String)]
-      .mapPartitions(rows => writePartitionBody(rows, root, nShards, codec, confEntries))
+      .mapPartitions(rows => writePartitionBody(rows, root, nShards, codec, confEntries, nameOf))
       .collect() // eager: the side-effecting write must run exactly once
-      .toSeq.toDF("shard_file", "n_seqs", "txt_bytes")
   }
 
   /** The per-task writer body: one streaming pass over (shard, line) rows
@@ -76,8 +111,7 @@ object TrainShardSink {
       nameOf: (Int, Int) => String = shardFile): Iterator[(String, Long, Long)] = {
         if (rows.isEmpty) Iterator.empty
         else {
-          val conf = new org.apache.hadoop.conf.Configuration(false)
-          confEntries.foreach { case (k, v) => conf.set(k, v) }
+          val conf = JsonlSnapshotSink.confFrom(confEntries)
           // PRIVATE FileSystem instance: the global cache is keyed by
           // (scheme, authority, ugi) — NOT conf — so mutating checksum
           // flags on the cached instance would disable .crc sidecars for
@@ -97,11 +131,11 @@ object TrainShardSink {
           val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
 
           var cur = -1
+          var name = ""
           var gz: java.io.OutputStream = null
           var n = 0L; var bytes = 0L
           def closeCurrent(): Unit = if (cur >= 0) {
             gz.close()
-            val name = nameOf(cur, nShards)
             val t = new Path(tmpOf(name)); val f = new Path(finalOf(name))
             if (!fs.rename(t, f)) {
               // duplicate attempt won with identical bytes — drop ours
@@ -114,13 +148,14 @@ object TrainShardSink {
             rows.foreach { case (shard, line) =>
               if (shard != cur) {
                 closeCurrent()
+                name = nameOf(shard, nShards)
                 gz = codec.compress(new java.io.BufferedOutputStream(
-                  fs.create(new Path(tmpOf(nameOf(shard, nShards))), true), 65536))
+                  fs.create(new Path(tmpOf(name)), true), 65536))
                 cur = shard; n = 0L; bytes = 0L
               }
               val b = (line + "\n").getBytes("UTF-8")
               gz.write(b); n += 1; bytes += b.length
-              TrainShardSink.faultInjector(cur, n, out.size)
+              TrainShardSink.faultInjector(name, n, out.size)
             }
             closeCurrent()
           } catch { case e: Throwable =>
@@ -134,29 +169,74 @@ object TrainShardSink {
         }
   }
 
-  /** Decompress + re-parse every shard file back to typed rows — the
-    * round-trip proof. Distributed binaryFile read, one file per row. */
+  /** The committed shard files a reader sees under `glob`: dot-temps are
+    * hidden from Hadoop listings, so a writer's litter never reaches it. */
+  private[graft] def shardFiles(spark: SparkSession, root: String, glob: String = "*.gz"): DataFrame =
+    spark.read.format("binaryFile").option("pathGlobFilter", glob).load(s"$root/shards")
+
+  /** The one read-back: decompress + re-parse every line of every shard
+    * file — (shard, pos, bin, seq_id, n_tokens, docs, gen), `gen` from the
+    * file name ([[genOf]]). Distributed binaryFile read, one file per
+    * row; the loader's raw view before [[resolve]]. */
   def readBack(spark: SparkSession, root: String,
                codec: SnapshotCodec = GzipSnapshotCodec): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.gz")
-      .load(s"$root/shards")
-      .select(col("content"))
-      .as[Array[Byte]]
-      .flatMap { bytes =>
+    shardFiles(spark, root)
+      .select(col("path"), col("content"))
+      .as[(String, Array[Byte])]
+      .flatMap { case (path, bytes) =>
+        val gen = genOf(path)
         val text = new String(codec.decompress(new java.io.ByteArrayInputStream(bytes)).readAllBytes(), "UTF-8")
-        text.split("\n", -1).iterator.filter(_.nonEmpty)
+        text.split("\n", -1).iterator.filter(_.nonEmpty).map(l => (gen, l))
       }
-      .select(split(col("value"), "\\|").as("f"))
+      .select(col("_1").as("gen"), split(col("_2"), "\\|").as("f"))
       .select(
         element_at(col("f"), 1).cast("int").as("shard"),
         element_at(col("f"), 2).cast("long").as("pos"),
         element_at(col("f"), 3).cast("long").as("bin"),
         element_at(col("f"), 4).cast("long").as("seq_id"),
         element_at(col("f"), 5).cast("long").as("n_tokens"),
-        element_at(col("f"), 6).as("docs"))
+        element_at(col("f"), 6).as("docs"),
+        col("gen"))
   }
+
+  /** Last writer wins per (bin, seq_id): each key serves its line of the
+    * highest generation — the reference's latest-cell read
+    * (app/batch/HBaseResultProcessor.kt: the newest cell wins, older
+    * versions stay on disk). With `dropTombstones`, a winning tombstone
+    * (n_tokens 0, empty docs) hides its key, as an HBase delete marker
+    * hides its cell. */
+  private[graft] def resolve(back: DataFrame, dropTombstones: Boolean = false): DataFrame = {
+    val won = back
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("bin"), col("seq_id")).orderBy(col("gen").desc)))
+      .filter(col("rn") === 1).drop("rn")
+    if (dropTombstones) won.filter(col("n_tokens") > 0L) else won
+  }
+
+  /** The keys a forget must reach: every (bin, seq_id) that any token of
+    * a doc in `off` (packing offsets) lands in — where the doc starts and
+    * every sequence it spans into. */
+  private[graft] def spanKeys(off: DataFrame): DataFrame = {
+    val L = PipelineQueries.SeqLen
+    off.select(col("bin"), explode(sequence(
+        expr(s"start_off DIV $L"), expr(s"(start_off + n_tok - 1) DIV $L"))).as("seq_id"))
+      .distinct()
+  }
+
+  /** Metadata census of the committed shard files: name → (size, mtime).
+    * One directory listing, no file reads; dot-temps are not counted. */
+  private[graft] def fileCensus(spark: SparkSession, root: String): Map[String, (Long, Long)] = {
+    val p = new Path(s"$root/shards")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Map.empty
+    else fs.listStatus(p).filter(_.isFile)
+      .filterNot(_.getPath.getName.startsWith("."))
+      .map(s => s.getPath.getName -> (s.getLen, s.getModificationTime)).toMap
+  }
+
+  /** The store root [[shardQuery]] writes for input `dir`. */
+  private[graft] def rootOf(dir: String): String = graft.Fs.storeDir("shards", dir).toString
 
   /** Verify-runnable form (№68 `train_shard_sink`): build the shard
     * lines from the SHARED shuffle + manifest frames, write to scratch,
@@ -167,13 +247,9 @@ object TrainShardSink {
     val shuffled = PipelineQueries.sequenceShuffle(spark, dir)
     val manifest = PipelineQueries.sequenceManifest(spark, dir)
       .select(col("bin"), col("seq_id"), col("docs"))
-    val lines = shuffled.join(manifest, Seq("bin", "seq_id"))
-      .select(col("shard"), col("pos"),
-        concat_ws("|", col("shard"), col("pos"), col("bin"), col("seq_id"),
-          col("n_tokens"), col("docs")).as("line"))
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_shards_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+    val root = rootOf(dir)
     JsonlSnapshotSink.registerScratchRoot(spark, root)
-    write(lines, root)
-    readBack(spark, root).orderBy(col("shard"), col("pos"))
+    write(lineOf(shuffled.join(manifest, Seq("bin", "seq_id"))), root)
+    readBack(spark, root).drop("gen").orderBy(col("shard"), col("pos"))
   }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.queries.{PipelineQueries, TextQueries}
+import graft.queries.PipelineQueries.{hex8, packOffsets, seqContent, shardKeyed, shardPos}
 import graft.sources.{ShardIncrement, TrainShardSink}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** THE SHARD STORE'S LIFECYCLE AS A STREAM (№221 `stream_shard`) — the
@@ -60,49 +60,28 @@ object StreamShard {
   private[graft] def streamShardWithCensus(
       spark: SparkSession, dir: String): (DataFrame, ShardStreamCensus) = {
     import spark.implicits._
-    val L = PipelineQueries.SeqLen
     val SH = ShardIncrement.Shards
     // batch 0 = base, 1/2 = the arrival halves ((doc_id DIV 40) % 2 —
     // independent of both the bin mod and the arrival mod), forget
     // manifest = №218's residue over ALL docs (so it reaches
     // arrival-created keys too)
-    val batchCol = when(pmod($"doc_id", lit(PipelineQueries.IncArrMod)) =!= PipelineQueries.IncArrRes, 0)
+    val batchCol = when(PipelineQueries.incBatch === 0, 0)
       .when(pmod(expr("doc_id DIV 40"), lit(2)) === 0, 1).otherwise(2)
     // ONE window: per bin, ordered by (batch, hash) — base offsets and
     // both tail-appends in a single pass
-    val w = Window.partitionBy($"bin")
-      .orderBy($"batch", md5($"doc_id".cast("string")), $"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val off = graft.CacheRegistry.track(graft.Tables(spark, dir).documents
-      .select($"doc_id", pmod($"doc_id", lit(PipelineQueries.PackBins)).as("bin"),
-        size(TextQueries.words($"text")).cast("long").as("n_tok"))
-      .withColumn("batch", batchCol)
-      .withColumn("start_off", sum($"n_tok").over(w) - $"n_tok")
-      .withColumn("seq_id", expr(s"start_off DIV $L"))
+    val off = graft.CacheRegistry.track(packOffsets(PipelineQueries.docTokens(spark, dir)
+        .withColumn("batch", batchCol))
       .persist())
     // cumulative content of a key up to batch b: docs STARTING in it
-    def contentUpTo(b: Int): DataFrame = off.filter($"batch" <= b)
-      .groupBy($"bin", $"seq_id")
-      .agg(sum($"n_tok").as("n_tokens"),
-        concat_ws(",",
-          transform(array_sort(collect_list(struct($"start_off", $"doc_id"))),
-            s => s.getField("doc_id").cast("string"))).as("docs"))
-    def hashed(f: DataFrame): DataFrame = f
-      .withColumn("hk", md5(concat($"bin".cast("string"), lit(":"), $"seq_id".cast("string"))))
-      .withColumn("shard",
-        pmod(conv(substring($"hk", 1, 8), 16, 10).cast("long"), lit(SH)).cast("int"))
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_streamshard_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    graft.Fs.rmTree(java.nio.file.Paths.get(root)) // replay's andThen removes it again
-    def lineOf(f: DataFrame): DataFrame = f.select($"shard", $"pos",
-      concat_ws("|", $"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs").as("line"))
+    def contentUpTo(b: Int): DataFrame = seqContent(off.filter($"batch" <= b))
+    val root = graft.Fs.storeDir("streamshard", dir).toString
+    def writeGen(g: Int, f: DataFrame): Unit =
+      TrainShardSink.writeLines(TrainShardSink.lineOf(f), root, SH, TrainShardSink.genFile(g))
     // gen 0: base pack, plain №68 names
-    val l0 = graft.CacheRegistry.track(hashed(contentUpTo(0))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy($"shard").orderBy($"hk", $"bin", $"seq_id")).cast("long"))
-      .select($"shard", $"pos", $"bin", $"seq_id").persist())
-    TrainShardSink.write(
-      lineOf(hashed(contentUpTo(0)).join(l0, Seq("shard", "bin", "seq_id")).select(
-        $"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs")), root, SH)
+    val l0 = graft.CacheRegistry.track(shardKeyed(contentUpTo(0), SH)
+      .withColumn("pos", shardPos())
+      .select($"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs").persist())
+    TrainShardSink.write(TrainShardSink.lineOf(l0), root, SH)
 
     val scratch = java.nio.file.Files.createTempDirectory("graft_stream_shard_")
     val inDir = scratch.resolve("in"); java.nio.file.Files.createDirectories(inDir)
@@ -113,7 +92,7 @@ object StreamShard {
     val rawLines = scala.collection.mutable.Map.empty[Long, Long]
     // the key registry: every key's (shard, pos, first gen) so far —
     // grown per batch from the batch's own new keys
-    var keysSoFar: DataFrame = graft.CacheRegistry.track(l0.persist())
+    var keysSoFar: DataFrame = l0.select($"shard", $"pos", $"bin", $"seq_id")
     // the batches' grown registries, released when the replay ends
     val grown = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var batches = -1
@@ -146,15 +125,12 @@ object StreamShard {
             val sup = content.join(keysSoFar.select($"shard", $"pos", $"bin", $"seq_id"),
               Seq("bin", "seq_id"))
             val mx = keysSoFar.groupBy($"shard").agg(max($"pos").as("mx"))
-            val fresh = hashed(content.join(keysSoFar.select($"bin", $"seq_id"),
-                Seq("bin", "seq_id"), "left_anti"))
+            val fresh = shardKeyed(content.join(keysSoFar.select($"bin", $"seq_id"),
+                Seq("bin", "seq_id"), "left_anti"), SH)
               .join(broadcast(mx), Seq("shard"), "left")
-              .withColumn("pos", (coalesce($"mx", lit(0L)) + row_number().over(
-                Window.partitionBy($"shard").orderBy($"hk", $"bin", $"seq_id"))).cast("long"))
-            val both = sup.select($"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs")
-              .unionAll(fresh.select($"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs"))
-            ShardIncrement.writeGen1(lineOf(both), root, SH,
-              (s: Int, of: Int) => f"shard-$s%04d-of-$of%04d.g$gen.txt.gz")
+              .withColumn("pos", coalesce($"mx", lit(0L)) + shardPos())
+            writeGen(gen, sup.select($"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs")
+              .unionAll(fresh.select($"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs")))
             keysSoFar = keysSoFar.unionAll(
               fresh.select($"shard", $"pos", $"bin", $"seq_id")).persist()
             grown += keysSoFar
@@ -162,32 +138,23 @@ object StreamShard {
           } else {
             // FORGET: tombstones supersede every span-contaminated
             // EXISTING key at its registered (shard, pos)
-            val doomed = off.join(ids, Seq("doc_id"), "left_semi")
-              .select($"bin", explode(sequence(
-                expr(s"start_off DIV $L"),
-                expr(s"(start_off + n_tok - 1) DIV $L"))).as("seq_id"))
-              .distinct()
-            val tomb = keysSoFar.join(doomed, Seq("bin", "seq_id"), "left_semi")
+            val doomed = TrainShardSink.spanKeys(off.join(ids, Seq("doc_id"), "left_semi"))
+            writeGen(gen, keysSoFar.join(doomed, Seq("bin", "seq_id"), "left_semi")
               .select($"shard", $"pos", $"bin", $"seq_id",
-                lit(0L).as("n_tokens"), lit("").as("docs"))
-            ShardIncrement.writeGen1(lineOf(tomb), root, SH,
-              (s: Int, of: Int) => f"shard-$s%04d-of-$of%04d.g$gen.txt.gz")
+                lit(0L).as("n_tokens"), lit("").as("docs")))
           }
           // SERVE from the files: resolve last-writer-wins, drop tombstones
-          val back = readBackGenN(spark, root)
+          val back = TrainShardSink.readBack(spark, root)
           val bill = back.agg(count(lit(1)).as("n_raw_lines"),
             sum(when($"n_tokens" === 0L, 1L).otherwise(0L)).as("n_tombstones"))
-          val resolved = back
-            .withColumn("rn", row_number().over(
-              Window.partitionBy($"bin", $"seq_id").orderBy($"gen".desc)))
-            .filter($"rn" === 1 && $"n_tokens" > 0L).drop("rn")
-          resolved.crossJoin(broadcast(bill)).collect().foreach { r =>
+          TrainShardSink.resolve(back, dropTombstones = true)
+            .crossJoin(broadcast(bill)).collect().foreach { r =>
             results += ((id, r.getAs[Int]("shard"), r.getAs[Long]("pos"),
               r.getAs[Long]("bin"), r.getAs[Long]("seq_id"),
               r.getAs[Long]("n_tokens"), r.getAs[String]("docs"), r.getAs[Int]("gen"),
               r.getAs[Long]("n_raw_lines"), r.getAs[Long]("n_tombstones")))
           }
-          files(id) = fileCensus(spark, root)
+          files(id) = TrainShardSink.fileCensus(spark, root)
           // from the serve's own bill — never a second store scan
           rawLines(id) = results.reverseIterator.find(_._1 == id).map(_._9).getOrElse(0L)
           ()
@@ -206,44 +173,6 @@ object StreamShard {
     (df, ShardStreamCensus(batches, files.toMap, rawLines.toMap))
   }
 
-  /** №220's generation read-back generalized to `.gN.` names. */
-  private[graft] def readBackGenN(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    val genOfPath = (path: String) => {
-      val m = java.util.regex.Pattern.compile("\\.g(\\d+)\\.txt\\.gz$").matcher(path)
-      if (m.find()) m.group(1).toInt else 0
-    }
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.gz")
-      .load(s"$root/shards")
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val gen = genOfPath(path)
-        val text = new String(graft.sources.GzipSnapshotCodec.decompress(
-          new java.io.ByteArrayInputStream(bytes)).readAllBytes(), "UTF-8")
-        text.split("\n", -1).iterator.filter(_.nonEmpty).map(l => (gen, l))
-      }
-      .select(col("_1").as("gen"), split(col("_2"), "\\|").as("f"))
-      .select(
-        element_at(col("f"), 1).cast("int").as("shard"),
-        element_at(col("f"), 2).cast("long").as("pos"),
-        element_at(col("f"), 3).cast("long").as("bin"),
-        element_at(col("f"), 4).cast("long").as("seq_id"),
-        element_at(col("f"), 5).cast("long").as("n_tokens"),
-        coalesce(element_at(col("f"), 6), lit("")).as("docs"),
-        col("gen"))
-  }
-
-  private def fileCensus(spark: SparkSession, root: String): Map[String, (Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/shards")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Map.empty
-    else fs.listStatus(p).filter(_.isFile)
-      .filterNot(_.getPath.getName.startsWith("."))
-      .map(s => s.getPath.getName -> (s.getLen, s.getModificationTime)).toMap
-  }
-
   /** The closed-form twin: offsets from the ONE (batch, hash)-ordered
     * window, positions from the ONE (first_gen, hash)-ordered window,
     * per-stage visible content relationally. */
@@ -253,8 +182,6 @@ object StreamShard {
     val SH = ShardIncrement.Shards
     val fm = graft.sources.ShardForget.ForgetMod
     val fr = graft.sources.ShardForget.ForgetRes
-    val hex8 = "CAST(list_sum(list_transform(range(1, 9), i -> " +
-      "CAST(strpos('0123456789abcdef', substr(hk, CAST(i AS INT), 1)) - 1 AS BIGINT) << (4 * (8 - CAST(i AS INT))))) AS BIGINT)"
     def stage(s: Int): String = {
       val b = math.min(s + 1, 2) // visible arrival batches after event s
       val doomFilter = if (s == 2) "ANTI JOIN ssh_doomk USING (bin, seq_id)" else ""

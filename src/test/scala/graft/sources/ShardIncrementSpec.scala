@@ -61,4 +61,32 @@ class ShardIncrementSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(served.toSet === all, "the resolved view lost or invented docs")
   }
+
+  test("every .gN. generation resolves by its number; a tombstone hides the line below it") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_sinc_gens_").toString
+    def land(g: Int, rows: (Int, Long, Long, Long, Long, String)*): Unit = {
+      val f = TrainShardSink.lineOf(rows.toDF("shard", "pos", "bin", "seq_id", "n_tokens", "docs"))
+      if (g == 0) TrainShardSink.write(f, root, 4)
+      else TrainShardSink.writeLines(f, root, 4, TrainShardSink.genFile(g))
+    }
+    // key (0, 0) at g0, g1 and g3; key (1, 0) at g0 and g1, tombstoned at g2
+    land(0, (0, 1L, 0L, 0L, 10L, "1"), (1, 1L, 1L, 0L, 10L, "2"))
+    land(1, (0, 1L, 0L, 0L, 20L, "1,3"), (1, 1L, 1L, 0L, 20L, "2,4"))
+    land(2, (1, 1L, 1L, 0L, 0L, ""))
+    land(3, (0, 1L, 0L, 0L, 30L, "1,3,5"))
+    val names = TrainShardSink.fileCensus(spark, root).keySet
+    assert(names.toSeq.map(TrainShardSink.genOf).sorted === Seq(0, 0, 1, 1, 2, 3),
+      "a .gN. file was censused as another generation")
+    val back = TrainShardSink.readBack(spark, root)
+    def key(r: org.apache.spark.sql.Row) = (r.getAs[Long]("bin"), r.getAs[Long]("seq_id"))
+    val won = TrainShardSink.resolve(back).collect().map(r => key(r) -> r).toMap
+    assert(won((0L, 0L)).getAs[Int]("gen") === 3 && won((0L, 0L)).getAs[String]("docs") === "1,3,5",
+      "the g3 line must win over g0 and g1")
+    assert(won((1L, 0L)).getAs[Int]("gen") === 2 && won((1L, 0L)).getAs[Long]("n_tokens") === 0L,
+      "the g2 tombstone must win over g1")
+    assert(TrainShardSink.resolve(back, dropTombstones = true).collect().map(key).toSet ===
+      Set((0L, 0L)), "the tombstoned key still serves")
+    graft.Fs.rmTree(java.nio.file.Paths.get(root))
+  }
 }

@@ -88,18 +88,9 @@ class SinkRetrySpec extends SparkSpec {
 
   test("train shard sink: killed attempts mid-shard; retried run parses back identical") {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_retry_shards"
-    def lines = {
-      val shuffled = graft.queries.PipelineQueries.sequenceShuffle(spark, sf)
-      val manifest = graft.queries.PipelineQueries.sequenceManifest(spark, sf)
-        .select(org.apache.spark.sql.functions.col("bin"),
-          org.apache.spark.sql.functions.col("seq_id"),
-          org.apache.spark.sql.functions.col("docs"))
-      import org.apache.spark.sql.functions._
-      shuffled.join(manifest, Seq("bin", "seq_id"))
-        .select(col("shard"), col("pos"),
-          concat_ws("|", col("shard"), col("pos"), col("bin"), col("seq_id"),
-            col("n_tokens"), col("docs")).as("line"))
-    }
+    def lines = TrainShardSink.lineOf(graft.queries.PipelineQueries.sequenceShuffle(spark, sf)
+      .join(graft.queries.PipelineQueries.sequenceManifest(spark, sf).select("bin", "seq_id", "docs"),
+        Seq("bin", "seq_id")))
     def roundTrip(root: String): (Set[(String, Long, Long)], Seq[String]) = {
       val s = TrainShardSink.write(lines, root)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet

@@ -13,8 +13,7 @@ class TrainShardSinkSpec extends SparkSpec {
     assert(out.length == packed, "one shard line per packed sequence")
     // the sink's physical guarantee: within each shard FILE the lines are
     // stored in pos order (a loader streams the file sequentially)
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_shards_${sf.replaceAll("[^a-zA-Z0-9]", "_")}"
-    val files = new java.io.File(s"$root/shards").listFiles().filter(_.getName.endsWith(".gz"))
+    val files = new java.io.File(s"${TrainShardSink.rootOf(sf)}/shards").listFiles().filter(_.getName.endsWith(".gz"))
     assert(files.nonEmpty && files.length <= PipelineQueries.NShards)
     files.foreach { f =>
       val text = new String(GzipSnapshotCodec.decompress(new java.io.FileInputStream(f)).readAllBytes(), "UTF-8")

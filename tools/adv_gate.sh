@@ -3,7 +3,9 @@
 # adversarial corpus (heavy-tail tokens, near-dup bursts, the band-keyed
 # template cluster, heavy-tail IVF cells), run the banded-dedup + IVF
 # families through graft.Verify on it, and compare against the DuckDB
-# oracle. Exits non-zero on any mismatch.
+# oracle. Exits non-zero on any mismatch, listing the families that
+# failed in Verify or wrote no Spark output (Verify's stderr is kept in
+# <outDir>/verify.log).
 #
 # Usage: tools/adv_gate.sh [nDocs] [outDir]
 set -euo pipefail
@@ -26,8 +28,11 @@ FAMILIES=(dedup_ngram_jaccard dedup_minhash dedup_minhash_capped
   shard_compact stream_shard epoch_resume)
 DIR=$(SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" tools/run.sh graft.AdversarialCorpus "$N" 2>/dev/null | tail -1)
 echo "corpus: $DIR"
-rm -rf "$OUT"
-tools/run.sh graft.Verify "$DIR" "$OUT" "${FAMILIES[@]}" 2>/dev/null >/dev/null
+rm -rf "$OUT"; mkdir -p "$OUT"
+# Verify's stderr is kept: a family that throws (a driver "Java heap
+# space" included) leaves only its "[verify] <name> failed:" line there
+tools/run.sh graft.Verify "$DIR" "$OUT" "${FAMILIES[@]}" 2>"$OUT/verify.log" >/dev/null ||
+  echo "graft.Verify exited with status $?"
 # check.py exits non-zero because the oracle set includes queries this
 # gate deliberately did not dump — keep its output, judge on the grep
 RESULT=$(python3 tools/check.py "$DIR" "$OUT" 2>&1 | grep -E "^(PASS|FAIL)" | grep -v "no spark output" || true)
@@ -35,4 +40,11 @@ echo "$RESULT"
 N_PASS=$(echo "$RESULT" | grep -c "^PASS" || true)
 N_FAIL=$(echo "$RESULT" | grep -c "^FAIL" || true)
 echo "== adversarial gate: $N_PASS pass, $N_FAIL fail (of ${#FAMILIES[@]} families) =="
-test "$N_FAIL" -eq 0 && test "$N_PASS" -eq "${#FAMILIES[@]}"
+if [ "$N_FAIL" -ne 0 ] || [ "$N_PASS" -ne "${#FAMILIES[@]}" ]; then
+  grep -F "[verify] " "$OUT/verify.log" | grep -F " failed:" || true
+  MISSING=()
+  for f in "${FAMILIES[@]}"; do [ -d "$OUT/$f" ] || MISSING+=("$f"); done
+  if [ "${#MISSING[@]}" -gt 0 ]; then echo "no Spark output: ${MISSING[*]}"; fi
+  echo "Verify stderr: $OUT/verify.log"
+  exit 1
+fi
