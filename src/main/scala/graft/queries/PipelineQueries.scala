@@ -594,7 +594,8 @@ object PipelineQueries {
     * calls:
     *  - offsets: [[packOffsets]], the per-bin window ordered by
     *    ([batch,] md5(doc_id), doc_id); [[incBatch]] is the two-phase
-    *    corpus's batch;
+    *    corpus's batch; [[spanKeys]], every sequence a doc's tokens land
+    *    in (the span-covering forget keys);
     *  - sequences: [[seqAccounting]] (n_docs, n_tokens, n_spanning) and
     *    [[seqContent]] (n_tokens, the ordered `docs` list);
     *  - shard key and position: [[shardKeyed]] (hk, shard) and
@@ -602,8 +603,7 @@ object PipelineQueries {
     *  - the files: [[graft.sources.TrainShardSink]]'s `lineOf` (the line
     *    format), `writeLines` (the writer), `readBack` (lines with the
     *    generation their file name carries), `resolve` (last writer wins,
-    *    optional tombstone drop), `spanKeys` (the span-covering forget
-    *    keys) and `fileCensus`;
+    *    optional tombstone drop) and `fileCensus`;
     *  - the oracle's shard hash: [[hex8]].
     * Each drill's store root is `graft.Fs.storeDir(kind, dir)`. This
     * definition is the corpus side: per-doc token counts (doc_id, n_tok). */
@@ -623,17 +623,31 @@ object PipelineQueries {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docs.withColumn("bin", pmod(col("doc_id"), lit(PackBins)))
       .withColumn("start_off", sum(col("n_tok")).over(w) - col("n_tok"))
-      .withColumn("seq_id", expr(s"start_off DIV $SeqLen"))
+      .withColumn("seq_id", spanSeqs._1)
+  }
+
+  /** The first and last sequence a packed doc's tokens land in — the one
+    * span rule behind [[seqAccounting]]'s n_spanning and [[spanKeys]]. */
+  private def spanSeqs: (Column, Column) =
+    (expr(s"start_off DIV $SeqLen"), expr(s"(start_off + n_tok - 1) DIV $SeqLen"))
+
+  /** The keys a forget must reach: every (bin, seq_id) that any token of
+    * a doc in `off` (packing offsets) lands in — where the doc starts and
+    * every sequence it spans into. */
+  private[graft] def spanKeys(off: DataFrame): DataFrame = {
+    val (first, last) = spanSeqs
+    off.select(col("bin"), explode(sequence(first, last)).as("seq_id")).distinct()
   }
 
   /** Per-sequence accounting of packed offsets: docs starting in the
     * sequence, their token mass and how many span into the next one;
     * `extra` aggregates ride the same group-by. */
-  private[graft] def seqAccounting(off: DataFrame, extra: Column*): DataFrame =
+  private[graft] def seqAccounting(off: DataFrame, extra: Column*): DataFrame = {
+    val (first, last) = spanSeqs
     off.groupBy(col("bin"), col("seq_id")).agg(count(lit(1)).as("n_docs"),
       Seq(sum(col("n_tok")).as("n_tokens"),
-        sum(when(expr(s"start_off DIV $SeqLen <> (start_off + n_tok - 1) DIV $SeqLen"), 1L)
-          .otherwise(0L)).as("n_spanning")) ++ extra: _*)
+        sum(when(first =!= last, 1L).otherwise(0L)).as("n_spanning")) ++ extra: _*)
+  }
 
   /** The doc ids starting in a sequence, comma-joined in concatenation
     * (start_off) order — the manifest's and the shard line's `docs`. */

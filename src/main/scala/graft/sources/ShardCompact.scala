@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.queries.{PipelineQueries, TextQueries}
-import graft.queries.PipelineQueries.{hex8, packOffsets, seqContent, shardKeyed, shardPos}
+import graft.queries.PipelineQueries.{hex8, packOffsets, seqContent, shardKeyed, shardPos, spanKeys}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -74,7 +74,7 @@ object ShardCompact {
     writeGen(1, contentUpTo(1).join(
       off.filter($"batch" === 1).select($"bin", $"seq_id").distinct(), Seq("bin", "seq_id"), "left_semi"))
     val manifest = off.filter(pmod($"doc_id", lit(ShardForget.ForgetMod)) === ShardForget.ForgetRes)
-    val doomed = graft.CacheRegistry.track(TrainShardSink.spanKeys(manifest)
+    val doomed = graft.CacheRegistry.track(spanKeys(manifest)
       .join(keys.select($"bin", $"seq_id"), Seq("bin", "seq_id"), "left_semi")
       .persist())
     writeGen(2, doomed.select($"bin", $"seq_id", lit(0L).as("n_tokens"), lit("").as("docs")))

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.queries.{PipelineQueries, TextQueries}
-import graft.queries.PipelineQueries.{hex8, packOffsets, seqContent, shardKeyed, shardPos}
+import graft.queries.PipelineQueries.{hex8, packOffsets, seqContent, shardKeyed, shardPos, spanKeys}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -86,7 +86,7 @@ object ShardForget {
     TrainShardSink.write(TrainShardSink.lineOf(lines), root, Shards)
     val before = TrainShardSink.fileCensus(spark, root)
     val manifest = off.filter(pmod($"doc_id", lit(ForgetMod)) === ForgetRes)
-    val doomed = graft.CacheRegistry.track(TrainShardSink.spanKeys(manifest).persist())
+    val doomed = graft.CacheRegistry.track(spanKeys(manifest).persist())
     val doomedLines = lines.join(doomed, Seq("bin", "seq_id"), "left_semi")
     // bounded: ≤ Shards values
     val touched = doomedLines.select($"shard").distinct()

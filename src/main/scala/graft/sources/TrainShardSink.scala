@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * This object holds the file half of the packed-shard store's one path
   * (see [[PipelineQueries.packedSeqs]]'s section): the line format
   * ([[lineOf]]), the writer ([[writeLines]]), the read-back with
-  * generations ([[readBack]]), the last-writer-wins [[resolve]], the
-  * span-covering forget keys ([[spanKeys]]) and the [[fileCensus]]. A
+  * generations ([[readBack]]), the last-writer-wins [[resolve]] and the
+  * [[fileCensus]]. A
   * generation g ≥ 1 is a new file per shard named by [[genFile]]; files
   * are never appended to.
   *
@@ -212,16 +212,6 @@ object TrainShardSink {
         Window.partitionBy(col("bin"), col("seq_id")).orderBy(col("gen").desc)))
       .filter(col("rn") === 1).drop("rn")
     if (dropTombstones) won.filter(col("n_tokens") > 0L) else won
-  }
-
-  /** The keys a forget must reach: every (bin, seq_id) that any token of
-    * a doc in `off` (packing offsets) lands in — where the doc starts and
-    * every sequence it spans into. */
-  private[graft] def spanKeys(off: DataFrame): DataFrame = {
-    val L = PipelineQueries.SeqLen
-    off.select(col("bin"), explode(sequence(
-        expr(s"start_off DIV $L"), expr(s"(start_off + n_tok - 1) DIV $L"))).as("seq_id"))
-      .distinct()
   }
 
   /** Metadata census of the committed shard files: name → (size, mtime).

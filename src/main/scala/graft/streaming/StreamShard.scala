@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.queries.{PipelineQueries, TextQueries}
-import graft.queries.PipelineQueries.{hex8, packOffsets, seqContent, shardKeyed, shardPos}
+import graft.queries.PipelineQueries.{hex8, packOffsets, seqContent, shardKeyed, shardPos, spanKeys}
 import graft.sources.{ShardIncrement, TrainShardSink}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -138,7 +138,7 @@ object StreamShard {
           } else {
             // FORGET: tombstones supersede every span-contaminated
             // EXISTING key at its registered (shard, pos)
-            val doomed = TrainShardSink.spanKeys(off.join(ids, Seq("doc_id"), "left_semi"))
+            val doomed = spanKeys(off.join(ids, Seq("doc_id"), "left_semi"))
             writeGen(gen, keysSoFar.join(doomed, Seq("bin", "seq_id"), "left_semi")
               .select($"shard", $"pos", $"bin", $"seq_id",
                 lit(0L).as("n_tokens"), lit("").as("docs")))

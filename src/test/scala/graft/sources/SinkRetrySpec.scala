@@ -14,7 +14,10 @@ import java.util.concurrent.atomic.AtomicInteger
   * and the committed output must be byte-identical to an uninterrupted
   * run with no duplicate and no partial visible to any reader. Both FS
   * branches: raw-local (java.io fast path, POSIX rename replaces) and
-  * `mockfs://` (the Hadoop-API path hdfs/s3a take). */
+  * `mockfs://` (the Hadoop-API path hdfs/s3a take). The last case kills
+  * every attempt of a shard compaction's consolidated write, so the job
+  * fails: the store it leaves must still resolve to the pre-compaction
+  * view. */
 class SinkRetrySpec extends SparkSpec {
 
   // this suite's entire point is injected attempt failures
@@ -115,6 +118,49 @@ class SinkRetrySpec extends SparkSpec {
     assert(tmps(s"${base}_faulty").nonEmpty, "expected dead-attempt dot-temp litter")
     assert(summary == cleanSummary, "shard summary diverged under task retry")
     assert(back == cleanBack, "shard lines diverged under task retry")
+    graft.CacheRegistry.releaseAll(spark)
+  }
+
+  test("shard compaction killed after its first consolidated file leaves the view intact") {
+    graft.CacheRegistry.releaseAll(spark)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val fired = new AtomicInteger
+    // every attempt of a consolidation task dies once it has committed a
+    // file, so the job fails with committed gen-3 files and a dot-temp
+    TrainShardSink.faultInjector = (name, _, committed) =>
+      if (TrainShardSink.genOf(name) == 3 && committed >= 1) {
+        fired.incrementAndGet()
+        throw new java.io.IOException("SinkRetrySpec: consolidation killed after its first file")
+      }
+    try intercept[org.apache.spark.SparkException](ShardCompact.shardCompactWithDetail(spark, sf))
+    finally noShardFault()
+    assert(fired.get >= 1, "the fault never fired")
+    graft.CacheRegistry.releaseAll(spark)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "the killed compaction left a cached frame behind")
+    val root = ShardCompact.rootOf(sf)
+    val names = graft.Fs.list(java.nio.file.Paths.get(root, "shards"))
+      .map(_.getFileName.toString).toSet
+    val back = TrainShardSink.readBack(spark, root)
+    val killedView = TrainShardSink.resolve(back, dropTombstones = true).collect()
+      .map(r => (r.getAs[Int]("shard"), r.getAs[Long]("pos"), r.getAs[Long]("bin"),
+        r.getAs[Long]("seq_id"), r.getAs[Long]("n_tokens"), r.getAs[String]("docs"))).toSet
+    val readGens = back.select("gen").distinct().collect().map(_.getInt(0)).toSet
+    // a clean run replaces the store; its stage 0 is the pre-compaction
+    // view and its S0 files the pre-compaction file set
+    val (clean, detail) = ShardCompact.shardCompactWithDetail(spark, sf)
+    val cleanView = clean.collect().filter(_.getLong(0) == 0L)
+      .map(r => (r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4),
+        r.getLong(5), r.getString(6))).toSet
+    val preFiles = detail.files(0).keySet
+    assert(preFiles.subsetOf(names), "a pre-compaction file vanished")
+    val (temps, committed) = (names -- preFiles).partition(_.startsWith("."))
+    assert(committed.nonEmpty && committed.forall(TrainShardSink.genOf(_) == 3),
+      s"leftovers other than committed gen-3 files: $committed")
+    assert(temps.nonEmpty && temps.forall(_.endsWith(".tmp")),
+      s"leftovers other than dot-temps: $temps")
+    assert(readGens === Set(0, 1, 2, 3), "the read-back missed a generation or read a temp")
+    assert(killedView === cleanView, "the killed compaction changed the resolved view")
     graft.CacheRegistry.releaseAll(spark)
   }
 }
