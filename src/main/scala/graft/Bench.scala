@@ -69,24 +69,6 @@ object Bench {
     // (and the ones Plans captures for the audit)
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Conf isolation between timed queries: several queries tune session
-    // confs for their own shape (shuffle partitions for streaming state
-    // width, state-store provider, nativeTopK) and restore in `finally` —
-    // but one failed restore would silently re-time every LATER query
-    // under the wrong conf. Snapshot the tuned session here and force the
-    // session back to it after every iteration; drifted keys are reported
-    // to stderr (the JSON contract on stdout is untouched).
-    val baselineConf = spark.conf.getAll
-    def resetConfs(label: String): Unit = {
-      val cur = spark.conf.getAll
-      val drifted = baselineConf.collect { case (k, v) if !cur.get(k).contains(v) => k } ++
-        (cur.keySet -- baselineConf.keySet)
-      if (drifted.nonEmpty) System.err.println(s"[bench] $label left confs drifted: ${drifted.mkString(", ")}")
-      for ((k, v) <- baselineConf if !cur.get(k).contains(v))
-        try spark.conf.set(k, v) catch { case _: Throwable => () }
-      for (k <- cur.keySet -- baselineConf.keySet)
-        try spark.conf.unset(k) catch { case _: Throwable => () }
-    }
     // Warm-up at the smallest SF: pays codegen/JIT compilation once so the
     // timed runs below measure steady-state throughput (what a long-running
     // cluster job sees), not Janino compile latency.
@@ -118,7 +100,6 @@ object Bench {
         // same toRdd shape as the timed run — warms the FULL plan's codegen
         try fn(spark, warmDir).queryExecution.toRdd.count() catch { case _: Throwable => () }
         CacheRegistry.releaseAll(spark)
-        resetConfs("warmup")
       }
       System.err.println(f"[bench] warmup: ${toWarm.size}/${selected.size} queries in ${(System.currentTimeMillis() - w0) / 1e3}%.1fs (mode=$warmMode)")
     }
@@ -147,7 +128,6 @@ object Bench {
           None
         }
       CacheRegistry.releaseAll(spark) // caches must not carry across iterations
-      resetConfs(name)                // nor conf drift (see baselineConf)
       // NO System.gc() here: an explicit full GC between iterations was
       // measured to INFLATE the total 109→125s — it clears the JVM's
       // soft-referenced caches (codegen classes, file footers) that

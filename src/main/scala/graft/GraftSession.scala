@@ -21,6 +21,17 @@ object GraftSession {
     * object-store prefixes. */
   val PartitionDiscoveryThreshold = 1024
 
+  /** `spark.sql.maxPlanStringLength`: the cap on every plan rendered as a
+    * string. AQE renders the whole plan at each stage update for its
+    * listener event, and each `persist` names its cache by the plan's
+    * tree string. On the fused curation plans (`dedup_pipeline_mp_budget`
+    * over `tools/adv_gate.sh`'s 5,000-doc corpus) those strings grew
+    * `byte[]` to over 1 GB and exhausted a 4 GB driver heap; under this
+    * cap the row completes in 4 GB. Spark's default is unbounded. */
+  val MaxPlanStringLength = 65536
+
+  private val ShufflePartitionsKey = "spark.sql.shuffle.partitions"
+
   /** Sensible defaults for both local[N] dev and cluster submission. */
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
               shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt): SparkSession.Builder =
@@ -30,7 +41,7 @@ object GraftSession {
       .withExtensions(new GraftExtensions) // SQL functions + GroupedTopK strategy
       // Shuffle width: locally = cores; on a cluster this is overridden by
       // submit conf, and AQE coalesces down from it at runtime anyway.
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config(ShufflePartitionsKey, shufflePartitions.toString)
       // AQE: runtime re-planning (skew-join splitting, partition coalescing,
       // broadcast conversion) — essential at 100 TB where static stats lie.
       .config("spark.sql.adaptive.enabled", "true")
@@ -42,24 +53,33 @@ object GraftSession {
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         PartitionDiscoveryThreshold.toString)
+      .config("spark.sql.maxPlanStringLength", MaxPlanStringLength.toString)
       // the corpus's `events.ts` arrives as ns-precision longs (legacy
       // layouts) or timestamp[us] (driver corpora since r7) — both confs
-      // here so Tables.normalizeTs sees one stable read shape and the
-      // bench's conf-drift sentinel has them in its baseline
+      // here so Tables.normalizeTs sees one stable read shape
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
-  /** Streaming-state confs for production state sizes: the default
-    * HDFS-backed state store holds every key in executor heap — fine for
-    * demos, an OOM at 100 TB-scale session/dedup state. RocksDB spills to
-    * local disk with incremental checkpointing to the checkpoint location.
-    * Opt-in (separate from [[builder]]) because it only matters for
-    * stateful streaming jobs.
-    */
-  def withRocksDbState(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+  /** A child session of `spark` at shuffle width `parts`, with `confs`
+    * set on it — the one way a query runs under confs of its own (a loop
+    * or a streaming replay whose frames are orders below the corpus). The
+    * parent's conf is never written, so nothing has to be restored and a
+    * concurrent query on the parent never sees the child's settings. The
+    * child shares the parent's SparkContext and CacheManager, and copies
+    * its temp views, functions and listeners. Frames built on the child
+    * plan under the child's conf; frames built on the parent keep the
+    * parent's. */
+  def scoped(spark: SparkSession, parts: Int, confs: (String, String)*): SparkSession = {
+    val child = org.apache.spark.sql.graftbridge.DatasetBridge.cloneSession(spark)
+    ((ShufflePartitionsKey -> parts.toString) +: confs).foreach { case (k, v) => child.conf.set(k, v) }
+    child
+  }
+
+  /** `df`'s analyzed plan as a frame of `session`: the same rows, planned
+    * under `session`'s conf (cached fragments still resolve, because a
+    * parent and its [[scoped]] child share one CacheManager). */
+  def rebase(session: SparkSession, df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.graftbridge.DatasetBridge.ofRows(session, df.queryExecution.analyzed)
 
   def get(): SparkSession = {
     val spark = builder().getOrCreate()

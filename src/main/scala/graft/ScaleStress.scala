@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   *
   * knn_graph is measured twice: frozen C=64 (the documented O(n²·P/C)
   * candidate shape a fixed centroid count causes as n grows) and C ∝ √n
-  * via [[graft.queries.VectorQueries.CentroidsConfKey]] — the classic IVF
+  * via [[graft.queries.VectorQueries.knnGraph]]'s centroid count — the classic IVF
   * tuning that balances the O(n·C) assignment against the O(n²·P/C)
   * probe join at O(n^1.5) each (C ∝ n was measured here first and is
   * WORSE: it turns assignment itself quadratic).
@@ -139,8 +139,8 @@ object ScaleStress {
       "bm25_search" -> (TextQueries.bm25Search _),
       "hybrid_search" -> (VectorQueries.hybridSearch _),
       "retrieval_eval" -> (VectorQueries.retrievalEval _),
-      "knn_graph_c64" -> (VectorQueries.knnGraph _),
-      "knn_graph_cscaled" -> (VectorQueries.knnGraph _))
+      "knn_graph_c64" -> (VectorQueries.knnGraph(_, _)),
+      "knn_graph_cscaled" -> (VectorQueries.knnGraph(_, _)))
 
     val dirs: Seq[(String, String, Double)] = // (label, dir, relative SF vs sf0.1)
       Seq(("sf0.01", Small, 0.1), ("sf0.1", Base, 1.0)) ++
@@ -148,19 +148,18 @@ object ScaleStress {
 
     def timeOne(name: String, fn: (SparkSession, String) => DataFrame,
                 dir: String, relSf: Double): Double = {
-      if (name == "knn_graph_cscaled")
-        spark.conf.set(VectorQueries.CentroidsConfKey,
-          math.max(VectorQueries.Centroids, (VectorQueries.Centroids * math.sqrt(relSf)).toInt).toString)
+      // cscaled: C ∝ √n, never below the frozen 64
+      val run: (SparkSession, String) => DataFrame =
+        if (name != "knn_graph_cscaled") fn
+        else VectorQueries.knnGraph(_, _,
+          math.max(VectorQueries.Centroids, (VectorQueries.Centroids * math.sqrt(relSf)).toInt))
       val t0 = System.nanoTime()
       try {
-        fn(spark, dir).queryExecution.toRdd.count()
+        run(spark, dir).queryExecution.toRdd.count()
         // stop the clock BEFORE teardown: releaseAll/unpersist in the
         // finally block is harness bookkeeping, not query time
         (System.nanoTime() - t0) / 1e9
-      } finally {
-        spark.conf.unset(VectorQueries.CentroidsConfKey)
-        CacheRegistry.releaseAll(spark)
-      }
+      } finally CacheRegistry.releaseAll(spark)
     }
 
     // warmup (codegen/JIT) at the smallest SF
@@ -219,7 +218,7 @@ object ScaleStress {
         |  grow with the corpus, not quadratically — measured 1.9–3.9× at ×10.
         |- knn_graph is the deliberate contrast: `c64` freezes the centroid count —
         |  its candidate join is O(n²·P/C), the term that goes quadratic at 100 TB —
-        |  while `cscaled` turns the spark.graft.knn.centroids dial as C ∝ √n (the
+        |  while `cscaled` passes knnGraph a centroid count C ∝ √n (the
         |  classic IVF balance: assignment O(n·C) and probe O(n²·P/C) both O(n^1.5)).
         |  At the measured SFs the constant-cost floor still dominates both lines
         |  (the ×30 cells converge, 11.4s vs 12.0s; cscaled is absolutely faster

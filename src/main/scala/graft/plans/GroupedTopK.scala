@@ -16,17 +16,15 @@ import java.util.PriorityQueue
   * a custom logical node, its own column-pruning rule, a planner strategy
   * and a two-phase physical operator — replacing the
   * ObjectHashAggregate(TopKByScore) + posexplode + project chain the knn
-  * queries otherwise plan, while keeping the identical scale shape:
+  * queries would otherwise plan, while keeping the identical scale shape:
   * per-partition bounded heaps emit ≤k rows per (group, partition) to ONE
   * hash exchange on the group, and the final phase re-heaps and emits
-  * ranked rows directly — no array materialization, no generator.
-  *
-  * The aggregate formulation stays available as the fallback path
-  * ([[graft.queries.VectorQueries]] selects on `spark.graft.nativeTopK`).
+  * ranked rows directly — no array materialization, no generator. The knn
+  * queries always plan this operator ([[graft.queries.VectorQueries]]).
   *
   * Ordering matches [[graft.functions.TopKByScore]] exactly: score DESC,
-  * id ASC on 6dp-rounded ties — the two paths are row-for-row identical
-  * (GroupedTopKSpec proves it).
+  * id ASC on 6dp-rounded ties — the operator is row-for-row identical to
+  * the aggregate formulation (GroupedTopKSpec uses it as the reference).
   */
 object GroupedTopK {
 

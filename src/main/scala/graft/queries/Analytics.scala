@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Analytics / bench-head queries (SURVEY §2 №33-35).
@@ -180,6 +180,18 @@ object Analytics {
        |FROM sp_g CROSS JOIN sp_t
        |ORDER BY n_sessions DESC, path LIMIT $PathK""".stripMargin
 
+  /** The presentation sort of a CORPUS-CARDINALITY output. Several rows
+    * end in a global `orderBy` that exists ONLY so the driver's row-hash
+    * compare is deterministic — semantically the result is a row SET. On
+    * bounded outputs that sort is free; on per-user rollups
+    * ([[userHistory]], [[saltedJoin]]) it is a needless range exchange +
+    * full sort at 100 TB. Production passes `sorted = false` and gets the
+    * identical row set with the range exchange gone (plan-pinned in
+    * PlanRegressionSpec); the driver rows keep the default and its
+    * deterministic hashing. */
+  private def presentationSort(sorted: Boolean, cols: Column*)(df: DataFrame): DataFrame =
+    if (sorted) df.orderBy(cols: _*) else df
+
   // ---------------------------------------------------------------- №126 user_history
   /** Per-user CHRONOLOGICAL event-history strings truncated to the most
     * recent [[HistK]] events — the "user behavior sequence" a sequential
@@ -197,7 +209,7 @@ object Analytics {
     * string_agg cross-engine equivalence №63 proved. */
   val HistK = 8
 
-  def userHistory(spark: SparkSession, dir: String): DataFrame = {
+  def userHistory(spark: SparkSession, dir: String, sorted: Boolean = true): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy($"user_id")
@@ -216,7 +228,7 @@ object Analytics {
           array_sort(collect_list(struct($"rn", $"event_type"))),
           e => e.getField("event_type"))), ",").as("history"),
         max($"ts_ms").as("last_ms"))
-      .transform(graft.HashSort(_)($"user_id")) // driver-hash only: conf-gated off in production
+      .transform(presentationSort(sorted, $"user_id"))
   }
 
   val userHistorySql: String =
@@ -994,7 +1006,7 @@ object Analytics {
     * shrinks toward max_key/S on the injected distribution. */
   val SkewSalt = 8
 
-  def saltedJoin(spark: SparkSession, dir: String): DataFrame = {
+  def saltedJoin(spark: SparkSession, dir: String, sorted: Boolean = true): DataFrame = {
     import spark.implicits._
     val ev = Tables(spark, dir).events
       .select(when($"event_id" % 3 === 0, lit(0L)).otherwise($"user_id").as("skew_user"),
@@ -1014,7 +1026,7 @@ object Analytics {
       .agg(count(lit(1)).as("n_events"),
         max($"ts_ms" - $"first_ms").as("max_tenure_ms"),
         sum(when($"event_type" === "purchase", 1L).otherwise(0L)).as("n_purchase"))
-      .transform(graft.HashSort(_)($"user_id")) // driver-hash only: conf-gated off in production
+      .transform(presentationSort(sorted, $"user_id"))
   }
 
   val saltedJoinSql: String =

@@ -224,35 +224,35 @@ object CurationQueries {
     * recursive transitive-closure CTE and joins them back — a fully
     * independent formulation of the whole pipeline.
     */
-  /** Pair-finding mode of the pipeline: `ppjoin` (№24's prefix filter,
-    * the default) or `minhash_mp` (№173's banded multiprobe) — selected
-    * via conf, the [[graft.queries.CurationQueries.lineDedup]]
-    * auto/shuffle precedent. The modes differ ONLY in candidate
-    * generation; both verify with the same exact τ=3/5 test, so on a
-    * corpus where multiprobe recall is 1.0 (the gate corpora — measured
-    * by №173) the pipelines are row-identical (DedupPipelineModeSpec).
-    * At 100 TB the banded mode is the design that survives: candidate
-    * cost is bucket-bounded (with the cap guards), where the prefix
-    * join's gram lists grow with every boilerplate cluster. */
-  val PairModeConfKey = "spark.graft.dedup.pairMode"
-
   def dedupPipeline(spark: SparkSession, dir: String): DataFrame =
-    dedupPipelineWith(spark, dir, spark.conf.get(PairModeConfKey, "ppjoin"))
+    dedupPipelineWith(spark, dir, "ppjoin")
 
+  /** Pair-finding mode of the pipeline: `ppjoin` (№24's prefix filter,
+    * the [[dedupPipeline]] row), `minhash_mp` (№173's banded multiprobe)
+    * or `simhash_mp` (№188) — the [[graft.queries.CurationQueries.lineDedup]]
+    * auto/shuffle precedent. The modes differ ONLY in candidate
+    * generation; all verify with the same exact τ=3/5 test, so on a
+    * corpus where multiprobe recall is 1.0 (the gate corpora — measured
+    * by №173) the ppjoin and minhash_mp pipelines are row-identical
+    * (DedupPipelineModeSpec). At 100 TB the banded mode is the design
+    * that survives: candidate cost is bucket-bounded (with the cap
+    * guards), where the prefix join's gram lists grow with every
+    * boilerplate cluster. `mpBudget` is `minhash_mp`'s probe budget
+    * ([[HashDedup.mpCandidatesFrom]]; 0 = every probe). */
   private[graft] def dedupPipelineWith(spark: SparkSession, dir: String,
-                                         mode: String): DataFrame = {
+                                         mode: String, mpBudget: Int = 0): DataFrame = {
     import spark.implicits._
     val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
     val edges = mode match {
       case "ppjoin" => TextQueries.dedupNgramJaccardFrom(tok).select($"doc_a", $"doc_b")
       case "minhash_mp" =>
         TextQueries.verifyPairsOf(TextQueries.shingleFrameOf(tok),
-          HashDedup.mpCandidatesFrom(tok)).select($"doc_a", $"doc_b")
+          HashDedup.mpCandidatesFrom(tok, mpBudget)).select($"doc_a", $"doc_b")
       case "simhash_mp" =>
         TextQueries.verifyPairsOf(TextQueries.shingleFrameOf(tok),
           HashDedup.smpCandidatesFrom(tok)).select($"doc_a", $"doc_b")
       case other => throw new IllegalArgumentException(
-        s"$PairModeConfKey must be ppjoin | minhash_mp | simhash_mp, got $other")
+        s"dedup pipeline mode must be ppjoin | minhash_mp | simhash_mp, got $other")
     }
     val labels = TextQueries.clusterLabelsFrom(spark, edges)
     val sizes = labels.groupBy($"label").agg(count(lit(1)).as("n_members"))
@@ -361,7 +361,7 @@ object CurationQueries {
 
   // ------------------------------------------------------------ №183 dedup_pipeline_mp_budget
   /** №183 `dedup_pipeline_mp_budget`: the banded-multiprobe pipeline mode
-    * under a [[HashDedup.MpBudgetConfKey]] probe budget — №181's
+    * under a [[PipelineMpBudget]] probe budget — №181's
     * rare-first DF ranking put to PRODUCTION work, with the trade
     * measured BOTH ways. The budget cuts the probe-lookup bill 6×
     * (bands·r=12 → T=[[PipelineMpBudget]] keys per doc); output is a
@@ -383,18 +383,8 @@ object CurationQueries {
     * is the ranking that wins there). */
   val PipelineMpBudget: Int = HashDedup.MpDefaultBudget
 
-  def dedupPipelineMpBudget(spark: SparkSession, dir: String): DataFrame = {
-    // Snapshot-and-restore rather than unset (r13 advice): unset would
-    // clobber a caller-set budget, silently changing the candidates a
-    // concurrent dedup_pipeline_mp on the same session picks up.
-    val prior = spark.conf.getOption(HashDedup.MpBudgetConfKey)
-    spark.conf.set(HashDedup.MpBudgetConfKey, PipelineMpBudget.toString)
-    try dedupPipelineWith(spark, dir, "minhash_mp")
-    finally prior match {
-      case Some(v) => spark.conf.set(HashDedup.MpBudgetConfKey, v)
-      case None    => spark.conf.unset(HashDedup.MpBudgetConfKey)
-    }
-  }
+  def dedupPipelineMpBudget(spark: SparkSession, dir: String): DataFrame =
+    dedupPipelineWith(spark, dir, "minhash_mp", PipelineMpBudget)
 
   val dedupPipelineMpBudgetSql: String =
     s"""WITH RECURSIVE ${HashDedup.mpChainSql},

@@ -466,18 +466,16 @@ object PipelineQueries {
     * cardinality. Sketch percentiles are discrete values with a
     * one-sided rank-overcount bias (est ≤ exact, №158's guarantee), so
     * no oracle equality — CorpusStatsApproxSpec pins the one-sidedness,
-    * an exact plain-Scala grid replay, and bounds the drift instead. */
-  def corpusStatsWith(spark: SparkSession, dir: String, exact: Boolean): DataFrame =
-    corpusStatsWith(spark, dir, exact, levels = 0)
-
-  /** `levels` sizes the sketch's value domain to [0, 2^levels): ≤ 0 reads
-    * conf `spark.graft.corpusStats.levels` (default [[TextQueries.QsLevels]],
-    * the gate geometry — 10 bits / 1023 tokens; 17 covers 128k-token
-    * contexts). The clamp is never silent: approx output carries
-    * `n_clamped` (docs whose n_tok exceeded the domain and were reported
-    * AT the ceiling), so a corpus that outgrows the dial is visible in
-    * the audit row itself, not discovered when p99 flatlines. */
-  def corpusStatsWith(spark: SparkSession, dir: String, exact: Boolean, levels: Int): DataFrame = {
+    * an exact plain-Scala grid replay, and bounds the drift instead.
+    *
+    * `levels` sizes the sketch's value domain to [0, 2^levels) (default
+    * [[TextQueries.QsLevels]], the gate geometry — 10 bits / 1023 tokens;
+    * 17 covers 128k-token contexts). The clamp is never silent: approx
+    * output carries `n_clamped` (docs whose n_tok exceeded the domain and
+    * were reported AT the ceiling), so a corpus that outgrows the dial is
+    * visible in the audit row itself, not discovered when p99 flatlines. */
+  def corpusStatsWith(spark: SparkSession, dir: String, exact: Boolean,
+                      levels: Int = TextQueries.QsLevels): DataFrame = {
     import spark.implicits._
     val base = Tables(spark, dir).documents
       .select($"lang", size(words($"text")).cast("long").as("n_tok"))
@@ -495,24 +493,20 @@ object PipelineQueries {
           round($"p99" + 1e-9, 6).as("p99"))
         .orderBy($"lang")
     else {
-      val lv =
-        if (levels > 0) levels
-        else spark.conf.getOption("spark.graft.corpusStats.levels")
-          .map(_.toInt).getOrElse(TextQueries.QsLevels)
-      require(lv >= 1 && lv <= 20, s"corpusStats levels $lv out of sketch range [1, 20]")
+      require(levels >= 1 && levels <= 20, s"corpusStats levels $levels out of sketch range [1, 20]")
       val (dp, wd) = (TextQueries.QsDepth, TextQueries.QsWidth)
-      val mx = (1L << lv) - 1
+      val mx = (1L << levels) - 1
       val agg = base.groupBy($"lang").agg(
         count(lit(1)).as("n_docs"), sum($"n_tok").as("n_tokens"),
         sum(when($"n_tok" > mx, 1L).otherwise(0L)).as("n_clamped"),
-        graft.functions.DyadicCountMin.sketch(least($"n_tok", lit(mx)), lv, dp, wd).as("g"))
+        graft.functions.DyadicCountMin.sketch(least($"n_tok", lit(mx)), levels, dp, wd).as("g"))
       val slots = agg.select($"lang", posexplode($"g"))
         .select($"lang", $"pos".cast("long").as("i"), $"col".as("c"))
       // candidates = the full (constant) value domain, NOT the data
       val cand = agg.select($"lang", $"n_docs")
-        .crossJoin(spark.range(0L, 1L << lv).select($"id".as("v")))
+        .crossJoin(spark.range(0L, 1L << levels).select($"id".as("v")))
       val er = cand.select($"lang", $"v")
-        .withColumn("l", explode(sequence(lit(0), lit(lv - 1))))
+        .withColumn("l", explode(sequence(lit(0), lit(levels - 1))))
         .filter(expr("(shiftright(v + 1, l) & 1) = 1"))
         .withColumn("idx", expr("shiftright(v + 1, l) - 1"))
         .withColumn("d", explode(sequence(lit(0), lit(dp - 1))))

@@ -574,7 +574,6 @@ object TextQueries {
     // corpus-sized: run the loop at a narrow shuffle width — 32 partitions
     // of ~10 rows each just pays scheduler overhead per round. Production
     // sizes this to |dup pairs|, which is orders below the corpus.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     val loopWidth = 8
     // Symmetric + SELF-LOOP edges in ONE pass over the pair frame (a union
     // of two selects would evaluate the whole pair-finding subtree once per
@@ -597,7 +596,6 @@ object TextQueries {
         .persist())
     var cached = sym.select($"n".as("doc_id")).distinct()
       .withColumn("label", $"doc_id").persist()
-    var labels = cached
     // Convergence detection: labels only ever DECREASE, so the label sum
     // strictly decreases iff any label changed — one mergeable agg per
     // round instead of a change-flag join-back. decimal(38,0) cannot
@@ -607,25 +605,27 @@ object TextQueries {
     // lazy, so without it the heaviest stage would run at iteration width.
     def labelSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum($"label".cast("decimal(38,0)"))).collect()(0).getDecimal(0)
-    var prevSum = labelSum(labels)
+    var prevSum = labelSum(cached)
     var rounds = 0
     var converged = prevSum == null // empty edge set: nothing to propagate
-    spark.conf.set("spark.sql.shuffle.partitions", loopWidth.toString)
-    try while (!converged && rounds < 50) {
-      val next = sym.join(labels.select($"doc_id".as("m"), $"label".as("ml")), "m")
+    // the rounds plan on a child session at the loop width: a join plans
+    // in its left side's session, so sym is rebased onto it once
+    val loopSym = graft.GraftSession.rebase(graft.GraftSession.scoped(spark, loopWidth), sym)
+    while (!converged && rounds < 50) {
+      val next = loopSym.join(cached.select($"doc_id".as("m"), $"label".as("ml")), "m")
         .groupBy($"n".as("doc_id")).agg(min($"ml").as("label"))
         .persist()
       val s = labelSum(next)
       cached.unpersist()
       cached = next
-      labels = next
       rounds += 1
       converged = s.compareTo(prevSum) == 0
       prevSum = s
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     require(converged, s"label propagation did not converge in $rounds rounds")
-    graft.CacheRegistry.track(cached)
-    labels
+    // back on the caller's session: its consumers plan at its width, and
+    // its releaseAll reaches the last round's cache
+    graft.CacheRegistry.track(graft.GraftSession.rebase(spark, cached))
   }
 
   /** The transitive-closure CTE chain shared by [[dedupClusterSql]] and
@@ -1272,11 +1272,6 @@ object TextQueries {
     out.result()
   }
 
-  /** Training-loop mode conf: `distributed` (default — K vocab-bounded
-    * Spark rounds) or `local` ([[bpeLearnMergesLocal]] — collect the
-    * bounded vocab once, run the merge rounds driver-side). */
-  val BpeModeConfKey = "spark.graft.bpe.mode"
-
   /** Driver-LOCAL training loop — the production shape at real vocab
     * sizes: at 32k merges, K sequential Spark jobs is the wrong loop (per-
     * job scheduling dwarfs the vocab-bounded work). The ONE corpus-sized
@@ -1331,11 +1326,13 @@ object TextQueries {
     * subword algorithm, Sennrich et al. 2016). [[BpeMerges]] rounds of:
     * count adjacent symbol pairs over the weighted vocabulary, merge the
     * highest-count pair everywhere (ties: pair ASC), emit the merge
-    * table — the learned tokenizer model. Mode via [[BpeModeConfKey]]:
-    * the distributed loop is the K-small proof shape; `local` is the
-    * production loop at real vocab sizes ([[bpeLearnMergesLocal]]). */
+    * table — the learned tokenizer model. The row runs the distributed
+    * loop (K vocab-bounded Spark rounds), the K-small proof shape;
+    * [[bpeTrainWith]] `local` is the production loop at real vocab sizes
+    * ([[bpeLearnMergesLocal]] — collect the bounded vocab once, run the
+    * merge rounds driver-side). */
   def bpeTrain(spark: SparkSession, dir: String): DataFrame =
-    bpeTrainWith(spark, dir, spark.conf.get(BpeModeConfKey, "distributed"))
+    bpeTrainWith(spark, dir, "distributed")
 
   def bpeTrainWith(spark: SparkSession, dir: String, mode: String): DataFrame = {
     import spark.implicits._
@@ -3120,14 +3117,12 @@ object HashDedup {
     * pairs, deduped — candidates only; the pipeline verifies them with
     * the same exact τ=3/5 test as the PPJoin mode
     * ([[TextQueries.verifyPairsOf]]). Honors [[BucketCapConfKey]] on
-    * BOTH joins (bucket self-join and the probe join's base side), and
-    * [[MpBudgetConfKey]] (№183): a budget T > 0 spends only the top-T
-    * DF-ranked probes per doc (№181's rare-first ranking — the measured
-    * front-loader), cutting the probe bill from bands·r·docs to T·docs. */
-  val MpBudgetConfKey = "spark.graft.dedup.mpBudget"
-
-  private[graft] def mpCandidatesFrom(tok: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val budget = tok.sparkSession.conf.get(MpBudgetConfKey, "0").toInt
+    * BOTH joins (bucket self-join and the probe join's base side). A
+    * `budget` T > 0 (№183) spends only the top-T DF-ranked probes per doc
+    * (№181's rare-first ranking — the measured front-loader), cutting the
+    * probe bill from bands·r·docs to T·docs; 0 probes every key. */
+  private[graft] def mpCandidatesFrom(tok: org.apache.spark.sql.DataFrame,
+                                      budget: Int = 0): org.apache.spark.sql.DataFrame = {
     val (sig, probes) =
       if (budget <= 0) {
         val sig = graft.CacheRegistry.track(mpSigFrom(tok).persist())

@@ -32,17 +32,10 @@ object VectorQueries {
     * Production tuning: C grows with the corpus (cell-size-constant C ∝ n
     * keeps the probe-join candidate count O(n·P·cellsize) — LINEAR; a
     * frozen C makes it O(n²·P/C), which the ScaleStress harness exposes
-    * empirically). Settable per session via [[CentroidsConfKey]]; 64 is
-    * proof-sized for the sf corpora and the oracle default. */
+    * empirically). [[knnGraph]] takes C as an argument (the C ∝ n dial
+    * the scaling harness turns); 64 is proof-sized for the sf corpora and
+    * the oracle default. */
   val Centroids = 64
-
-  /** Session override for the IVF centroid count (the C ∝ n dial the
-    * scaling harness turns; the driver gate never sets it, so oracles see
-    * [[Centroids]]). The k-means sample scales to ≥ 4·C alongside. */
-  val CentroidsConfKey = "spark.graft.knn.centroids"
-
-  private def centroidsOf(spark: SparkSession): Int =
-    spark.conf.get(CentroidsConfKey, Centroids.toString).toInt
 
   /** k-means sample size — CONSTANT at any corpus scale (the sample is the
     * hash-ordered first M, collected to the driver: ~M·dim floats). */
@@ -91,12 +84,10 @@ object VectorQueries {
     * than the previous in-plan sample (no re-scan per consumer). Empty
     * clusters drop (both engines agree: group-by semantics). */
   private[graft] def refinedCentroids(spark: SparkSession, corpus: DataFrame,
-                                        k: Int = -1): DataFrame = {
+                                        k: Int = Centroids): DataFrame = {
     import spark.implicits._
-    // k = -1: resolve from the session conf (scaling harness); callers that
-    // pass an explicit k (the oracle-matched queries) are untouched
-    val kk = if (k > 0) k else centroidsOf(spark)
-    lloydRefine(hashSample(corpus, math.max(SampleM, 4 * kk)), kk).toSeq.toDF("c_id", "c_emb")
+    // the k-means sample scales to ≥ 4·k alongside
+    lloydRefine(hashSample(corpus, math.max(SampleM, 4 * k)), k).toSeq.toDF("c_id", "c_emb")
   }
 
   /** The constant-size hash-ordered sample ([[SampleM]] full vectors to
@@ -257,19 +248,11 @@ object VectorQueries {
 
   /** Ranked grouped top-k: the custom whole-operator path
     * ([[graft.plans.GroupedTopK]] — logical node + pruning rule + two-phase
-    * physical plan) by default; `spark.graft.nativeTopK=false` falls back
-    * to the TopKByScore aggregate + posexplode chain. Row-identical either
-    * way (GroupedTopKSpec), same scale shape (≤k rows per partition into
-    * one hash exchange on the group). */
-  private[queries] def topKRanked(df: DataFrame, group: String, score: String, id: String, k: Int): DataFrame = {
-    if (df.sparkSession.conf.get("spark.graft.nativeTopK", "true").toBoolean)
-      graft.plans.GroupedTopK.rankedTopK(df, group, score, id, k)
-    else
-      df.groupBy(col(group))
-        .agg(graft.functions.TopKByScore.topK(col(score), col(id), k).as("top"))
-        .select(col(group), posexplode(col("top")).as(Seq("pos", "e")))
-        .select(col(group), col("e.id").as(id), col("e.score").as(score), (col("pos") + 1).as("rank"))
-  }
+    * physical plan). GroupedTopKSpec pins it row-identical to the
+    * TopKByScore aggregate + posexplode formulation, with the same scale
+    * shape (≤k rows per partition into one hash exchange on the group). */
+  private[queries] def topKRanked(df: DataFrame, group: String, score: String, id: String, k: Int): DataFrame =
+    graft.plans.GroupedTopK.rankedTopK(df, group, score, id, k)
 
   // ---------------------------------------------------------------- №26 knn_brute
   /** Brute-force top-k cosine: queries (tiny) are broadcast; the corpus is
@@ -298,10 +281,6 @@ object VectorQueries {
        |ORDER BY q_id, rank""".stripMargin
 
   // ---------------------------------------------------------------- №27 knn_ivf
-  /** Session conf exposing the IVF probe width as the QUERY parameter it
-    * is internally ([[knnIvfWith]]); default = [[Probe]]. */
-  val ProbeConfKey = "spark.graft.knn.probe"
-
   /** IVF: FIXED-C deterministic centroids (hash-ordered sample of the
     * corpus — constant-size broadcast at any corpus size), cells = nearest
     * centroid per corpus vector, probe = top-P cells per query, search only
@@ -310,25 +289,23 @@ object VectorQueries {
     * sample itself is a TakeOrderedAndProject (per-partition top-C, no full
     * sort shuffle).
     *
-    * Probe width comes from `spark.graft.knn.probe` (default [[Probe]]) —
-    * the recall/cost dial a user turns WITHOUT changing the plan shape.
+    * The row probes [[Probe]] cells; [[knnIvfWith]] takes the probe width
+    * — the recall/cost dial a user turns WITHOUT changing the plan shape.
     * Recall contract at the default: [[knnRecall]] MEASURES recall@[[K]]
     * per probe width on the live corpus (sf0.01 curve: 0.18 / 0.60 / 0.94
     * at probe 2 / 8 / 32 of [[Centroids]]=64 cells); QuerySpecs pins the default's
-    * floor and that the conf actually moves the dial (probe=[[Centroids]] ≡
+    * floor and that the width actually moves the dial (probe=[[Centroids]] ≡
     * exhaustive ⇒ recall 1.0). On an isotropic random corpus low-probe
     * recall is intrinsically poor — production picks the probe from the
     * measured curve, which is exactly what this parameter feeds. */
-  def knnIvf(spark: SparkSession, dir: String): DataFrame = {
-    val probe = spark.conf.get(ProbeConfKey, Probe.toString).toInt
-    require(probe >= 1, s"$ProbeConfKey must be >= 1, got $probe")
-    knnIvfWith(spark, dir, probe)
-  }
+  def knnIvf(spark: SparkSession, dir: String): DataFrame =
+    knnIvfWith(spark, dir, Probe)
 
   /** [[knnIvf]] with an explicit probe width — the recall/cost knob
     * ([[knnRecall]] measures the curve: more probed cells → more of the
     * corpus scanned → higher recall, linearly more work). */
   def knnIvfWith(spark: SparkSession, dir: String, probe: Int): DataFrame = {
+    require(probe >= 1, s"knn_ivf probe width must be >= 1, got $probe")
     val (queries, corpus) = querySplit(vectorsOf(spark, dir))
     val centroids = refinedCentroids(spark, corpus)
     ivfSearch(cellsOf(corpus, centroids), centroids, queries, probe, K)
@@ -468,9 +445,9 @@ object VectorQueries {
     * TopKByScore aggregate (≤k rows per partition to the final shuffle).
     * Only the fixed-C centroid sample is broadcast (constant size).
     */
-  def knnGraph(spark: SparkSession, dir: String): DataFrame = {
+  def knnGraph(spark: SparkSession, dir: String, centroidCount: Int = Centroids): DataFrame = {
     val v = vectorsOf(spark, dir)
-    val centroids = refinedCentroids(spark, v)
+    val centroids = refinedCentroids(spark, v, centroidCount)
 
     val cells = v.join(broadcast(centroids))
       .select(col("vec_id"), col("emb"), col("c_id"), cosine6(col("emb"), col("c_emb")).as("ccos"))
@@ -899,14 +876,13 @@ object VectorQueries {
   }
 
   /** Bench hook: drop the persisted №119 centroid model + bucketed base
-    * index for `dir` (at the session's effective centroid count), so the
+    * index for `dir`, so the
     * harness can measure the COLD first-build cost as its own artifact
     * number — the steady-state median alone under-reports what a fresh
     * corpus version pays (~5× at sf0.1). */
   def dropIndexUpdateCaches(spark: SparkSession, dir: String): Unit = {
-    val cc = centroidsOf(spark)
-    Seq(("graft_models", s"graft_ivfupd_cent_${dirKey(dir)}_c$cc"),
-        ("graft_bucketed", s"graft_ivfupd_base_${dirKey(dir)}_c$cc")).foreach {
+    Seq(("graft_models", s"graft_ivfupd_cent_${dirKey(dir)}_c$Centroids"),
+        ("graft_bucketed", s"graft_ivfupd_base_${dirKey(dir)}_c$Centroids")).foreach {
       case (store, t) =>
         spark.sql(s"DROP TABLE IF EXISTS $t")
         val path = java.nio.file.Paths.get(
@@ -949,15 +925,11 @@ object VectorQueries {
     val (queries, corpus) = querySplit(vectorsOf(spark, dir))
     val base = corpus.filter(col("vec_id") % BatchMod =!= 0)
     val batch = corpus.filter(col("vec_id") % BatchMod === 0)
-    // build-if-absent: base-sized work happens ONCE per corpus version.
-    // The effective centroid count is part of the cache key: a session
-    // that first ran with spark.graft.knn.centroids set must not leak a
-    // wrong-C model (or its dependent cell layout) into conf-default runs.
-    val cc = centroidsOf(spark)
-    val centroids = cachedModel(spark, s"graft_ivfupd_cent_${dirKey(dir)}_c$cc")(
-      refinedCentroids(spark, base, cc)) // the FROZEN model
+    // build-if-absent: base-sized work happens ONCE per corpus version
+    val centroids = cachedModel(spark, s"graft_ivfupd_cent_${dirKey(dir)}_c$Centroids")(
+      refinedCentroids(spark, base)) // the FROZEN model
     val index = graft.sources.Bucketing.bucketedCached(
-      spark, s"graft_ivfupd_base_${dirKey(dir)}_c$cc", "cell")(
+      spark, s"graft_ivfupd_base_${dirKey(dir)}_c$Centroids", "cell")(
       cellsOf(base, centroids))                   // the persisted №72 layout
     val arrivals = cellsOf(batch, centroids)      // batch-sized daily work
     // unionByName: the persisted table's column order is a storage detail

@@ -3,19 +3,15 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Shared scaffold for the driver-verified streaming replays
-  * (StreamDedup / StatefulSessionize / StreamJoin / StreamAsof): every
-  * harness pins the production RocksDB state-store provider and a
-  * state-volume-sized shuffle width, and must restore BOTH and unload its
-  * state providers even when the replay fails — getting that finally
-  * chain wrong in one copy re-introduces the r6 provider-accumulation
-  * drag or leaks pinned confs into every later query. One definition,
-  * six call sites.
+/** Shared scaffold for the driver-verified streaming replays: every
+  * replay runs on its own child session at a state-volume-sized shuffle
+  * width with the production RocksDB state-store provider, and stops its
+  * queries and unloads its state providers even when it fails. One
+  * definition for every replay.
   */
 private[streaming] object ReplayHarness {
 
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDb =
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Land the replay's input bands as parquet files with strictly
@@ -44,36 +40,30 @@ private[streaming] object ReplayHarness {
     }
   }
 
-  /** Run `body` under the pinned replay confs. `body` receives a
+  /** Run `body` on a child session of `spark` ([[graft.GraftSession.scoped]])
+    * at shuffle width `parts` with the RocksDB provider. Spark clones a
+    * stream's session at `start()` and the offset log fixes its state
+    * width, so `body` must build its `readStream`, its frames and its
+    * `start()` on the session it is handed — shadowing `spark` with the
+    * lambda's parameter makes that the default. `body` also receives a
     * `register` callback and MUST pass it every query it starts; the
     * finally chain then — in order — stops registered queries, unloads
     * this replay's state-store providers (see StateStoreBridge scaladoc),
-    * drops the memory-sink view, restores the shuffle width and the
-    * provider conf, and finally runs `andThen` (file-scratch cleanup,
-    * which must come after the queries are stopped).
-    *
-    * Conf restore subtlety: the previous provider is read via
-    * `conf.getAll` (EXPLICIT entries only) — `getOption` would return the
-    * registered default and turn the finally-restore into an explicit
-    * pin. */
-  def replay[A](spark: SparkSession, parts: Int, viewName: String,
-                andThen: () => Unit = () => ())
-               (body: (StreamingQuery => Unit) => A): A = {
-    val prev = spark.conf.getAll.get(ProviderKey)
-    spark.conf.set(ProviderKey, RocksDb)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    * releases the caches [[graft.CacheRegistry]] tracked under the child,
+    * detaches the child's streaming listeners (DatasetBridge.detachStreams)
+    * and runs `andThen` (file-scratch cleanup, which must come after the
+    * queries are stopped). The child, its memory-sink views with it, is
+    * then unreachable; the caller's session is never written. */
+  def replay[A](spark: SparkSession, parts: Int, andThen: () => Unit = () => ())
+               (body: (SparkSession, StreamingQuery => Unit) => A): A = {
+    val scope = graft.GraftSession.scoped(spark, parts, RocksDb)
     val queries = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
-    try body(queries += _)
+    try body(scope, queries += _)
     finally {
       queries.foreach(q => if (q != null) q.stop()) // a failed replay must not leak the query + state
       org.apache.spark.sql.graftbridge.StateStoreBridge.unloadAll()
-      spark.catalog.dropTempView(viewName)
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prev match {
-        case Some(p) => spark.conf.set(ProviderKey, p)
-        case None => spark.conf.unset(ProviderKey)
-      }
+      graft.CacheRegistry.releaseAll(scope)
+      org.apache.spark.sql.graftbridge.DatasetBridge.detachStreams(scope, queries.filter(_ != null).toSeq)
       andThen()
     }
   }

@@ -122,7 +122,6 @@ object StatefulSessionize {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.expressions.Window
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val gapMs = graft.queries.Analytics.SessionGapMs
     val delay = "30 minutes"
     val evs = graft.Tables(spark, dir).events
@@ -133,8 +132,9 @@ object StatefulSessionize {
     // RocksDB instance per micro-batch, and at proof-size state that
     // per-instance overhead dominates (32 partitions x ~7 batches was
     // ~1.5x slower than 8). Production sizes this at checkpoint creation
-    // against expected keys/executor. ReplayHarness pins + restores.
-    val out = ReplayHarness.replay(spark, 8, name) { register =>
+    // against expected keys/executor. ReplayHarness sets the width.
+    val out = ReplayHarness.replay(spark, 8) { (spark, register) =>
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val input = MemoryStream[Ev]
       val q = sessionizeIncremental(input.toDS(), gapMs, delay)
         .writeStream.format("memory").queryName(name)
@@ -193,12 +193,12 @@ object StatefulSessionize {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.expressions.Window
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val gapMs = graft.queries.Analytics.SessionGapMs
     val evs = graft.Tables(spark, dir).events
       .select($"user_id", $"ts_ms").as[Ev].orderBy($"ts_ms").collect()
     val name = s"stream_sessions_bi_${System.nanoTime()}"
-    val out = ReplayHarness.replay(spark, 8, name) { register =>
+    val out = ReplayHarness.replay(spark, 8) { (spark, register) =>
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val input = MemoryStream[Ev]
       val q = input.toDS()
         .withColumn("ts_utc", timestamp_millis($"ts_ms"))

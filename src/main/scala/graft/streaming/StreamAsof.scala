@@ -58,15 +58,15 @@ object StreamAsof {
   def streamAsof(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val e = graft.Tables(spark, dir).events
       .filter($"event_type".isin("view", "purchase"))
       .select($"user_id", $"ts_ms", $"event_id", ($"event_type" === "purchase").as("is_probe"))
       .as[TEv].collect()
       .sortBy(t => (t.ts_ms, if (t.is_probe) 1 else 0, t.event_id))
     val name = s"stream_asof_${System.nanoTime()}"
-    // state partitions sized to state volume (ReplayHarness pins + restores)
-    val out = ReplayHarness.replay(spark, 8, name) { register =>
+    // state partitions sized to state volume (the ReplayHarness width)
+    val out = ReplayHarness.replay(spark, 8) { (spark, register) =>
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val input = MemoryStream[TEv]
       val q = asof(input.toDS())
         .writeStream.format("memory").queryName(name)

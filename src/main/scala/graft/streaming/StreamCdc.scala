@@ -33,8 +33,8 @@ object StreamCdc {
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts_ms"))
 
     val name = s"stream_cdc_${System.nanoTime()}"
-    val rows: Array[org.apache.spark.sql.Row] = ReplayHarness.replay(spark, 8, name,
-      andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    val rows: Array[org.apache.spark.sql.Row] = ReplayHarness.replay(spark, 8,
+      andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       // land three EVENT-ID bands — deliberately NOT time order: the
       // state terms must absorb out-of-order arrival
       ReplayHarness.landBands(scratch, inDir, (0 until 3).map { i =>

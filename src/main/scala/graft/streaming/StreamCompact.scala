@@ -89,9 +89,9 @@ object StreamCompact {
     var batches = -1
     // the arrival frames are cached in the stream's cloned session (C1
     // consolidates from them), so the replay releases them when it ends
-    ReplayHarness.replay(spark, 8, name, andThen = () => {
+    ReplayHarness.replay(spark, 8, andThen = () => {
       graft.CacheRegistry.release(landed.drop(1)); graft.Fs.rmTree(scratch)
-    }) { register =>
+    }) { (spark, register) =>
       phase("replay input")(ReplayHarness.landBands(scratch, inDir, bands.map(_.coalesce(1))))
       val stream = spark.readStream
         .schema("vec_id LONG, kind LONG, emb ARRAY<FLOAT>")

@@ -29,8 +29,8 @@ object StreamContract {
     val types = Seq("view", "click", "purchase", "signup", "error")
     val scratch = java.nio.file.Files.createTempDirectory("graft_stream_contract_")
     val name = s"stream_contract_${System.nanoTime()}"
-    val out: Array[(String, Long, Long)] = ReplayHarness.replay(spark, 8, name,
-      andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    val out: Array[(String, Long, Long)] = ReplayHarness.replay(spark, 8,
+      andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       // land the feed as 3 id-band files with ordered mtimes (№36d's
       // landing shape) so the running totals provably cross micro-batches
       val inDir = scratch.resolve("in"); java.nio.file.Files.createDirectories(inDir)

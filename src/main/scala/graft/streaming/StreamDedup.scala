@@ -35,7 +35,6 @@ object StreamDedup {
   def streamDedup(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = graft.queries.TextQueries.dupCorpus(spark, dir)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .collect()
@@ -44,8 +43,9 @@ object StreamDedup {
     val name = s"stream_dedup_${System.nanoTime()}"
     // state partitions sized to STATE VOLUME, not cores (see
     // StatefulSessionize.streamSessionize — same RocksDB-per-partition-
-    // per-batch overhead); ReplayHarness pins + restores the confs
-    val out = ReplayHarness.replay(spark, 8, name) { register =>
+    // per-batch overhead); ReplayHarness sets the width
+    val out = ReplayHarness.replay(spark, 8) { (spark, register) =>
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val input = MemoryStream[Doc]
       val q = dedup(input.toDS(), "7 days")
         .writeStream.format("memory").queryName(name)
@@ -102,7 +102,7 @@ object StreamDedup {
     val name = s"stream_dedup_files_${System.nanoTime()}"
     // scratch (input files + checkpoint) is per-run; removed AFTER the
     // query stops (ReplayHarness runs andThen last)
-    val out = ReplayHarness.replay(spark, 8, name, andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    val out = ReplayHarness.replay(spark, 8, andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       // land each id band as parquet files with strictly increasing mod
       // times — a DISTRIBUTED write (2 files per band keeps the replay
       // multi-file within bands too)

@@ -58,7 +58,7 @@ object StreamDedupIndex {
     val out = new HashDedup.ServeLog("night", "n_index_rows", "n_lookups", "n_candidates", "n_true", "n_hit")
     val servedFiles = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
     var batches = -1
-    ReplayHarness.replay(spark, 8, name, andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    ReplayHarness.replay(spark, 8, andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       // E0: the base index lands before the stream opens
       ofCls(c => !c.isin(1L, 2L, 3L)).repartition(4)
         .write.mode("overwrite").parquet(store.toString)

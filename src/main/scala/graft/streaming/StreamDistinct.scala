@@ -35,8 +35,8 @@ object StreamDistinct {
     val shingleExpr = graft.queries.TextQueries.TrigramCase
 
     val name = s"stream_hll_${System.nanoTime()}"
-    val streamed: Array[(String, Seq[Int])] = ReplayHarness.replay(spark, 8, name,
-      andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    val streamed: Array[(String, Seq[Int])] = ReplayHarness.replay(spark, 8,
+      andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       ReplayHarness.landBands(scratch, inDir, (0 until 3).map { i =>
         docs.filter(col("doc_id") % 3 === i).coalesce(1) })
       val stream = spark.readStream

@@ -102,9 +102,9 @@ object StreamForget {
     // the arrival and manifest frames are cached in the stream's cloned
     // session (later batches rewrite from them), so the replay releases
     // them when it ends
-    ReplayHarness.replay(spark, 8, name, andThen = () => {
+    ReplayHarness.replay(spark, 8, andThen = () => {
       graft.CacheRegistry.release(landed.drop(1) ++ forgotten); graft.Fs.rmTree(scratch)
-    }) { register =>
+    }) { (spark, register) =>
       ReplayHarness.landBands(scratch, inDir, bands.map(_.coalesce(1)))
       val stream = spark.readStream
         .schema("vec_id LONG, kind LONG, emb ARRAY<FLOAT>")

@@ -34,8 +34,8 @@ object StreamFreq {
     val docs = graft.Tables(spark, dir).documents.select(col("doc_id"), col("source"), col("text"))
 
     val name = s"stream_cms_${System.nanoTime()}"
-    val grids: Array[(Int, Seq[Long])] = ReplayHarness.replay(spark, 8, name,
-      andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    val grids: Array[(Int, Seq[Long])] = ReplayHarness.replay(spark, 8,
+      andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       ReplayHarness.landBands(scratch, inDir, (0 until 3).map { i =>
         docs.filter(col("doc_id") % 3 === i).coalesce(1) })
       val stream = spark.readStream

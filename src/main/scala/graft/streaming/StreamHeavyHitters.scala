@@ -44,8 +44,8 @@ object StreamHeavyHitters {
     val docs = graft.Tables(spark, dir).documents.select(col("doc_id"), col("text"))
 
     val name = s"stream_hh_${System.nanoTime()}"
-    val candidates: Array[String] = ReplayHarness.replay(spark, 8, name,
-      andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    val candidates: Array[String] = ReplayHarness.replay(spark, 8,
+      andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       // land three id bands with strictly increasing mtimes (№36d landing)
       ReplayHarness.landBands(scratch, inDir, (0 until 3).map { i =>
         docs.filter(col("doc_id") % 3 === i).coalesce(1) })

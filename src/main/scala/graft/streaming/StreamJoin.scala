@@ -60,7 +60,6 @@ object StreamJoin {
   def streamJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ev = graft.Tables(spark, dir).events
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts_ms"))
     def side(etype: String): Array[Ev] = ev
@@ -76,8 +75,9 @@ object StreamJoin {
     // FOUR state stores per partition (left/right × two indexes), so the
     // per-batch store overhead is 4x a dedup's at the same width: 4
     // partitions is plenty for the proof corpus's ~4k buffered events.
-    // ReplayHarness pins + restores the confs.
-    val out = ReplayHarness.replay(spark, 4, name) { register =>
+    // ReplayHarness runs the replay on a child session at this width.
+    val out = ReplayHarness.replay(spark, 4) { (spark, register) =>
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val cIn = MemoryStream[Ev]
       val pIn = MemoryStream[Ev]
       val q = attribute(cIn.toDS(), pIn.toDS(), "7 days")

@@ -45,8 +45,8 @@ object StreamLate {
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts_ms"))
 
     val name = s"stream_late_${System.nanoTime()}"
-    val emitted: Array[(Long, Long)] = ReplayHarness.replay(spark, 8, name,
-      andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    val emitted: Array[(Long, Long)] = ReplayHarness.replay(spark, 8,
+      andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       // one FILE per band: the batch sequence IS the band sequence
       ReplayHarness.landBands(scratch, inDir, (0 until 3).map { i =>
         events.filter(col("event_id") % 3 === i).coalesce(1) })
@@ -60,8 +60,6 @@ object StreamLate {
         .groupBy(window(col("ts_utc"), s"${WindowMs / 1000} seconds"))
         .agg(count(lit(1)).as("n_events"))
         .select(unix_millis(col("window.start")).as("window_start_ms"), col("n_events"))
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8") // №109's state-width discipline
       val q = counts.writeStream
         .format("memory").queryName(name)
         .outputMode("append") // windows emit once, when the watermark closes them
@@ -69,8 +67,7 @@ object StreamLate {
         .option("checkpointLocation", scratch.resolve("ckpt").toString)
         .start()
       register(q)
-      try q.awaitTermination()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      q.awaitTermination()
       lastBatches = q.recentProgress.count(_.numInputRows > 0)
       lastDropped = q.recentProgress
         .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum

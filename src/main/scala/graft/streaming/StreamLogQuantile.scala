@@ -39,8 +39,8 @@ object StreamLogQuantile {
 
     val gridLen = Analytics.LqLevels * Analytics.LqDepth * Analytics.LqWidth
     val name = s"stream_lq_${System.nanoTime()}"
-    val grids: Array[(String, Int, Seq[Long])] = ReplayHarness.replay(spark, 8, name,
-      andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    val grids: Array[(String, Int, Seq[Long])] = ReplayHarness.replay(spark, 8,
+      andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       ReplayHarness.landBands(scratch, inDir, (0 until 3).map { i =>
         events.filter(col("event_id") % 3 === i).coalesce(1) })
       val stream = spark.readStream

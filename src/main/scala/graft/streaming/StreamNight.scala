@@ -113,7 +113,7 @@ object StreamNight {
     }
     var dropped = 0L
     var batches = -1
-    ReplayHarness.replay(spark, 8, name, andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    ReplayHarness.replay(spark, 8, andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       ReplayHarness.landBands(scratch, inDir, Seq(
         tok.filter(clsOf(col("doc_id")) === 1L).coalesce(1),
         tok.filter(clsOf(col("doc_id")) === 2L && expr("(doc_id DIV 7) % 2 = 0")).coalesce(1),

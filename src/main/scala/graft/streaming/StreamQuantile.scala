@@ -36,8 +36,8 @@ object StreamQuantile {
 
     val gridLen = TextQueries.QsLevels * TextQueries.QsDepth * TextQueries.QsWidth
     val name = s"stream_qs_${System.nanoTime()}"
-    val grids: Array[(String, Int, Seq[Long])] = ReplayHarness.replay(spark, 8, name,
-      andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    val grids: Array[(String, Int, Seq[Long])] = ReplayHarness.replay(spark, 8,
+      andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       ReplayHarness.landBands(scratch, inDir, (0 until 3).map { i =>
         docs.filter(col("doc_id") % 3 === i).coalesce(1) })
       val stream = spark.readStream

@@ -62,7 +62,7 @@ object StreamServeSearch {
     val seen = scala.collection.mutable.ArrayBuffer.empty[Row]
     val sizes = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     var batches = -1
-    ReplayHarness.replay(spark, 8, name, andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    ReplayHarness.replay(spark, 8, andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       ReplayHarness.landBands(scratch, inDir, (0 until 3).map { i =>
         arrivals.filter(expr("(vec_id DIV 20) % 3") === i).coalesce(1) })
       val stream = spark.readStream
@@ -143,7 +143,7 @@ object StreamServeSearch {
     val name = s"stream_servef_${System.nanoTime()}"
     val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Double)]
     val fileCounts = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-    ReplayHarness.replay(spark, 8, name, andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    ReplayHarness.replay(spark, 8, andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       ReplayHarness.landBands(scratch, inDir, (0 until 3).map { i =>
         arrivals.filter(expr("(vec_id DIV 20) % 3") === i).coalesce(1) })
       val stream = spark.readStream

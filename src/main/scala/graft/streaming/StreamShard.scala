@@ -96,10 +96,10 @@ object StreamShard {
     // the batches' grown registries, released when the replay ends
     val grown = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var batches = -1
-    ReplayHarness.replay(spark, 8, name, andThen = () => {
+    ReplayHarness.replay(spark, 8, andThen = () => {
       graft.CacheRegistry.release(grown)
       graft.Fs.rmTree(scratch); graft.Fs.rmTree(java.nio.file.Paths.get(root))
-    }) { register =>
+    }) { (spark, register) =>
       ReplayHarness.landBands(scratch, inDir, Seq(
         off.filter($"batch" === 1).select($"doc_id", lit(0L).as("kind")).coalesce(1),
         off.filter($"batch" === 2).select($"doc_id", lit(0L).as("kind")).coalesce(1),

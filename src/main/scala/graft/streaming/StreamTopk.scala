@@ -39,44 +39,39 @@ object StreamTopk {
   val DelayMs: Long = 1800000L // 30 min — hours clear of any window edge
 
   def streamTopk(spark: SparkSession, dir: String): DataFrame = {
-    // production ingestion shape: file stream, no driver-side collect
-    // (layout-aware schema + ts normalization shared with the batch path)
-    val raw = graft.Tables.streamEvents(spark, dir)
-    val counts = raw
-      .withColumn("ts_utc", timestamp_millis(col("ts_ms")))
-      .withWatermark("ts_utc", s"${DelayMs / 1000} seconds")
-      .groupBy(window(col("ts_utc"), s"${WindowMs / 1000} seconds"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-    val ranked = counts
-      // chain the event-time: window_time(window) re-windows to the SAME
-      // 1-day bucket, carrying the watermark into stateful agg #2
-      .groupBy(window(window_time(col("window")), s"${WindowMs / 1000} seconds").as("w2"))
-      .agg(graft.functions.TopKByScore.topK(col("n").cast("double"), col("user_id"), K).as("top"))
-      .select(unix_millis(col("w2.start")).as("window_start_ms"), posexplode(col("top")))
-      .select(col("window_start_ms"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("user_id"), col("col.score").cast("long").as("n_events"))
-
     val name = s"stream_topk_${System.nanoTime()}"
-    // narrow state width for the replay (the ReplayHarness discipline the
-    // other streaming rows get for free): 2 chained stateful operators ×
-    // shuffle-partition state-store instances per micro-batch — at the
-    // session's 32 that is 64 stores of setup/commit per trigger for
-    // keyspaces (open windows, K-heaps) that are dozens of rows; 8 keeps
-    // the replay micro-batch machinery proportionate. Production sizes
-    // this to cluster parallelism as usual.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val q = ranked.writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      org.apache.spark.sql.graftbridge.StateStoreBridge.unloadAll()
+    // width 8, not the session's 32: 2 chained stateful operators × width
+    // state-store instances per micro-batch, for keyspaces (open windows,
+    // K-heaps) of dozens of rows. Production sizes this to cluster
+    // parallelism as usual.
+    val (rows, schema) = ReplayHarness.replay(spark, 8) { (spark, register) =>
+      // production ingestion shape: file stream, no driver-side collect
+      // (layout-aware schema + ts normalization shared with the batch path)
+      val counts = graft.Tables.streamEvents(spark, dir)
+        .withColumn("ts_utc", timestamp_millis(col("ts_ms")))
+        .withWatermark("ts_utc", s"${DelayMs / 1000} seconds")
+        .groupBy(window(col("ts_utc"), s"${WindowMs / 1000} seconds"), col("user_id"))
+        .agg(count(lit(1)).as("n"))
+      val ranked = counts
+        // chain the event-time: window_time(window) re-windows to the SAME
+        // 1-day bucket, carrying the watermark into stateful agg #2
+        .groupBy(window(window_time(col("window")), s"${WindowMs / 1000} seconds").as("w2"))
+        .agg(graft.functions.TopKByScore.topK(col("n").cast("double"), col("user_id"), K).as("top"))
+        .select(unix_millis(col("w2.start")).as("window_start_ms"), posexplode(col("top")))
+        .select(col("window_start_ms"), (col("pos") + 1).cast("int").as("rank"),
+          col("col.id").as("user_id"), col("col.score").cast("long").as("n_events"))
+      val q = ranked.writeStream
+        .format("memory").queryName(name)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      register(q)
+      q.awaitTermination()
+      val out = spark.table(name)
+      (out.collect(), out.schema)
     }
-    spark.table(name).orderBy(col("window_start_ms"), col("rank"))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .orderBy(col("window_start_ms"), col("rank"))
   }
 
   /** Batch oracle: same windows, same watermark cutoff, same tiebreak. */

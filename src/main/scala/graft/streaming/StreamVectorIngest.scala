@@ -37,8 +37,8 @@ object StreamVectorIngest {
     val name = s"stream_vec_${System.nanoTime()}"
     // collected INSIDE the replay (the harness drops the memory view on
     // exit); batch-sized by the state contract — the day's arrivals
-    val (codeRows, codeSchema) = ReplayHarness.replay(spark, 8, name,
-      andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    val (codeRows, codeSchema) = ReplayHarness.replay(spark, 8,
+      andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       ReplayHarness.landBands(scratch, inDir, (0 until 3).map { i =>
         batch.filter((col("vec_id").cast("long") / 20 % 3).cast("int") === i)
           .coalesce(1) })

@@ -47,7 +47,7 @@ object StreamWindowLogQuantile {
     val events = graft.Tables(spark, dir).events
       .select(col("event_id"), col("ts_ms"), col("value"))
     val name = s"stream_wlq_${System.nanoTime()}"
-    ReplayHarness.replay(spark, 8, name, andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    ReplayHarness.replay(spark, 8, andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       ReplayHarness.landBands(scratch, inDir,
         (0 until 3).map(i => events.filter(col("event_id") % 3 === i).coalesce(1)))
       val stream = spark.readStream

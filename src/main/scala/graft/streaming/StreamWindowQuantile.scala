@@ -49,7 +49,7 @@ object StreamWindowQuantile {
     val events = graft.Tables(spark, dir).events
       .select(col("event_id"), col("ts_ms"), col("value"))
     val name = s"stream_wq_${System.nanoTime()}"
-    ReplayHarness.replay(spark, 8, name, andThen = () => graft.Fs.rmTree(scratch)) { register =>
+    ReplayHarness.replay(spark, 8, andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       ReplayHarness.landBands(scratch, inDir, (0 until 3).map { i =>
         events.filter(col("event_id") % 3 === i).coalesce(1) })
       val stream = spark.readStream
@@ -69,8 +69,6 @@ object StreamWindowQuantile {
         .groupBy(window(col("ts_utc"), s"${StreamLate.WindowMs / 1000} seconds"))
         .agg(graft.functions.DyadicCountMin.sketch(col("v"), VqLevels, VqDepth, VqWidth).as("g"))
         .select(unix_millis(col("window.start")).as("ws"), col("g"))
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
       val q = grids.writeStream
         .format("memory").queryName(name)
         .outputMode("append") // grids emit ONCE, when the watermark closes the window
@@ -78,8 +76,7 @@ object StreamWindowQuantile {
         .option("checkpointLocation", scratch.resolve("ckpt").toString)
         .start()
       register(q)
-      try q.awaitTermination()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      q.awaitTermination()
       lastBatches = q.recentProgress.count(_.numInputRows > 0)
       lastDropped = q.recentProgress
         .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum

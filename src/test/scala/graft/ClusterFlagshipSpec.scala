@@ -10,7 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * stdout read. The drill itself asserts the strong contracts (tasks on
   * BOTH loopback hosts, three flagship queries row-identical to local[8]);
   * this spec pins that the drill ran to completion and said ok. */
-@graft.tags.Slow
 class ClusterFlagshipSpec extends AnyFunSuite {
 
   test("flagship queries run on a real two-host cluster and match local[8] row-for-row") {

@@ -16,13 +16,19 @@ class GroupedTopKSpec extends SparkSpec {
   private def scored = spark.range(0, 10000)
     .select(($"id" % 37).as("g"), ($"id" % 1000).cast("double").as("s"), $"id".as("i"))
 
+  /** The reference formulation: the TopKByScore aggregate + posexplode
+    * chain, with the operator's (group, id, score, rank) columns. */
+  private def topKByScore(df: org.apache.spark.sql.DataFrame, group: String, score: String,
+                          id: String, k: Int): org.apache.spark.sql.DataFrame =
+    df.groupBy(col(group))
+      .agg(graft.functions.TopKByScore.topK(col(score), col(id), k).as("top"))
+      .select(col(group), posexplode($"top").as(Seq("pos", "e")))
+      .select(col(group), $"e.id".as(id), $"e.score".as(score), ($"pos" + 1).as("rank"))
+
   test("native path rows == aggregate fallback rows (ties included)") {
     val native = GroupedTopK.rankedTopK(scored.toDF(), "g", "s", "i", 7)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val agg = scored.groupBy($"g")
-      .agg(graft.functions.TopKByScore.topK($"s", $"i", 7).as("top"))
-      .select($"g", posexplode($"top").as(Seq("pos", "e")))
-      .select($"g", $"e.id", $"e.score", ($"pos" + 1).as("rank"))
+    val agg = topKByScore(scored.toDF(), "g", "s", "i", 7)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     assert(native == agg)
     assert(native.nonEmpty)
@@ -50,19 +56,18 @@ class GroupedTopKSpec extends SparkSpec {
     assert(node.child.output.map(_.name) == Seq("g", "s", "i"), opt.toString)
   }
 
-  test("driver knn queries run the native operator; fallback conf restores the aggregate") {
-    val nativePlan = VectorQueries.knnBrute(spark, sf).queryExecution.executedPlan.toString
+  test("driver knn queries run the native operator, row-equal to TopKByScore") {
+    val knn = VectorQueries.knnBrute(spark, sf)
+    val nativePlan = knn.queryExecution.executedPlan.toString
     assert(nativePlan.contains("GroupedTopKFinal"), nativePlan)
-    spark.conf.set("spark.graft.nativeTopK", "false")
-    try {
-      val fallback = VectorQueries.knnBrute(spark, sf)
-      assert(fallback.queryExecution.executedPlan.toString.contains("top_k_by_score"))
-      // and both paths produce the same verified rows
-      spark.conf.set("spark.graft.nativeTopK", "true")
-      val nat = VectorQueries.knnBrute(spark, sf).collect().map(_.toString).sorted
-      spark.conf.set("spark.graft.nativeTopK", "false")
-      val fb = fallback.collect().map(_.toString).sorted
-      assert(nat.toSeq == fb.toSeq)
-    } finally spark.conf.set("spark.graft.nativeTopK", "true")
+    // the reference: knn_brute's scored frame through the aggregate formulation
+    val (queries, corpus) = VectorQueries.querySplit(VectorQueries.vectorsOf(spark, sf))
+    val reference = topKByScore(corpus.join(broadcast(queries))
+      .select($"q_id", $"vec_id", graft.functions.VectorOps.cosine6($"emb", $"q_emb").as("cos")),
+      "q_id", "cos", "vec_id", VectorQueries.K)
+    assert(reference.queryExecution.executedPlan.toString.contains("top_k_by_score"))
+    val nat = knn.select($"q_id", $"vec_id", $"cos", $"rank").collect().map(_.toString).sorted
+    val ref = reference.collect().map(_.toString).sorted
+    assert(nat.nonEmpty && nat.toSeq == ref.toSeq)
   }
 }

@@ -59,13 +59,6 @@ class BpeSpec extends SparkSpec {
     val local = TextQueries.bpeTrainWith(spark, sf, "local")
       .as[(Int, String, String, Long)].collect().toSeq
     assert(local == dist, "local-mode merges must equal the distributed loop's")
-    // and the conf actually dispatches
-    spark.conf.set(TextQueries.BpeModeConfKey, "local")
-    try {
-      val viaConf = TextQueries.bpeTrain(spark, sf)
-        .as[(Int, String, String, Long)].collect().toSeq
-      assert(viaConf == dist)
-    } finally spark.conf.unset(TextQueries.BpeModeConfKey)
     graft.CacheRegistry.releaseAll(spark)
   }
 

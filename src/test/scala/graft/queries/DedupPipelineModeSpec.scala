@@ -9,7 +9,6 @@ package graft.queries
   * Equality here is measured, not assumed: the driver oracle for the
   * mp row independently rebuilds the multiprobe chain, so a recall
   * regression surfaces in BOTH places. */
-@graft.tags.Slow
 class DedupPipelineModeSpec extends graft.SparkSpec {
 
   test("ppjoin and minhash_mp pipelines are row-identical on the gate corpus; default mode is ppjoin") {
@@ -19,9 +18,9 @@ class DedupPipelineModeSpec extends graft.SparkSpec {
     assert(pp == mp,
       s"modes diverged: ppjoin ${pp.length} rows, minhash_mp ${mp.length} rows; " +
         s"first diff: ${pp.zip(mp).find { case (a, b) => a != b }}")
-    // the default mode is the conf default
-    val dflt = CurationQueries.dedupPipeline(spark, sf).collect().toSeq
-    assert(dflt == pp, "default pipeline is not the ppjoin mode")
+    // the dedup_pipeline row is the ppjoin mode
+    val row = CurationQueries.dedupPipeline(spark, sf).collect().toSeq
+    assert(row == pp, "the dedup_pipeline row is not the ppjoin mode")
     // and an unknown mode fails loudly, never silently falls back
     intercept[IllegalArgumentException] {
       CurationQueries.dedupPipelineWith(spark, sf, "bogus").collect()
@@ -34,9 +33,7 @@ class DedupPipelineModeSpec extends graft.SparkSpec {
     // (base pairs survive any budget) — this is what makes the saving
     // non-vacuous: the budgeted join consumed fewer probe rows
     val full = HashDedup.mpCandidatesFrom(tok).count()
-    spark.conf.set(HashDedup.MpBudgetConfKey, "1")
-    val b1 = try HashDedup.mpCandidatesFrom(tok).count()
-      finally spark.conf.unset(HashDedup.MpBudgetConfKey)
+    val b1 = HashDedup.mpCandidatesFrom(tok, budget = 1).count()
     assert(b1 <= full, s"budget=1 grew candidates ($b1 > $full)")
     graft.CacheRegistry.releaseAll(spark)
     // the graded dial: budgeted pipeline ≡ full multiprobe pipeline ≡
@@ -47,16 +44,7 @@ class DedupPipelineModeSpec extends graft.SparkSpec {
     assert(budget.nonEmpty && budget == mp,
       s"budgeted mode diverged from full multiprobe: ${budget.length} vs ${mp.length} rows; " +
         s"first diff: ${budget.zip(mp).find { case (a, b) => a != b }}")
-    // the conf must not leak out of the budget row
-    assert(spark.conf.getOption(HashDedup.MpBudgetConfKey).isEmpty,
-      "mpBudget conf leaked after dedupPipelineMpBudget")
-    // ...and a caller-set budget must be RESTORED, not clobbered (r13 advice)
-    spark.conf.set(HashDedup.MpBudgetConfKey, "7")
-    try {
-      CurationQueries.dedupPipelineMpBudget(spark, sf).collect()
-      assert(spark.conf.get(HashDedup.MpBudgetConfKey) == "7",
-        "dedupPipelineMpBudget clobbered a caller-set mpBudget conf")
-    } finally spark.conf.unset(HashDedup.MpBudgetConfKey)
+    graft.CacheRegistry.releaseAll(spark)
   }
 
   test("№188 simhash_mp mode: edges τ-verified ⊆ ppjoin's, keepers a superset — the measured strictness, not equality") {

@@ -402,25 +402,20 @@ class PlanRegressionSpec extends SparkSpec {
       s"expected the co-located join path:\n$plan")
   }
 
-  test("hash.sort conf gate: production mode drops the presentation range exchange, same row set") {
+  test("sorted = false drops the presentation range exchange, same rows") {
     def rangeExchanges(df: DataFrame): Int =
       ExportQueriesPlanHelper.exec(df).collect {
         case e: ShuffleExchangeExec
           if e.outputPartitioning.isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.RangePartitioning] => e
       }.size
-    val targets: Seq[String => DataFrame] = Seq(
-      d => Analytics.userHistory(spark, d), d => Analytics.saltedJoin(spark, d))
+    val targets: Seq[Boolean => DataFrame] = Seq(
+      s => Analytics.userHistory(spark, sf, s), s => Analytics.saltedJoin(spark, sf, s))
     targets.foreach { q =>
-      spark.conf.set(graft.HashSort.Conf, "true")
-      val sorted = q(sf)
+      val sorted = q(true)
       assert(rangeExchanges(sorted) >= 1, "gate mode lost its deterministic sort")
-      val sortedRows = sorted.collect().toSet
-      spark.conf.set(graft.HashSort.Conf, "false")
-      try {
-        val prod = q(sf)
-        assert(rangeExchanges(prod) == 0, s"production mode still range-exchanges:\n${prod.queryExecution.executedPlan}")
-        assert(prod.collect().toSet == sortedRows, "conf gate changed the row SET — it may only drop ordering")
-      } finally spark.conf.set(graft.HashSort.Conf, "true")
+      val prod = q(false)
+      assert(rangeExchanges(prod) == 0, s"production mode still range-exchanges:\n${prod.queryExecution.executedPlan}")
+      assert(prod.collect().toSet == sorted.collect().toSet, "sorted = false changed the row SET — it may only drop ordering")
     }
   }
 

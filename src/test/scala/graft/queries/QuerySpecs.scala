@@ -513,26 +513,19 @@ class VectorQueriesSpec extends SparkSpec {
     assert(mean >= 0.95, s"mean int8 agreement $mean below the measured floor")
   }
 
-  test("knn_ivf probe conf moves the recall dial; default floor pinned") {
+  test("knn_ivf probe width moves the recall dial; default floor pinned") {
     val brute = VectorQueries.knnBrute(spark, sf)
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
-    def recallAt(conf: Option[Int]): Double = {
-      conf match {
-        case Some(p) => spark.conf.set(VectorQueries.ProbeConfKey, p.toString)
-        case None => spark.conf.unset(VectorQueries.ProbeConfKey)
-      }
-      try {
-        val ivf = VectorQueries.knnIvf(spark, sf).select("q_id", "vec_id").as[(Long, Long)].collect()
-        ivf.count(brute.contains).toDouble / brute.size
-      } finally spark.conf.unset(VectorQueries.ProbeConfKey)
-    }
-    // default (conf unset) ≡ the documented Probe constant — the driver row
-    val dflt = recallAt(None)
-    val atConst = recallAt(Some(VectorQueries.Probe))
+    def recall(df: org.apache.spark.sql.DataFrame): Double =
+      df.select("q_id", "vec_id").as[(Long, Long)].collect().count(brute.contains).toDouble / brute.size
+    def recallAt(probe: Int): Double = recall(VectorQueries.knnIvfWith(spark, sf, probe))
+    // the driver row ≡ the documented Probe constant
+    val dflt = recall(VectorQueries.knnIvf(spark, sf))
+    val atConst = recallAt(VectorQueries.Probe)
     assert(dflt == atConst, s"default recall $dflt != explicit Probe recall $atConst")
     assert(dflt > 0.2, s"default-probe recall floor broken: $dflt")
     // probe = Centroids probes every cell — exhaustive search, recall must be 1.0
-    val exhaustive = recallAt(Some(VectorQueries.Centroids))
+    val exhaustive = recallAt(VectorQueries.Centroids)
     assert(exhaustive == 1.0, s"probe=Centroids must equal brute force, got $exhaustive")
     assert(exhaustive > dflt, "widening the probe must not lower recall")
   }

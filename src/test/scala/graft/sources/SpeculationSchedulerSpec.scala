@@ -17,7 +17,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the sink's dot-temp protocol still yields exactly one visible
   * winner with the loser's litter present on disk but invisible to
   * readers — the full production speculation lifecycle, cross-process. */
-@graft.tags.Slow
 class SpeculationSchedulerSpec extends AnyFunSuite {
 
   test("real scheduler launches a speculative duplicate; sink commits one winner; loser litter invisible") {

@@ -24,7 +24,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * retries (fresh checkpoint) until the stop landed while input remained
   * — the assertion `killed before consuming all bands` is structural,
   * never assumed. */
-@graft.tags.Slow
 class CheckpointRecoverySpec extends SparkSpec {
   import spark.implicits._
 
@@ -85,43 +84,37 @@ class CheckpointRecoverySpec extends SparkSpec {
       val name = s"ckpt_rec_${System.nanoTime()}"
       val nameB = s"${name}_b"
       val nameC = s"${name}_c"
-      try {
-        val got = ReplayHarness.replay(spark, 8, name, andThen = () => graft.Fs.rmTree(scratch)) { register =>
-          val inDir = land(df, scratch, bandCol)
-          def stream = spark.readStream.schema(df.schema.toDDL)
-            .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-          // uninterrupted reference run (own checkpoint)
-          val qa = build(stream).writeStream.format("memory").queryName(name)
+      result = ReplayHarness.replay(spark, 8, andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
+        val inDir = land(df, scratch, bandCol)
+        def stream = spark.readStream.schema(df.schema.toDDL)
+          .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
+        // uninterrupted reference run (own checkpoint)
+        val qa = build(stream).writeStream.format("memory").queryName(name)
+          .outputMode(mode).trigger(Trigger.AvailableNow())
+          .option("checkpointLocation", scratch.resolve("ckpt_ref").toString).start()
+        register(qa); qa.awaitTermination()
+        val reference = spark.table(name).collect().toSeq
+        // killed run: same input, fresh checkpoint, stopped mid-stream
+        val ckpt = scratch.resolve("ckpt_kill")
+        val (killed, batchesBeforeKill) = killMidStream(() =>
+          build(stream).writeStream.format("memory").queryName(nameB)
             .outputMode(mode).trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", scratch.resolve("ckpt_ref").toString).start()
-          register(qa); qa.awaitTermination()
-          val reference = spark.table(name).collect().toSeq
-          // killed run: same input, fresh checkpoint, stopped mid-stream
-          val ckpt = scratch.resolve("ckpt_kill")
-          val (killed, batchesBeforeKill) = killMidStream(() =>
-            build(stream).writeStream.format("memory").queryName(nameB)
-              .outputMode(mode).trigger(Trigger.AvailableNow())
-              .option("checkpointLocation", ckpt.toString).start(), register)
-          val partial = spark.table(nameB).collect().toSeq
-          if (!killed) None
-          else {
-            // RECOVERY: fresh query, SAME checkpoint — resumes committed
-            // state + watermark, replays only uncommitted input
-            val qc = build(stream).writeStream.format("memory").queryName(nameC)
-              .outputMode(mode).trigger(Trigger.AvailableNow())
-              .option("checkpointLocation", ckpt.toString).start()
-            register(qc); qc.awaitTermination()
-            assert(batchesBeforeKill >= 2, s"killed after only $batchesBeforeKill data batches")
-            assert(dataBatches(qc) >= 1, "recovered run processed nothing — the kill was vacuous")
-            val rec = spark.table(nameC).collect().toSeq
-            Some((reference,
-              if (mode == "append") (partial ++ rec) else rec))
-          }
+            .option("checkpointLocation", ckpt.toString).start(), register)
+        val partial = spark.table(nameB).collect().toSeq
+        if (!killed) None
+        else {
+          // RECOVERY: fresh query, SAME checkpoint — resumes committed
+          // state + watermark, replays only uncommitted input
+          val qc = build(stream).writeStream.format("memory").queryName(nameC)
+            .outputMode(mode).trigger(Trigger.AvailableNow())
+            .option("checkpointLocation", ckpt.toString).start()
+          register(qc); qc.awaitTermination()
+          assert(batchesBeforeKill >= 2, s"killed after only $batchesBeforeKill data batches")
+          assert(dataBatches(qc) >= 1, "recovered run processed nothing — the kill was vacuous")
+          val rec = spark.table(nameC).collect().toSeq
+          Some((reference,
+            if (mode == "append") (partial ++ rec) else rec))
         }
-        result = got
-      } finally {
-        spark.catalog.dropTempView(nameB)
-        spark.catalog.dropTempView(nameC)
       }
     }
     assert(result.nonEmpty, "could not land a mid-stream kill in 4 attempts")
@@ -177,7 +170,7 @@ class CheckpointRecoverySpec extends SparkSpec {
       attempt += 1
       val scratch = java.nio.file.Files.createTempDirectory("graft_ckpt_rec_wq_")
       val name = s"ckpt_rec_wq_${System.nanoTime()}"
-      result = ReplayHarness.replay(spark, 8, name, andThen = () => graft.Fs.rmTree(scratch)) { register =>
+      result = ReplayHarness.replay(spark, 8, andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
         val inDir = land(events, scratch, "event_id")
         def stream = spark.readStream.schema(events.schema.toDDL)
           .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
@@ -233,7 +226,7 @@ class CheckpointRecoverySpec extends SparkSpec {
       attempt += 1
       val scratch = java.nio.file.Files.createTempDirectory("graft_ckpt_rec_wm_")
       val name = s"ckpt_rec_wm_${System.nanoTime()}"
-      result = ReplayHarness.replay(spark, 8, name, andThen = () => graft.Fs.rmTree(scratch)) { register =>
+      result = ReplayHarness.replay(spark, 8, andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
         val inDir = land(events, scratch, "event_id")
         def stream = spark.readStream.schema(events.schema.toDDL)
           .option("maxFilesPerTrigger", "1").parquet(inDir.toString)

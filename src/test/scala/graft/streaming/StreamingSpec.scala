@@ -90,24 +90,23 @@ class StreamingSpec extends SparkSpec {
 
   test("incremental sessions run under the RocksDB state store (production conf)") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // the provider GraftSession.withRocksDbState configures — prove it
-    // actually hosts our flatMapGroupsWithState state end-to-end
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    // the provider ReplayHarness configures — prove it actually hosts our
+    // flatMapGroupsWithState state end-to-end
+    val out = ReplayHarness.replay(spark, 4) { (spark, register) =>
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val input = MemoryStream[Ev]
       val q = StatefulSessionize.sessionizeIncremental(input.toDS(), gapMs = 10000L, delay = "0 seconds")
         .writeStream.format("memory").queryName("rocks_sessions")
         .outputMode("append").start()
+      register(q)
       input.addData(Ev(1, 2000), Ev(1, 500))
       q.processAllAvailable()
       input.addData(Ev(2, 100000))
       q.processAllAvailable() // watermark passes user 1 → timeout flush
-      val out = spark.table("rocks_sessions").as[Session].collect().toSet
-      q.stop()
-      assert(out == Set(Session(1, 500, 2000, 2)))
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      assert(q.lastProgress.stateOperators.nonEmpty)
+      spark.table("rocks_sessions").as[Session].collect().toSet
+    }
+    assert(out == Set(Session(1, 500, 2000, 2)))
   }
 
   test("continuous export: full record+manifest pipeline per micro-batch via foreachBatch") {
@@ -283,11 +282,6 @@ class StreamingSpec extends SparkSpec {
     // dropped if the RocksDB state store restored from the checkpoint.
     val scratch = java.nio.file.Files.createTempDirectory("graft_ckpt_recovery_")
     val inDir = scratch.resolve("in"); java.nio.file.Files.createDirectories(inDir)
-    val prev = spark.conf.getAll.get("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     def landFile(idx: Int, rows: Seq[(Long, String, Long)]): Unit = {
       val tmp = scratch.resolve(s"tmp$idx")
       rows.toDF("doc_id", "text", "event_ms").coalesce(1).write.parquet(tmp.toString)
@@ -304,27 +298,28 @@ class StreamingSpec extends SparkSpec {
         }
       } finally listing.close()
     }
-    def drain(name: String): Seq[(Long, String)] = {
-      // foreachBatch, not the memory sink: memory does not support
-      // checkpoint recovery — recovery IS the thing under test
-      val buf = java.util.Collections.synchronizedList(new java.util.ArrayList[(Long, String)]())
-      val q = StreamDedup.dedup(
-        spark.readStream.schema("doc_id LONG, text STRING, event_ms LONG")
-          .option("maxFilesPerTrigger", "1").parquet(inDir.toString).as[StreamDedup.Doc],
-        "7 days")
-        .writeStream.queryName(name).outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.select($"doc_id", $"text_hash").as[(Long, String)].collect().foreach(buf.add)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", scratch.resolve("ckpt").toString)
-        .start()
-      try q.awaitTermination() finally q.stop()
-      import scala.jdk.CollectionConverters._
-      buf.asScala.toSeq
-    }
-    try {
+    ReplayHarness.replay(spark, 4, andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
+      def drain(name: String): Seq[(Long, String)] = {
+        // foreachBatch, not the memory sink: memory does not support
+        // checkpoint recovery — recovery IS the thing under test
+        val buf = java.util.Collections.synchronizedList(new java.util.ArrayList[(Long, String)]())
+        val q = StreamDedup.dedup(
+          spark.readStream.schema("doc_id LONG, text STRING, event_ms LONG")
+            .option("maxFilesPerTrigger", "1").parquet(inDir.toString).as[StreamDedup.Doc],
+          "7 days")
+          .writeStream.queryName(name).outputMode("append")
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            batch.select($"doc_id", $"text_hash").as[(Long, String)].collect().foreach(buf.add)
+            ()
+          }
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .option("checkpointLocation", scratch.resolve("ckpt").toString)
+          .start()
+        register(q)
+        try q.awaitTermination() finally q.stop()
+        import scala.jdk.CollectionConverters._
+        buf.asScala.toSeq
+      }
       val t = (i: Long) => s"checkpoint recovery doc $i"
       landFile(0, (0L until 10L).map(i => (i, t(i), 1000000L + i)))
       landFile(1, (10L until 20L).map(i => (i, t(i), 1000000L + i)))
@@ -340,14 +335,6 @@ class StreamingSpec extends SparkSpec {
         s"state lost across restart — duplicates re-emitted: ${run2.sortBy(_._1)}")
       // and the union equals the batch first-seen oracle over all 40 rows
       assert((run1 ++ run2).map(_._1).toSet == ((0L until 20L) ++ Seq(118L, 119L)).toSet)
-    } finally {
-      org.apache.spark.sql.graftbridge.StateStoreBridge.unloadAll()
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      graft.Fs.rmTree(scratch)
     }
   }
 
