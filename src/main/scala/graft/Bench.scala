@@ -1,324 +1,216 @@
 package graft
+
 import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.jackson.JsonMethods
+
+/** graft's benchmark sweep: every `SparkEntry.queries` row at one scale
+  * factor, sampled by one rule.
+  *
+  * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
+  * SPARK_GRAFT_CPUS (local[N], default 4), SPARK_GRAFT_BENCH_N (timed
+  * iterations per row, default 3) and SPARK_GRAFT_BENCH_ONLY (a
+  * comma-separated subset of rows).
+  *
+  * Prints one JSON line of at most [[LineBytes]] bytes as the last stdout
+  * line, writes the full record (every row, every iteration) to
+  * `target/bench.json`, and appends this run's per-row minima to
+  * `bench_history.json` ([[BenchHistory]]). Exits 1 if a row failed.
+  */
 object Bench {
+  /** An iteration slower than this × its row's min is contended: kept in
+    * the record, left out of the row's median (contention only ever
+    * inflates a sample, so the min is the most robust floor). */
+  val OutlierX = 3.0
+  /** A row whose min exceeds this × its `bench_history.json` floor ships
+    * flagged `band_exceeded`. */
+  val BandTrigger = 2.0
+  /** The stdout line fits a log capture that keeps a run's last 2,000
+    * characters, with room for a build tool's trailer line. */
+  val LineBytes = 1800
+
+  /** Rows with no history or a floor below this are warmed once at
+    * sf0.001 before timing: their one-time codegen/JIT bill is the same
+    * order as the floor (an unwarmed 0.2 s query benches at 0.5 s even on
+    * its min). The drills above it absorb that bill in their first run. */
+  private val WarmFloorS = 2.0
+  private val WarmDir = "/root/testdata/sf0.001"
+
+  /** Rows timed once cold, after dropping their persisted model/index,
+    * reported as `cold_build_s` apart from the steady-state sample (which
+    * the run right after rebuilds for). */
+  private val ColdDrops: Map[String, (SparkSession, String) => Unit] = {
+    import graft.queries.VectorQueries._
+    Map("knn_index_update" -> dropIndexUpdateCaches _, "knn_ivf_pq_update" -> dropIvfPqUpdateCaches _,
+      "knn_ivf_pq_res_update" -> dropIvfPqResUpdateCaches _, "knn_res_rebalance" -> dropResRebalanceCaches _,
+      "knn_res_serve_repair" -> dropResServeRepairCaches _, "knn_res_calendar" -> dropResCalendarCaches _,
+      "dedup_incremental_minhash" -> graft.queries.HashDedup.dropIncrementalMinhashCaches _)
+  }
+
+  /** Each iteration's layers (from [[Trace]]), with the stdout record's
+    * name for the sum over rows of their medians (ms fields in seconds):
+    * Catalyst planning (`executedPlan`), jobs, the union of their
+    * intervals, summed executor run time, and the driver's share (wall
+    * minus job wall, planning included). */
+  private val Layers = Seq("plan_ms" -> "planning.s", "jobs" -> "exec.jobs", "job_wall_ms" -> "exec.job_wall_s",
+    "task_ms" -> "exec.task_s", "driver_ms" -> "exec.driver_gap_s")
+
+  /** One timed iteration: start offset and wall (s), then [[Layers]] and
+    * the host sample (`loadavg1`, `steal_pct`) by name. */
+  final case class Iter(t: Double, s: Double, fields: Map[String, Double])
+
+  /** One row's sample. Failed = no iteration completed. */
+  final case class Row(name: String, iters: Vector[Iter], band: Option[Double], coldS: Option[Double]) {
+    def failed: Boolean = iters.isEmpty
+    def min: Double = iters.map(_.s).min
+    def clean: Vector[Iter] = iters.filter(_.s <= min * OutlierX)
+    def median: Double = med(clean.map(_.s))
+    def bandExceeded: Boolean = !failed && band.exists(min > _ * BandTrigger)
+    def layer(k: String): Double = med(clean.map(_.fields(k)))
+  }
+
+  private def med(xs: Seq[Double]): Double = {
+    val s = xs.sorted; val n = s.size
+    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
+  }
+
+  /** Time `rows` at `sfDir`: the light warm-up, one cold run of each
+    * cold-drop row, then `iters` back-to-back iterations of each row. */
+  def run(spark: SparkSession, sfDir: String, rows: Seq[String], iters: Int): Seq[Row] = {
+    val bands = BenchHistory.bands(sfDir)
+    val fns = rows.map(n => n -> SparkEntry.queries(n))
+    if (new java.io.File(WarmDir).isDirectory && WarmDir != sfDir) {
+      val toWarm = fns.filter { case (n, _) => bands.get(n).forall(_ < WarmFloorS) }
+      val w0 = System.currentTimeMillis()
+      toWarm.foreach { case (_, fn) =>
+        try fn(spark, WarmDir).queryExecution.toRdd.count() catch { case _: Throwable => () }
+        CacheRegistry.releaseAll(spark)
+      }
+      System.err.println(f"[bench] warmup: ${toWarm.size}/${fns.size} queries in ${(System.currentTimeMillis() - w0) / 1e3}%.1fs")
+    }
+    val start = System.currentTimeMillis()
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Iter] = {
+      val off = (System.currentTimeMillis() - start) / 1e3
+      val trace = Trace.start(spark)
+      val t0 = System.nanoTime()
+      // toRdd.count() materializes EVERY output column (count() alone lets
+      // Catalyst prune the projection)
+      val timed = try {
+        val qe = fn(spark, sfDir).queryExecution
+        val planNs = { val p0 = System.nanoTime(); qe.executedPlan; System.nanoTime() - p0 }
+        qe.toRdd.count()
+        Some((System.nanoTime() - t0) / 1e6 -> planNs / 1e6)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
+        e.getStackTrace.take(8).foreach(fr => System.err.println(s"[bench]   at $fr"))
+        None
+      } finally trace.stop()
+      CacheRegistry.releaseAll(spark) // caches must not carry across iterations
+      timed.map { case (wallMs, planMs) =>
+        val jobWall = trace.jobWallMs.toDouble
+        Iter(off, wallMs / 1e3, scala.collection.immutable.ListMap("plan_ms" -> planMs, "jobs" -> trace.jobs.size.toDouble,
+          "job_wall_ms" -> jobWall, "task_ms" -> trace.taskMs.toDouble, "driver_ms" -> (wallMs - jobWall).max(0),
+          "loadavg1" -> trace.loadavg1, "steal_pct" -> trace.stealPct))
+      }
+    }
+    val cold = fns.collect { case (n, fn) if ColdDrops.contains(n) =>
+      ColdDrops(n)(spark, sfDir)
+      n -> once(s"$n(cold)", fn).map(_.s)
+    }.toMap
+    fns.map { case (n, fn) =>
+      Row(n, (1 to iters).flatMap(_ => once(n, fn)).toVector, bands.get(n), cold.get(n).flatten)
+    }
+  }
+
+  private def num(d: Double): JValue =
+    if (d.isNaN || d.isInfinite) JNull else JDecimal(BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP))
+  private def nums(kv: Iterable[(String, Double)]): JObject = JObject(kv.map { case (k, v) => k -> num(v) }.toList)
+  private def names(xs: Seq[String]): JValue = JArray(xs.map(JString(_)).toList)
+
+  /** The comparison with the frozen sf0.1 medians in `graft/baseline.json`
+    * over the rows both hold: the aggregate ratio (sum of medians over sum
+    * of baselines) and the rows above 2× their baseline. */
+  private def vsBaseline(sfDir: String, ok: Seq[Row], verbose: Boolean): JValue = {
+    val res = getClass.getResourceAsStream("/graft/baseline.json")
+    // the sf gate matches the directory's basename, so a trailing slash or
+    // a relocated data root does not silently disable it
+    val sfBase = sfDir.replaceAll("/+$", "").split('/').last
+    def skipped(why: String) = JObject("skipped" -> JString(why))
+    if (res == null) skipped("baseline resource missing")
+    else if (sfBase != "sf0.1") skipped(s"sf is $sfBase, anchor is sf0.1")
+    else {
+      val base = try JsonMethods.parse(res).asInstanceOf[JObject].obj.collect { case (k, JDouble(d)) => k -> d }.toMap
+        finally res.close()
+      val inter = ok.filter(r => base.contains(r.name)).map(r => (r.name, r.median, base(r.name)))
+      val flagged = inter.filter { case (_, m, b) => m > 2.0 * b }.sortBy { case (_, m, b) => -m / b }
+      if (inter.isEmpty) skipped("empty intersection")
+      else JObject(List("agg_ratio" -> num(inter.map(_._2).sum / inter.map(_._3).sum),
+        "n_compared" -> JInt(inter.size), "n_flagged" -> JInt(flagged.size)) ++ (if (!verbose) Nil else List(
+        "baseline_flagged" -> JArray(flagged.map { case (k, m, b) =>
+          JObject("q" -> JString(k), "sec" -> num(m), "baseline" -> num(b), "ratio" -> num(m / b)) }.toList),
+        "unbaselined" -> names(ok.map(_.name).filterNot(base.contains).sorted))))
+    }
+  }
+
+  /** The bench record. Verbose: the full record of `target/bench.json`,
+    * with every row and iteration. Otherwise the stdout line: the totals,
+    * counts and the failed rows' names that fit in [[LineBytes]]. */
+  def record(sfDir: String, iters: Int, rows: Seq[Row], verbose: Boolean): String = {
+    val ok = rows.filterNot(_.failed)
+    val failed = rows.filter(_.failed).map(_.name).sorted
+    val banded = ok.filter(_.bandExceeded).map(_.name)
+    def peak(k: String) = ok.flatMap(_.iters.map(_.fields(k))).maxOption.getOrElse(Double.NaN)
+    val head = List("metric" -> JString("total"), "value" -> num(ok.map(_.median).sum),
+      "unit" -> JString("sec"), "n" -> JInt(rows.size), "iters" -> JInt(iters), "n_failed" -> JInt(failed.size))
+    val tail = List("n_band_exceeded" -> JInt(banded.size), "vs_baseline" -> vsBaseline(sfDir, ok, verbose),
+      "layers" -> nums(Layers.map { case (k, total) =>
+        total -> ok.map(_.layer(k)).sum / (if (k.endsWith("_ms")) 1e3 else 1) }),
+      "host" -> nums(Seq("loadavg1_max" -> peak("loadavg1"), "steal_pct_max" -> peak("steal_pct")))) ++
+      (if (!verbose) Nil else List("band_exceeded" -> names(banded),
+        "cold_build_s" -> nums(rows.flatMap(r => r.coldS.map(r.name -> _))),
+        "trim" -> JString(s"median over iterations <= ${OutlierX}x the row's min; " +
+          s"band_exceeded = min > ${BandTrigger}x the bench_history floor"),
+        "queries" -> JObject(rows.map(r => r.name -> rowJson(r)).toList))) :+ ("sf" -> JString(sfDir))
+    def line(failedNames: Seq[String]) =
+      JsonMethods.compact(JObject((head :+ ("failed" -> names(failedNames))) ++ tail))
+    if (verbose) line(failed)
+    else (failed.size to 0 by -1).iterator.map(k => line(failed.take(k)))
+      .find(_.getBytes("UTF-8").length <= LineBytes).getOrElse(line(Nil))
+  }
+
+  private def rowJson(r: Row): JValue =
+    if (r.failed) JObject("failed" -> JBool(true))
+    else {
+      val stats = nums(Seq("median" -> r.median, "min" -> r.min, "max" -> r.iters.map(_.s).max) ++
+        Layers.map { case (k, _) => k -> r.layer(k) } ++ r.band.map("band" -> _))
+      val iters = JArray(r.iters.map(i => nums(Seq("t" -> i.t, "s" -> i.s) ++ i.fields)).toList)
+      JObject(stats.obj ++ List("n" -> JInt(r.iters.size), "contended" -> JInt(r.iters.size - r.clean.size)) ++
+        r.band.map(_ => "band_exceeded" -> JBool(r.bandExceeded)) :+ ("iters" -> iters))
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // ≥3 iterations: single-run numbers carry ±2-3× JIT/GC transients (a
-    // 1.9s query has benched at 12.6s on its first timed run) — the median
-    // is the honest figure; min/max expose the spread.
+    // ≥3 iterations: single runs carry ±2-3× JIT/GC transients
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt.max(1)
-    // Contention defense (r6 lesson: two of three iterations landing in a
-    // contended window put a 4.5× phantom regression in the official
-    // artifact — dedup_minhash med 6.44s vs min 1.84s, max 22.26s):
-    //  1. INTERLEAVED PASSES (opt-in: SPARK_GRAFT_BENCH_INTERLEAVE=1) —
-    //     iteration k of every query runs in pass k (full sweeps over the
-    //     query list) instead of back-to-back, so a query's samples are
-    //     minutes apart: a contended window can touch at most ONE of them,
-    //     and slow JVM-age drift spreads across all queries instead of
-    //     concentrating on whichever sit late in map order. Not the
-    //     default because denying back-to-back cache/JIT reuse inflates
-    //     every number ~30% (measured 109→143s total) and breaks
-    //     round-over-round comparability; the default defense against
-    //     late-run degradation is at the SOURCE instead (each streaming
-    //     replay unloads its state-store providers — StateStoreBridge —
-    //     and iterations GC outside the timed window).
-    //  2. ADAPTIVE RE-RUN — a query whose max/min exceeds SPREAD_TRIGGER
-    //     gets extra iterations (up to maxIters total), so a contended
-    //     window cannot own the majority of the sample.
-    //  3. TRIMMED MEDIAN — iterations slower than OUTLIER_X × the query's
-    //     own min are marked contended and excluded from the reported
-    //     median (contention only ever INFLATES; the min is the most
-    //     contamination-robust statistic available).
-    //  4. PER-ITERATION TIMESTAMPS — every iteration's start offset (sec
-    //     from bench start) and duration ship in the artifact, so a
-    //     machine-wide contended window is visible as a time-correlated
-    //     band across queries rather than inferred post hoc.
-    //  5. BAND-AWARE RE-RUN (r8 lesson: defenses 1-4 catch SPIKY contention
-    //     — three rescues in the r8 artifact — but a window that swallows
-    //     ALL of a query's iterations shows small spread and never re-runs:
-    //     pii_redact shipped a 10.6s artifact median for a plan-pinned
-    //     zero-shuffle projection whose clean floor is ~1s). Per-query
-    //     historical minima persist across rounds in bench_history.json
-    //     (committed with the repo); a query whose MIN exceeds
-    //     BAND_TRIGGER × its recorded band re-runs until one iteration
-    //     lands inside the band or the attempt cap is hit — and a query
-    //     still outside its band ships FLAGGED ("band_exceeded") so the
-    //     artifact defends itself instead of recording a silent phantom.
-    val SPREAD_TRIGGER = 3.0
-    val OUTLIER_X = 3.0
-    val BAND_TRIGGER = 2.0
-    val maxIters = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_N", "6").toInt.max(iters)
-    // band re-runs get a little more room than spread re-runs: the whole
-    // point is outlasting a contended window several minutes wide
-    val bandMaxIters = sys.env.getOrElse("SPARK_GRAFT_BENCH_BAND_MAX_N", "8").toInt.max(maxIters)
-    // iterate on a subset: SPARK_GRAFT_BENCH_ONLY=jsonl_snapshot,knn_ivf
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      // fail fast: a typo would otherwise bench nothing and print a
-      // plausible-looking total of 0.0
-      require(unknown.isEmpty, s"SPARK_GRAFT_BENCH_ONLY names not in SparkEntry.queries: ${unknown.mkString(", ")}")
-    }
-    def selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
-      case None => SparkEntry.queries
-    }
-    // the TUNED session (GraftSession: 64MB broadcast threshold, AQE flags)
-    // — the benched plans must be the plans the library actually ships
-    // (and the ones Plans captures for the audit)
+    // fail fast: a typo would otherwise bench nothing and print a total of 0
+    only.foreach(names => require(names.subsetOf(SparkEntry.queries.keySet),
+      s"SPARK_GRAFT_BENCH_ONLY names not in SparkEntry.queries: ${(names -- SparkEntry.queries.keySet).mkString(", ")}"))
+    val rows = SparkEntry.queries.keys.toSeq.filter(n => only.forall(_(n)))
+    // the tuned session: the benched plans are the plans the library ships
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Warm-up at the smallest SF: pays codegen/JIT compilation once so the
-    // timed runs below measure steady-state throughput (what a long-running
-    // cluster job sees), not Janino compile latency.
-    //
-    // r16 (verdict item 1): the full-registry warm-up loop was a material
-    // slice of the bench wall and the driver's verification budget is the
-    // binding constraint. The expensive rows to warm are the lifecycle
-    // DRILLS — dozens of jobs and store writes even at sf0.001 — and they
-    // are precisely the rows that need warm-up least: their sf0.1 floors
-    // (≥ WARM_FLOOR_S) dwarf the one-time Janino/JIT bill, the trimmed
-    // median of 3+ iterations absorbs a slow first run, and the cold-build
-    // pass below exercises the heaviest families before timing anyway.
-    // The CHEAP rows (floor < WARM_FLOOR_S, where the codegen bill is the
-    // same order as the floor — an unwarmed 0.2s query benches at 0.5s
-    // even on its min, band-flagging itself) stay warmed; they cost ~0.5s
-    // each at sf0.001. Queries with no recorded history also warm (a fresh
-    // row should not pay its Janino bill inside the timed sample).
-    // SPARK_GRAFT_BENCH_WARM=all|light|none overrides for experiments.
-    val warmDir = "/root/testdata/sf0.001"
-    val warmMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "light")
-    val WARM_FLOOR_S = 2.0
-    val warmBands: Map[String, Double] = BenchHistory.bands(sfDir)
-    if (warmMode != "none" && new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      val toWarm = selected.filter { case (n, _) =>
-        warmMode == "all" || warmBands.get(n).forall(_ < WARM_FLOOR_S)
-      }
-      val w0 = System.currentTimeMillis()
-      toWarm.foreach { case (_, fn) =>
-        // same toRdd shape as the timed run — warms the FULL plan's codegen
-        try fn(spark, warmDir).queryExecution.toRdd.count() catch { case _: Throwable => () }
-        CacheRegistry.releaseAll(spark)
-      }
-      System.err.println(f"[bench] warmup: ${toWarm.size}/${selected.size} queries in ${(System.currentTimeMillis() - w0) / 1e3}%.1fs (mode=$warmMode)")
-    }
-    val benchStart = System.currentTimeMillis()
-    // Cold-build honesty (r10 verdict): knn_index_update's steady-state
-    // median measures batch-sized work BY DESIGN (build-once economics),
-    // but the artifact must carry what a fresh corpus version pays. Drop
-    // the persisted model+index and time ONE cold run — reported as its
-    // own cold_build_s field, excluded from the steady-state sample
-    // (which the run right after rebuilds for).
-    val coldBuilds = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // one iteration = (start offset sec from bench start, duration sec);
-    // None = crashed (dropped, not timed)
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame, name: String): Option[(Double, Double)] = {
-      val off = (System.currentTimeMillis() - benchStart) / 1e3
-      val t0 = System.nanoTime()
-      // toRdd.count() materializes EVERY output column (count() alone lets
-      // Catalyst prune the projection — the string-building tail of the
-      // pipeline queries would go unmeasured).
-      val t = try { fn(spark, sfDir).queryExecution.toRdd.count(); Some((off, (System.nanoTime() - t0) / 1e9)) }
-        catch { case e: Throwable =>
-          // a crashed iteration must be DIAGNOSABLE from the log (r7 lesson:
-          // 44 silent failures shipped in the official artifact with rc=0)
-          System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-          e.getStackTrace.take(8).foreach(fr => System.err.println(s"[bench]   at $fr"))
-          None
-        }
-      CacheRegistry.releaseAll(spark) // caches must not carry across iterations
-      // NO System.gc() here: an explicit full GC between iterations was
-      // measured to INFLATE the total 109→125s — it clears the JVM's
-      // soft-referenced caches (codegen classes, file footers) that
-      // back-to-back steady-state numbers legitimately reuse.
-      t
-    }
-    // defense #1 (opt-in): pass k runs iteration k of EVERY query before
-    // any query sees iteration k+1; default = back-to-back iterations
-    // (steady-state numbers, comparable across rounds)
-    val interleave = sys.env.get("SPARK_GRAFT_BENCH_INTERLEAVE").contains("1")
-    val order = selected.toSeq
-    val coldDrops: Map[String, (SparkSession, String) => Unit] = Map(
-      "knn_index_update" -> (graft.queries.VectorQueries.dropIndexUpdateCaches _),
-      "knn_ivf_pq_update" -> (graft.queries.VectorQueries.dropIvfPqUpdateCaches _),
-      "knn_ivf_pq_res_update" -> (graft.queries.VectorQueries.dropIvfPqResUpdateCaches _),
-      "knn_res_rebalance" -> (graft.queries.VectorQueries.dropResRebalanceCaches _),
-      "knn_res_serve_repair" -> (graft.queries.VectorQueries.dropResServeRepairCaches _),
-      "knn_res_calendar" -> (graft.queries.VectorQueries.dropResCalendarCaches _),
-      "dedup_incremental_minhash" -> (graft.queries.HashDedup.dropIncrementalMinhashCaches _))
-    for ((name, fn) <- order; drop <- coldDrops.get(name)) {
-      drop(spark, sfDir)
-      runOnce(fn, s"$name(cold)").foreach { case (_, d) => coldBuilds(name) = d }
-    }
-    val acc = scala.collection.mutable.LinkedHashMap[String, Vector[(Double, Double)]](
-      order.map { case (n, _) => n -> Vector.empty[(Double, Double)] }: _*)
-    if (interleave)
-      for (_ <- 1 to iters; (name, fn) <- order)
-        acc(name) = acc(name) ++ runOnce(fn, name)
-    else
-      for ((name, fn) <- order; _ <- 1 to iters)
-        acc(name) = acc(name) ++ runOnce(fn, name)
-    // GLOBAL re-run budget across ALL THREE defense passes (r16, verdict
-    // item 1): per-query caps alone let a machine-wide contended window
-    // trigger re-runs on most of the registry — up to (bandMaxIters-iters)
-    // × 231 extra iterations, which is exactly how the r15 bench outgrew
-    // the driver's timeout. The budget bounds the total extra wall the
-    // defenses may spend; once exhausted, remaining candidates ship as-is
-    // (the band pass still flags them band_exceeded, so the artifact keeps
-    // defending itself — it just stops burning wall to rescue medians).
-    var rerunBudget = sys.env.getOrElse("SPARK_GRAFT_BENCH_RERUN_BUDGET", "40").toInt
-    def budgetedRun(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame, name: String): Option[(Double, Double)] =
-      if (rerunBudget <= 0) None
-      else { rerunBudget -= 1; runOnce(fn, name) }
-    // adaptive re-run (defense #2): spread beyond trigger → the sample is
-    // suspect; widen it until the trimmed median rests on a clean majority
-    for ((name, fn) <- order) {
-      var runs = acc(name)
-      // attempts (not runs.size) bounds the loop: a re-run that CRASHES
-      // returns None and leaves runs unchanged — counting successes only
-      // would spin forever on a query that started failing deterministically
-      var attempts = runs.size
-      while (runs.nonEmpty && attempts < maxIters && rerunBudget > 0 && {
-        val ds = runs.map(_._2); ds.max / ds.min > SPREAD_TRIGGER
-      }) { runs ++= budgetedRun(fn, name); attempts += 1 }
-      acc(name) = runs
-    }
-    // median-guard re-run (defense #6, r14 verdict item 3): the trimmed
-    // median can still sit far above the query's own floor when the
-    // MAJORITY of a small sample landed in a contended window — each
-    // iteration individually passes the OUTLIER_X trim (≤3× min) yet the
-    // median reads 2× the clean figure, which is exactly how dedup_exact
-    // and curriculum_order shipped spurious >2×-baseline flags in both
-    // r14 sweeps. A median > MEDIAN_GUARD × min with ≥ MEDIAN_GUARD_ABS_S
-    // absolute slack (sub-second rows jitter legitimately) re-runs until
-    // clean iterations own the median or the cap is hit; the contended
-    // iterations stay published in `iters`.
-    val MEDIAN_GUARD = 2.0
-    val MEDIAN_GUARD_ABS_S = 0.5
-    def median(xs: Seq[Double]): Double =
-      if (xs.isEmpty) -1.0
-      else if (xs.size % 2 == 1) xs.sorted.apply(xs.size / 2)
-      else { val s = xs.sorted; (s(xs.size / 2 - 1) + s(xs.size / 2)) / 2 }
-    def split(runs: Vector[(Double, Double)]): (Vector[(Double, Double)], Vector[(Double, Double)]) =
-      if (runs.isEmpty) (runs, runs)
-      else { val floor = runs.map(_._2).min; runs.partition(_._2 <= floor * OUTLIER_X) }
-    for ((name, fn) <- order) {
-      var runs = acc(name)
-      var attempts = runs.size
-      while (runs.nonEmpty && attempts < bandMaxIters && rerunBudget > 0 && {
-        val floor = runs.map(_._2).min
-        val m = median(split(runs)._1.map(_._2))
-        m > floor * MEDIAN_GUARD && m - floor > MEDIAN_GUARD_ABS_S
-      }) { runs ++= budgetedRun(fn, name); attempts += 1 }
-      acc(name) = runs
-    }
-    // band-aware re-run (defense #5): the query's historical floor says the
-    // whole sample is inflated, even when spread within the sample is small
-    val bands: Map[String, Double] = BenchHistory.bands(sfDir)
-    val bandExceeded = scala.collection.mutable.ArrayBuffer[String]()
-    for ((name, fn) <- order; band <- bands.get(name)) {
-      var runs = acc(name)
-      var attempts = runs.size
-      while (runs.nonEmpty && attempts < bandMaxIters && rerunBudget > 0 &&
-        runs.map(_._2).min > band * BAND_TRIGGER) {
-        runs ++= budgetedRun(fn, name); attempts += 1
-      }
-      acc(name) = runs
-      if (runs.nonEmpty && runs.map(_._2).min > band * BAND_TRIGGER) {
-        bandExceeded += name
-        System.err.println(f"[bench] $name min ${runs.map(_._2).min}%.2fs exceeds ${BAND_TRIGGER}x band ${band}%.2fs after ${runs.size} iterations — flagged band_exceeded")
-      }
-    }
-    val stats = acc
-    def f(d: Double): String = BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-    val failed = stats.filter(_._2.isEmpty).keys.toSeq.sorted
-    // headline per-query number = TRIMMED median (contended iterations —
-    // duration > OUTLIER_X × the query's min — excluded); total = sum of
-    // trimmed medians over the queries that SUCCEEDED (a -1 sentinel must
-    // never deflate the total).
-    val trimmedMed = stats.map { case (k, runs) => k -> median(split(runs)._1.map(_._2)) }
-    val qs = trimmedMed.map { case (k, m) => s"\"" + k + "\":" + (if (m < 0) "-1.0" else f(m)) }
-      .mkString("{", ",", "}")
-    val spread = stats.map { case (k, runs) =>
-      val body = if (runs.isEmpty) "\"failed\":true"
-        else {
-          val (clean, contended) = split(runs)
-          val ds = runs.map(_._2).sorted
-          val itersJson = runs.map { case (off, d) => s"""{"t":${f(off)},"s":${f(d)}}""" }.mkString("[", ",", "]")
-          val bandJson = bands.get(k).map(b => s""","band":${f(b)},"band_exceeded":${bandExceeded.contains(k)}""").getOrElse("")
-          s""""median":${f(median(clean.map(_._2)))},"min":${f(ds.head)},"max":${f(ds.last)},"n":${runs.size},"contended":${contended.size}$bandJson,"iters":$itersJson"""
-        }
-      s"\"" + k + "\":{" + body + "}"
-    }.mkString("{", ",", "}")
-    val total = trimmedMed.values.filter(_ >= 0).sum
-    val coldJson = coldBuilds.map { case (k, d) => s"\"" + k + "\":" + f(d) }.mkString("{", ",", "}")
-    // FROZEN baseline comparison (r12 verdict item 8): bench_history
-    // floors age with every run, so a slow multi-round drift can hide
-    // inside them. baseline_r12.json is the r12 clean-sweep medians; each
-    // later baseline_rN.json extends the chain with only the rows NEW in
-    // round N at their round-N clean-sweep medians (r13: 11 rows, r14: 8,
-    // r15: the 3 export side-channel rows). All committed, never
-    // rewritten — stable anchors.
-    // Aggregate ratio is sum-of-medians over the intersection (rows
-    // newer than the anchor are listed as unbaselined); per-query
-    // ratios > 2× ship in baseline_flagged so the artifact names its
-    // own drifters. The sf gate matches on the directory BASENAME (r13
-    // advice: the literal-path compare silently disabled the gate under
-    // a trailing slash or relocated data root) and skipping is loud.
-    def baselineJson(anchor: String, verbose: Boolean): String = {
-      val res = getClass.getResourceAsStream(s"/graft/baseline_$anchor.json")
-      val sfBase = sfDir.replaceAll("/+$", "").split('/').last
-      if (res == null) """{"skipped":"baseline resource missing"}"""
-      else if (sfBase != "sf0.1") s"""{"skipped":"sf is $sfBase, anchor is sf0.1"}"""
-      else {
-        val txt = scala.io.Source.fromInputStream(res, "UTF-8").mkString
-        val entry = """"(\w+)":\s*([0-9.]+)""".r
-        val base = entry.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-        val inter = trimmedMed.collect { case (k, m) if m >= 0 && base.contains(k) => (k, m, base(k)) }.toSeq
-        if (inter.isEmpty) """{"skipped":"empty intersection"}"""
-        else {
-          val agg = inter.map(_._2).sum / inter.map(_._3).sum
-          val flagged = inter.filter { case (_, m, b) => m > 2.0 * b }
-            .sortBy { case (_, m, b) => -m / b }
-            .map { case (k, m, b) => s"""{"q":"$k","sec":${f(m)},"$anchor":${f(b)},"ratio":${f(m / b)}}""" }
-          val unbaselined = trimmedMed.collect { case (k, m) if m >= 0 && !base.contains(k) => k }.toSeq.sorted
-          val unb = if (verbose) s""","unbaselined":[${unbaselined.map("\"" + _ + "\"").mkString(",")}]"""
-            else s""","n_unbaselined":${unbaselined.size}"""
-          s"""{"agg_ratio":${f(agg)},"n_compared":${inter.size},"baseline_flagged":[${flagged.mkString(",")}]$unb}"""
-        }
-      }
-    }
-    // r16 (verdict item 2): the stdout line must stay PARSEABLE in the
-    // driver's log capture — r14's rc=0 run still failed to parse because
-    // the per-iteration arrays for 219 queries truncated mid-record. The
-    // compact line (per-query trimmed medians, cold builds, baseline
-    // aggregates, failed/flagged names — no per-iter arrays, no
-    // unbaselined lists) goes to stdout; the FULL record including `stats`
-    // keeps living in target/bench.json, the artifact of record.
-    def record(verbose: Boolean): String = {
-      val statsField = if (verbose) s""""stats":$spread,""" else ""
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"cold_build_s":$coldJson,"vs_baseline_r12":${baselineJson("r12", verbose)},"vs_baseline_r13":${baselineJson("r13", verbose)},"vs_baseline_r14":${baselineJson("r14", verbose)},"vs_baseline_r15":${baselineJson("r15", verbose)},${statsField}"iters":$iters,"max_iters":$maxIters,"rerun_budget_left":$rerunBudget,"trim":"median over iterations <= ${OUTLIER_X}x query min; adaptive re-run past max/min > ${SPREAD_TRIGGER}x; median-guard re-run while trimmed median > ${MEDIAN_GUARD}x min (+${MEDIAN_GUARD_ABS_S}s slack); band re-run past min > ${BAND_TRIGGER}x historical floor; re-runs share one global budget","failed":[${failed.map("\"" + _ + "\"").mkString(",")}],"band_exceeded":[${bandExceeded.map("\"" + _ + "\"").mkString(",")}],"sf":"$sfDir"}"""
-    }
-    println(record(verbose = false))
-    // The full record (per-iteration stats, unbaselined lists) is file-only:
-    // target/bench.json is the parseable artifact of record for deep audits.
-    val out = java.nio.file.Paths.get("target/bench.json")
-    java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.write(out, (record(verbose = true) + "\n").getBytes("UTF-8"))
-    // persist this run's per-query minima so the NEXT run has a band —
-    // the min (not the median) because contention only ever inflates
-    // cold-build series ride the same history under "<name>__cold" keys
-    // (r11 verdict: cold_build_s lived only in the per-round artifact, so
-    // cold-build drift across rounds was untracked while steady floors
-    // were) — the "__cold" suffix can never collide with a query name, so
-    // the band-aware re-run lookup above is unaffected
-    BenchHistory.record(sfDir,
-      stats.collect { case (k, runs) if runs.nonEmpty => k -> runs.map(_._2).min }.toMap ++
-        coldBuilds.map { case (k, d) => s"${k}__cold" -> d })
+    val res = run(spark, sfDir, rows, iters)
+    java.nio.file.Files.writeString(java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
+      .resolve("bench.json"), record(sfDir, iters, res, verbose = true) + "\n")
+    // the next run's bands: each row's min (contention only ever inflates);
+    // cold builds under "<name>__cold", which no query name can collide with
+    BenchHistory.record(sfDir, res.filterNot(_.failed).map(r => r.name -> r.min).toMap ++
+      res.flatMap(r => r.coldS.map(s"${r.name}__cold" -> _)))
     spark.stop()
-    // a run with failed queries must not report success (r7: 44 failures
-    // under rc=0 and a '[success]' trailer)
-    if (failed.nonEmpty) sys.exit(1)
+    println(record(sfDir, iters, res, verbose = false))
+    // a run with failed rows must not report success
+    if (res.exists(_.failed)) sys.exit(1)
   }
 }

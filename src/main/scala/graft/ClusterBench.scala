@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.SparkConf
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
 
 /** Multi-host TIMING for shuffle-bound flagships — the r13 verdict's
@@ -13,10 +12,10 @@ import org.apache.spark.sql.SparkSession
   *     (forked-executor startup, codegen, broadcast warmup all land
   *     there), then `iters` timed iterations;
   *   - ≥3 iterations, median reported, every iteration shipped;
-  *   - executed-metrics capture: per timed iteration the listener
-  *     accumulates fetch-wait, remote/local shuffle-read bytes and
-  *     shuffle-write bytes from TaskMetrics — the network-shuffle story
-  *     as the executors actually paid it, not as the plan implies;
+  *   - executed-metrics capture: a [[Trace]] over each query's timed
+  *     iterations sums fetch-wait, remote/local shuffle-read bytes per
+  *     host and shuffle-write bytes — the network-shuffle story as the
+  *     executors actually paid it, not as the plan implies;
   *   - the local[8] leg runs in the SAME JVM with the same warm-up, so
   *     the delta is cluster overhead (network fetch, cross-JVM
   *     broadcast, scheduler placement), not JIT noise.
@@ -51,54 +50,24 @@ object ClusterBench {
       coresPerWorker = 4, memoryPerWorkerMb = 6144,
       workDirOf = i => scratch.resolve(s"work$i").toString)
 
-    final class Metrics {
-      val fetchWaitMs = new java.util.concurrent.atomic.AtomicLong
-      val remoteBytes = new java.util.concurrent.atomic.AtomicLong
-      val localBytes = new java.util.concurrent.atomic.AtomicLong
-      val writeBytes = new java.util.concurrent.atomic.AtomicLong
-      def snapshot: (Long, Long, Long, Long) =
-        (fetchWaitMs.get, remoteBytes.get, localBytes.get, writeBytes.get)
-    }
-    def attach(spark: SparkSession, hosts: java.util.Set[String]): Metrics = {
-      val m = new Metrics
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onTaskStart(e: SparkListenerTaskStart): Unit = hosts.add(e.taskInfo.host)
-        override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-          val tm = e.taskMetrics
-          if (tm != null) {
-            m.fetchWaitMs.addAndGet(tm.shuffleReadMetrics.fetchWaitTime)
-            m.remoteBytes.addAndGet(tm.shuffleReadMetrics.remoteBytesRead)
-            m.localBytes.addAndGet(tm.shuffleReadMetrics.localBytesRead)
-            m.writeBytes.addAndGet(tm.shuffleWriteMetrics.bytesWritten)
-          }
-        }
-      })
-      m
-    }
     def f(d: Double): String = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.length / 2) }
 
     /** Warm-up + `iters` timed runs of each query; per-query walls and
-      * the timed iterations' metric deltas. */
-    def leg(spark: SparkSession, m: Metrics): Map[String, (Seq[Double], (Long, Long, Long, Long))] =
+      * the trace of the timed iterations. */
+    def leg(spark: SparkSession): Map[String, (Seq[Double], Trace)] =
       Queries.map { name =>
         val fn = SparkEntry.queries(name)
         fn(spark, sfDir).collect(); CacheRegistry.releaseAll(spark) // warm-up, untimed
-        val before = m.snapshot
+        val trace = Trace.start(spark)
         val walls = (1 to iters).map { _ =>
           val t0 = System.nanoTime()
-          fn(spark, sfDir).collect()
-          val w = (System.nanoTime() - t0) / 1e9
-          CacheRegistry.releaseAll(spark)
-          w
+          try { fn(spark, sfDir).collect(); (System.nanoTime() - t0) / 1e9 } finally CacheRegistry.releaseAll(spark)
         }
-        val after = m.snapshot
-        name -> (walls, (after._1 - before._1, after._2 - before._2,
-          after._3 - before._3, after._4 - before._4))
+        name -> (walls, trace.stop())
       }.toMap
 
     try {
-      val hosts = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
       // SPARK_GRAFT_CLUSTER_CONF="k=v;k=v" applies to BOTH cluster legs —
       // the knob that let the r15 shard-family drill prove its
       // reducer-locality finding (spark.locality.wait=0 collapses the
@@ -117,9 +86,7 @@ object ClusterBench {
       }
       val cluster = clusterSession(Map.empty)
       cluster.sparkContext.setLogLevel("ERROR")
-      val cm = attach(cluster, hosts)
-      val clusterRes = leg(cluster, cm)
-      val hostsV = { import scala.jdk.CollectionConverters._; hosts.asScala.toVector.sorted }
+      val clusterRes = leg(cluster)
       cluster.stop()
 
       // forced-remote leg: at gate SFs the AQE-coalesced shuffles sit
@@ -129,19 +96,20 @@ object ClusterBench {
       // across the executors, so the NETWORK path itself gets a number.
       val remote = clusterSession(Map("spark.shuffle.reduceLocality.enabled" -> "false"))
       remote.sparkContext.setLogLevel("ERROR")
-      val rm = attach(remote, hosts)
-      val remoteRes = leg(remote, rm)
+      val remoteRes = leg(remote)
       remote.stop()
 
       val local = GraftSession.builder("local[8]", 8).getOrCreate()
       local.sparkContext.setLogLevel("ERROR")
-      val lm = attach(local, java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
-      val localRes = leg(local, lm)
+      val localRes = leg(local)
       local.stop()
 
-      def mj(t: (Long, Long, Long, Long)): String =
-        s"""{"fetch_wait_ms":${t._1},"remote_read_mb":${f(t._2 / 1e6)},""" +
-          s""""local_read_mb":${f(t._3 / 1e6)},"shuffle_write_mb":${f(t._4 / 1e6)}}"""
+      val hostsV = (clusterRes.values ++ remoteRes.values).flatMap(_._2.hosts.keys).toVector.distinct.sorted
+      def mj(t: Trace): String = {
+        val h = t.hosts.values
+        s"""{"fetch_wait_ms":${h.map(_.fetchWaitMs).sum},"remote_read_mb":${f(h.map(_.remoteBytes).sum / 1e6)},""" +
+          s""""local_read_mb":${f(h.map(_.localBytes).sum / 1e6)},"shuffle_write_mb":${f(t.jobs.map(_.shWrite).sum / 1e6)}}"""
+      }
       val per = Queries.map { n =>
         val (cw, cmx) = clusterRes(n); val (lw, lmx) = localRes(n)
         val (rw, rmx) = remoteRes(n)

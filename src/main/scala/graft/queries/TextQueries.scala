@@ -3983,15 +3983,16 @@ object HashDedup {
   /** Append `r`'s band rows to `store` as generation `gen`, in `nFiles`
     * files. */
   private[graft] def landGen(store: java.nio.file.Path, r: DataFrame, gen: Int, nFiles: Int): Unit =
-    r.withColumn("gen", lit(gen)).repartition(nFiles)
-      .write.partitionBy("gen").mode("append").parquet(store.toString)
+    graft.Trace.phase(r.sparkSession, "banded index: land")(r.withColumn("gen", lit(gen)).repartition(nFiles)
+      .write.partitionBy("gen").mode("append").parquet(store.toString))
 
   /** A band-row store (or one generation of it) read back from its files
     * with the rows' known schema: an inferred one costs a footer-reading
     * job per read. Partition columns (`gen=`) are still discovered from
     * the directory names. */
   private[graft] def readIndex(spark: SparkSession, store: java.nio.file.Path): DataFrame =
-    spark.read.schema("doc_id LONG, band INT, band_key STRING").parquet(store.toString)
+    graft.Trace.phase(spark, "banded index: read-back")(
+      spark.read.schema("doc_id LONG, band INT, band_key STRING").parquet(store.toString))
 
   /** One serve of `keys` against the store's files. The read-back
     * (doc_id, band, band_key, `extra`…) and the probe join of `keys`
@@ -4008,7 +4009,7 @@ object HashDedup {
                                    counted: Seq[(String, DataFrame)] = Nil, extra: Seq[Column] = Nil)(
       body: IndexServe => A): A = {
     val spark = keys.sparkSession
-    graft.CacheRegistry.withCache(readIndex(spark, store)
+    graft.Trace.phase(spark, "banded index: serve")(graft.CacheRegistry.withCache(readIndex(spark, store)
         .select(Seq(col("doc_id"), col("band"), col("band_key")) ++ extra: _*)) { back =>
       graft.CacheRegistry.withCache(bandCandidates(keys, back)) { cand =>
         val hits = TextQueries.verifyPairsOf(c.sh5, cand).select(col("doc_a"), col("doc_b"))
@@ -4017,12 +4018,13 @@ object HashDedup {
         val counts = (("n_lookups" -> keys) +: ("n_true" -> truth) +: counted).map {
           case (n, f) => broadcast(f.agg(count(lit(1)).as(n)))
         }
-        val census = (broadcast(back.agg(backAggs.head, backAggs.tail: _*)) +: counts)
-          .foldLeft(cand.agg(count(lit(1)).as("n_candidates")))(_ crossJoin _)
-          .collect()(0)
+        val census = graft.Trace.phase(spark, "census")(
+          (broadcast(back.agg(backAggs.head, backAggs.tail: _*)) +: counts)
+            .foldLeft(cand.agg(count(lit(1)).as("n_candidates")))(_ crossJoin _)
+            .collect()(0))
         body(IndexServe(census, hits, back, cand))
       }
-    }
+    })
   }
 
   /** The read-back census of a store whose generations may repeat rows:

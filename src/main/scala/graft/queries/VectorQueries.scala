@@ -372,8 +372,8 @@ object VectorQueries {
 
   /** The cell-partitioned store read back from its files as (vec_id, emb,
     * cell). */
-  private[graft] def readStore(spark: SparkSession, store: String): DataFrame =
-    spark.read.schema(StoreSchema).parquet(store).select(col("vec_id"), col("emb"), col("cell"))
+  private[graft] def readStore(spark: SparkSession, store: String): DataFrame = graft.Trace.phase(spark, "ivf: read-back")(
+    spark.read.schema(StoreSchema).parquet(store).select(col("vec_id"), col("emb"), col("cell")))
 
   /** The store census most serves report: (n_rows, n_distinct vec_ids). */
   private[graft] def storeCensus(back: DataFrame): DataFrame =
@@ -391,8 +391,8 @@ object VectorQueries {
     def branch(df: DataFrame, isCensus: Boolean): DataFrame = df.select(fields.map(f =>
       if (df.columns.contains(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)) :+
       lit(isCensus).as("_census"): _*)
-    val (censusRows, rankedRows) = branch(ranked, isCensus = false)
-      .union(branch(census, isCensus = true)).collect().partition(_.getBoolean(fields.length))
+    val (censusRows, rankedRows) = graft.Trace.phase(scored.sparkSession, "ivf: serve")(branch(ranked, isCensus = false)
+      .union(branch(census, isCensus = true)).collect()).partition(_.getBoolean(fields.length))
     val nRanked = ranked.columns.length
     val censusVals = censusRows.head.toSeq.slice(nRanked, fields.length)
     val schema = org.apache.spark.sql.types.StructType(fields)
@@ -3048,8 +3048,8 @@ object VectorQueries {
     * per write. */
   private def byCell(a: DataFrame): DataFrame = graft.Spread.clustered(a, col("cell"))
 
-  private[graft] def landStore(store: String, a: DataFrame): Unit =
-    byCell(a).write.partitionBy("cell").mode("overwrite").parquet(store)
+  private[graft] def landStore(store: String, a: DataFrame): Unit = graft.Trace.phase(a.sparkSession, "ivf: land")(
+    byCell(a).write.partitionBy("cell").mode("overwrite").parquet(store))
 
   /** Per-subspace ADC lookup tables of `queries` against the PQ model's
     * codebooks: (q_id, code_m, part_m) for each m < [[PquM]]. */
@@ -3103,15 +3103,15 @@ object VectorQueries {
       .select((col("vec_id") +: col("cell") +: codeCols.map(col) :+ col("model_v")): _*)
 
   /** Append `a`'s rows to their cells' partitions — new files only. */
-  private[graft] def appendCells(store: String, a: DataFrame): Unit =
-    byCell(a).write.partitionBy("cell").mode("append").parquet(store)
+  private[graft] def appendCells(store: String, a: DataFrame): Unit = graft.Trace.phase(a.sparkSession, "ivf: append")(
+    byCell(a).write.partitionBy("cell").mode("append").parquet(store))
 
   /** Rewrite ONLY the cell partitions `a` has rows for (dynamic partition
     * overwrite). A cell `a` has no rows for keeps its files, so a cell the
     * rewrite empties must be dropped with [[dropCells]]. */
-  private[graft] def overwriteCells(store: String, a: DataFrame): Unit =
+  private[graft] def overwriteCells(store: String, a: DataFrame): Unit = graft.Trace.phase(a.sparkSession, "ivf: overwrite")(
     byCell(a).write.partitionBy("cell").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(store)
+      .option("partitionOverwriteMode", "dynamic").parquet(store))
 
   /** Delete the partitions of `cells` (the emptied-cell ghost discipline). */
   private[graft] def dropCells(store: String, cells: Iterable[Long]): Unit =

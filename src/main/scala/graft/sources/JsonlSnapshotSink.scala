@@ -377,7 +377,7 @@ object JsonlSnapshotSink {
     val root = s"${System.getProperty("java.io.tmpdir")}/graft_snapshot_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
     registerScratchRoot(spark, root)
     // eager — the objects exist when this returns
-    graft.JobProf.phase(spark, "jsonl_snapshot: write")(write(records, root))
+    graft.Trace.phase(spark, "jsonl_snapshot: write")(write(records, root))
     readBack(spark, root).orderBy(col("object_key"), col("record"))
   }
 

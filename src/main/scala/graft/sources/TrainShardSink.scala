@@ -91,13 +91,13 @@ object TrainShardSink {
     val spark = lines.sparkSession
     import spark.implicits._
     val confEntries = JsonlSnapshotSink.confEntriesOf(spark)
-    lines
+    graft.Trace.phase(spark, "shards: write")(lines
       .repartition(Seq(maxTasks, nShards, spark.sparkContext.defaultParallelism).min, col("shard"))
       .sortWithinPartitions(col("shard"), col("pos"))
       .select(col("shard"), col("line"))
       .as[(Int, String)]
       .mapPartitions(rows => writePartitionBody(rows, root, nShards, codec, confEntries, nameOf))
-      .collect() // eager: the side-effecting write must run exactly once
+      .collect()) // eager: the side-effecting write must run exactly once
   }
 
   /** The per-task writer body: one streaming pass over (shard, line) rows
@@ -181,7 +181,7 @@ object TrainShardSink {
   def readBack(spark: SparkSession, root: String,
                codec: SnapshotCodec = GzipSnapshotCodec): DataFrame = {
     import spark.implicits._
-    shardFiles(spark, root)
+    graft.Trace.phase(spark, "shards: read-back")(shardFiles(spark, root))
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>

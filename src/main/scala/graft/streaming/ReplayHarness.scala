@@ -63,7 +63,7 @@ private[streaming] object ReplayHarness {
       queries.foreach(q => if (q != null) q.stop()) // a failed replay must not leak the query + state
       org.apache.spark.sql.graftbridge.StateStoreBridge.unloadAll()
       graft.CacheRegistry.releaseAll(scope)
-      org.apache.spark.sql.graftbridge.DatasetBridge.detachStreams(scope, queries.filter(_ != null).toSeq)
+      org.apache.spark.sql.graftbridge.DatasetBridge.detachStreams(scope, queries.filter(_ != null).toSeq, owner = true)
       andThen()
     }
   }

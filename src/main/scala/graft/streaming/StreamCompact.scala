@@ -53,8 +53,8 @@ object StreamCompact {
   private[graft] def streamCompactWithCensus(
       spark: SparkSession, dir: String): (DataFrame, CompactStreamCensus) = {
     import graft.queries.VectorQueries
-    // every job carries its phase's name (JobProf's per-phase table)
-    def phase[T](label: String)(body: => T): T = graft.JobProf.phase(spark, s"stream_compact: $label")(body)
+    // every job carries its phase's name (graft.Trace)
+    def phase[T](label: String)(body: => T): T = graft.Trace.phase(spark, s"stream_compact: $label")(body)
     val (queries, corpus) = phase("build")(VectorQueries.querySplit(VectorQueries.vectorsOf(spark, dir)))
     val base = corpus.filter(col("vec_id") % 20 =!= 0) // №176's split
     val arrivals = corpus.filter(col("vec_id") % 20 === 0)

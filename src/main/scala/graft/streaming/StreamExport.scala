@@ -44,10 +44,7 @@ object StreamExport {
       .outputMode("complete")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    // unload in finally: a FAILED replay is exactly when leaked providers
-    // (+ their maintenance threads) would degrade every later query
-    try q.awaitTermination()
-    finally org.apache.spark.sql.graftbridge.StateStoreBridge.unloadAll() // session-window state providers (see bridge scaladoc)
+    awaitThenRelease(spark, q)
     spark.table(name).orderBy(col("topic"), col("window_start_ms"))
   }
 
@@ -75,10 +72,21 @@ object StreamExport {
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    try q.awaitTermination()
-    finally org.apache.spark.sql.graftbridge.StateStoreBridge.unloadAll()
+    awaitThenRelease(spark, q)
     written.get()
   }
+
+  /** Run `q` to its end, then unload its state providers and detach the
+    * session Spark cloned for it from the listener bus — in `finally`: a
+    * FAILED stream is exactly when leaked providers (and their
+    * maintenance threads) would degrade every later query. */
+  private[streaming] def awaitThenRelease(spark: SparkSession,
+                                          q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    try q.awaitTermination()
+    finally {
+      org.apache.spark.sql.graftbridge.StateStoreBridge.unloadAll() // see bridge scaladoc
+      org.apache.spark.sql.graftbridge.DatasetBridge.detachStreams(spark, Seq(q), owner = false)
+    }
 
   val streamExportSql: String =
     """WITH e AS (

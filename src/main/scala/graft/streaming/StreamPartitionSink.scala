@@ -47,7 +47,7 @@ object StreamPartitionSink {
       .partitionBy("date")
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+    StreamExport.awaitThenRelease(spark, q)
   }
 
   /** Run the partitioned file-sink stream to completion TWICE (the second

@@ -28,18 +28,20 @@ object DatasetBridge {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 
-  /** Detach the streaming listener buses of a session that starts no more
-    * queries, and of the sessions Spark cloned from it for `queries`,
-    * from the SparkContext's listener bus. A session registers one there
-    * when it first starts a stream and never unregisters it (the field is
-    * private, hence the reflection), so each replay's child session and
-    * every stream's own clone would stay reachable, temp views and
-    * memory-sink rows included, for the life of the JVM. */
-  def detachStreams(spark: SparkSession, queries: Seq[StreamingQuery]): Unit = {
+  /** Detach from the SparkContext's listener bus the streaming listener
+    * buses of the sessions Spark cloned from `spark` for `queries` and,
+    * with `owner`, of `spark` itself (a session that starts no more
+    * queries). A session registers one there when it first starts a
+    * stream and never unregisters it (the field is private, hence the
+    * reflection), so each stream's own clone, and each replay's child
+    * session, would stay reachable, temp views and memory-sink rows
+    * included, for the life of the JVM. Without `owner` the caller's own
+    * bus, which its later streams and listeners use, stays. */
+  def detachStreams(spark: SparkSession, queries: Seq[StreamingQuery], owner: Boolean): Unit = {
     val bus = classOf[org.apache.spark.sql.classic.StreamingQueryManager].getDeclaredField("listenerBus")
     bus.setAccessible(true)
-    val sessions = spark +: queries.collect { case q: StreamingQueryWrapper => q.streamingQuery.sparkSessionForStream }
-    sessions.foreach(s => spark.sparkContext.removeSparkListener(
+    val clones = queries.collect { case q: StreamingQueryWrapper => q.streamingQuery.sparkSessionForStream }
+    (if (owner) spark +: clones else clones).foreach(s => spark.sparkContext.removeSparkListener(
       bus.get(s.streams).asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface]))
   }
 }

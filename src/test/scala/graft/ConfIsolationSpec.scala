@@ -13,9 +13,11 @@ class ConfIsolationSpec extends SparkSpec {
 
   /** The rows that used to set and restore session conf: three replays
     * (one with two chained stateful operators), the label-propagation
-    * loop behind `dedup_cluster`, and the probe-budgeted pipeline. */
+    * loop behind `dedup_cluster`, and the probe-budgeted pipeline; and
+    * two streams started on the caller's session outside the replay
+    * scaffold, whose clones must leave the listener bus too. */
   private val Rows = Seq("stream_late", "stream_topk", "stream_compact",
-    "dedup_cluster", "dedup_pipeline_mp_budget")
+    "dedup_cluster", "dedup_pipeline_mp_budget", "stream_export", "stream_partition_sink")
 
   test("each row leaves session conf and listeners as they were; stateful replays run at width 8") {
     // Tables sets its two event-read confs on the first events read, by
@@ -47,7 +49,7 @@ class ConfIsolationSpec extends SparkSpec {
     }
     // each replay's child session, and Spark's clone per query, is dropped
     assert(TestListenerBridge.streamListenerBuses(spark.sparkContext) == buses,
-      "a replay left its session's streaming listener bus on the SparkContext")
+      "a stream left its session's streaming listener bus on the SparkContext")
     import scala.jdk.CollectionConverters._
     val seen = widths.asScala.toSeq
     Seq("stream_late_", "stream_topk_").foreach { prefix =>
