@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.store.Layout
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,7 +67,7 @@ object CorpusBackfill {
       spark: SparkSession, dir: String): (DataFrame, BackfillDetail) = {
     import VectorQueries.{EmbedQEvery, K}
     import CorpusForget.FgtBuckets
-    import HashDedup.{clsOf, landGen, readIndex}
+    import HashDedup.clsOf
     val corpus = new HashDedup.IndexCorpus(spark, dir)
     import corpus.ofCls
     val ve = PipelineQueries.corpusVectors(spark, dir)
@@ -74,22 +75,19 @@ object CorpusBackfill {
 
     val root = graft.Fs.storeDir("corpbf", dir)
     graft.Fs.rmTree(root)
-    val ixStore = root.resolve("index"); val vStore = root.resolve("vectors")
+    val ixStore = HashDedup.bandIndex(root.resolve("index"))
+    val vStore = PipelineQueries.vectorStore(root.resolve("vectors"), "bkt LONG")
     val ixNight = ofCls(_ === 1L)
     // vector store: bucket-partitioned (the №198 layout); night = cls 1
     def vRows(p: Column => Column): DataFrame =
       ve.filter(p(col("cls")) && !(col("doc_id") % EmbedQEvery === 0) && col("cls") =!= 3L)
         .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
         .withColumn("bkt", pmod(col("doc_id"), lit(FgtBuckets)))
-    def landV(r: DataFrame): Unit =
-      graft.Spread.clustered(r, col("bkt")).write.partitionBy("bkt").mode("append").parquet(vStore.toString)
-    landGen(ixStore, ofCls(c => c =!= 1L && c =!= 3L), 0, 4)
-    landGen(ixStore, ixNight, 1, 2)
-    landV(vRows(_ =!= 1L)); landV(vRows(_ === 1L))
+    ixStore.append(HashDedup.atGen(ofCls(c => c =!= 1L && c =!= 3L), 0), Layout.Files(4))
+    ixStore.append(HashDedup.atGen(ixNight, 1), Layout.Files(2))
+    vStore.append(vRows(_ =!= 1L)); vStore.append(vRows(_ === 1L))
     val probeKeys = ofCls(_ === 3L)
 
-    def filesByBucket(): Map[Long, Int] = graft.Fs.subdirs(vStore, "bkt=").map(b =>
-      b.stripPrefix("bkt=").toLong -> graft.Fs.parquetFiles(vStore.resolve(b)).size).toMap
     val out = scala.collection.mutable.ArrayBuffer.empty[
       (Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Double)]
     val candPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
@@ -105,9 +103,9 @@ object CorpusBackfill {
     // serve wall the r14 bench billed was proof work done four times.
     var scoredCache: Option[(DataFrame, Array[(Long, Long, Long, Double)])] = None
     def serve(stage: Int): Unit = {
-      val ixBack = readIndex(spark, ixStore).select(col("doc_id"), col("band"), col("band_key"))
+      val ixBack = ixStore.read(spark).select(col("doc_id"), col("band"), col("band_key"))
       val cand = HashDedup.bandCandidates(probeKeys, ixBack)
-      val vBack = PipelineQueries.readVectors(spark, vStore)
+      val vBack = vStore.read(spark).select(col("doc_id"), col("emb_arr"), col("norm_sq"))
       // candidate pairs: ONE execution per stage (guide §1.2 "don't
       // compute things twice") — the census's n_cand previously re-ran
       // the whole probe join under a count aggregate while candPairs
@@ -150,28 +148,26 @@ object CorpusBackfill {
       topk(stage) = served.map(t => (t._1, t._3)).toSet
     }
     serve(0)
-    landGen(ixStore, ixNight, 1, 2) // PARTIAL storm: text only
+    ixStore.append(HashDedup.atGen(ixNight, 1), Layout.Files(2)) // PARTIAL storm: text only
     serve(1)
-    landV(vRows(_ === 1L)) // SYMMETRIC storm: vector too
+    vStore.append(vRows(_ === 1L)) // SYMMETRIC storm: vector too
     serve(2)
     // repairs, each store in its own safe form
-    val ixRepairRead = graft.CacheRegistry.withCache(readIndex(spark, ixStore.resolve("gen=1"))
+    val ixRepairRead = graft.CacheRegistry.withCache(ixStore.read(spark, 1)
         .select(col("doc_id"), col("band"), col("band_key"))) { gen1 =>
       val n = gen1.count()
-      landGen(ixStore, gen1.distinct(), 11, 2)
+      ixStore.append(HashDedup.atGen(gen1.distinct(), 11), Layout.Files(2))
       n
     }
-    graft.Fs.rmTree(ixStore.resolve("gen=1"))
+    ixStore.drop(1)
     val nightBuckets = vRows(_ === 1L).select(col("bkt")).distinct()
       .collect().map(_.getLong(0)).toSet
-    val before = filesByBucket().filter { case (b, _) => !nightBuckets(b) }
+    val before = vStore.fileCounts.filter { case (b, _) => !nightBuckets(b) }
     val repairContent = vRows(c => c =!= 1L && c =!= 3L)
       .filter(col("bkt").isin(nightBuckets.toSeq.map(Long.box): _*))
       .unionAll(vRows(_ === 1L))
-    graft.Spread.clustered(repairContent, col("bkt"))
-      .write.partitionBy("bkt").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(vStore.toString)
-    val after = filesByBucket().filter { case (b, _) => !nightBuckets(b) }
+    vStore.replace(repairContent, nightBuckets)
+    val after = vStore.fileCounts.filter { case (b, _) => !nightBuckets(b) }
     serve(3)
     import spark.implicits._
     val df = out.toSeq

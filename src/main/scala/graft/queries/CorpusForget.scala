@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.store.Layout
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -73,7 +74,7 @@ object CorpusForget {
   private[graft] def corpusForgetDetail(
       spark: SparkSession, dir: String): (DataFrame, ForgetDetail) = {
     import VectorQueries.{EmbedQEvery, K}
-    import HashDedup.{clsOf, landGen, readIndex}
+    import HashDedup.clsOf
     val m = HashDedup.IncCalMod.toLong
     // the manifest: stored docs only — batch (cls=1) and held-out query
     // docs share the residue but are probe/query keys, not store rows
@@ -87,21 +88,21 @@ object CorpusForget {
 
     val root = graft.Fs.storeDir("forget", dir)
     graft.Fs.rmTree(root)
-    val ixStore = root.resolve("index"); val vStore = root.resolve("vectors")
+    val ixStore = HashDedup.bandIndex(root.resolve("index"))
+    val vStore = PipelineQueries.vectorStore(root.resolve("vectors"), "bkt LONG")
     val vStored = ve.filter(col("cls") =!= 1L && !(col("doc_id") % EmbedQEvery === 0))
       .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
       .withColumn("bkt", pmod(col("doc_id"), lit(FgtBuckets)))
-    landGen(ixStore, ofCls(_ =!= 1L), 0, 4)
-    graft.Spread.clustered(vStored, col("bkt"))
-      .write.partitionBy("bkt").mode("overwrite").parquet(vStore.toString)
+    ixStore.append(HashDedup.atGen(ofCls(_ =!= 1L), 0), Layout.Files(4))
+    vStore.land(vStored)
 
     val out = scala.collection.mutable.ArrayBuffer.empty[
       (Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Double)]
     val ixDocs = scala.collection.mutable.Map.empty[Int, Set[Long]]
     val vecDocs = scala.collection.mutable.Map.empty[Int, Set[Long]]
     def serve(stage: Int, nDropped: Long): Unit = {
-      val ixBack = readIndex(spark, ixStore)
-      val vBack = PipelineQueries.readVectors(spark, vStore)
+      val ixBack = ixStore.read(spark)
+      val vBack = vStore.read(spark)
       val scored = PipelineQueries.exactCos(vBack, queries)
       val census = ixBack.agg(count(lit(1)).as("n_index_rows"),
           sum(when(delOf(col("doc_id")), 1L).otherwise(0L)).as("n_del_ix"))
@@ -124,21 +125,15 @@ object CorpusForget {
     serve(0, 0L)
 
     // W1 — TEXT: surviving band rows land as gen=10, gen=0 drops
-    landGen(ixStore, ofCls(_ =!= 1L).filter(!delOf(col("doc_id"))), 10, 4)
-    graft.Fs.rmTree(ixStore.resolve("gen=0"))
+    ixStore.append(HashDedup.atGen(ofCls(_ =!= 1L).filter(!delOf(col("doc_id"))), 10), Layout.Files(4))
+    ixStore.drop(0)
     serve(1, 0L)
 
-    // W2 — VECTOR: even-then-odd bucket waves from the cached frame
-    def wave(parity: Long): Unit = {
-      val content = vStored.filter(col("bkt") % 2 === parity && !delOf(col("doc_id")))
-      graft.Spread.clustered(content, col("bkt"))
-        .write.partitionBy("bkt").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(vStore.toString)
-      val surviving = content.select(col("bkt")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      (0L until FgtBuckets).filter(b => b % 2 == parity && !surviving(b)).foreach(b =>
-        graft.Fs.rmTree(vStore.resolve(s"bkt=$b")))
-    }
+    // W2 — VECTOR: even-then-odd bucket waves from the cached frame; a
+    // bucket whose rows are all forgotten is dropped
+    def wave(parity: Long): Unit =
+      vStore.replace(vStored.filter(col("bkt") % 2 === parity && !delOf(col("doc_id"))),
+        (0L until FgtBuckets).filter(_ % 2 == parity))
     wave(0L); wave(1L)
     serve(2, 0L)
 
@@ -149,14 +144,13 @@ object CorpusForget {
       corpus.sh5, HashDedup.bandCandidates(batchKeys, ix), clsOf(_) === 1L)
     // the pre-forget CONTROL decision, from the cached rows (never files)
     val preDups = dupIdsAgainst(ofCls(_ =!= 1L)).collect().map(_.getLong(0)).toSet
-    val dups = HashDedup.landDecision(root.resolve("dups"), dupIdsAgainst(readIndex(spark, ixStore)))
+    val dups = HashDedup.landDecision(root.resolve("dups"), dupIdsAgainst(ixStore.read(spark)))
     val nDropped = dups.count()
-    landGen(ixStore, batchKeys.join(dups, Seq("doc_id"), "left_anti"), 1, 2)
+    ixStore.append(HashDedup.atGen(batchKeys.join(dups, Seq("doc_id"), "left_anti"), 1), Layout.Files(2))
     val fresh = ve.filter(col("cls") === 1L).select(col("doc_id"), col("emb_arr"), col("norm_sq"))
       .join(dups, Seq("doc_id"), "left_anti")
       .withColumn("bkt", pmod(col("doc_id"), lit(FgtBuckets)))
-    graft.Spread.clustered(fresh, col("bkt"))
-      .write.partitionBy("bkt").mode("append").parquet(vStore.toString)
+    vStore.append(fresh)
     serve(3, nDropped)
 
     import spark.implicits._

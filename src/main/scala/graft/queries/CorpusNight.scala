@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.store.Layout
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,7 +56,7 @@ object CorpusNight {
   private[graft] def corpusNightDetail(
       spark: SparkSession, dir: String): (DataFrame, NightDetail) = {
     import VectorQueries.{EmbedQEvery, K}
-    import HashDedup.{clsOf, landGen, readIndex}
+    import HashDedup.clsOf
     val m = HashDedup.IncCalMod.toLong
     val corpus = new HashDedup.IndexCorpus(spark, dir)
     import corpus.ofCls
@@ -64,18 +65,17 @@ object CorpusNight {
 
     val root = graft.Fs.storeDir("night", dir)
     graft.Fs.rmTree(root)
-    val ixStore = root.resolve("index"); val vStore = root.resolve("vectors")
-    def landV(r: DataFrame, nFiles: Int): Unit =
-      r.repartition(nFiles).write.mode("append").parquet(vStore.toString)
-    landGen(ixStore, ofCls(_ =!= 1L), 0, 4)
-    landV(ve.filter(col("cls") =!= 1L && !(col("doc_id") % EmbedQEvery === 0))
-      .select(col("doc_id"), col("emb_arr"), col("norm_sq")), 4)
+    val ixStore = HashDedup.bandIndex(root.resolve("index"))
+    val vStore = PipelineQueries.vectorStore(root.resolve("vectors"))
+    ixStore.append(HashDedup.atGen(ofCls(_ =!= 1L), 0), Layout.Files(4))
+    vStore.append(ve.filter(col("cls") =!= 1L && !(col("doc_id") % EmbedQEvery === 0))
+      .select(col("doc_id"), col("emb_arr"), col("norm_sq")), Layout.Files(4))
 
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Long, Double)]
     val storeDocs = scala.collection.mutable.Map.empty[Int, Set[Long]]
     def serve(stage: Int, nDropped: Long): Unit = {
-      val ixBack = readIndex(spark, ixStore)
-      val vBack = PipelineQueries.readVectors(spark, vStore)
+      val ixBack = ixStore.read(spark)
+      val vBack = vStore.read(spark)
       val scored = PipelineQueries.exactCos(vBack, queries)
       val census = ixBack.agg(count(lit(1)).as("n_index_rows"))
         .crossJoin(broadcast(vBack.agg(count(lit(1)).as("n_vecs"))))
@@ -91,15 +91,15 @@ object CorpusNight {
     // THE NIGHT: probe the index FILES, verify exactly, split the batch;
     // the decision lands as a manifest ([[HashDedup.landDecision]])
     val batchKeys = ofCls(_ === 1L)
-    val cand = HashDedup.bandCandidates(batchKeys, readIndex(spark, ixStore))
+    val cand = HashDedup.bandCandidates(batchKeys, ixStore.read(spark))
     val dups = HashDedup.landDecision(root.resolve("dups"),
       HashDedup.batchDups(corpus.sh5, cand, clsOf(_) === 1L))
     val nDropped = dups.count()
     // survivors: distributed anti-join — the dup set is batch-bounded but
     // never becomes a driver-side literal list in the plan
-    landGen(ixStore, batchKeys.join(dups, Seq("doc_id"), "left_anti"), 1, 2)
-    landV(ve.filter(col("cls") === 1L).select(col("doc_id"), col("emb_arr"), col("norm_sq"))
-      .join(dups, Seq("doc_id"), "left_anti"), 2)
+    ixStore.append(HashDedup.atGen(batchKeys.join(dups, Seq("doc_id"), "left_anti"), 1), Layout.Files(2))
+    vStore.append(ve.filter(col("cls") === 1L).select(col("doc_id"), col("emb_arr"), col("norm_sq"))
+      .join(dups, Seq("doc_id"), "left_anti"), Layout.Files(2))
     serve(1, nDropped)
 
     import spark.implicits._

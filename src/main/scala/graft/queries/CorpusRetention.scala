@@ -66,14 +66,11 @@ object CorpusRetention {
 
     val root = graft.Fs.storeDir("corpret", dir)
     graft.Fs.rmTree(root)
-    val ixStore = root.resolve("index"); val vStore = root.resolve("vectors")
-    val ixRows = ofCls(_ =!= 3L).withColumn("gen", genOf)
-    graft.Spread.clustered(ixRows, col("gen"))
-      .write.partitionBy("gen").mode("overwrite").parquet(ixStore.toString)
-    val vRows = ve.filter(col("cls") =!= 3L && !(col("doc_id") % EmbedQEvery === 0))
-      .select(col("doc_id"), col("emb_arr"), col("norm_sq")).withColumn("gen", genOf)
-    graft.Spread.clustered(vRows, col("gen"))
-      .write.partitionBy("gen").mode("overwrite").parquet(vStore.toString)
+    val ixStore = HashDedup.bandIndex(root.resolve("index"))
+    val vStore = PipelineQueries.vectorStore(root.resolve("vectors"), "gen INT")
+    ixStore.land(ofCls(_ =!= 3L).withColumn("gen", genOf))
+    vStore.land(ve.filter(col("cls") =!= 3L && !(col("doc_id") % EmbedQEvery === 0))
+      .select(col("doc_id"), col("emb_arr"), col("norm_sq")).withColumn("gen", genOf))
 
     val night3Keys = ofCls(_ === 3L)
     // text truth per stage: night-3 pairs whose partner is in the stage's
@@ -96,13 +93,13 @@ object CorpusRetention {
     var full: Set[(Long, Long)] = Set.empty
     def serve(stage: Int): Unit = {
       // TEXT leg: probe the index files, verify, hit vs the window truth
-      val ixBack = HashDedup.readIndex(spark, ixStore).select(col("doc_id"), col("band"), col("band_key"))
+      val ixBack = ixStore.read(spark).select(col("doc_id"), col("band"), col("band_key"))
       val cand = HashDedup.bandCandidates(night3Keys, ixBack)
       val ts = truthAt(stage)
       val hits = TextQueries.verifyPairsOf(corpus.sh5, cand).select(col("doc_a"), col("doc_b"))
         .join(broadcast(ts), Seq("doc_a", "doc_b"))
       // VECTOR leg: serve the files
-      val vBack = PipelineQueries.readVectors(spark, vStore)
+      val vBack = vStore.read(spark)
       val scored = PipelineQueries.exactCos(vBack, queries)
       val census = ixBack.agg(count(lit(1)).as("n_index_rows"))
         .crossJoin(broadcast(vBack.agg(count(lit(1)).as("n_vecs"))))
@@ -124,13 +121,13 @@ object CorpusRetention {
       hitPairs(stage) = hits.select(col("doc_a"), col("doc_b")).collect()
         .map(h => (h.getLong(0), h.getLong(1))).toSet
       topk(stage) = pairs
-      ixGens(stage) = graft.Fs.subdirs(ixStore); vecGens(stage) = graft.Fs.subdirs(vStore)
+      ixGens(stage) = ixStore.dirs; vecGens(stage) = vStore.dirs
     }
     serve(0)
-    graft.Fs.rmTree(ixStore.resolve("gen=0")); serve(1)   // INCOHERENT
-    graft.Fs.rmTree(vStore.resolve("gen=0")); serve(2)
-    graft.Fs.rmTree(ixStore.resolve("gen=1"))
-    graft.Fs.rmTree(vStore.resolve("gen=1")); serve(3)
+    ixStore.drop(0); serve(1)   // INCOHERENT
+    vStore.drop(0); serve(2)
+    ixStore.drop(1)
+    vStore.drop(1); serve(3)
     import spark.implicits._
     val df = out.toSeq
       .toDF("stage", "n_index_rows", "n_vecs", "n_hit", "n_true_w",

@@ -597,7 +597,10 @@ object PipelineQueries {
     *  - the files: [[graft.sources.TrainShardSink]]'s `lineOf` (the line
     *    format), `writeLines` (the writer), `readBack` (lines with the
     *    generation their file name carries), `resolve` (last writer wins,
-    *    optional tombstone drop) and `fileCensus`;
+    *    optional tombstone drop) and `fileCensus`. The shard files are
+    *    gzip JSON lines named by generation, not partitioned parquet, so
+    *    this store keeps its own writer and resolve; the parquet stores
+    *    (IVF, banded index, corpus vectors) share [[graft.store.PartStore]];
     *  - the oracle's shard hash: [[hex8]].
     * Each drill's store root is `graft.Fs.storeDir(kind, dir)`. This
     * definition is the corpus side: per-doc token counts (doc_id, n_tok). */
@@ -1284,13 +1287,11 @@ object PipelineQueries {
       .select(col("doc_id").as("q_id"), col("emb_arr").as("q_emb"), col("norm_sq").as("q_norm"))
       .persist())
 
-  /** A corpus drill's vector store (doc_id, emb_arr, norm_sq) read back
-    * from its files with the rows' known schema, as
-    * [[HashDedup.readIndex]] reads the band index: an inferred schema
-    * costs a footer-reading job per read. */
-  private[graft] def readVectors(spark: SparkSession, store: java.nio.file.Path): DataFrame =
-    spark.read.schema("doc_id LONG, emb_arr ARRAY<BIGINT>, norm_sq BIGINT").parquet(store.toString)
-      .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
+  /** A corpus drill's vector store: (doc_id, emb_arr, norm_sq) rows at
+    * `root`, partitioned by `keys` (DDL: `bkt LONG`, `gen INT`, or none),
+    * the vector leg's [[graft.store.PartStore]]. */
+  private[graft] def vectorStore(root: java.nio.file.Path, keys: String = ""): graft.store.PartStore =
+    graft.store.PartStore(root, "corpus vectors", "doc_id LONG, emb_arr ARRAY<BIGINT>, norm_sq BIGINT", keys)
 
   /** Exact-integer cosine, rounded to 6 dp, of every stored vector
     * (doc_id, emb_arr, norm_sq) against every query (q_id, q_emb, q_norm;

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.store.Layout
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -3953,9 +3954,9 @@ object HashDedup {
     * CorpusRetention) and the streaming nights (StreamNight,
     * StreamDedupIndex). Each step has one definition:
     *  - the corpus: [[IndexCorpus]];
-    *  - the store directory: [[graft.Fs.storeDir]];
-    *  - a generation's landing: [[landGen]];
-    *  - the read-back: [[readIndex]], always with the rows' schema;
+    *  - the store: [[bandIndex]], a [[graft.store.PartStore]] under
+    *    [[graft.Fs.storeDir]] whose verbs land, append, drop, replace and
+    *    read back every generation (a generation's rows: [[atGen]]);
     *  - the band-key joins: [[bandSelfPairs]] and [[bandProbePairs]]
     *    ([[bandCandidates]] = distinct probe pairs);
     *  - one serve, its census and its verified hits: [[serveIndex]];
@@ -3980,19 +3981,15 @@ object HashDedup {
       rows.filter(p(col("cls"))).select(col("doc_id"), col("band"), col("band_key"))
   }
 
-  /** Append `r`'s band rows to `store` as generation `gen`, in `nFiles`
-    * files. */
-  private[graft] def landGen(store: java.nio.file.Path, r: DataFrame, gen: Int, nFiles: Int): Unit =
-    graft.Trace.phase(r.sparkSession, "banded index: land")(r.withColumn("gen", lit(gen)).repartition(nFiles)
-      .write.partitionBy("gen").mode("append").parquet(store.toString))
+  /** The band-row store at `root`, partitioned by generation (`gen=`),
+    * or unpartitioned with `gens = false` (the streaming index, which
+    * only ever appends). */
+  private[graft] def bandIndex(root: java.nio.file.Path, gens: Boolean = true): graft.store.PartStore =
+    graft.store.PartStore(root, "banded index", "doc_id LONG, band INT, band_key STRING",
+      if (gens) "gen INT" else "")
 
-  /** A band-row store (or one generation of it) read back from its files
-    * with the rows' known schema: an inferred one costs a footer-reading
-    * job per read. Partition columns (`gen=`) are still discovered from
-    * the directory names. */
-  private[graft] def readIndex(spark: SparkSession, store: java.nio.file.Path): DataFrame =
-    graft.Trace.phase(spark, "banded index: read-back")(
-      spark.read.schema("doc_id LONG, band INT, band_key STRING").parquet(store.toString))
+  /** `r`'s band rows as generation `g` of a [[bandIndex]]. */
+  private[graft] def atGen(r: DataFrame, g: Int): DataFrame = r.withColumn("gen", lit(g))
 
   /** One serve of `keys` against the store's files. The read-back
     * (doc_id, band, band_key, `extra`…) and the probe join of `keys`
@@ -4004,12 +4001,12 @@ object HashDedup {
     * `backAggs`, `n_lookups`, `n_true` (the rows of `truth`) and a row
     * count per named frame in `counted` — and the verified candidate
     * pairs found in `truth`, collected once. */
-  private[graft] def serveIndex[A](c: IndexCorpus, store: java.nio.file.Path, keys: DataFrame,
+  private[graft] def serveIndex[A](c: IndexCorpus, store: graft.store.PartStore, keys: DataFrame,
                                    truth: DataFrame, backAggs: Seq[Column],
                                    counted: Seq[(String, DataFrame)] = Nil, extra: Seq[Column] = Nil)(
       body: IndexServe => A): A = {
     val spark = keys.sparkSession
-    graft.Trace.phase(spark, "banded index: serve")(graft.CacheRegistry.withCache(readIndex(spark, store)
+    graft.Trace.phase(spark, "banded index: serve")(graft.CacheRegistry.withCache(store.read(spark)
         .select(Seq(col("doc_id"), col("band"), col("band_key")) ++ extra: _*)) { back =>
       graft.CacheRegistry.withCache(bandCandidates(keys, back)) { cand =>
         val hits = TextQueries.verifyPairsOf(c.sh5, cand).select(col("doc_a"), col("doc_b"))
@@ -4144,9 +4141,8 @@ object HashDedup {
       spark: SparkSession, dir: String): (DataFrame, IndexCalendarDetail) = {
     val corpus = new IndexCorpus(spark, dir)
     import corpus.{ofCls, truthAll}
-    val store = graft.Fs.storeDir("dedupcal", dir)
-    graft.Fs.rmTree(store) // idempotent re-runs: appends must not double
-    def land(r: DataFrame, gen: Int, nFiles: Int): Unit = landGen(store, r, gen, nFiles)
+    val store = bandIndex(graft.Fs.storeDir("dedupcal", dir))
+    def land(r: DataFrame, gen: Int, nFiles: Int): Unit = store.append(atGen(r, gen), Layout.Files(nFiles))
     // classes indexed when night n probes: everything landed before n
     def indexedAt(n: Int)(c: Column): Column =
       !clsOf(c).isin((n to 3).map(i => Long.box(i.toLong)): _*)
@@ -4166,17 +4162,18 @@ object HashDedup {
       if (stage == 3 || stage == 4)
         candPairs(stage) = r.cand.collect().map(p => (p.getLong(0), p.getLong(1))).toSet
     }
-    land(ofCls(c => !c.isin(batchCls: _*)), 0, 4)
+    // the base lands over the whole store: a re-run's appends never double
+    store.land(atGen(ofCls(c => !c.isin(batchCls: _*)), 0), Layout.Files(4))
     serve(1, ofCls(_ === 1L), truthNight(1)); land(ofCls(_ === 1L), 1, 2)
     serve(2, ofCls(_ === 2L), truthNight(2)); land(ofCls(_ === 2L), 2, 2)
     // E3 add wave: the compacted generation, derived from the cached rows
     land(ofCls(c => !(c === 3L)), 9, 2)
     serve(3, ofCls(_ === 3L), truthNight(3))
-    Seq(0, 1, 2).foreach(g => graft.Fs.rmTree(store.resolve(s"gen=$g")))
+    store.drop(0, 1, 2)
     serve(4, ofCls(_ === 3L), truthNight(3)); land(ofCls(_ === 3L), 3, 2)
     serve(5, ofCls(c => c.isin(batchCls: _*)), truthAudit)
     val df = out.frame(spark, ("prec", "n_hit", "n_candidates"), ("rec", "n_hit", "n_true"))
-    (df, IndexCalendarDetail(hitPairs.toMap, candPairs.toMap, graft.Fs.subdirs(store)))
+    (df, IndexCalendarDetail(hitPairs.toMap, candPairs.toMap, store.dirs))
   }
   val IncCalMod = 7
 
@@ -4216,11 +4213,10 @@ object HashDedup {
       spark: SparkSession, dir: String): (DataFrame, IndexRetentionDetail) = {
     val corpus = new IndexCorpus(spark, dir)
     import corpus.{ofCls, truthAll}
-    val store = graft.Fs.storeDir("dedupret", dir)
-    graft.Fs.rmTree(store)
-    landGen(store, ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
-    landGen(store, ofCls(_ === 1L), 1, 2)
-    landGen(store, ofCls(_ === 2L), 2, 2)
+    val store = bandIndex(graft.Fs.storeDir("dedupret", dir))
+    store.land(atGen(ofCls(c => !c.isin(1L, 2L, 3L)), 0), Layout.Files(4))
+    store.append(atGen(ofCls(_ === 1L), 1), Layout.Files(2))
+    store.append(atGen(ofCls(_ === 2L), 2), Layout.Files(2))
     val night3Keys = ofCls(_ === 3L)
     // night-3 pairs with the partner anywhere older — what a full index
     // could find; per-window truth restricts the partner to the window
@@ -4242,11 +4238,11 @@ object HashDedup {
       out += (window, r("n_index_rows"), r("n_lookups"), r("n_candidates"), r("n_true"),
         r("n_true_all"), r.hits.size)
       hitPairs(window) = r.hits
-      gensAfter(window) = graft.Fs.subdirs(store)
+      gensAfter(window) = store.dirs
     }
     serve(3)
-    graft.Fs.rmTree(store.resolve("gen=0")); serve(2)
-    graft.Fs.rmTree(store.resolve("gen=1")); serve(1)
+    store.drop(0); serve(2)
+    store.drop(1); serve(1)
     val df = out.frame(spark, ("rec", "n_hit", "n_true_window"), ("coverage", "n_hit", "n_true_all"))
     (df, IndexRetentionDetail(hitPairs.toMap, gensAfter.toMap))
   }
@@ -4335,11 +4331,10 @@ object HashDedup {
       spark: SparkSession, dir: String): (DataFrame, IndexBackfillDetail) = {
     val corpus = new IndexCorpus(spark, dir)
     import corpus.{ofCls, truthAll}
-    val store = graft.Fs.storeDir("dedupbf", dir)
-    graft.Fs.rmTree(store)
-    landGen(store, ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
-    landGen(store, ofCls(_ === 1L), 1, 2)
-    landGen(store, ofCls(_ === 2L), 2, 2)
+    val store = bandIndex(graft.Fs.storeDir("dedupbf", dir))
+    store.land(atGen(ofCls(c => !c.isin(1L, 2L, 3L)), 0), Layout.Files(4))
+    store.append(atGen(ofCls(_ === 1L), 1), Layout.Files(2))
+    store.append(atGen(ofCls(_ === 2L), 2), Layout.Files(2))
     val night3Keys = ofCls(_ === 3L)
     val truth3 = truthAll.filter(
       (clsOf(col("doc_a")) === 3L && clsOf(col("doc_b")) =!= 3L) ||
@@ -4353,18 +4348,18 @@ object HashDedup {
     }
     serve(0)
     // the retry storm: night 2 lands AGAIN into the same generation
-    landGen(store, ofCls(_ === 2L), 2, 2)
+    store.append(atGen(ofCls(_ === 2L), 2), Layout.Files(2))
     serve(1)
     // bounded repair: distinct-rewrite of the affected generation only
-    val repairRead = graft.CacheRegistry.withCache(readIndex(spark, store.resolve("gen=2"))
+    val repairRead = graft.CacheRegistry.withCache(store.read(spark, 2)
         .select(col("doc_id"), col("band"), col("band_key"))) { gen2 =>
       val n = gen2.count()
-      landGen(store, gen2.distinct(), 12, 2)
+      store.append(atGen(gen2.distinct(), 12), Layout.Files(2))
       n
     }
-    graft.Fs.rmTree(store.resolve("gen=2"))
+    store.drop(2)
     serve(2)
-    val gens = graft.Fs.subdirs(store)
+    val gens = store.dirs
     val df = out.frame(spark, ("prec", "n_hit", "n_candidates"), ("rec", "n_hit", "n_true"))
     (df, IndexBackfillDetail(candPairs.toMap, gens, repairRead))
   }
@@ -4468,11 +4463,10 @@ object HashDedup {
     def delOf(c: Column): Column =
       c % TxtDelMod === TxtDelRes && clsOf(c) =!= 3L
     val genOf: Column = when(col("cls") === 1L, 1).when(col("cls") === 2L, 2).otherwise(0)
-    val store = graft.Fs.storeDir("dedupdel", dir)
-    graft.Fs.rmTree(store)
-    landGen(store, ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
-    landGen(store, ofCls(_ === 1L), 1, 2)
-    landGen(store, ofCls(_ === 2L), 2, 2)
+    val store = bandIndex(graft.Fs.storeDir("dedupdel", dir))
+    store.land(atGen(ofCls(c => !c.isin(1L, 2L, 3L)), 0), Layout.Files(4))
+    store.append(atGen(ofCls(_ === 1L), 1), Layout.Files(2))
+    store.append(atGen(ofCls(_ === 2L), 2), Layout.Files(2))
     val night3Keys = ofCls(_ === 3L)
     // partner-visibility per stage, a pure function of doc_id — the same
     // predicate gates the truth frame here and the index states in the oracle
@@ -4507,23 +4501,16 @@ object HashDedup {
         .withColumn("gen", genOf).filter(col("gen").isin(gens.map(Int.box): _*))
         .select(col("doc_id"), col("band"), col("band_key"), col("gen"))
       rewritten += content.count()
-      content.repartition(2)
-        .write.partitionBy("gen").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(store.toString)
-      // A generation whose rows are ALL manifest-named writes no content
-      // under dynamic overwrite, so its stale directory would survive and
-      // resurrect every deleted row on the next read-back — drop emptied
-      // gen dirs explicitly (CorpusForget's surviving-bucket cleanup).
-      val surviving = content.select(col("gen")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      gens.filterNot(surviving).foreach(g =>
-        graft.Fs.rmTree(store.resolve(s"gen=$g")))
+      // a generation whose rows are ALL manifest-named gets no rows, and
+      // the replace drops it: its stale files would resurrect every
+      // deleted row on the next read-back
+      store.replace(content, gens.map(_.toLong), Layout.Files(2))
     }
     wave(Seq(0, 2)); serve(1)
     wave(Seq(1)); serve(2)
-    landGen(store, ofCls(_ === 3L), 3, 2)
+    store.append(atGen(ofCls(_ === 3L), 3), Layout.Files(2))
     serve(3)
-    val gens = graft.Fs.subdirs(store)
+    val gens = store.dirs
     val df = out.frame(spark, ("prec", "n_hit", "n_candidates"), ("rec", "n_hit", "n_true"))
     (df, IndexDeleteDetail(hitPairs.toMap, delByGen.toMap, gens, rewritten))
   }
@@ -4631,10 +4618,9 @@ object HashDedup {
     val m = IncCalMod.toLong
     val corpus = new IndexCorpus(spark, dir)
     import corpus.{ofCls, truthAll}
-    val store = graft.Fs.storeDir("idxcmp", dir)
-    graft.Fs.rmTree(store)
-    def land(r: DataFrame, gen: Int, nFiles: Int): Unit = landGen(store, r, gen, nFiles)
-    land(ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
+    val store = bandIndex(graft.Fs.storeDir("idxcmp", dir))
+    def land(r: DataFrame, gen: Int, nFiles: Int): Unit = store.append(atGen(r, gen), Layout.Files(nFiles))
+    store.land(atGen(ofCls(c => !c.isin(1L, 2L, 3L)), 0), Layout.Files(4))
     // the small-files storm: each night landed as 3 separate appends
     // (micro-batch-shaped), 2 files each → 6 footers per generation
     (0L to 2L).foreach { slice =>
@@ -4642,9 +4628,8 @@ object HashDedup {
       land(ofCls(_ === 2L).filter(expr(s"(doc_id DIV $m) % 3") === slice), 2, 2)
     }
     val night3Keys = ofCls(_ === 3L)
-    def filesByGen(): Map[String, Int] = graft.Fs.subdirs(store, "gen=")
-      .map(g => g -> graft.Fs.parquetFiles(store.resolve(g)).size).toMap
-    def gen0Evidence(): Set[(String, Long)] = graft.Fs.parquetFiles(store.resolve("gen=0"))
+    def filesByGen(): Map[String, Int] = store.fileCounts.map { case (g, n) => store.dir(g) -> n }
+    def gen0Evidence(): Set[(String, Long)] = store.files(0)
       .map(p => (p.getFileName.toString, java.nio.file.Files.size(p))).toSet
     // truth gate: pairs with a night-3 member whose partner is visible —
     // constant through S0-S2 (compaction moves files, never visibility)
@@ -4670,8 +4655,7 @@ object HashDedup {
     val rewritten = consolidated.count()
     land(consolidated, 10, 2)
     serve(1)
-    graft.Fs.rmTree(store.resolve("gen=1"))
-    graft.Fs.rmTree(store.resolve("gen=2"))
+    store.drop(1, 2)
     serve(2)
     val gen0After = gen0Evidence()
     land(ofCls(_ === 3L), 3, 2)

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.Fs.dirKey
+import graft.store.PartStore
 import graft.functions.VectorOps._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -364,16 +365,21 @@ object VectorQueries {
     * vec_id, cos). */
   private[graft] type Served = (Long, Long, Long, Long, Long, Long, Double)
 
-  /** The schema of a cell store's rows. Every store read-back passes it:
-    * an inferred schema costs a footer-reading job per read, and the
-    * `cell` directory names would infer as INT, not the assignment's
-    * LONG. */
-  private val StoreSchema = "vec_id LONG, emb ARRAY<FLOAT>, cell LONG"
+  /** THE IVF STORE: (vec_id, emb) rows partitioned by `cell`, one
+    * [[graft.store.PartStore]] whose verbs every IVF drill lands, appends,
+    * replaces, drops and reads back through. Its read-back declares `cell`
+    * LONG, the assignment's type (a directory name would infer as INT).
+    * Writes are clustered by cell, so each write leaves one file per cell
+    * it reaches. */
+  private[graft] def cellStore(root: java.nio.file.Path): PartStore =
+    PartStore(root, "ivf", "vec_id LONG, emb ARRAY<FLOAT>", "cell LONG")
 
-  /** The cell-partitioned store read back from its files as (vec_id, emb,
-    * cell). */
-  private[graft] def readStore(spark: SparkSession, store: String): DataFrame = graft.Trace.phase(spark, "ivf: read-back")(
-    spark.read.schema(StoreSchema).parquet(store).select(col("vec_id"), col("emb"), col("cell")))
+  /** A PQ-code store: (vec_id, code_*…[, model_v]) rows partitioned by
+    * `cell`; `versioned` stores carry the model version each row was
+    * encoded under. */
+  private[graft] def codeStore(root: java.nio.file.Path, codeCols: Seq[String], versioned: Boolean): PartStore =
+    PartStore(root, "ivf", ("vec_id LONG" +: codeCols.map(c => s"$c LONG")).mkString(", ") +
+      (if (versioned) ", model_v INT" else ""), "cell LONG")
 
   /** The store census most serves report: (n_rows, n_distinct vec_ids). */
   private[graft] def storeCensus(back: DataFrame): DataFrame =
@@ -2978,13 +2984,13 @@ object VectorQueries {
       cellsOf(all, cent0).select(col("vec_id"), col("emb"), col("cell").as("cell0"))
         .join(cellsOf(all, cent1).select(col("vec_id"), col("cell").as("cell1")), "vec_id")
         .persist())
-    val store = graft.Fs.storeDir("ivfrebinc", dir).toString
+    val store = cellStore(graft.Fs.storeDir("ivfrebinc", dir))
     val emptied = partialRewrite(store,
       j.select(col("vec_id"), col("emb"), col("cell0").as("cell")),
       j.select(col("vec_id"), col("emb"), col("cell1").as("cell")))
     // the files ARE the proof: read the store back and diff against the
     // target assignment — the oracle predicts zero
-    val back = readStore(spark, store).select(col("vec_id"), col("cell"))
+    val back = store.read(spark).select(col("vec_id"), col("cell"))
     val want = j.select(col("vec_id"), col("cell1").as("cell"))
     val diff = storeMultisetDiff(back, want)
     val chg = j.filter(col("cell0") =!= col("cell1"))
@@ -3022,34 +3028,14 @@ object VectorQueries {
       .agg(coalesce(sum(abs(coalesce(col("nb"), lit(0L)) - coalesce(col("nw"), lit(0L)))), lit(0L))
         .as("n_store_diff"))
 
-  /** The delta-rewrite mechanism (shared with IvfRebalanceSpec's
-    * synthetic ghost scenario): land `oldA` as the cell-partitioned
-    * store ([[landStore]]), then bring it to `newA` by dynamically
-    * overwriting ONLY the partitions of cells that gained or lost
-    * members ([[deltaRewrite]]), deleting emptied cells' partitions
-    * explicitly (dynamic overwrite never clears a partition it writes
-    * no data to). Returns the emptied cell ids. */
-  private[queries] def partialRewrite(store: String, oldA: DataFrame,
-                                      newA: DataFrame): Array[Long] = {
-    landStore(store, oldA)
+  /** The delta-rewrite mechanism: land `oldA` as the cell store, then
+    * bring it to `newA` with [[deltaRewrite]]. Returns the emptied cell
+    * ids. */
+  private[queries] def partialRewrite(store: PartStore, oldA: DataFrame,
+                                      newA: DataFrame): Seq[Long] = {
+    store.land(oldA)
     deltaRewrite(store, oldA, newA)
   }
-
-  /** Cluster by the partition key before a partitioned write: without
-    * it every input task writes a file into every cell directory it
-    * happens to hold (tasks × cells tiny files and as many commits);
-    * clustered, each cell's data is one task's contiguous write — the
-    * same discipline a 100 TB store needs to avoid the small-files
-    * problem. The width is explicit, `defaultParallelism`
-    * ([[graft.Spread.clustered]]): a bare `repartition(col("cell"))` is
-    * a byte-small shuffle that AQE coalesces to one partition, so one
-    * task wrote all 64 cell files (1.3 s of `stream_compact`'s landing at
-    * local[4]). Each cell still comes from one task: one file per cell
-    * per write. */
-  private def byCell(a: DataFrame): DataFrame = graft.Spread.clustered(a, col("cell"))
-
-  private[graft] def landStore(store: String, a: DataFrame): Unit = graft.Trace.phase(a.sparkSession, "ivf: land")(
-    byCell(a).write.partitionBy("cell").mode("overwrite").parquet(store))
 
   /** Per-subspace ADC lookup tables of `queries` against the PQ model's
     * codebooks: (q_id, code_m, part_m) for each m < [[PquM]]. */
@@ -3091,57 +3077,19 @@ object VectorQueries {
       .groupBy(col("q_id"), col("vec_id")).agg(max(col("adc")).as("adc"))
   }
 
-  /** The schema of a PQ-code store's rows, (vec_id, code_*…, cell), for
-    * a read-back with a known schema as in [[readStore]]. */
-  private def codeSchema(codeCols: Seq[String]): String =
-    ("vec_id LONG" +: codeCols.map(c => s"$c LONG") :+ "cell LONG").mkString(", ")
-
-  /** A PQ-code store read back from its files: (vec_id, cell, code_*,
-    * model_v). */
-  private def readCodes(spark: SparkSession, store: String, codeCols: Seq[String]): DataFrame =
-    spark.read.schema(codeSchema(codeCols) + ", model_v INT").parquet(store)
-      .select((col("vec_id") +: col("cell") +: codeCols.map(col) :+ col("model_v")): _*)
-
-  /** Append `a`'s rows to their cells' partitions — new files only. */
-  private[graft] def appendCells(store: String, a: DataFrame): Unit = graft.Trace.phase(a.sparkSession, "ivf: append")(
-    byCell(a).write.partitionBy("cell").mode("append").parquet(store))
-
-  /** Rewrite ONLY the cell partitions `a` has rows for (dynamic partition
-    * overwrite). A cell `a` has no rows for keeps its files, so a cell the
-    * rewrite empties must be dropped with [[dropCells]]. */
-  private[graft] def overwriteCells(store: String, a: DataFrame): Unit = graft.Trace.phase(a.sparkSession, "ivf: overwrite")(
-    byCell(a).write.partitionBy("cell").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(store))
-
-  /** Delete the partitions of `cells` (the emptied-cell ghost discipline). */
-  private[graft] def dropCells(store: String, cells: Iterable[Long]): Unit =
-    cells.foreach(c => graft.Fs.rmTree(java.nio.file.Paths.get(store, s"cell=$c")))
-
-  /** The cell ids whose `cell=` partitions are on disk. */
-  private[graft] def cellsOnDisk(store: String): Seq[Long] =
-    graft.Fs.subdirs(java.nio.file.Paths.get(store), "cell=").map(_.stripPrefix("cell=").toLong)
-
-  /** The parquet files of cell `c`'s partition (none once it is dropped). */
-  private[graft] def cellFilesOf(store: String, c: Long): Seq[java.nio.file.Path] =
-    graft.Fs.parquetFiles(java.nio.file.Paths.get(store, s"cell=$c"))
-
-  /** Parquet file count per cell partition on disk. */
-  private[graft] def cellFileCounts(store: String): Map[Long, Int] =
-    cellsOnDisk(store).map(c => c -> cellFilesOf(store, c).size).toMap
-
-  private[queries] def deltaRewrite(store: String, oldA: DataFrame,
-                                    newA: DataFrame): Array[Long] = {
+  /** Bring the cell store from `oldA` to `newA` by replacing ONLY the
+    * cells that gained or lost members (≤ C, collected); a cell every
+    * member left is dropped. Returns the emptied cell ids. */
+  private[queries] def deltaRewrite(store: PartStore, oldA: DataFrame,
+                                    newA: DataFrame): Seq[Long] = {
     val moved = oldA.select(col("vec_id"), col("cell").as("cell0"))
       .join(newA.select(col("vec_id"), col("cell").as("cell1")), "vec_id")
       .filter(col("cell0") =!= col("cell1"))
     val touched = moved.select(col("cell0").as("cell"))
       .unionAll(moved.select(col("cell1").as("cell"))).distinct()
-    overwriteCells(store, newA.join(broadcast(touched), "cell")
-        .select(col("vec_id"), col("emb"), col("cell")))
-    val emptied = touched.except(newA.select(col("cell")).distinct())
-      .collect().map(_.getLong(0)).sorted // ≤ C rows by construction
-    dropCells(store, emptied)
-    emptied
+      .collect().map(_.getLong(0))
+    store.replace(newA.filter(col("cell").isin(touched.map(Long.box): _*))
+      .select(col("vec_id"), col("emb"), col("cell")), touched)
   }
 
   // ---------------------------------------------------------------- №177 knn_serve_rebalance
@@ -3207,8 +3155,8 @@ object VectorQueries {
     val (g1, g2) = rb.gainCells.splitAt((rb.gainCells.length + 1) / 2)
     val (l1, l2) = rb.lossCells.splitAt((rb.lossCells.length + 1) / 2)
 
-    val store = graft.Fs.storeDir("servereb", dir).toString
-    landStore(store, rb.j.select(col("vec_id"), col("emb"), col("cell0").as("cell")))
+    val store = cellStore(graft.Fs.storeDir("servereb", dir))
+    store.land(rb.j.select(col("vec_id"), col("emb"), col("cell0").as("cell")))
 
     val probes0 = graft.CacheRegistry.track(probeSet(queries, cent0).persist())
     val probes1 = graft.CacheRegistry.track(probeSet(queries, cent1).persist())
@@ -3218,7 +3166,7 @@ object VectorQueries {
     def serve(stage: Int, probes: DataFrame): Unit = {
       // the files ARE the snapshot: read back, search, collect EAGERLY
       // (bounded: NQueries·K rows) before the next wave mutates the store
-      val back = readStore(spark, store)
+      val back = store.read(spark)
       out ++= serveStage(stage, back, probes, storeCensus(back))
       if (captureStages)
         captured += ((stage, back.select(col("vec_id"), col("cell"))
@@ -3236,30 +3184,24 @@ object VectorQueries {
 
   /** A live rebalance of the cell store from assignment 0 (`cent0`) to
     * assignment 1 (`cent1`) of `cur`: the persisted mover join `j`
-    * (vec_id, emb, cell0, cell1) and the schedule two bounded collects
-    * feed — the cells that gain movers and those that lose movers, each
-    * ascending, and assignment 1's per-cell counts (≤ C rows). Wave
-    * membership and the emptied-cell check are then driver-side
-    * arithmetic. */
-  private final case class Rebalance(j: DataFrame, gainCells: Array[Long],
-                                     lossCells: Array[Long], m1Counts: Map[Long, Long]) {
+    * (vec_id, emb, cell0, cell1) and the schedule one bounded collect of
+    * the movers feeds — the cells that gain movers and those that lose
+    * movers, each ascending. A loss wave's emptied cells are the ones its
+    * replace leaves without rows. */
+  private final case class Rebalance(j: DataFrame, gainCells: Array[Long], lossCells: Array[Long]) {
     /** №177's GAIN wave: each cell c of `w` → m0(c) ∪ incomers(c) —
       * add-only, leavers stay put. */
-    def gainWave(store: String, w: Array[Long]): Unit = if (w.nonEmpty)
-      overwriteCells(store, j.filter(col("cell0").isin(w.map(Long.box): _*))
+    def gainWave(store: PartStore, w: Array[Long]): Unit = if (w.nonEmpty)
+      store.replace(j.filter(col("cell0").isin(w.map(Long.box): _*))
         .select(col("vec_id"), col("emb"), col("cell0").as("cell"))
         .unionAll(j.filter(col("cell1").isin(w.map(Long.box): _*) && col("cell0") =!= col("cell1"))
-          .select(col("vec_id"), col("emb"), col("cell1").as("cell"))))
+          .select(col("vec_id"), col("emb"), col("cell1").as("cell"))), w)
 
-    /** LOSS wave: each cell of `w` → its final m1(c). A cell whose members
-      * ALL left gets no data in the dynamic overwrite, so its partition
-      * is dropped (№175's ghost discipline; m1Counts knows which cells
-      * land empty). */
-    def lossWave(store: String, w: Array[Long]): Unit = if (w.nonEmpty) {
-      overwriteCells(store, j.filter(col("cell1").isin(w.map(Long.box): _*))
-        .select(col("vec_id"), col("emb"), col("cell1").as("cell")))
-      dropCells(store, w.filterNot(m1Counts.contains))
-    }
+    /** LOSS wave: each cell of `w` → its final m1(c); a cell whose members
+      * ALL left is dropped (№175's ghost discipline). */
+    def lossWave(store: PartStore, w: Array[Long]): Unit = if (w.nonEmpty)
+      store.replace(j.filter(col("cell1").isin(w.map(Long.box): _*))
+        .select(col("vec_id"), col("emb"), col("cell1").as("cell")), w)
   }
 
   private def rebalanceOf(cur: DataFrame, cent0: DataFrame, cent1: DataFrame): Rebalance = {
@@ -3270,9 +3212,7 @@ object VectorQueries {
     val moverRows = j.filter(col("cell0") =!= col("cell1"))
       .select(col("cell0"), col("cell1")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    val m1Counts = j.groupBy(col("cell1")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Rebalance(j, moverRows.map(_._2).distinct.sorted, moverRows.map(_._1).distinct.sorted, m1Counts)
+    Rebalance(j, moverRows.map(_._2).distinct.sorted, moverRows.map(_._1).distinct.sorted)
   }
 
   /** Spec hook: per-stage (vec_id, cell) store snapshots of the last
@@ -3331,12 +3271,12 @@ object VectorQueries {
       .select(col("vec_id"), expr(rebalDriftSql("emb")).as("emb"))
     val a1 = night(1); val a2 = night(2); val a3 = night(3)
     val cent0 = refinedCentroids(spark, base, Centroids)
-    val store = graft.Fs.storeDir("ivfcal", dir).toString
+    val store = cellStore(graft.Fs.storeDir("ivfcal", dir))
 
     val snaps = scala.collection.mutable.ArrayBuffer.empty[(String, Map[String, (Long, Long)])]
     def snap(ev: String): Unit = if (captureCalendar) {
       import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(store)
+      val root = store.root
       snaps += ((ev, java.nio.file.Files.walk(root).iterator().asScala
         .filter { p =>
           val n = p.getFileName.toString
@@ -3350,11 +3290,11 @@ object VectorQueries {
     }
 
     // E0: land the base at the live model's assignment
-    landStore(store, cellsOf(base, cent0).select(col("vec_id"), col("emb"), col("cell")))
+    store.land(cellsOf(base, cent0).select(col("vec_id"), col("emb"), col("cell")))
     snap("E0")
     // E1/E2: nightly appends — batch-sized work, new files only
     def append(batch: DataFrame, cent: DataFrame): Unit =
-      appendCells(store, cellsOf(batch, cent).select(col("vec_id"), col("emb"), col("cell")))
+      store.append(cellsOf(batch, cent).select(col("vec_id"), col("emb"), col("cell")))
     append(a1, cent0)
     append(a2, cent0)
     snap("E2")
@@ -3381,7 +3321,7 @@ object VectorQueries {
     }
 
     // the files are the proof: final store ≡ closed-form final state
-    val back = readStore(spark, store).select(col("vec_id"), col("cell"))
+    val back = store.read(spark).select(col("vec_id"), col("cell"))
     val want = j.select(col("vec_id"), col("cell1").as("cell"))
       .unionByName(cellsOf(a3, cent1).select(col("vec_id"), col("cell")))
     val diff = storeMultisetDiff(back, want)
@@ -3455,18 +3395,18 @@ object VectorQueries {
       .select(col("vec_id"), expr(rebalDriftSql("emb")).as("emb"))
     val a1 = night(1); val a2 = night(2); val a3 = night(3)
     val cent0 = refinedCentroids(spark, base, Centroids)
-    val store = graft.Fs.storeDir("servecal", dir).toString
+    val store = cellStore(graft.Fs.storeDir("servecal", dir))
 
     val out = scala.collection.mutable.ArrayBuffer.empty[Served]
     def serve(stage: Int, probes: DataFrame): Unit = {
-      val back = readStore(spark, store)
+      val back = store.read(spark)
       out ++= serveStage(stage, back, probes, storeCensus(back))
     }
     def append(batch: DataFrame, cent: DataFrame): Unit =
-      appendCells(store, cellsOf(batch, cent).select(col("vec_id"), col("emb"), col("cell")))
+      store.append(cellsOf(batch, cent).select(col("vec_id"), col("emb"), col("cell")))
 
     // E0 + S0: the base store under the live model
-    landStore(store, cellsOf(base, cent0).select(col("vec_id"), col("emb"), col("cell")))
+    store.land(cellsOf(base, cent0).select(col("vec_id"), col("emb"), col("cell")))
     val probes0 = graft.CacheRegistry.track(probeSet(queries, cent0).persist())
     serve(0, probes0)
     // E1/E2 + S1/S2: nightly appends, served the batch they land
@@ -3700,8 +3640,8 @@ object VectorQueries {
     val codeCols = (0 until PquM).map(m => s"code_$m")
 
     // the serving store: full residual codes under the live model
-    val store = graft.Fs.storeDir("resreb", dir).toString
-    landStore(store, codes0)
+    val store = codeStore(graft.Fs.storeDir("resreb", dir), codeCols, versioned = false)
+    store.land(codes0)
 
     // the stale set: new cell repaired, or assignment changed
     val cells1 = cellsOf(cur, cent1df).select(col("vec_id"), col("cell").as("cell1"))
@@ -3724,15 +3664,10 @@ object VectorQueries {
     val newContent = graft.CacheRegistry.track(
       fresh.select((col("vec_id") +: col("cell") +: codeCols.map(col)): _*)
         .unionByName(keep).persist())
-    overwriteCells(store, newContent)
-    val presentCells = newContent.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    dropCells(store, touchedArr.filterNot(presentCells))
+    store.replace(newContent, touchedArr)
 
     // the files are the proof: read back ≡ a FULL re-encode under model1
-    val back = graft.CacheRegistry.track(spark.read.schema(codeSchema(codeCols)).parquet(store)
-      .select((col("vec_id") +: col("cell") +: codeCols.map(col)): _*)
-      .persist())
+    val back = graft.CacheRegistry.track(store.read(spark).persist())
     val full = encodeCellsRes(cur, model1, PquM, d)
     val diff = multisetDiff(back,
       full.select((col("vec_id") +: col("cell") +: codeCols.map(col)): _*),
@@ -3829,9 +3764,9 @@ object VectorQueries {
       encodeCellsRes(cur.join(j.filter(isStale).select(col("vec_id")), "vec_id"),
         st.model1, PquM, d).persist())
 
-    val store = graft.Fs.storeDir("ressrv", dir).toString
+    val store = codeStore(graft.Fs.storeDir("ressrv", dir), codeCols, versioned = true)
     val vcols = col("vec_id") +: col("cell") +: codeCols.map(col) :+ col("model_v")
-    landStore(store, codes0.withColumn("model_v", lit(0)).select(vcols: _*))
+    store.land(codes0.withColumn("model_v", lit(0)).select(vcols: _*))
 
     val centV = graft.CacheRegistry.track(versionedCentroids(cent0df, cent1df).persist())
     val luts = adcLuts(queries, model0, d)
@@ -3846,7 +3781,7 @@ object VectorQueries {
     var tornDiff = -1L
     var tornAdcDiverged = -1L
     def serve(stage: Int, probes: DataFrame): Unit = graft.CacheRegistry.withCache(
-        readCodes(spark, store, codeCols)) { back =>
+        store.read(spark)) { back =>
       val paired = adcOf(back, probes, torn = false)
       val shortlist = shortlistOf(paired)
       if (stage == 1) {
@@ -3873,15 +3808,16 @@ object VectorQueries {
     // next to the old copies — per-cell-atomic dynamic overwrites of the
     // gaining cells, old content carried so no reader ever loses a row
     // Gain-cell content is derived from the CACHED codes0 frame (the
-    // store's exact content at this point — landStore wrote codes0@v0),
+    // store's exact content at this point — the land wrote codes0@v0),
     // never by reading the store path and dynamically overwriting it in
     // one job (r13 advice: that shape depends on every read task
     // finishing before the overwrite commit deletes source files —
     // fragile under task retry; knnServeCalendar set the precedent).
+    // (add-only: every gaining cell gets rows, so none is touched empty)
     val gainCells = fresh.select(col("cell")).distinct()
-    overwriteCells(store, codes0.withColumn("model_v", lit(0)).select(vcols: _*)
+    store.replace(codes0.withColumn("model_v", lit(0)).select(vcols: _*)
         .join(broadcast(gainCells), "cell")
-        .unionByName(fresh.withColumn("model_v", lit(1)).select(vcols: _*)))
+        .unionByName(fresh.withColumn("model_v", lit(1)).select(vcols: _*)), Nil)
     serve(1, probes1)
     // LOSS phase: touched cells to their final content (keep rows v0 ∪
     // fresh rows v1); emptied cells' ghost partitions deleted
@@ -3893,10 +3829,7 @@ object VectorQueries {
         .select((col("vec_id") +: col("cell0").as("cell") +: codeCols.map(col) :+ lit(0).as("model_v")): _*)
         .unionByName(fresh.withColumn("model_v", lit(1)).select(vcols: _*))
         .persist())
-    overwriteCells(store, finalContent)
-    val presentCells = finalContent.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    dropCells(store, touchedArr.filterNot(presentCells))
+    store.replace(finalContent, touchedArr)
     serve(2, probes1)
 
     import spark.implicits._
@@ -4512,8 +4445,8 @@ object VectorQueries {
       encodeCellsRes(cur.join(j.filter(isStale).select(col("vec_id")), "vec_id"),
         model1, PquM, d).persist())
 
-    val store = graft.Fs.storeDir("rescal", dir).toString
     val codeCols = (0 until PquM).map(m => s"code_$m")
+    val store = codeStore(graft.Fs.storeDir("rescal", dir), codeCols, versioned = true)
     val vcols = col("vec_id") +: col("cell") +: codeCols.map(col) :+ col("model_v")
     def v0rows(pred: Column): DataFrame =
       codes0.filter(pred).withColumn("model_v", lit(0)).select(vcols: _*)
@@ -4532,7 +4465,7 @@ object VectorQueries {
       * (r14 verdict item 2 — the paired leg of midRepairShortlists was a
       * byte-identical recomputation of serve(3)'s shortlist). */
     def serve(stage: Int, probes: DataFrame): Seq[(Long, Long)] = graft.CacheRegistry.withCache(
-        readCodes(spark, store, codeCols)) { back =>
+        store.read(spark)) { back =>
       import spark.implicits._
       // collect the shortlist ONCE (RerankR·NQueries rows, bounded), then
       // feed the exact rescore from the local frame — the ADC subtree
@@ -4557,16 +4490,15 @@ object VectorQueries {
       * of the mid-repair store (the stale-reader failure). The paired
       * shortlist is serve(3)'s own return value — not recomputed. */
     def midRepairShortlistV0(probes: DataFrame): Seq[(Long, Long)] =
-      topKRanked(adcOf(readCodes(spark, store, codeCols), probes, torn = true),
+      topKRanked(adcOf(store.read(spark), probes, torn = true),
         "q_id", "adc", "vec_id", RerankR)
         .select(col("q_id"), col("vec_id")).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
     // E0+S0: base codes landed under the live model
-    landStore(store, v0rows(!(col("vec_id") % CalMod).isin(1L, 2L, 3L)))
+    store.land(v0rows(!(col("vec_id") % CalMod).isin(1L, 2L, 3L)))
     serve(0, probes0)
     // E1/E2+S1/S2: nightly arrivals encoded under the LIVE model, v0
-    def append(rows: DataFrame): Unit =
-      appendCells(store, rows)
+    def append(rows: DataFrame): Unit = store.append(rows)
     append(v0rows(col("vec_id") % CalMod === 1)); serve(1, probes0)
     append(v0rows(col("vec_id") % CalMod === 2)); serve(2, probes0)
     // E3+S3: GAIN phase — v1 re-encodes land NEXT TO v0 copies (incl.
@@ -4574,8 +4506,8 @@ object VectorQueries {
     // gain-cell v0 content derived from the cached codes0 frame
     val gainCells = fresh.select(col("cell")).distinct()
     val gainArr = gainCells.collect().map(_.getLong(0)).sorted
-    overwriteCells(store, v0rows(lit(true)).join(broadcast(gainCells), "cell")
-        .unionByName(fresh.withColumn("model_v", lit(1)).select(vcols: _*)))
+    store.replace(v0rows(lit(true)).join(broadcast(gainCells), "cell")
+        .unionByName(fresh.withColumn("model_v", lit(1)).select(vcols: _*)), gainArr)
     val slPaired = serve(3, probes1)
     val slV0 = midRepairShortlistV0(probes1)
     // E4+S4: LOSS phase — touched cells to final content, ghosts deleted
@@ -4587,10 +4519,7 @@ object VectorQueries {
         .select((col("vec_id") +: col("cell0").as("cell") +: codeCols.map(col) :+ lit(0).as("model_v")): _*)
         .unionByName(fresh.withColumn("model_v", lit(1)).select(vcols: _*))
         .persist())
-    overwriteCells(store, finalContent)
-    val presentCells = finalContent.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    dropCells(store, touchedArr.filterNot(presentCells))
+    store.replace(finalContent, touchedArr)
     serve(4, probes1)
     // E5+S5: the next night encoded under the REPAIRED model, v1
     append(encodeCellsRes(a3, model1, PquM, d)
@@ -4841,14 +4770,14 @@ object VectorQueries {
     val delPred = col("vec_id") % DelMod === DelRes && col("vec_id") % CalMod =!= 1L
     val assigned = graft.CacheRegistry.track(
       cellsOf(base, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
-    val store = graft.Fs.storeDir("storedel", dir).toString
-    landStore(store, assigned)
+    val store = cellStore(graft.Fs.storeDir("storedel", dir))
+    store.land(assigned)
     val probes = graft.CacheRegistry.track(probeSet(queries, cent).persist())
     val out = scala.collection.mutable.ArrayBuffer.empty[Served]
     val delByCell = scala.collection.mutable.Map.empty[Int, Map[Long, Long]]
     // the probe join, the census and the per-cell deletion meter share
     // ONE scan of the store's files per serve
-    def serve(stage: Int): Unit = graft.CacheRegistry.withCache(readStore(spark, store)) { back =>
+    def serve(stage: Int): Unit = graft.CacheRegistry.withCache(store.read(spark)) { back =>
       out ++= serveStage(stage, back, probes, back.agg(count(lit(1)).as("n_rows"),
         sum(when(delPred, 1L).otherwise(0L)).as("n_del_visible")))
       delByCell(stage) = back.filter(delPred).groupBy(col("cell")).count()
@@ -4864,19 +4793,13 @@ object VectorQueries {
       val inWave = col("cell").isin(cells.map(Long.box): _*)
       val content = assigned.filter(inWave && !delPred)
       rewritten += content.count()
-      overwriteCells(store, content.select(col("vec_id"), col("emb"), col("cell")))
-      // fully-deleted cells write no partition under dynamic overwrite —
-      // their stale directories are dropped here
-      val surviving = content.select(col("cell")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      val dropped = cells.filterNot(surviving)
-      dropCells(store, dropped)
-      emptied ++= dropped
+      // a fully-deleted cell gets no rows, and the replace drops it
+      emptied ++= store.replace(content.select(col("vec_id"), col("emb"), col("cell")), cells)
     }
     wave(touched.filter(_ % 2 == 0)); serve(1)
     wave(touched.filter(_ % 2 == 1)); serve(2)
     // a later night lands under the frozen model: deletion must hold
-    appendCells(store, cellsOf(arrivals, cent).select(col("vec_id"), col("emb"), col("cell")))
+    store.append(cellsOf(arrivals, cent).select(col("vec_id"), col("emb"), col("cell")))
     serve(3)
     val df = servedFrame(spark, out.toSeq, "stage", "n_del_visible")
     (df, StoreDeleteDetail(delByCell.toMap, touched.toSeq, emptied.toSeq, rewritten))
@@ -4995,25 +4918,24 @@ object VectorQueries {
     val assigned = graft.CacheRegistry.track(
       cellsOf(corpus, cent).select(col("vec_id"), col("emb"), col("cell"))
         .withColumn("gen", genOf).persist())
-    val store = graft.Fs.storeDir("storeret", dir)
-    graft.Fs.rmTree(store)
-    // gen-then-cell layout: the age-out is rmTree(gen=g), nothing else
-    graft.Spread.clustered(assigned, col("gen"), col("cell"))
-      .write.partitionBy("gen", "cell").mode("overwrite").parquet(store.toString)
+    // gen-then-cell layout: the age-out is a drop of gen=g, nothing else
+    val store = PartStore(graft.Fs.storeDir("storeret", dir), "ivf", "vec_id LONG, emb ARRAY<FLOAT>",
+      "gen INT, cell LONG")
+    store.land(assigned)
     val probes = graft.CacheRegistry.track(probeSet(queries, cent).persist())
     val out = scala.collection.mutable.ArrayBuffer.empty[Served]
     val topk = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val gensAfter = scala.collection.mutable.Map.empty[Int, Seq[String]]
     val probeMatched = scala.collection.mutable.Map.empty[Int, Long]
     var full: Set[(Long, Long)] = Set.empty
-    def serve(win: Int): Unit = graft.CacheRegistry.withCache(readStore(spark, store.toString)) { back =>
+    def serve(win: Int): Unit = graft.CacheRegistry.withCache(store.read(spark)) { back =>
       val served = serveRows(back, probes, back.agg(count(lit(1)).as("n_rows")))
       val pairs = served.map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
       if (win == 3) full = pairs
       val nKept = pairs.count(full.contains).toLong
       out ++= served.map(r => toServed(win, r, r.getAs[Long]("n_rows"), nKept))
       topk(win) = pairs
-      gensAfter(win) = graft.Fs.subdirs(store)
+      gensAfter(win) = store.dirs
       // the serve's OWN join, not the pre-serve probe frame: distinct
       // lookup keys that found ≥1 row in this window's store — the
       // scan-side work retention actually saves (r14 advice)
@@ -5021,8 +4943,8 @@ object VectorQueries {
         .select(col("q_id"), col("cell")).distinct().count()
     }
     serve(3)
-    graft.Fs.rmTree(store.resolve("gen=0")); serve(2)
-    graft.Fs.rmTree(store.resolve("gen=1")); serve(1)
+    store.drop(0); serve(2)
+    store.drop(1); serve(1)
     val df = servedFrame(spark, out.toSeq, "win", "n_kept")
     (df, StoreRetentionDetail(topk.toMap, gensAfter.toMap,
       probes.select(col("q_id"), col("cell")).distinct().count(), probeMatched.toMap))
@@ -5079,33 +5001,31 @@ object VectorQueries {
       cellsOf(base, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
     val arrA = graft.CacheRegistry.track(
       cellsOf(arrivals, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
-    val store = graft.Fs.storeDir("storebf", dir).toString
-    landStore(store, baseA)
-    def append(a: DataFrame): Unit =
-      appendCells(store, a)
-    append(arrA)
+    val store = cellStore(graft.Fs.storeDir("storebf", dir))
+    store.land(baseA)
+    store.append(arrA)
     val probes = graft.CacheRegistry.track(probeSet(queries, cent).persist())
     val touched = arrA.select(col("cell")).distinct().collect().map(_.getLong(0)).toSet
     val out = scala.collection.mutable.ArrayBuffer.empty[Served]
     val topk = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
-    def serve(stage: Int): Unit = graft.CacheRegistry.withCache(readStore(spark, store)) { back =>
+    def serve(stage: Int): Unit = graft.CacheRegistry.withCache(store.read(spark)) { back =>
       val served = serveStage(stage, back, probes, storeCensus(back))
       out ++= served
       topk(stage) = pairsOf(served)
     }
     serve(0)
     // the retry storm: the night lands AGAIN into the same cell dirs
-    append(arrA)
+    store.append(arrA)
     serve(1)
-    val untouchedBefore = cellFileCounts(store).filter { case (c, _) => !touched(c) }
+    val untouchedBefore = store.fileCounts.filter { case (c, _) => !touched(c) }
     // bounded repair: one dynamic overwrite of ONLY the touched cells,
     // content derived from the cached frames (single copy of the night)
     val repairContent = baseA.filter(col("cell").isin(touched.toSeq.map(Long.box): _*))
       .unionAll(arrA)
     val rewritten = repairContent.count()
-    overwriteCells(store, repairContent.select(col("vec_id"), col("emb"), col("cell")))
+    store.replace(repairContent.select(col("vec_id"), col("emb"), col("cell")), touched)
     serve(2)
-    val untouchedAfter = cellFileCounts(store).filter { case (c, _) => !touched(c) }
+    val untouchedAfter = store.fileCounts.filter { case (c, _) => !touched(c) }
     val df = servedFrame(spark, out.toSeq, "stage", "n_distinct")
     (df, StoreBackfillDetail(topk.toMap, touched, rewritten, untouchedBefore, untouchedAfter))
   }
@@ -5213,40 +5133,39 @@ object VectorQueries {
       cellsOf(base, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
     val arrA = graft.CacheRegistry.track(
       cellsOf(arrivals, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
-    val store = graft.Fs.storeDir("storecmp", dir).toString
-    landStore(store, baseA)
+    val store = cellStore(graft.Fs.storeDir("storecmp", dir))
+    store.land(baseA)
     // the small-files storm: the night lands as 3 micro-batch-shaped
     // appends — each touched cell accumulates one file per append
     (0L to 2L).foreach { slice =>
-      appendCells(store, arrA.filter(expr(s"(vec_id DIV $CalMod) % 3") === slice))
+      store.append(arrA.filter(expr(s"(vec_id DIV $CalMod) % 3") === slice))
     }
     val probes = graft.CacheRegistry.track(probeSet(queries, cent).persist())
     val touched = arrA.select(col("cell")).distinct().collect().map(_.getLong(0)).toSet
-    def cellFiles(c: Long): Seq[java.nio.file.Path] = cellFilesOf(store, c)
     def untouchedEvidence(): Set[(String, Long)] =
-      cellsOnDisk(store).filterNot(touched).flatMap(c => cellFiles(c).map(p =>
-        (s"cell=$c/${p.getFileName}", java.nio.file.Files.size(p)))).toSet
+      store.parts.filterNot(touched).flatMap(c => store.files(c).map(p =>
+        (s"${store.dir(c)}/${p.getFileName}", java.nio.file.Files.size(p)))).toSet
     val out = scala.collection.mutable.ArrayBuffer.empty[Served]
     val topk = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val filesAt = scala.collection.mutable.Map.empty[Int, Map[Long, Int]]
-    def serve(stage: Int): Unit = graft.CacheRegistry.withCache(readStore(spark, store)) { back =>
+    def serve(stage: Int): Unit = graft.CacheRegistry.withCache(store.read(spark)) { back =>
       val served = serveStage(stage, back, probes, storeCensus(back))
       out ++= served
       topk(stage) = pairsOf(served)
-      filesAt(stage) = cellFileCounts(store)
+      filesAt(stage) = store.fileCounts
     }
     serve(0)
     val untouchedBefore = untouchedEvidence()
     // snapshot the doomed files BEFORE the consolidated append lands
-    val oldFiles = touched.toSeq.flatMap(cellFiles)
+    val doomed = store.snapshot(touched)
     // WRITE-then-delete: the consolidated per-cell files land while the
     // old ones still serve — content from the CACHED frames
     val consolidated = baseA.filter(col("cell").isin(touched.toSeq.map(Long.box): _*))
       .unionAll(arrA)
     val rewritten = consolidated.count()
-    appendCells(store, consolidated)
+    store.append(consolidated)
     serve(1)
-    oldFiles.foreach(java.nio.file.Files.delete)
+    doomed.delete()
     serve(2)
     val untouchedAfter = untouchedEvidence()
     val df = servedFrame(spark, out.toSeq, "stage", "n_distinct")

@@ -66,8 +66,8 @@ object StreamCompact {
 
     val scratch = java.nio.file.Files.createTempDirectory("graft_stream_compact_")
     val inDir = scratch.resolve("in"); java.nio.file.Files.createDirectories(inDir)
-    val store = scratch.resolve("store").toString
-    phase("land")(VectorQueries.landStore(store, baseA))
+    val store = VectorQueries.cellStore(scratch.resolve("store"))
+    phase("land")(store.land(baseA))
     val name = s"stream_compact_${System.nanoTime()}"
     val nullEmb = lit(null).cast("array<float>")
     // A1 / C1 / A2 / C2 — the compaction's two halves interleaved with data
@@ -77,13 +77,12 @@ object StreamCompact {
       arrivals.filter(!a1Of).select(col("vec_id"), lit(0L).as("kind"), col("emb")),
       spark.range(1).select(lit(-2L).as("vec_id"), lit(2L).as("kind"), nullEmb.as("emb")))
 
-    def cellFiles(c: Long): Seq[java.nio.file.Path] = VectorQueries.cellFilesOf(store, c)
     val results = scala.collection.mutable.ArrayBuffer.empty[VectorQueries.Served]
     val topk = scala.collection.mutable.Map.empty[Long, Set[(Long, Long)]]
     val filesAt = scala.collection.mutable.Map.empty[Long, Map[Long, Int]]
     val landed = scala.collection.mutable.ArrayBuffer[DataFrame](baseA)
     var touched: Set[Long] = Set.empty
-    var doomed: Seq[java.nio.file.Path] = Nil
+    var doomed = store.snapshot(Nil)
     var a2Files: Set[String] = Set.empty
     var rewrittenRows = 0L
     var batches = -1
@@ -107,17 +106,15 @@ object StreamCompact {
               // ARRIVAL: assign under the frozen model, append files.
               // After C1 the appended files share directories with the
               // doomed ones — the survival corner under test.
-              val preFiles: Set[String] =
-                if (doomed.nonEmpty && a2Files.isEmpty)
-                  touched.flatMap(c => cellFiles(c).map(_.toString))
-                else Set.empty
-              // appendCells' write fills the cache C1 consolidates from
+              val afterC1 = doomed.files.nonEmpty && a2Files.isEmpty
+              def touchedFiles(): Set[String] = touched.flatMap(c => store.files(c).map(_.toString))
+              val preFiles = if (afterC1) touchedFiles() else Set.empty[String]
+              // the append's write fills the cache C1 consolidates from
               val a = VectorQueries.cellsOf(bdf.select(col("vec_id"), col("emb")), cent)
                 .select(col("vec_id"), col("emb"), col("cell")).persist()
               landed += a
-              VectorQueries.appendCells(store, a)
-              if (doomed.nonEmpty && a2Files.isEmpty)
-                a2Files = touched.flatMap(c => cellFiles(c).map(_.toString)) -- preFiles
+              store.append(a)
+              if (afterC1) a2Files = touchedFiles() -- preFiles
             }
             case 1L => phase("consolidate") {
               // C1: snapshot the touched cells' files, THEN land the
@@ -126,25 +123,25 @@ object StreamCompact {
               val a1 = landed(1) // the first arrival batch's assignment
               touched = a1.select(col("cell")).distinct()
                 .collect().map(_.getLong(0)).toSet
-              doomed = touched.toSeq.flatMap(cellFiles)
+              doomed = store.snapshot(touched)
               val consolidated = landed.toSeq.reduce(_ unionAll _)
                 .filter(col("cell").isin(touched.toSeq.map(Long.box): _*))
               rewrittenRows = consolidated.count()
-              VectorQueries.appendCells(store, consolidated)
+              store.append(consolidated)
             }
             case 2L => phase("delete") {
               // C2: delete EXACTLY the C1 snapshot — never a re-listing,
               // which would eat the files A2 landed in between
-              doomed.foreach(java.nio.file.Files.delete)
+              doomed.delete()
             }
           }
           // SERVE: the files are the store; candidates dedup before
           // ranking, so the compaction overlap is invisible to the top-k
-          phase("serve")(graft.CacheRegistry.withCache(VectorQueries.readStore(spark, store)) { back =>
+          phase("serve")(graft.CacheRegistry.withCache(store.read(spark)) { back =>
             val served = VectorQueries.serveStage(id, back, probes, VectorQueries.storeCensus(back))
             results ++= served
             topk(id) = VectorQueries.pairsOf(served)
-            filesAt(id) = touched.map(c => c -> cellFiles(c).size).toMap
+            filesAt(id) = touched.map(c => c -> store.files(c).size).toMap
           })
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -156,7 +153,7 @@ object StreamCompact {
     }
     val df = VectorQueries.servedFrame(spark, results.toSeq, "after_batch", "n_distinct")
     (df, CompactStreamCensus(batches, touched, rewrittenRows, filesAt.toMap,
-      doomed.map(_.toString).toSet, a2Files, topk.toMap))
+      doomed.files.map(_.toString).toSet, a2Files, topk.toMap))
   }
 
   val streamCompactSql: String = {

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.store.Layout
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -53,15 +54,14 @@ object StreamDedupIndex {
 
     val scratch = java.nio.file.Files.createTempDirectory("graft_stream_dedupix_")
     val inDir = scratch.resolve("in"); java.nio.file.Files.createDirectories(inDir)
-    val store = scratch.resolve("store")
+    val store = HashDedup.bandIndex(scratch.resolve("store"), gens = false)
     val name = s"stream_dedupix_${System.nanoTime()}"
     val out = new HashDedup.ServeLog("night", "n_index_rows", "n_lookups", "n_candidates", "n_true", "n_hit")
     val servedFiles = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
     var batches = -1
     ReplayHarness.replay(spark, 8, andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
       // E0: the base index lands before the stream opens
-      ofCls(c => !c.isin(1L, 2L, 3L)).repartition(4)
-        .write.mode("overwrite").parquet(store.toString)
+      store.land(ofCls(c => !c.isin(1L, 2L, 3L)), Layout.Files(4))
       // arrivals: the three nights' TOKENIZED docs, one file per night —
       // signatures are per-doc, so the batch signs itself inside the batch
       ReplayHarness.landBands(scratch, inDir, (1 to 3).map(n =>
@@ -76,7 +76,7 @@ object StreamDedupIndex {
           graft.CacheRegistry.withCache(HashDedup.mpBaseRows(HashDedup.mpSigFrom(bdf))
               .select(col("doc_id"), col("band"), col("band_key"))) { keys =>
             keys.count() // materialize before the store is touched
-            val back = HashDedup.readIndex(spark, store)
+            val back = store.read(spark)
             val cand = HashDedup.bandCandidates(keys, back)
             val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
             val tn = truthNight(night.toInt)
@@ -87,11 +87,11 @@ object StreamDedupIndex {
               .crossJoin(broadcast(verified.join(broadcast(tn), Seq("doc_a", "doc_b"))
                 .agg(count(lit(1)).as("n_hit"))))
               .collect()(0)
-            servedFiles += ((night, graft.Fs.parquetFiles(store).size))
+            servedFiles += ((night, store.allFiles.size))
             out += (night, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_lookups"),
               r.getAs[Long]("n_candidates"), r.getAs[Long]("n_true"), r.getAs[Long]("n_hit"))
             // probe BEFORE append: the night never sees itself
-            keys.coalesce(1).write.mode("append").parquet(store.toString)
+            store.append(keys, Layout.Coalesced(1))
           }
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -74,8 +74,8 @@ object StreamForget {
 
     val scratch = java.nio.file.Files.createTempDirectory("graft_stream_forget_")
     val inDir = scratch.resolve("in"); java.nio.file.Files.createDirectories(inDir)
-    val store = scratch.resolve("store").toString
-    VectorQueries.landStore(store, baseA)
+    val store = VectorQueries.cellStore(scratch.resolve("store"))
+    store.land(baseA)
     val name = s"stream_forget_${System.nanoTime()}"
     val nullEmb = lit(null).cast("array<float>")
     val bands = Seq(
@@ -119,7 +119,7 @@ object StreamForget {
               .select(col("vec_id"), col("emb"), col("cell")).persist()
             landed += a
             a.count()
-            VectorQueries.appendCells(store, a)
+            store.append(a)
           } else {
             // FORGET manifest: №192's wave on the touched cells, content
             // from the cached frames minus every manifest so far
@@ -134,13 +134,10 @@ object StreamForget {
             val content = all
               .filter(col("cell").isin(touched.toSeq.map(Long.box): _*))
               .join(manifest, Seq("vec_id"), "left_anti")
-            VectorQueries.overwriteCells(store, content)
-            val surviving = content.select(col("cell")).distinct()
-              .collect().map(_.getLong(0)).toSet
-            VectorQueries.dropCells(store, touched.filterNot(surviving))
+            store.replace(content, touched)
           }
           // SERVE: the files are the store — №184's discipline
-          graft.CacheRegistry.withCache(VectorQueries.readStore(spark, store)) { back =>
+          graft.CacheRegistry.withCache(store.read(spark)) { back =>
             // Census in ONE store scan (r15 verdict item 7 — stream_night's
             // 58cb504 single-scan serve pattern, guide §6 "do fewer passes"):
             // the serve's n_rows/n_del_visible aggregate, the per-leg

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.store.Layout
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -70,7 +71,7 @@ object StreamNight {
   private[graft] def streamNightWithCensus(
       spark: SparkSession, dir: String): (DataFrame, NightStreamCensus) = {
     import graft.queries.{HashDedup, PipelineQueries, TextQueries, VectorQueries}
-    import HashDedup.{clsOf, readIndex}
+    import HashDedup.clsOf
     import VectorQueries.{EmbedQEvery, K}
     val corpus = new HashDedup.IndexCorpus(spark, dir)
     import corpus.{ofCls, sh5, tok, truthAll}
@@ -87,13 +88,13 @@ object StreamNight {
 
     val scratch = java.nio.file.Files.createTempDirectory("graft_stream_night_")
     val inDir = scratch.resolve("in"); java.nio.file.Files.createDirectories(inDir)
-    val ixStore = scratch.resolve("index"); val vStore = scratch.resolve("vectors")
+    val ixStore = HashDedup.bandIndex(scratch.resolve("index"))
+    val vStore = PipelineQueries.vectorStore(scratch.resolve("vectors"))
     val name = s"stream_night_${System.nanoTime()}"
     // E0: both stores land before the stream opens
-    HashDedup.landGen(ixStore, ofCls(c => !c.isin(1L, 2L)), 0, 4)
-    ve.filter(!col("cls").isin(1L, 2L) && !(col("doc_id") % EmbedQEvery === 0))
-      .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
-      .repartition(4).write.mode("overwrite").parquet(vStore.toString)
+    ixStore.append(HashDedup.atGen(ofCls(c => !c.isin(1L, 2L)), 0), Layout.Files(4))
+    vStore.land(ve.filter(!col("cls").isin(1L, 2L) && !(col("doc_id") % EmbedQEvery === 0))
+      .select(col("doc_id"), col("emb_arr"), col("norm_sq")), Layout.Files(4))
 
     val results = scala.collection.mutable.ArrayBuffer.empty[
       (Long, Long, Long, Long, Long, Long, Long, Double)]
@@ -104,13 +105,6 @@ object StreamNight {
     // the previous serve's store FILES — the monotone-growth check reads
     // exactly this snapshot back and anti-joins the current store
     var prevVecFiles: Seq[String] = Nil
-    def vecFiles(): Seq[String] = {
-      val s = java.nio.file.Files.walk(vStore)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .map(_.toString).toVector
-      finally s.close()
-    }
     var dropped = 0L
     var batches = -1
     ReplayHarness.replay(spark, 8, andThen = () => graft.Fs.rmTree(scratch)) { (spark, register) =>
@@ -130,24 +124,22 @@ object StreamNight {
             keys.count()
             graft.CacheRegistry.withCache(bdf.select(col("doc_id"))) { batchIds =>
               batchIds.count()
-              val cand = HashDedup.bandCandidates(keys, readIndex(spark, ixStore))
+              val cand = HashDedup.bandCandidates(keys, ixStore.read(spark))
               val dupFiles = HashDedup.landDecision(scratch.resolve(s"dups_$id"),
                 TextQueries.verifyPairsOf(sh5, cand)
                   .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
                   .join(batchIds, Seq("doc_id"), "left_semi").distinct())
               dropped += dupFiles.count()
               // BOTH appends consume the landed decision
-              keys.join(dupFiles, Seq("doc_id"), "left_anti")
-                .withColumn("gen", lit(1)).coalesce(1)
-                .write.partitionBy("gen").mode("append").parquet(ixStore.toString)
-              ve.select(col("doc_id"), col("emb_arr"), col("norm_sq"))
+              ixStore.append(HashDedup.atGen(keys.join(dupFiles, Seq("doc_id"), "left_anti"), 1),
+                Layout.Coalesced(1))
+              vStore.append(ve.select(col("doc_id"), col("emb_arr"), col("norm_sq"))
                 .join(batchIds, Seq("doc_id"), "left_semi")
-                .join(dupFiles, Seq("doc_id"), "left_anti")
-                .coalesce(1).write.mode("append").parquet(vStore.toString)
+                .join(dupFiles, Seq("doc_id"), "left_anti"), Layout.Coalesced(1))
               // SERVE both stores from the files; the scored probe pass and
               // the census-with-dup-flag pass share ONE vector-store scan
-              val ixBack2 = readIndex(spark, ixStore)
-              graft.CacheRegistry.withCache(PipelineQueries.readVectors(spark, vStore)) { vBack =>
+              val ixBack2 = ixStore.read(spark)
+              graft.CacheRegistry.withCache(vStore.read(spark)) { vBack =>
                 val scored = PipelineQueries.exactCos(vBack, queries)
                 // Census DISTRIBUTIVELY (r14 verdict 1), and in ONE store scan
                 // (r15 frontier 3): the cumulative dup-manifest set is
@@ -176,7 +168,7 @@ object StreamNight {
                 dups(id) = dupFiles.collect().map(_.getLong(0)).toSet // batch-bounded
                 dupsVisible(id) = servedRows.headOption
                   .map(_.getAs[Long]("n_dup_visible")).getOrElse(0L)
-                val curFiles = vecFiles().toSet
+                val curFiles = vStore.allFiles.map(_.toString).toSet
                 unlanded(id) = prevVecFiles.count(!curFiles.contains(_)).toLong
                 prevVecFiles = curFiles.toVector
               }

@@ -14,7 +14,7 @@ class CacheRegistrySpec extends SparkSpec {
 
   private def landTinyStore(): java.nio.file.Path = {
     val store = java.nio.file.Files.createTempDirectory("graft_cache_registry_")
-    VectorQueries.landStore(store.toString, spark.range(0, 40).select(col("id").as("vec_id"),
+    VectorQueries.cellStore(store).land(spark.range(0, 40).select(col("id").as("vec_id"),
       array(col("id").cast("float")).as("emb"), (col("id") % 4).as("cell")))
     store
   }
@@ -36,7 +36,7 @@ class CacheRegistrySpec extends SparkSpec {
     val store = landTinyStore()
     try {
       def serve(): Long =
-        CacheRegistry.withCache(VectorQueries.readStore(spark, store.toString))(_.count())
+        CacheRegistry.withCache(VectorQueries.cellStore(store).read(spark))(_.count())
       assert(serve() === 40L)
       // the compaction drills' delete wave: one part file, no Spark write
       val victim = Fs.parquetFiles(store.resolve("cell=1")).head
@@ -49,11 +49,11 @@ class CacheRegistrySpec extends SparkSpec {
 
   test("the hazard the loan closes: a cache left live over the store goes stale") {
     val store = landTinyStore()
-    val leaked = VectorQueries.readStore(spark, store.toString).persist()
+    val leaked = VectorQueries.cellStore(store).read(spark).persist()
     try {
       assert(leaked.count() === 40L)
       java.nio.file.Files.delete(Fs.parquetFiles(store.resolve("cell=1")).head)
-      assert(VectorQueries.readStore(spark, store.toString).count() === 40L,
+      assert(VectorQueries.cellStore(store).read(spark).count() === 40L,
         "an identical read plan-matches the live cache and misses the delete")
     } finally { CacheRegistry.release(Seq(leaked)); Fs.rmTree(store) }
   }

@@ -111,11 +111,12 @@ class IvfRebalanceSpec extends SparkSpec {
           b.result()
         } finally s.close()
       }
-      VectorQueries.landStore(store, oldA)
+      val cells = VectorQueries.cellStore(java.nio.file.Paths.get(store))
+      cells.land(oldA)
       val c10Before = parts("cell=10")
       assert(c10Before.nonEmpty)
       Thread.sleep(1100) // mtime resolution: a rewrite MUST read as newer
-      val emptied = VectorQueries.deltaRewrite(store, oldA, newA)
+      val emptied = VectorQueries.deltaRewrite(cells, oldA, newA)
       assert(emptied.toSeq == Seq(20L), s"emptied cells ${emptied.toSeq}, want [20]")
       assert(java.nio.file.Files.notExists(java.nio.file.Paths.get(store, "cell=20")),
         "ghost partition survived — dynamic overwrite never clears loser-only cells")
